@@ -211,12 +211,16 @@ object Analyzer {
       t.length > 2 && t.startsWith("/") && t.endsWith("/")
     require(!pieces2.exists(p => !p._2 && p._3 && isRegexPiece(p._1)),
       "negated regex pieces (-/re/) are not supported")
-    // a slash-delimited fragment that is NOT a complete /…/ piece (e.g.
-    // "/a b/" splitting into "/a" and "b/" on whitespace) must not
-    // silently degrade to bare AND terms with the slashes stripped —
-    // reject it, mirroring the boosted/negated regex guards (ADVICE r4)
-    require(!pieces2.exists(p => !p._2 &&
-        (p._1.startsWith("/") || p._1.endsWith("/")) && !isRegexPiece(p._1)),
+    // an unclosed /…/ pair split on whitespace ("/a b/" → "/a", "b/")
+    // must not silently degrade to bare AND terms with the slashes
+    // stripped — reject it, mirroring the boosted/negated regex guards
+    // (ADVICE r4). A lone leading or trailing slash is a path token
+    // (`src/`, `/usr`, `/usr/lib`) and stays a bare term.
+    def slashPiece(p: (String, Boolean, Boolean), f: String => Boolean) =
+      !p._2 && f(p._1) && !isRegexPiece(p._1)
+    val opened = pieces2.indexWhere(slashPiece(_, _.startsWith("/")))
+    require(opened < 0 ||
+        !pieces2.drop(opened + 1).exists(slashPiece(_, _.endsWith("/"))),
       "incomplete regex piece (regexes are single /pattern/ pieces " +
         "without whitespace)")
     val regexes = pieces2.collect {

@@ -2,10 +2,13 @@ package graft.operators
 
 import graft.functions.{Analyzer, Codec}
 import graft.operators.Index._
+import com.google.common.cache.{Cache, CacheBuilder, RemovalNotification}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import java.math.{BigDecimal => JBigDecimal, RoundingMode}
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /** Indexed BM25 top-k query path (SURVEY.md §7 M2; north rule:
   * "multi-term queries with BM25 top-k scoring via posting-list
@@ -31,6 +34,39 @@ import scala.collection.mutable
   * tests.
   */
 object QueryEngine {
+
+  /** The engine's one bounded-cache shape: an LRU holding at most
+    * `maxWeight` total `weigh` over its entries. One segment
+    * (`concurrencyLevel(1)`): Guava's default of four would give each a
+    * quarter of the budget, so an entry above that could never be cached
+    * and LRU order would hold only per segment. `get(k, loader)` runs the
+    * load outside any lock — a hit never waits on another key's load.
+    * A capacity-evicted broadcast is unpersisted, NOT destroyed: a lazy
+    * frame or a query on another thread may still hold it, and Spark
+    * re-ships it from the driver if it is used again (`close()` destroys
+    * what is still resident). */
+  private[graft] def boundedCache[K <: AnyRef, V <: AnyRef](maxWeight: Long)(
+      weigh: (K, V) => Int): Cache[K, V] =
+    CacheBuilder.newBuilder()
+      .concurrencyLevel(1)
+      .maximumWeight(maxWeight)
+      .weigher[K, V]((k: K, v: V) => weigh(k, v))
+      .removalListener[K, V]((n: RemovalNotification[K, V]) => n.getValue match {
+        case b: Broadcast[_] if n.wasEvicted => b.unpersist(false)
+        case _ =>
+      })
+      .recordStats()
+      .build[K, V]()
+
+  /** Content key of a filter-gate array: equal ids share one cache entry,
+    * and arrays whose hashes collide stay distinct entries. */
+  private[graft] final class GateKey(val ids: Array[Long]) {
+    override def hashCode: Int = java.util.Arrays.hashCode(ids)
+    override def equals(o: Any): Boolean = o match {
+      case g: GateKey => java.util.Arrays.equals(ids, g.ids)
+      case _ => false
+    }
+  }
 
   /** Spark/DuckDB-compatible HALF_UP rounding to 4 decimals (scores are
     * non-negative). Matches `round(col, 4)`. */
@@ -1424,97 +1460,48 @@ final class QueryEngine(
 
   /** Session cache of side-term segment broadcasts, keyed by the query's
     * (driver term, term set): repeated queries re-use one broadcast
-    * instead of leaking a new block per call (ADVICE r1). Bounded LRU;
-    * evicted/closed broadcasts are destroyed, so call [[close]] only
-    * after all returned frames are consumed. */
+    * instead of leaking a new block per call (ADVICE r1). At most 256. */
   private val sideBcCache =
-    mutable.LinkedHashMap.empty[String, org.apache.spark.broadcast.Broadcast[Map[String, Array[PostingSegment]]]]
-  private val sideBcCacheMax = 256
+    boundedCache[String, Broadcast[Map[String, Array[PostingSegment]]]](256)((_, _) => 1)
 
   private def sideBroadcast(key: String)(
-      compute: => Map[String, Array[PostingSegment]]) = synchronized {
-    sideBcCache.remove(key) match {
-      case Some(b) => // LRU touch: re-insert at the tail
-        sideBcCache.put(key, b)
-        b
-      case None =>
-        if (sideBcCache.size >= sideBcCacheMax) {
-          val (k0, b0) = sideBcCache.head
-          sideBcCache.remove(k0)
-          // unpersist, NOT destroy: an unconsumed lazy frame (or a query
-          // running on another thread) may still reference the evicted
-          // broadcast — unpersist frees executor copies and lets Spark
-          // re-ship from the driver if it is used again; destroy() would
-          // make such frames throw. Final destroy happens in close().
-          b0.unpersist(false)
-        }
-        val b = spark.sparkContext.broadcast(compute)
-        sideBcCache.put(key, b)
-        b
-    }
-  }
+      compute: => Map[String, Array[PostingSegment]]) =
+    sideBcCache.get(key, () => spark.sparkContext.broadcast(compute))
 
   /** Session cache of the driver term's GLOBAL segment-range directory
     * (sorted parallel minDoc/maxDoc arrays) — the metadata that lets OR
     * scan tasks own docID gaps (docs without the driver term). One
     * two-column pruned collect per driver term, then cached: steady-state
-    * OR latency pays zero extra jobs. Bounded LRU like sideBcCache. */
-  private val rangeDirCache =
-    mutable.LinkedHashMap.empty[String, (Array[Long], Array[Long])]
+    * OR latency pays zero extra jobs. At most 256 terms. */
+  private val rangeDirCache = boundedCache[String, (Array[Long], Array[Long])](256)((_, _) => 1)
 
   private def driverRangeDir(driverTerm: String,
                              perDir: Seq[Seq[DictEntry]]): (Array[Long], Array[Long]) =
-    synchronized {
-      rangeDirCache.remove(driverTerm) match {
-        case Some(v) => rangeDirCache.put(driverTerm, v); v
-        case None =>
-          val rows = indexDirs.zip(perDir).flatMap { case (dir, es) =>
-            val de = es.filter(_.term == driverTerm)
-            if (de.isEmpty) Nil
-            else segmentsOf(dir, Seq(driverTerm), de.map(_.bucket).distinct)
-              .select(col("minDoc"), col("maxDoc")).as[(Long, Long)]
-              .collect().toSeq
-          }.sortBy(_._1)
-          val v = (rows.map(_._1).toArray, rows.map(_._2).toArray)
-          if (rangeDirCache.size >= 256) rangeDirCache.remove(rangeDirCache.head._1)
-          rangeDirCache.put(driverTerm, v)
-          v
-      }
-    }
+    rangeDirCache.get(driverTerm, () => {
+      val rows = indexDirs.zip(perDir).flatMap { case (dir, es) =>
+        val de = es.filter(_.term == driverTerm)
+        if (de.isEmpty) Nil
+        else segmentsOf(dir, Seq(driverTerm), de.map(_.bucket).distinct)
+          .select(col("minDoc"), col("maxDoc")).as[(Long, Long)]
+          .collect().toSeq
+      }.sortBy(_._1)
+      (rows.map(_._1).toArray, rows.map(_._2).toArray)
+    })
 
-  /** Bounded cache of filter-gate broadcasts keyed by CONTENT (hash +
-    * full-array equality check — a hash collision silently reusing the
-    * wrong filter would be a correctness bug, so collisions fall back to
-    * a fresh uncached broadcast). Facet filters repeat across queries
-    * (lang = 'x', repo = 'y'), so steady-state filtered queries reship
-    * nothing. Eviction bounds total RETAINED ids, not entry count — one
-    * cap-sized filter must not pin 32 cap-sized arrays. */
-  private[graft] val gateBcCache = mutable.LinkedHashMap.empty[
-    Int, (Array[Long], org.apache.spark.broadcast.Broadcast[Array[Long]])]
-  private[graft] var gateCacheIds = 0L
+  /** Cache of filter-gate broadcasts keyed by CONTENT ([[GateKey]]).
+    * Facet filters repeat across queries (lang = 'x', repo = 'y'), so
+    * steady-state filtered queries reship nothing. The bound is total
+    * RETAINED ids, not entry count — one cap-sized filter must not pin 32
+    * cap-sized arrays. */
+  private[graft] val gateBcCache =
+    boundedCache[GateKey, Broadcast[Array[Long]]](gateCacheMaxIds)((k, _) => k.ids.length)
 
-  private[graft] def gateBroadcast(arr: Array[Long]):
-      org.apache.spark.broadcast.Broadcast[Array[Long]] = synchronized {
-    val h = java.util.Arrays.hashCode(arr)
-    gateBcCache.remove(h) match {
-      case Some((a, b)) if java.util.Arrays.equals(a, arr) =>
-        gateBcCache.put(h, (a, b)); b // LRU touch
-      case Some(other) => // collision: keep resident entry, don't cache
-        gateBcCache.put(h, other)
-        spark.sparkContext.broadcast(arr)
-      case None =>
-        while (gateBcCache.nonEmpty && gateCacheIds + arr.length > gateCacheMaxIds) {
-          val (k0, (a0, b0)) = gateBcCache.head
-          gateBcCache.remove(k0)
-          gateCacheIds -= a0.length
-          b0.unpersist(false) // lazy frames may still hold it (see sideBcCache)
-        }
-        val b = spark.sparkContext.broadcast(arr)
-        gateBcCache.put(h, (arr, b))
-        gateCacheIds += arr.length
-        b
-    }
-  }
+  /** Total ids retained across resident gate broadcasts. */
+  private[graft] def gateCacheIds: Long =
+    gateBcCache.asMap().keySet().asScala.iterator.map(_.ids.length.toLong).sum
+
+  private[graft] def gateBroadcast(arr: Array[Long]): Broadcast[Array[Long]] =
+    gateBcCache.get(new GateKey(arr), () => spark.sparkContext.broadcast(arr))
 
   /** Resolve a caller-supplied allowed-docID frame into one of the three
     * filter shapes, cheapest first:
@@ -1647,33 +1634,17 @@ final class QueryEngine(
     val hits: Seq[(Int, ScoredDoc)] =
       if (!forceComposition && normsBc.isDefined && localWandUpTo > 0 &&
           totalDf <= math.max(localWandUpTo, localParallelCap)) {
-        val byTerm = synchronized { localSegsFor(termCtx.map(_.term).toSeq, perDir) }
+        val byTerm = localSegsFor(termCtx.map(_.term).toSeq, perDir)
         val norms = normsBc.get.value
         val nG = groups.names.size
-        if (totalDf <= localWandUpTo)
+        // per-group top-n over disjoint ranges concatenates soundly (the
+        // global top-n per group is within the union of shard top-ns);
+        // the merge below takes it
+        localShards(totalDf) { (lo, hi) =>
           QueryEngine.groupedRange(byTerm, termCtx, norms.cursor(), avgdl,
-            0L, Long.MaxValue, n, rounded,
+            lo, hi, n, rounded,
             QueryEngine.monotoneGroupCursor(groups.ids, groups.groups), nG)
-        else {
-          // pooled: shard the docID space exactly like the pooled WAND.
-          // Per-group top-n over disjoint ranges concatenates soundly
-          // (the global top-n per group is within the union of shard
-          // top-ns); the merge below takes it. Fresh group cursor per
-          // range — the galloping cursor is stateful.
-          val nr = math.max(1L, math.min(4L * localThreads,
-            math.max(localThreads.toLong, totalDf / 25_000L + 1))).toInt
-          val rsz = math.max(1L, (stats.maxDoc + nr) / nr)
-          (0 until nr).map { r =>
-            localPool.submit(
-              new java.util.concurrent.Callable[Seq[(Int, ScoredDoc)]] {
-                def call(): Seq[(Int, ScoredDoc)] =
-                  QueryEngine.groupedRange(byTerm, termCtx, norms.cursor(),
-                    avgdl, r * rsz, (r + 1L) * rsz, n, rounded,
-                    QueryEngine.monotoneGroupCursor(groups.ids, groups.groups),
-                    nG)
-              })
-          }.flatMap(_.get())
-        }
+        }.flatten
       } else {
         groups.names.indices.flatMap { g =>
           val gids = groups.ids.zip(groups.groups)
@@ -1735,30 +1706,18 @@ final class QueryEngine(
       afterScore = afterScore, afterDoc = afterDoc)
 
   /** Release every broadcast this session created (norms + cached side
-    * segments + filter gates). The engine must not be queried afterwards. */
-  def close(): Unit = synchronized {
-    sideBcCache.values.foreach(_.destroy())
-    sideBcCache.clear()
-    gateBcCache.values.foreach(_._2.destroy())
-    gateBcCache.clear()
-    gateCacheIds = 0L
-    rangeDirCache.clear()
-    localSegCache.clear()
-    localSegPostings = 0L
+    * segments + filter gates). Call it only after every returned frame
+    * is consumed; the engine must not be queried afterwards. */
+  def close(): Unit = {
+    sideBcCache.asMap().values.forEach(_.destroy())
+    gateBcCache.asMap().values.forEach(_.destroy())
+    Seq(sideBcCache, gateBcCache, rangeDirCache, localSegCache).foreach(_.invalidateAll())
     if (localPoolInit) localPool.shutdown()
     normsBc.foreach(_.destroy())
     if (cachePostings) postingsByDir.values.foreach(_.unpersist(false))
   }
 
   // --------------------------------------------- driver-resident fast path
-
-  /** Driver-side per-term segment cache backing [[topK]]'s local fast
-    * path (VERDICT r2 #4): once a query's terms are resident, WAND runs
-    * on the driver with NO Spark job — distributed latency was
-    * scheduling-bound (~180 ms/job) against a sub-10 ms kernel. LRU,
-    * bounded by total cached postings. */
-  private val localSegCache = mutable.LinkedHashMap.empty[String, Array[PostingSegment]]
-  private var localSegPostings = 0L
 
   /** Effective pool width for the parallel local path (0/1 = serial only).
     * Auto sizes from DRIVER cores, not defaultParallelism (ADVICE r3): on
@@ -1777,8 +1736,15 @@ final class QueryEngine(
     if (localWandUpTo <= 0 || localThreads <= 1) 0L
     else if (localWandParallelUpTo >= 0) localWandParallelUpTo
     else localWandUpTo * localThreads
-  private val localSegCacheMaxPostings =
-    4L * math.max(localWandUpTo, localParallelCap)
+
+  /** Driver-side per-term segment cache backing [[topK]]'s local fast
+    * path (VERDICT r2 #4): once a query's terms are resident, WAND runs
+    * on the driver with NO Spark job — distributed latency was
+    * scheduling-bound (~180 ms/job) against a sub-10 ms kernel. Bounded
+    * by total cached postings. */
+  private[graft] val localSegCache =
+    boundedCache[String, Array[PostingSegment]](
+      4L * math.max(localWandUpTo, localParallelCap))((_, v) => v.iterator.map(_.count).sum)
 
   /** Lazily-built pool backing the parallel local path; daemon threads so
     * an unclosed engine never blocks JVM exit. `localPoolInit` lets
@@ -1797,39 +1763,45 @@ final class QueryEngine(
       })
   }
 
-  /** Fetch (cache-through) the full segment arrays of `terms`, one pruned
-    * collect per index dir for the misses. Caller holds `synchronized`. */
+  /** The full segment arrays of `terms`: hits from [[localSegCache]],
+    * misses loaded with one pruned collect per index dir. The load holds
+    * no lock, so a warm query never waits on it; two queries missing the
+    * same term may both load it, and the later `putAll` stores an equal
+    * array. */
   private def localSegsFor(terms: Seq[String],
                            perDir: Seq[Seq[DictEntry]]): Map[String, Array[PostingSegment]] = {
-    val missing = terms.filterNot(localSegCache.contains)
-    if (missing.nonEmpty) {
-      val missSet = missing.toSet
-      indexDirs.zip(perDir).flatMap { case (dir, es) =>
-        val want = es.filter(e => missSet(e.term))
-        if (want.isEmpty) Nil
-        else segmentsOf(dir, want.map(_.term), want.map(_.bucket).distinct)
-          .collect().toSeq
-      }.groupBy(_.term).foreach { case (t, ss) =>
-        val arr = ss.sortBy(_.minDoc).toArray
-        localSegCache.put(t, arr)
-        localSegPostings += arr.iterator.map(_.count.toLong).sum
-      }
-      // evict oldest entries not used by THIS query
-      var evictable = true
-      while (evictable && localSegPostings > localSegCacheMaxPostings) {
-        localSegCache.keys.find(!terms.contains(_)) match {
-          case Some(k) =>
-            localSegPostings -= localSegCache(k).iterator.map(_.count.toLong).sum
-            localSegCache.remove(k)
-          case None => evictable = false
-        }
-      }
-    }
-    terms.flatMap { t =>
-      // LRU touch
-      localSegCache.remove(t).map { arr => localSegCache.put(t, arr); t -> arr }
-    }.toMap
+    val hits = localSegCache.getAllPresent(terms.asJava).asScala.toMap
+    val missing = terms.filterNot(hits.contains).toSet
+    if (missing.isEmpty) return hits
+    val loaded = indexDirs.zip(perDir).flatMap { case (dir, es) =>
+      val want = es.filter(e => missing(e.term))
+      if (want.isEmpty) Nil
+      else segmentsOf(dir, want.map(_.term), want.map(_.bucket).distinct)
+        .collect().toSeq
+    }.groupBy(_.term).map { case (t, ss) => t -> ss.sortBy(_.minDoc).toArray }
+    localSegCache.putAll(loaded.asJava)
+    hits ++ loaded
   }
+
+  /** `f(lo, hi)` over the docID space of a driver-local query: one call
+    * on this thread when `totalDf` fits the serial budget, else one call
+    * per disjoint range on the driver pool, sharded exactly like the
+    * distributed range path. ~25k postings/range ≈ 10 ms of serial kernel
+    * per task, capped at 4× the pool so task-submit overhead stays
+    * trivial. Callers merge the per-range results and build every
+    * stateful cursor (norms, gates, group maps) INSIDE `f`. */
+  private def localShards[T](totalDf: Long)(f: (Long, Long) => T): Seq[T] =
+    if (totalDf <= localWandUpTo) Seq(f(0L, Long.MaxValue))
+    else {
+      val nr = math.max(1L, math.min(4L * localThreads,
+        math.max(localThreads.toLong, totalDf / 25_000L + 1))).toInt
+      val rsz = math.max(1L, (stats.maxDoc + nr) / nr)
+      (0 until nr).map { r =>
+        localPool.submit(new java.util.concurrent.Callable[T] {
+          def call(): T = f(r * rsz, (r + 1L) * rsz)
+        })
+      }.map(_.get())
+    }
 
   /** Per constituent index: the query terms it knows, with ITS bucket
     * assignment (buckets are per-index — df-local at build time). */
@@ -2212,13 +2184,6 @@ final class QueryEngine(
     }.reduce(_ unionAll _).orderBy(col("src"), col("rank"))
   }
 
-  /** Index metadata surface: ONE row
-    * (n_docs, n_terms, n_postings, max_df, avgdl) — what a search
-    * service's /stats endpoint reports, assembled from the index's own
-    * artifacts (stats + dictionary tables; no corpus scan, no posting
-    * decode). The oracle twin re-derives every value from the raw
-    * corpus, so this entry cross-gates the index METADATA against
-    * corpus truth. */
   /** (term, df) over the whole index — the background document-frequency
     * frame from the index's OWN dictionary artifact (summed across
     * constituent indexes; their docID ranges are disjoint). This is the
@@ -2230,6 +2195,13 @@ final class QueryEngine(
       .groupBy(col("term"))
       .agg(sum(col("df")).as("df"))
 
+  /** Index metadata surface: ONE row
+    * (n_docs, n_terms, n_postings, max_df, avgdl) — what a search
+    * service's /stats endpoint reports, assembled from the index's own
+    * artifacts (stats + dictionary tables; no corpus scan, no posting
+    * decode). The oracle twin re-derives every value from the raw
+    * corpus, so this entry cross-gates the index METADATA against
+    * corpus truth. */
   def indexStats(): DataFrame = {
     val dict = indexDirs.map(Index.readDictionary(spark, _).toDF())
       .reduce(_ unionAll _)
@@ -2287,22 +2259,11 @@ final class QueryEngine(
     val totalDf = combinedDf.values.sum
     val av = stats.avgdl
     if (localWandUpTo > 0 && totalDf <= math.max(localWandUpTo, localParallelCap)) {
-      val byTerm = synchronized { localSegsFor(presentTerms, perDir) }
-      if (totalDf <= localWandUpTo)
-        return QueryEngine.countRange(byTerm, leaderFirst, av,
-          0L, Long.MaxValue, orMode, gate())
-      // pooled count: shard the docID space exactly like the pooled WAND
-      // path (counts are additive over disjoint ranges); fresh gate per
-      // range — the monotone cursor is stateful
-      val nr = math.max(1L, math.min(4L * localThreads,
-        math.max(localThreads.toLong, totalDf / 25_000L + 1))).toInt
-      val rsz = math.max(1L, (stats.maxDoc + nr) / nr)
-      return (0 until nr).map { r =>
-        localPool.submit(new java.util.concurrent.Callable[Long] {
-          def call(): Long = QueryEngine.countRange(byTerm, leaderFirst, av,
-            r * rsz, (r + 1L) * rsz, orMode, gate())
-        })
-      }.map(_.get()).sum
+      val byTerm = localSegsFor(presentTerms, perDir)
+      // counts are additive over disjoint ranges
+      return localShards(totalDf) { (lo, hi) =>
+        QueryEngine.countRange(byTerm, leaderFirst, av, lo, hi, orMode, gate())
+      }.sum
     }
     val sideDfSum = combinedDf.filter(_._1 != driverTerm).values.sum
     val om = orMode
@@ -2474,28 +2435,13 @@ final class QueryEngine(
       totalDf <= math.max(localWandUpTo, localParallelCap),
       s"histogram kernel needs resident postings (total df $totalDf beyond " +
         "the pooled ceiling) — use lenHistogramRelational")
-    val byTerm = synchronized { localSegsFor(presentTerms, perDir) }
-    val counts: Array[Long] =
-      if (totalDf <= localWandUpTo)
-        QueryEngine.countGroupsRange(byTerm, leaderFirst, av,
-          0L, Long.MaxValue, orMode,
-          QueryEngine.monotoneGroupCursor(groups.ids, groups.groups), nG)
-      else {
-        // pooled: shard the docID space exactly like the pooled count;
-        // fresh group cursor per range — the galloping cursor is stateful
-        val nr = math.max(1L, math.min(4L * localThreads,
-          math.max(localThreads.toLong, totalDf / 25_000L + 1))).toInt
-        val rsz = math.max(1L, (stats.maxDoc + nr) / nr)
-        (0 until nr).map { r =>
-          localPool.submit(new java.util.concurrent.Callable[Array[Long]] {
-            def call(): Array[Long] = QueryEngine.countGroupsRange(
-              byTerm, leaderFirst, av, r * rsz, (r + 1L) * rsz, orMode,
-              QueryEngine.monotoneGroupCursor(groups.ids, groups.groups), nG)
-          })
-        }.map(_.get()).reduce { (a, b) =>
-          var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a
-        }
-      }
+    val byTerm = localSegsFor(presentTerms, perDir)
+    val counts: Array[Long] = localShards(totalDf) { (lo, hi) =>
+      QueryEngine.countGroupsRange(byTerm, leaderFirst, av, lo, hi, orMode,
+        QueryEngine.monotoneGroupCursor(groups.ids, groups.groups), nG)
+    }.reduce { (a, b) =>
+      var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a
+    }
     counts.zipWithIndex.collect { case (c, g) if c > 0 =>
       (groups.names(g).toInt, c) }.sortBy(_._1).toSeq
   }
@@ -2762,24 +2708,11 @@ final class QueryEngine(
     // driver-local / pooled fast path (postings + norms resident)
     if (normsBc.isDefined && localWandUpTo > 0 &&
         totalDf <= math.max(localWandUpTo, localParallelCap)) {
-      val byTerm = synchronized { localSegsFor(presentTerms, perDir) }
+      val byTerm = localSegsFor(presentTerms, perDir)
       val norms = normsBc.get.value
-      val hits: Seq[(Long, Long)] =
-        if (totalDf <= localWandUpTo)
-          QueryEngine.sortedRange(byTerm, leaderFirst, av,
-            0L, Long.MaxValue, kk, norms.cursor())
-        else {
-          val nr = math.max(1L, math.min(4L * localThreads,
-            math.max(localThreads.toLong, totalDf / 25_000L + 1))).toInt
-          val rsz = math.max(1L, (stats.maxDoc + nr) / nr)
-          (0 until nr).map { r =>
-            localPool.submit(new java.util.concurrent.Callable[Seq[(Long, Long)]] {
-              def call(): Seq[(Long, Long)] =
-                QueryEngine.sortedRange(byTerm, leaderFirst, av,
-                  r * rsz, (r + 1L) * rsz, kk, norms.cursor())
-            })
-          }.flatMap(_.get())
-        }
+      val hits = localShards(totalDf) { (lo, hi) =>
+        QueryEngine.sortedRange(byTerm, leaderFirst, av, lo, hi, kk, norms.cursor())
+      }.flatten
       return hits.sortBy(h => (-h._2, h._1)).take(k).toDF("docID", "len")
     }
 
@@ -3213,31 +3146,14 @@ final class QueryEngine(
     val totalDf = combinedDf.values.sum + negDfSum
     if (postFilter == null && normsBc.isDefined && localWandUpTo > 0 &&
         totalDf <= math.max(localWandUpTo, localParallelCap)) {
-      val byTerm = synchronized {
+      val byTerm =
         localSegsFor((termCtx.map(_.term) ++ negPresent.toSeq).distinct, perDirAll)
-      }
       val norms = normsBc.get.value
-      val hits: Seq[ScoredDoc] =
-        if (totalDf <= localWandUpTo)
-          wandFn(byTerm, termCtx, norms.cursor(), avgdl,
-            0L, Long.MaxValue, k, rounded)
-        else {
-          // pooled kernel: shard the docID space exactly like the
-          // distributed range path (disjoint ranges, per-range top-k,
-          // one global merge) so rank identity holds by construction.
-          // ~25k postings/range ≈ 10 ms of serial kernel per task,
-          // capped at 4× the pool so task-submit overhead stays trivial
-          val nr = math.max(1L, math.min(4L * localThreads,
-            math.max(localThreads.toLong, totalDf / 25_000L + 1))).toInt
-          val rsz = math.max(1L, (stats.maxDoc + nr) / nr)
-          (0 until nr).map { r =>
-            localPool.submit(new java.util.concurrent.Callable[Seq[ScoredDoc]] {
-              def call(): Seq[ScoredDoc] =
-                wandFn(byTerm, termCtx, norms.cursor(), avgdl,
-                  r * rsz, (r + 1L) * rsz, kk, rnd)
-            })
-          }.flatMap(_.get())
-        }
+      // pooled ranges mirror the distributed range path (disjoint ranges,
+      // per-range top-k, one global merge): rank identity by construction
+      val hits = localShards(totalDf) { (lo, hi) =>
+        wandFn(byTerm, termCtx, norms.cursor(), avgdl, lo, hi, k, rounded)
+      }.flatten
       val ordered =
         (if (rounded) hits.map(h => ScoredDoc(h.docID, r4(h.score))) else hits)
           .sortBy(h => (-h.score, h.docID)).take(k)
@@ -3439,27 +3355,12 @@ final class QueryEngine(
     // ---- driver-local / pooled path (same caps as topKImpl) ----------
     if (normsBc.isDefined && localWandUpTo > 0 &&
         totalDf <= math.max(localWandUpTo, localParallelCap)) {
-      val byReal = synchronized { localSegsFor(memberTerms, perDir) }
+      val byReal = localSegsFor(memberTerms, perDir)
       val norms = normsBc.get.value
-      val hits: Seq[ScoredDoc] =
-        if (totalDf <= localWandUpTo)
-          wandFn(QueryEngine.mergeAllGroups(specs, byReal, norms.cursor(),
-              avgdl, 0L, Long.MaxValue), termCtx,
-            norms.cursor(), avgdl, 0L, Long.MaxValue, k, rounded)
-        else {
-          val nr = math.max(1L, math.min(4L * localThreads,
-            math.max(localThreads.toLong, totalDf / 25_000L + 1))).toInt
-          val rsz = math.max(1L, (stats.maxDoc + nr) / nr)
-          (0 until nr).map { r =>
-            localPool.submit(new java.util.concurrent.Callable[Seq[ScoredDoc]] {
-              def call(): Seq[ScoredDoc] =
-                wandFn(QueryEngine.mergeAllGroups(specs, byReal, norms.cursor(),
-                    avgdl, r * rsz, (r + 1L) * rsz),
-                  termCtx, norms.cursor(), avgdl, r * rsz, (r + 1L) * rsz,
-                  k, rounded)
-            })
-          }.flatMap(_.get())
-        }
+      val hits = localShards(totalDf) { (lo, hi) =>
+        wandFn(QueryEngine.mergeAllGroups(specs, byReal, norms.cursor(), avgdl, lo, hi),
+          termCtx, norms.cursor(), avgdl, lo, hi, k, rounded)
+      }.flatten
       val ordered =
         (if (rounded) hits.map(h => ScoredDoc(h.docID, QueryEngine.r4(h.score)))
          else hits)

@@ -536,6 +536,12 @@ class IndexQuerySpec extends AnyFunSuite {
     assert(parseSearch(""""stream table""").phrases == Seq(Seq("stream", "table")))
     // negated phrase rejected; bare '-' and empty input are inert
     intercept[IllegalArgumentException] { parseSearch("""-"table hash"""") }
+    // path tokens are bare terms; only an unclosed /…/ pair rejects
+    assert(parseSearch("src/").pos == Seq("src"))
+    assert(parseSearch("/usr").pos == Seq("usr"))
+    assert(parseSearch("/usr/lib").pos == Seq("lib", "usr"))
+    intercept[IllegalArgumentException] { parseSearch("/a b/") }
+    assert(parseSearch("/ha.h/").regexes == Seq("ha.h"))
     assert(parseSearch("- ").pos.isEmpty)
     assert(parseSearch("").pos.isEmpty)
   }
@@ -747,25 +753,39 @@ class IndexQuerySpec extends AnyFunSuite {
     val counts = Bm25.QuerySet.map { case (qid, q) =>
       qid -> engine.countMatches(q)
     }.toMap
-    import scala.concurrent._
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    val futs = (0 until 4).flatMap { _ =>
-      Bm25.QuerySet.map { case (qid, q) =>
-        Future {
-          val rows = engine.topK(q, rounded = true).collect().map(_.toSeq).toSeq
-          val n = engine.countMatches(q)
-          (qid, rows, n)
+    def runConcurrently(eng: QueryEngine): Unit = {
+      import scala.concurrent._
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+      val futs = (0 until 4).flatMap { _ =>
+        Bm25.QuerySet.map { case (qid, q) =>
+          Future {
+            val rows = eng.topK(q, rounded = true).collect().map(_.toSeq).toSeq
+            val n = eng.countMatches(q)
+            (qid, rows, n)
+          }
         }
       }
+      val res = Await.result(Future.sequence(futs),
+        duration.Duration(180, "seconds"))
+      pool.shutdown()
+      res.foreach { case (qid, rows, n) =>
+        assert(rows == serial(qid), s"$qid: concurrent topK diverged")
+        assert(n == counts(qid), s"$qid: concurrent count diverged")
+      }
     }
-    val res = Await.result(Future.sequence(futs),
-      duration.Duration(180, "seconds"))
-    pool.shutdown()
-    res.foreach { case (qid, rows, n) =>
-      assert(rows == serial(qid), s"$qid: concurrent topK diverged")
-      assert(n == counts(qid), s"$qid: concurrent count diverged")
-    }
+    runConcurrently(engine)
+    // every query term here has df ≈ 380-415: one-term queries run
+    // serial, two-term queries pooled, three-term ones distributed, and
+    // the 4 × 840-posting segment cache holds fewer terms than the set
+    // uses — so evictions and reloads race under the 8 clients
+    val small = new QueryEngine(spark, Seq(indexDir),
+      localWandUpTo = 420L, localWandThreads = 2)
+    try {
+      runConcurrently(small)
+      assert(small.localSegCache.stats().evictionCount() > 0L,
+        "the small engine never evicted a segment array")
+    } finally small.close()
   }
 
   test("percentile ranks: monotone in value, consistent with percentiles") {
@@ -1586,17 +1606,17 @@ class IndexQuerySpec extends AnyFunSuite {
 
   test("filter-gate cache: content hit, collision fallback, id-bounded eviction") {
     built
-    val eng = new QueryEngine(spark, Seq(indexDir), gateCacheMaxIds = 4L)
+    val eng = new QueryEngine(spark, Seq(indexDir), gateCacheMaxIds = 5L)
     try {
       // content hit: equal arrays (distinct instances) share one broadcast
       val b123 = eng.gateBroadcast(Array(1L, 2L, 3L))
       assert(eng.gateBroadcast(Array(1L, 2L, 3L)) eq b123)
       assert(eng.gateCacheIds == 3L)
       // hash collision (java.util.Arrays.hashCode == 31 for BOTH: the
-      // single elements 0L and 2^32+1 element-hash to 0): the resident
-      // entry must stay resident and the colliding filter must get a
-      // fresh broadcast with ITS OWN content — silently reusing the
-      // resident array would apply the wrong filter
+      // single elements 0L and 2^32+1 element-hash to 0): the key is the
+      // content, so the resident entry stays resident and the colliding
+      // filter falls back to its own entry with ITS OWN content — silently reusing
+      // the resident array would apply the wrong filter
       val z = eng.gateBroadcast(Array(0L))
       assert(java.util.Arrays.hashCode(Array(0L)) ==
         java.util.Arrays.hashCode(Array(4294967297L)))
@@ -1604,12 +1624,13 @@ class IndexQuerySpec extends AnyFunSuite {
       assert(c ne z)
       assert(c.value.toSeq == Seq(4294967297L))
       assert(eng.gateBroadcast(Array(0L)) eq z, "resident entry evicted by collision")
-      assert(eng.gateCacheIds == 4L, "collision must not count toward retained ids")
+      assert(eng.gateBroadcast(Array(4294967297L)) eq c, "colliding entry not cached")
+      assert(eng.gateCacheIds == 5L)
       // eviction is bounded by TOTAL retained ids, oldest-touched first:
-      // adding 2 ids over the cap of 4 evicts the LRU head (the 3-id
+      // adding 2 ids over the cap of 5 evicts the LRU head (the 3-id
       // array; 0L was touched later), then re-requesting it re-broadcasts
       eng.gateBroadcast(Array(9L, 10L))
-      assert(eng.gateCacheIds == 3L)
+      assert(eng.gateCacheIds == 4L)
       assert(eng.gateBroadcast(Array(0L)) eq z, "recently-touched entry evicted")
       assert(eng.gateBroadcast(Array(1L, 2L, 3L)) ne b123)
     } finally eng.close()
