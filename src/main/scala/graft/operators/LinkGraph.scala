@@ -53,8 +53,11 @@ object LinkGraph {
     * exercises extract → absolutize → normalize; the twin constructs
     * the same edges independently in closed form, the crawl-parity
     * sibling-construction pattern), then nofollow-masked (class doc). */
-  def edges(spark: SparkSession, sfDir: String): DataFrame = {
-    val n = Corpus.docs(spark, sfDir).count()
+  def edges(spark: SparkSession, sfDir: String): DataFrame =
+    edges(spark, sfDir, Corpus.docs(spark, sfDir).count())
+
+  /** [[edges]] over a corpus of `n` docs the caller has already counted. */
+  private def edges(spark: SparkSession, sfDir: String, n: Long): DataFrame =
     Crawl.extractLinksParity(spark, sfDir)
       .select(col("docID").as("src"),
         regexp_extract(col("link"), "doc(\\d+)\\.html$", 1)
@@ -64,7 +67,6 @@ object LinkGraph {
         (col("dst") === (col("src") + 1) % n && col("src") % 10 =!= 7) ||
         (col("dst") === (col("src") * 7 + 3) % n &&
           (col("src") % 4 === 0 || col("src") % 25 === 3)))
-  }
 
   /** (docID, prs) for EVERY doc — the full static-rank doc-values
     * vector, prs = round4(rank · N) (mean-normalized so 4-decimal
@@ -76,7 +78,7 @@ object LinkGraph {
     * ≤ 2 — see the class doc). */
   def pageRankAll(spark: SparkSession, sfDir: String): DataFrame = {
     val n = Corpus.docs(spark, sfDir).count()
-    val e = edges(spark, sfDir).cache()
+    val e = edges(spark, sfDir, n).cache()
     val outdeg = e.groupBy(col("src")).agg(count(lit(1)).as("od")).cache()
     val nodes = Corpus.docs(spark, sfDir).select(col("docID").as("id"))
     val base = lit((1.0 - Damping) / n)

@@ -4,8 +4,9 @@ import graft.functions.{Analyzer, Codec}
 import graft.operators.Index._
 import com.google.common.cache.{Cache, CacheBuilder, RemovalNotification}
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType, StructType}
 import java.math.{BigDecimal => JBigDecimal, RoundingMode}
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
@@ -67,6 +68,22 @@ object QueryEngine {
       case _ => false
     }
   }
+
+  /** Schemas of the result frames built on the driver ([[frame]]): the
+    * ones the tuple encoders gave, primitive columns non-nullable, which
+    * is also what the unrounded distributed paths return. */
+  private val ScoreSchema = new StructType()
+    .add("docID", LongType, nullable = false).add("score", DoubleType, nullable = false)
+  private val GroupedSchema = new StructType().add("grp", StringType)
+    .add("rank", IntegerType, nullable = false).add("docID", LongType, nullable = false)
+    .add("score", DoubleType, nullable = false)
+  private val LenSchema = new StructType()
+    .add("docID", LongType, nullable = false).add("len", LongType, nullable = false)
+  private val DocIDSchema = new StructType().add("docID", LongType, nullable = false)
+  private val BucketSchema = new StructType()
+    .add("bucket", LongType, nullable = false).add("n_docs", LongType, nullable = false)
+  private val RangeSchema = new StructType()
+    .add("lo", LongType, nullable = false).add("n_docs", LongType, nullable = false)
 
   /** Spark/DuckDB-compatible HALF_UP rounding to 4 decimals (scores are
     * non-negative). Matches `round(col, 4)`. */
@@ -1403,13 +1420,34 @@ final class QueryEngine(
   /** Small-vocab path: every constituent dictionary pinned on the driver
     * (a search service keeps its term dictionary in memory). Vocabulary
     * grows ~log(corpus), so this holds far beyond sandbox scale; above
-    * the cap, lookups fall back to term-pruned dictionary scans. */
-  private val dictCaches: Option[Seq[Map[String, DictEntry]]] = {
+    * the cap, lookups fall back to term-pruned dictionary scans. Each
+    * dictionary is one array sorted by term (`String` order): a lookup
+    * or a prefix expansion is a binary search ([[dictFrom]]). */
+  private val dictCaches: Option[Seq[Array[DictEntry]]] = {
     val ds = indexDirs.map(d => Index.readDictionary(spark, d))
     if (ds.map(_.count()).sum <= dictCacheUpTo)
-      Some(ds.map(_.collect().map(e => e.term -> e).toMap))
+      Some(ds.map(_.collect().sortBy(_.term)))
     else None
   }
+
+  /** Index of the first entry of the term-sorted `dict` whose term is
+    * `>= t` (`dict.length` when none is). */
+  private def dictFrom(dict: Array[DictEntry], t: String): Int = {
+    var lo = 0
+    var hi = dict.length
+    while (lo < hi) {
+      val mid = (lo + hi) >>> 1
+      if (dict(mid).term.compareTo(t) < 0) lo = mid + 1 else hi = mid
+    }
+    lo
+  }
+
+  /** A per-query result frame built on the driver: `rows` under a fixed
+    * schema, planned as a bare `LocalRelation`. No encoder and no
+    * aliasing `Project` are built, which a `Seq.toDF` does on every call
+    * (1.4–2.4 ms a call on a 4-vCPU VM, most of a resident query). */
+  private def frame(rows: Seq[Row], schema: StructType = ScoreSchema): DataFrame =
+    spark.createDataFrame(rows.asJava, schema)
 
   private def allDocStats =
     indexDirs.map(d => Index.readDocStats(spark, d)).reduce(_ union _)
@@ -1617,13 +1655,11 @@ final class QueryEngine(
       p.prefixes.isEmpty && p.fuzzies.isEmpty && p.wildcards.isEmpty,
       "grouped retrieval supports bare terms and term^w boosts only")
     val terms = p.pos
-    val empty = Seq.empty[(String, Int, Long, Double)]
-      .toDF("grp", "rank", "docID", "score")
-    if (terms.isEmpty || groups.names.isEmpty) return empty
+    if (terms.isEmpty || groups.names.isEmpty) return frame(Nil, GroupedSchema)
     val perDir = lookupPerDir(terms)
     val combinedDf: Map[String, Long] =
       perDir.flatten.groupBy(_.term).map { case (t, es) => t -> es.map(_.df).sum }
-    if (combinedDf.size < terms.size) return empty
+    if (combinedDf.size < terms.size) return frame(Nil, GroupedSchema)
     val nS = stats.n
     val avgdl = stats.avgdl
     val termCtx = combinedDf.toSeq
@@ -1654,7 +1690,7 @@ final class QueryEngine(
             .collect().map(r => (g, ScoredDoc(r.getLong(0), r.getDouble(1)))).toSeq
         }
       }
-    hits
+    frame(hits
       .map { case (g, h) =>
         (g, h.docID, if (rounded) QueryEngine.r4(h.score) else h.score) }
       .groupBy(_._1).toSeq
@@ -1663,7 +1699,7 @@ final class QueryEngine(
           .map { case ((_, d, s), i) => (groups.names(g), i + 1, d, s) }
       }
       .sortBy(r => (r._1, r._2))
-      .toDF("grp", "rank", "docID", "score")
+      .map { case (g, r, d, s) => Row(g, r, d, s) }, GroupedSchema)
   }
 
   /** Driver-contract frame over the fixed grouped query set
@@ -1807,7 +1843,10 @@ final class QueryEngine(
     * assignment (buckets are per-index — df-local at build time). */
   private def lookupPerDir(terms: Seq[String]): Seq[Seq[DictEntry]] =
     dictCaches match {
-      case Some(ms) => ms.map(m => terms.flatMap(m.get))
+      case Some(ds) => ds.map(d => terms.flatMap { t =>
+        val i = dictFrom(d, t)
+        if (i < d.length && d(i).term == t) Some(d(i)) else None
+      })
       case None => indexDirs.map { d =>
         Index.readDictionary(spark, d)
           .filter(col("term").isin(terms: _*))
@@ -1816,9 +1855,11 @@ final class QueryEngine(
     }
 
   /** Expand a term prefix to every dictionary term starting with it
-    * (distinct ascending). Small-vocab path: an in-memory sweep of the
-    * pinned dictionaries. Big-vocab fallback: a `startsWith` dictionary
-    * scan — the dictionary is written term-sorted (Index stage 3), so
+    * (distinct ascending). Small-vocab path: a binary search of each
+    * pinned dictionary for the first term `>= prefix`, then a walk
+    * forward while terms start with it. Big-vocab fallback: a
+    * `startsWith` dictionary scan — the dictionary is written
+    * term-sorted (Index stage 3), so
     * the StringStartsWith filter prunes to the parquet row groups whose
     * term min/max straddle the prefix. `cap` bounds the expansion: an
     * unselective prefix over a web-scale vocabulary ("a*") would turn
@@ -1828,7 +1869,8 @@ final class QueryEngine(
     val p = prefix.toLowerCase(java.util.Locale.ROOT)
     require(p.nonEmpty, "empty prefix")
     val expanded = (dictCaches match {
-      case Some(ms) => ms.flatMap(_.keysIterator.filter(_.startsWith(p)))
+      case Some(ds) => ds.flatMap(d =>
+        d.view.drop(dictFrom(d, p)).map(_.term).takeWhile(_.startsWith(p)))
       case None => indexDirs.flatMap { d =>
         Index.readDictionary(spark, d)
           .filter(col("term").startsWith(p))
@@ -1853,8 +1895,8 @@ final class QueryEngine(
     val q = term.toLowerCase(java.util.Locale.ROOT)
     require(q.nonEmpty, "empty term")
     val expanded = (dictCaches match {
-      case Some(ms) => ms.flatMap(
-        _.keysIterator.filter(QueryEngine.editDistance(_, q) <= maxDist))
+      case Some(ds) => ds.flatMap(
+        _.iterator.map(_.term).filter(QueryEngine.editDistance(_, q) <= maxDist))
       case None => indexDirs.flatMap { d =>
         Index.readDictionary(spark, d)
           .filter(levenshtein(col("term"), lit(q)) <= maxDist)
@@ -1879,7 +1921,7 @@ final class QueryEngine(
     val f = frag.toLowerCase(java.util.Locale.ROOT)
     require(f.nonEmpty, "empty fragment")
     val expanded = (dictCaches match {
-      case Some(ms) => ms.flatMap(_.keysIterator.filter(_.contains(f)))
+      case Some(ds) => ds.flatMap(_.iterator.map(_.term).filter(_.contains(f)))
       case None => indexDirs.flatMap { d =>
         Index.readDictionary(spark, d)
           .filter(col("term").contains(f))
@@ -1917,8 +1959,8 @@ final class QueryEngine(
             s"malformed regex '$pattern': ${e.getMessage}", e)
       }
     val expanded = (dictCaches match {
-      case Some(ms) =>
-        ms.flatMap(_.keysIterator.filter(t => p.matcher(t).matches()))
+      case Some(ds) =>
+        ds.flatMap(_.iterator.map(_.term).filter(t => p.matcher(t).matches()))
       case None => indexDirs.flatMap { d =>
         Index.readDictionary(spark, d)
           .filter(col("term").rlike("^(?:" + pattern + ")$"))
@@ -1938,7 +1980,7 @@ final class QueryEngine(
   def topKFuzzy(term: String, k: Int = Bm25.K, rounded: Boolean = false,
                 maxDist: Int = 1, cap: Int = 64): DataFrame = {
     val terms = expandFuzzy(term, maxDist, cap)
-    if (terms.isEmpty) Seq.empty[(Long, Double)].toDF("docID", "score")
+    if (terms.isEmpty) frame(Nil)
     else topKImpl(terms.mkString(" "), k, rounded, orMode = true)
   }
 
@@ -1958,7 +2000,7 @@ final class QueryEngine(
   def topKPrefix(prefix: String, k: Int = Bm25.K, rounded: Boolean = false,
                  cap: Int = 64): DataFrame = {
     val terms = expandPrefix(prefix, cap)
-    if (terms.isEmpty) Seq.empty[(Long, Double)].toDF("docID", "score")
+    if (terms.isEmpty) frame(Nil)
     else topKImpl(terms.mkString(" "), k, rounded, orMode = true)
   }
 
@@ -1978,7 +2020,7 @@ final class QueryEngine(
   def topKWildcard(frag: String, k: Int = Bm25.K, rounded: Boolean = false,
                    cap: Int = 64): DataFrame = {
     val terms = expandContains(frag, cap)
-    if (terms.isEmpty) Seq.empty[(Long, Double)].toDF("docID", "score")
+    if (terms.isEmpty) frame(Nil)
     else topKImpl(terms.mkString(" "), k, rounded, orMode = true)
   }
 
@@ -1998,7 +2040,7 @@ final class QueryEngine(
   def topKRegex(pattern: String, k: Int = Bm25.K, rounded: Boolean = false,
                 cap: Int = 64): DataFrame = {
     val terms = expandRegex(pattern, cap)
-    if (terms.isEmpty) Seq.empty[(Long, Double)].toDF("docID", "score")
+    if (terms.isEmpty) frame(Nil)
     else topKImpl(terms.mkString(" "), k, rounded, orMode = true)
   }
 
@@ -2153,12 +2195,11 @@ final class QueryEngine(
     * pipeline; the source doc itself is excluded from the k+1 result
     * exactly (top-k excluding one known doc ⊆ top-(k+1) including it). */
   def moreLikeThis(srcDoc: Long, k: Int = Bm25.K, t: Int = 5): DataFrame = {
-    val empty = Seq.empty[(Long, Double)].toDF("docID", "score")
     val tfRows = indexDirs.map(d =>
         spark.read.parquet(s"$d/tf").filter(col("docID") === srcDoc))
       .reduce(_ unionAll _)
       .collect().map(r => r.getAs[String]("term") -> r.getAs[Long]("tf"))
-    if (tfRows.isEmpty) return empty
+    if (tfRows.isEmpty) return frame(Nil)
     val dfs = lookupPerDir(tfRows.map(_._1).distinct.sorted).flatten
       .groupBy(_.term).map { case (tm, es) => tm -> es.map(_.df).sum }
     val n = stats.n
@@ -2457,9 +2498,8 @@ final class QueryEngine(
   def lenHistogramRelational(qtext: String, width: Int,
                              orMode: Boolean = false): DataFrame = {
     require(width > 0, s"bucket width must be positive: $width")
-    val empty = Seq.empty[(Long, Long)].toDF("bucket", "n_docs")
     val terms = Analyzer.queryTerms(qtext)
-    if (terms.isEmpty) return empty
+    if (terms.isEmpty) return frame(Nil, BucketSchema)
     matchDocs(qtext, orMode)
       .join(allDocStats.select(col("docID"), col("len")), "docID")
       .groupBy(floor(col("len") / width).cast("long").as("bucket"))
@@ -2490,7 +2530,7 @@ final class QueryEngine(
     * on this frame. */
   def matchDocs(qtext: String, orMode: Boolean = false): DataFrame = {
     val terms = Analyzer.queryTerms(qtext)
-    if (terms.isEmpty) return Seq.empty[Long].toDF("docID")
+    if (terms.isEmpty) return frame(Nil, DocIDSchema)
     val tf = indexDirs.map(d => spark.read.parquet(s"$d/tf"))
       .reduce(_ unionAll _)
       .filter(col("term").isin(terms: _*))
@@ -2536,9 +2576,8 @@ final class QueryEngine(
   def lenRangesRelational(qtext: String, bounds: Seq[Long],
                           orMode: Boolean = false): DataFrame = {
     require(bounds.nonEmpty && bounds == bounds.sorted, s"bad bounds: $bounds")
-    val empty = Seq.empty[(Long, Long)].toDF("lo", "n_docs")
     val terms = Analyzer.queryTerms(qtext)
-    if (terms.isEmpty) return empty
+    if (terms.isEmpty) return frame(Nil, RangeSchema)
     val matches = matchDocs(qtext, orMode)
     val desc = bounds.reverse
     val startCol = desc.tail.foldLeft(
@@ -2691,13 +2730,12 @@ final class QueryEngine(
     * explains why no early termination exists without a field-sorted
     * index). */
   def topKSortedByLen(qtext: String, k: Int = Bm25.K): DataFrame = {
-    val empty = Seq.empty[(Long, Long)].toDF("docID", "len")
     val terms = Analyzer.queryTerms(qtext)
-    if (terms.isEmpty) return empty
+    if (terms.isEmpty) return frame(Nil, LenSchema)
     val perDir = lookupPerDir(terms)
     val combinedDf: Map[String, Long] =
       perDir.flatten.groupBy(_.term).map { case (t, es) => t -> es.map(_.df).sum }
-    if (combinedDf.size < terms.size) return empty // AND: missing term → ∅
+    if (combinedDf.size < terms.size) return frame(Nil, LenSchema) // AND: missing term → ∅
     val presentTerms = combinedDf.keys.toSeq.sorted
     val driverTerm = combinedDf.maxBy(_._2)._1
     val leaderFirst = (driverTerm +: presentTerms.filterNot(_ == driverTerm)).toArray
@@ -2713,7 +2751,8 @@ final class QueryEngine(
       val hits = localShards(totalDf) { (lo, hi) =>
         QueryEngine.sortedRange(byTerm, leaderFirst, av, lo, hi, kk, norms.cursor())
       }.flatten
-      return hits.sortBy(h => (-h._2, h._1)).take(k).toDF("docID", "len")
+      return frame(hits.sortBy(h => (-h._2, h._1)).take(k)
+        .map { case (d, l) => Row(d, l) }, LenSchema)
     }
 
     val sideDfSum = combinedDf.filter(_._1 != driverTerm).values.sum
@@ -3072,9 +3111,8 @@ final class QueryEngine(
                        // docs matching fewer than msm distinct query
                        // terms are not scored. 1 = plain OR
                        msm: Int = 1): DataFrame = {
-    val empty = Seq.empty[(Long, Double)].toDF("docID", "score")
     val terms = Analyzer.queryTerms(qtext)
-    if (terms.isEmpty) return empty
+    if (terms.isEmpty) return frame(Nil)
     val posGates: Array[Array[String]] =
       if (phraseSeqs != null) phraseSeqs
       else if (phraseMode) Array(Analyzer.tokenize(qtext).toArray)
@@ -3097,11 +3135,11 @@ final class QueryEngine(
     // exact combined df: sum of per-index dfs (docID ranges are disjoint)
     val combinedDf: Map[String, Long] =
       perDir.flatten.groupBy(_.term).map { case (t, es) => t -> es.map(_.df).sum }
-    if (!orMode && combinedDf.size < terms.size) return empty // AND: missing term → ∅
-    if (combinedDf.isEmpty) return empty
+    if (!orMode && combinedDf.size < terms.size) return frame(Nil) // AND: missing term → ∅
+    if (combinedDf.isEmpty) return frame(Nil)
     // msm: fewer dictionary-present terms than the floor → ∅ (no doc
     // can match msm distinct terms the corpus doesn't contain)
-    if (orMode && combinedDf.size < msm) return empty
+    if (orMode && combinedDf.size < msm) return frame(Nil)
 
     val n = stats.n
     val avgdl = stats.avgdl
@@ -3137,12 +3175,15 @@ final class QueryEngine(
 
     // ---- driver-local fast path -------------------------------------
     // All of the query's postings fit the driver cache and norms are
-    // resident → run the WAND kernel here and return a LocalRelation:
-    // zero jobs, zero scheduling latency. Identical kernel + identical
-    // final (rounded-score desc, docID asc) ordering as the distributed
-    // paths, so results are rank-identical by construction (asserted in
-    // IndexQuerySpec across all three paths). Works for AND, OR and
-    // phrase (all terms are co-located on the driver).
+    // resident → run the WAND kernel here: zero jobs, zero scheduling
+    // latency. The top k become `Row`s under the fixed (docID, score)
+    // schema ([[frame]]), so the returned plan is a bare LocalRelation
+    // with no encoder built and a collect() that stays on the driver.
+    // Identical kernel + identical final (rounded-score desc, docID asc)
+    // ordering as the distributed paths, so results are rank-identical
+    // by construction (asserted in IndexQuerySpec across all three
+    // paths). Works for AND, OR and phrase (all terms are co-located on
+    // the driver).
     val totalDf = combinedDf.values.sum + negDfSum
     if (postFilter == null && normsBc.isDefined && localWandUpTo > 0 &&
         totalDf <= math.max(localWandUpTo, localParallelCap)) {
@@ -3157,7 +3198,7 @@ final class QueryEngine(
       val ordered =
         (if (rounded) hits.map(h => ScoredDoc(h.docID, r4(h.score))) else hits)
           .sortBy(h => (-h.score, h.docID)).take(k)
-      return ordered.map(h => (h.docID, h.score)).toDF("docID", "score")
+      return frame(ordered.map(h => Row(h.docID, h.score)))
     }
 
     // ---- physical path selection ------------------------------------
@@ -3327,9 +3368,8 @@ final class QueryEngine(
     * range tasks exactly like plain terms, no driver materialization). */
   def topKSyn(qtext: String, k: Int = Bm25.K,
               rounded: Boolean = true): DataFrame = {
-    val empty = Seq.empty[(Long, Double)].toDF("docID", "score")
     val groups = Analyzer.synGroups(qtext)
-    if (groups.isEmpty) return empty
+    if (groups.isEmpty) return frame(Nil)
     val memberTerms = groups.flatten.distinct.sorted
     val perDir = lookupPerDir(memberTerms)
     val combinedDf: Map[String, Long] =
@@ -3338,7 +3378,7 @@ final class QueryEngine(
     // is an unmatchable conjunct → ∅
     val resolved: Seq[(String, Array[String], Long, Long)] = groups.map { g =>
       val present = g.filter(combinedDf.contains)
-      if (present.isEmpty) return empty
+      if (present.isEmpty) return frame(Nil)
       (g.mkString("|"), present.toArray,
         present.map(combinedDf).max, present.map(combinedDf).sum)
     }
@@ -3365,7 +3405,7 @@ final class QueryEngine(
         (if (rounded) hits.map(h => ScoredDoc(h.docID, QueryEngine.r4(h.score)))
          else hits)
           .sortBy(h => (-h.score, h.docID)).take(k)
-      return ordered.map(h => (h.docID, h.score)).toDF("docID", "score")
+      return frame(ordered.map(h => Row(h.docID, h.score)))
     }
 
     val tc = termCtx
@@ -3493,11 +3533,10 @@ final class QueryEngine(
     * (k+1 .. 2k). A query with fewer than k page-1 results has no page 2
     * (∅ — nothing ranks after a short page 1 by definition). */
   def topKAllPage2(k: Int = Bm25.K): DataFrame = {
-    val empty = Seq.empty[(Long, Double)].toDF("docID", "score")
     contractFrame(Bm25.QuerySet.map { case (qid, qtext) =>
       val page1 = topKImpl(qtext, k, rounded = true, orMode = false)
         .collect().sortBy(r => (-r.getDouble(1), r.getLong(0)))
-      if (page1.length < k) qid -> empty
+      if (page1.length < k) qid -> frame(Nil)
       else {
         val last = page1.last
         qid -> topKImpl(qtext, k, rounded = true, orMode = false,

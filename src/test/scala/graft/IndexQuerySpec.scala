@@ -96,6 +96,45 @@ class IndexQuerySpec extends AnyFunSuite {
     assert(after == before, s"fast path launched ${after - before} job(s)")
   }
 
+  test("driver-local result frames: distributed schema, bare LocalRelation, no job") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    // every driver-built frame (fast-path results and empty results) has
+    // the schema of the same call on the distributed path, names, types
+    // and nullability, and is planned as a bare LocalRelation. Top-k
+    // calls run unrounded: the distributed rounded tail's round() makes
+    // its score column nullable, which no driver-built frame ever was.
+    posEngine // force the positional build
+    val dist = new QueryEngine(spark, Seq(posDir), localWandUpTo = 0L)
+    val lang = Corpus.docs(spark, sfDir).select(col("docID"), col("lang").as("grp"))
+    val calls: Seq[(String, QueryEngine => DataFrame)] = Seq(
+      "AND" -> (_.search("hash join")),
+      "OR" -> (_.search("hash join", orMode = true)),
+      "phrase" -> (_.search("\"table hash\"")),
+      "NOT" -> (_.search("hash join -window")),
+      "grouped" -> (e => e.searchGroupedTopK("hash join", e.prepareGroups(lang))),
+      "synonym" -> (_.topKSyn("hash|join table", rounded = false)),
+      "absent term" -> (_.search("zzzzunknown")),
+      "only negative" -> (_.search("-window")))
+    val sc = spark.sparkContext
+    for ((name, call) <- calls) {
+      assert(call(posEngine).schema == call(dist).schema, s"$name: schema differs")
+      call(posEngine).collect() // warm the segment cache
+      val df = call(posEngine)
+      assert(df.queryExecution.analyzed.isInstanceOf[LocalRelation],
+        s"$name: plan is not a bare LocalRelation:\n${df.queryExecution.analyzed}")
+      val before = sc.statusTracker.getJobIdsForGroup(null).length
+      df.collect()
+      val after = sc.statusTracker.getJobIdsForGroup(null).length
+      assert(after == before, s"$name: collect launched ${after - before} job(s)")
+    }
+    // the grouped frame is driver-built on every path: pin its encoder schema
+    import spark.implicits._
+    assert(posEngine.searchGroupedTopK("hash join", posEngine.prepareGroups(lang)).schema ==
+      Seq.empty[(String, Int, Long, Double)].toDF("grp", "rank", "docID", "score").schema)
+    dist.close()
+  }
+
   test("pooled driver-local path: identical to serial local + distributed; no job launched") {
     built
     // Force the POOLED branch: serial threshold 1 posting with an
@@ -406,8 +445,8 @@ class IndexQuerySpec extends AnyFunSuite {
     }
   }
 
+  private val posDir = "target/test-index-pos-sf0001"
   private lazy val posEngine: QueryEngine = {
-    val posDir = "target/test-index-pos-sf0001"
     new Directory(new java.io.File(posDir)).deleteRecursively()
     Index.build(spark, sfDir, posDir,
       BuildParams(numBuckets = 8, saltThreshold = 50, saltChunk = 64,
@@ -1227,6 +1266,24 @@ class IndexQuerySpec extends AnyFunSuite {
       assert(QueryEngine.editDistance(t, s) <= 1)
       assert(dfr.exists(c => c._1 == s && c._2 == d))
     }
+  }
+
+  test("prefix expansion: binary search of the sorted dictionary == brute startsWith") {
+    built
+    val vocab = engine.dictionaryDf().select(col("term")).collect().map(_.getString(0)).sorted
+    def brute(p: String) = vocab.filter(_.startsWith(p)).toSeq
+    val below = "!"
+    val above = "~"
+    assert(below < vocab.head && above > vocab.last, "fixture: bounds must straddle the vocabulary")
+    val exact = "window"
+    assert(vocab.contains(exact))
+    for (p <- Seq(exact, below, above) ++ ('a' to 'z').map(_.toString))
+      assert(engine.expandPrefix(p, cap = vocab.length) == brute(p), s"prefix '$p'")
+    assert(engine.expandPrefix(exact).contains(exact))
+    assert(engine.expandPrefix(below).isEmpty && engine.expandPrefix(above).isEmpty)
+    // a prefix that still expands past the cap rejects
+    assert(brute("s").size > 3)
+    intercept[IllegalArgumentException] { engine.expandPrefix("s", cap = 3) }
   }
 
   test("fuzzy/prefix expansions: in-memory sweep == dictionary-scan fallback") {
