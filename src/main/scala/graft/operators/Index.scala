@@ -597,15 +597,18 @@ object Index {
     import spark.implicits._
     // bucket filter → partition-directory pruning; term filter → pushed
     // to parquet row-group min/max (segments written term-sorted).
-    postings
-      .filter(col("bucket").isin(buckets: _*) && col("term").isin(terms: _*))
-      .select(col("term"), col("bucket"), col("df"), col("minDoc"),
-        col("maxDoc"), col("count"), col("docBlob"), col("tfBlob"),
-        col("blockLastDoc"), col("blockMaxTf"), col("blockMinLen"),
-        col("blockDocOff"), col("blockTfOff"),
-        col("posBlob"), col("blockPosOff"))
+    segmentColumns(postings
+      .filter(col("bucket").isin(buckets: _*) && col("term").isin(terms: _*)))
       .as[PostingSegment]
   }
+
+  /** The [[PostingSegment]] fields of a postings frame, in field order. */
+  def segmentColumns(postings: DataFrame): DataFrame =
+    postings.select(col("term"), col("bucket"), col("df"), col("minDoc"),
+      col("maxDoc"), col("count"), col("docBlob"), col("tfBlob"),
+      col("blockLastDoc"), col("blockMaxTf"), col("blockMinLen"),
+      col("blockDocOff"), col("blockTfOff"),
+      col("posBlob"), col("blockPosOff"))
 
   def readDocStats(spark: SparkSession, indexDir: String): Dataset[DocStat] = {
     import spark.implicits._

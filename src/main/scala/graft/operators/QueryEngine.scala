@@ -2,11 +2,13 @@ package graft.operators
 
 import graft.functions.{Analyzer, Codec}
 import graft.operators.Index._
-import com.google.common.cache.{Cache, CacheBuilder, RemovalNotification}
+import com.google.common.cache.{AbstractCache, Cache, CacheBuilder, CacheStats, RemovalNotification}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType, StructType}
+import org.apache.spark.storage.StorageLevel
 import java.math.{BigDecimal => JBigDecimal, RoundingMode}
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
@@ -59,6 +61,34 @@ object QueryEngine {
       .recordStats()
       .build[K, V]()
 
+  /** Open engines per postings cache entry. Engines over one index dir
+    * share a single entry in Spark's cache manager (a later `persist` of
+    * the same plan reuses it), so only the last of them to close may
+    * unpersist it. Keyed by the entry's `CachedRDDBuilder`, by identity. */
+  private val postingsUsers = new java.util.IdentityHashMap[AnyRef, Integer]
+
+  private def cacheEntry(df: DataFrame): AnyRef =
+    df.queryExecution.withCachedData
+      .collectFirst { case m: InMemoryRelation => m.cacheBuilder }
+      .getOrElse(df)
+
+  /** `df` persisted, with one more open engine counted on its entry. */
+  private def retainPostings(df: DataFrame): DataFrame = postingsUsers.synchronized {
+    df.persist(StorageLevel.MEMORY_AND_DISK)
+    postingsUsers.merge(cacheEntry(df), 1, (a, b) => a + b)
+    df
+  }
+
+  /** One open engine fewer on `df`'s cache entry; the last one
+    * unpersists it. */
+  private def releasePostings(df: DataFrame): Unit = postingsUsers.synchronized {
+    val entry = cacheEntry(df)
+    if (postingsUsers.merge(entry, -1, (a, b) => a + b) == 0) {
+      postingsUsers.remove(entry)
+      df.unpersist(false)
+    }
+  }
+
   /** Content key of a filter-gate array: equal ids share one cache entry,
     * and arrays whose hashes collide stay distinct entries. */
   private[graft] final class GateKey(val ids: Array[Long]) {
@@ -84,6 +114,10 @@ object QueryEngine {
     .add("bucket", LongType, nullable = false).add("n_docs", LongType, nullable = false)
   private val RangeSchema = new StructType()
     .add("lo", LongType, nullable = false).add("n_docs", LongType, nullable = false)
+  private val ExplainSchema = new StructType()
+    .add("rank", IntegerType, nullable = false).add("docID", LongType, nullable = false)
+    .add("term", StringType).add("tf", LongType, nullable = false)
+    .add("df", LongType, nullable = false).add("contrib", DoubleType, nullable = false)
 
   /** Spark/DuckDB-compatible HALF_UP rounding to 4 decimals (scores are
     * non-negative). Matches `round(col, 4)`. */
@@ -1459,18 +1493,25 @@ final class QueryEngine(
     * queries then skip in-memory batches on (bucket, term) stats instead
     * of re-reading parquet per query. MEMORY_AND_DISK and LRU-evictable,
     * so an index bigger than the cluster degrades gracefully to the
-    * parquet path rather than failing. */
+    * parquet path rather than failing. Engines over the same dir share
+    * one cache entry, which the last of them to close unpersists. */
   private val postingsByDir: Map[String, DataFrame] =
     indexDirs.map { d =>
       val df = spark.read.parquet(s"$d/postings")
-      d -> (if (cachePostings)
-        df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else df)
+      d -> (if (cachePostings) retainPostings(df) else df)
     }.toMap
 
   private def segmentsOf(dir: String, terms: Seq[String],
                          buckets: Seq[Int]) =
     Index.segmentsFrom(spark, postingsByDir(dir), terms, buckets)
+
+  /** Segment-cache misses load through one fetch planned here, over the
+    * same postings frames. */
+  private[graft] val segFetch = new SegmentFetch(indexDirs.map(postingsByDir))
+
+  /** `segs` grouped by term, each term's segments in minDoc order. */
+  private def byTerm(segs: Seq[PostingSegment]): Map[String, Array[PostingSegment]] =
+    segs.groupBy(_.term).map { case (t, ss) => t -> ss.sortBy(_.minDoc).toArray }
 
   /** Small-corpus path: norms as sorted primitive arrays (binary-search
     * lookup) — flat, boxing-free broadcast payload. Collected docID-sorted
@@ -1502,9 +1543,19 @@ final class QueryEngine(
   private val sideBcCache =
     boundedCache[String, Broadcast[Map[String, Array[PostingSegment]]]](256)((_, _) => 1)
 
-  private def sideBroadcast(key: String)(
-      compute: => Map[String, Array[PostingSegment]]) =
-    sideBcCache.get(key, () => spark.sparkContext.broadcast(compute))
+  /** The cached broadcast under `key` of every segment of `perDir`'s
+    * terms except `driverTerm`'s: the driver term is scanned distributed
+    * and may be a head term, so it is never collected. Loaded with one
+    * pruned collect per dir, which keeps the batch-stat (or parquet
+    * row-group) pruning that a [[segFetch]] gives up. */
+  private def sideBroadcast(key: String, driverTerm: String, perDir: Seq[Seq[DictEntry]]) =
+    sideBcCache.get(key, () => spark.sparkContext.broadcast(byTerm(
+      indexDirs.zip(perDir).flatMap { case (dir, es) =>
+        val se = es.filter(_.term != driverTerm)
+        if (se.isEmpty) Nil
+        else segmentsOf(dir, se.map(_.term), se.map(_.bucket).distinct)
+          .coalesce(spark.sparkContext.defaultParallelism).collect().toSeq
+      })))
 
   /** Session cache of the driver term's GLOBAL segment-range directory
     * (sorted parallel minDoc/maxDoc arrays) — the metadata that lets OR
@@ -1750,7 +1801,7 @@ final class QueryEngine(
     Seq(sideBcCache, gateBcCache, rangeDirCache, localSegCache).foreach(_.invalidateAll())
     if (localPoolInit) localPool.shutdown()
     normsBc.foreach(_.destroy())
-    if (cachePostings) postingsByDir.values.foreach(_.unpersist(false))
+    if (cachePostings) postingsByDir.values.foreach(releasePostings)
   }
 
   // --------------------------------------------- driver-resident fast path
@@ -1799,22 +1850,28 @@ final class QueryEngine(
       })
   }
 
+  /** Loads into [[localSegCache]], counted apart: its misses are filled
+    * with `putAll`, which Guava's own load counters do not see. */
+  private val segLoads = new AbstractCache.SimpleStatsCounter
+
+  /** Counters of the driver segment cache since the engine opened: hits
+    * and misses count terms, a load is one fetch of all of a query's
+    * missed terms (`totalLoadTime` in ns), evictions count terms. */
+  def segmentCacheStats: CacheStats = localSegCache.stats().plus(segLoads.snapshot())
+
   /** The full segment arrays of `terms`: hits from [[localSegCache]],
-    * misses loaded with one pruned collect per index dir. The load holds
-    * no lock, so a warm query never waits on it; two queries missing the
-    * same term may both load it, and the later `putAll` stores an equal
-    * array. */
+    * misses loaded with one [[segFetch]] over every index dir. The load
+    * holds no lock, so a warm query never waits on it; two queries
+    * missing the same term may both load it, and the later `putAll`
+    * stores an equal array. */
   private def localSegsFor(terms: Seq[String],
                            perDir: Seq[Seq[DictEntry]]): Map[String, Array[PostingSegment]] = {
     val hits = localSegCache.getAllPresent(terms.asJava).asScala.toMap
     val missing = terms.filterNot(hits.contains).toSet
     if (missing.isEmpty) return hits
-    val loaded = indexDirs.zip(perDir).flatMap { case (dir, es) =>
-      val want = es.filter(e => missing(e.term))
-      if (want.isEmpty) Nil
-      else segmentsOf(dir, want.map(_.term), want.map(_.bucket).distinct)
-        .collect().toSeq
-    }.groupBy(_.term).map { case (t, ss) => t -> ss.sortBy(_.minDoc).toArray }
+    val t0 = System.nanoTime()
+    val loaded = byTerm(segFetch(perDir.map(_.filter(e => missing(e.term)))).toSeq)
+    segLoads.recordLoadSuccess(System.nanoTime() - t0)
     localSegCache.putAll(loaded.asJava)
     hits ++ loaded
   }
@@ -2119,12 +2176,10 @@ final class QueryEngine(
     * length recovered as Σtf over the doc's rows (the build's own
     * definition of len). */
   def explainScores(qtext: String, k: Int = Bm25.K): DataFrame = {
-    val empty = Seq.empty[(Int, Long, String, Long, Long, Double)]
-      .toDF("rank", "docID", "term", "tf", "df", "contrib")
     val terms = Analyzer.queryTerms(qtext)
     val top = topK(qtext, k, rounded = true).collect()
       .map(r => (r.getLong(0), r.getDouble(1)))
-    if (top.isEmpty) return empty
+    if (top.isEmpty) return frame(Nil, ExplainSchema)
     val ids = top.map(_._1)
     val tfRows = indexDirs.map(d =>
         spark.read.parquet(s"$d/tf").filter(col("docID").isin(ids: _*)))
@@ -2137,15 +2192,14 @@ final class QueryEngine(
       .map { case (t, es) => t -> es.map(_.df).sum }
     val n = stats.n
     val avgdl = stats.avgdl
-    top.zipWithIndex.toSeq.flatMap { case ((docID, _), i) =>
+    frame(top.zipWithIndex.toSeq.flatMap { case ((docID, _), i) =>
       terms.map { t =>
         val tf = tfOf((docID, t)) // AND semantics: every term present
         val df = dfs(t)
-        (i + 1, docID, t, tf, df,
+        Row(i + 1, docID, t, tf, df,
           QueryEngine.r4(Bm25.contrib(Bm25.idf(n, df), tf, lens(docID), avgdl)))
       }
-    }.toDF("rank", "docID", "term", "tf", "df", "contrib")
-      .orderBy(col("rank"), col("term"))
+    }, ExplainSchema).orderBy(col("rank"), col("term"))
   }
 
   /** Driver-contract frame over the fixed AND query set
@@ -2312,14 +2366,7 @@ final class QueryEngine(
     val dt = driverTerm
     if (sideDfSum <= broadcastPostingsUpTo) {
       val para = spark.sparkContext.defaultParallelism
-      val sideBc = sideBroadcast(dt + "|" + presentTerms.mkString(",")) {
-        indexDirs.zip(perDir).flatMap { case (dir, es) =>
-          val se = es.filter(_.term != dt)
-          if (se.isEmpty) Nil
-          else segmentsOf(dir, se.map(_.term),
-            se.map(_.bucket).distinct).coalesce(para).collect().toSeq
-        }.groupBy(_.term).map { case (t, ss) => t -> ss.sortBy(_.minDoc).toArray }
-      }
+      val sideBc = sideBroadcast(dt + "|" + presentTerms.mkString(","), dt, perDir)
       val rangeDir: (Array[Long], Array[Long]) =
         if (om && presentTerms.length > 1) driverRangeDir(dt, perDir) else null
       val driverSegs = indexDirs.zip(perDir)
@@ -2765,14 +2812,7 @@ final class QueryEngine(
       // so per-task results partition cleanly across disjoint segments
       val bc = normsBc.get
       val para = spark.sparkContext.defaultParallelism
-      val sideBc = sideBroadcast(dt + "|" + presentTerms.mkString(",")) {
-        indexDirs.zip(perDir).flatMap { case (dir, es) =>
-          val se = es.filter(_.term != dt)
-          if (se.isEmpty) Nil
-          else segmentsOf(dir, se.map(_.term),
-            se.map(_.bucket).distinct).coalesce(para).collect().toSeq
-        }.groupBy(_.term).map { case (t, ss) => t -> ss.sortBy(_.minDoc).toArray }
-      }
+      val sideBc = sideBroadcast(dt + "|" + presentTerms.mkString(","), dt, perDir)
       val driverSegs = indexDirs.zip(perDir)
         .filter(_._2.exists(_.term == dt))
         .map { case (dir, es) =>
@@ -3243,14 +3283,8 @@ final class QueryEngine(
       val bc = normsBc.get
       val para = spark.sparkContext.defaultParallelism
       val sideBc = sideBroadcast(driverTerm + "|" + terms.sorted.mkString(",") +
-          (if (negPresent.isEmpty) "" else "|!" + negPresent.mkString(","))) {
-        indexDirs.zip(perDirAll).flatMap { case (dir, es) =>
-          val se = es.filter(_.term != driverTerm)
-          if (se.isEmpty) Nil
-          else segmentsOf(dir, se.map(_.term),
-            se.map(_.bucket).distinct).coalesce(para).collect().toSeq
-        }.groupBy(_.term).map { case (t, ss) => t -> ss.sortBy(_.minDoc).toArray }
-      }
+          (if (negPresent.isEmpty) "" else "|!" + negPresent.mkString(",")),
+        driverTerm, perDirAll)
       // global driver-segment range directory — OR multi-term only (AND
       // matches always contain the driver term, so ownership is implicit)
       val rangeDir: (Array[Long], Array[Long]) =
@@ -3324,20 +3358,12 @@ final class QueryEngine(
       }
     }
 
-    val gated =
+    finishTopK(
       if (postFilter == null) local.toDF()
       else local.toDF().join(
         postFilter.select(col("docID").cast("long").as("docID")).distinct(),
-        Seq("docID"), "left_semi")
-    if (rounded)
-      gated
-        .withColumn("score", round(col("score"), 4))
-        .orderBy(col("score").desc, col("docID").asc)
-        .limit(k)
-    else
-      gated
-        .orderBy(col("score").desc, col("docID").asc)
-        .limit(k)
+        Seq("docID"), "left_semi"),
+      k, rounded)
   }
 
   /** Driver-contract shape over the whole fixed query set:
@@ -3430,14 +3456,7 @@ final class QueryEngine(
       val bc = normsBc.get
       val para = spark.sparkContext.defaultParallelism
       val sideBc = sideBroadcast(
-          driverTerm + "|" + memberTerms.sorted.mkString(",")) {
-        indexDirs.zip(perDir).flatMap { case (dir, es) =>
-          val se = es.filter(_.term != driverTerm)
-          if (se.isEmpty) Nil
-          else segmentsOf(dir, se.map(_.term),
-            se.map(_.bucket).distinct).coalesce(para).collect().toSeq
-        }.groupBy(_.term).map { case (t, ss) => t -> ss.sortBy(_.minDoc).toArray }
-      }
+        driverTerm + "|" + memberTerms.sorted.mkString(","), driverTerm, perDir)
       val rangeDir = driverRangeDir(driverTerm, perDir)
       val driverSegs = indexDirs.zip(perDir)
         .filter(_._2.exists(_.term == driverTerm))
@@ -3461,7 +3480,7 @@ final class QueryEngine(
             }
         }
       }
-      return finishTopK(local, k, rounded)
+      return finishTopK(local.toDF(), k, rounded)
     }
 
     // ---- distributed range path (fallback beyond the broadcast cap) --
@@ -3504,22 +3523,18 @@ final class QueryEngine(
           }
         }
     }
-    finishTopK(local, k, rounded)
+    finishTopK(local.toDF(), k, rounded)
   }
 
-  /** Global rounded top-k over a per-range candidate Dataset — the
-    * shared tail of the synonym physical paths. */
-  private def finishTopK(local: org.apache.spark.sql.Dataset[ScoredDoc],
-                         k: Int, rounded: Boolean): DataFrame =
-    if (rounded)
-      local.toDF()
-        .withColumn("score", round(col("score"), 4))
-        .orderBy(col("score").desc, col("docID").asc)
-        .limit(k)
-    else
-      local.toDF()
-        .orderBy(col("score").desc, col("docID").asc)
-        .limit(k)
+  /** Global top-k over per-range (docID, score) candidates — the shared
+    * tail of the distributed paths. `round` is nullable in Spark; the
+    * no-op `coalesce` keeps the rounded score non-nullable, like every
+    * driver-built frame and the unrounded tail. */
+  private def finishTopK(local: DataFrame, k: Int, rounded: Boolean): DataFrame =
+    (if (rounded) local.withColumn("score", coalesce(round(col("score"), 4), lit(0.0)))
+     else local)
+      .orderBy(col("score").desc, col("docID").asc)
+      .limit(k)
 
   /** Driver-contract frame over the fixed SYNONYM query set. */
   def topKAllSyn(k: Int = Bm25.K): DataFrame =

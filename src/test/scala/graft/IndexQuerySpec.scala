@@ -101,14 +101,14 @@ class IndexQuerySpec extends AnyFunSuite {
     import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
     // every driver-built frame (fast-path results and empty results) has
     // the schema of the same call on the distributed path, names, types
-    // and nullability, and is planned as a bare LocalRelation. Top-k
-    // calls run unrounded: the distributed rounded tail's round() makes
-    // its score column nullable, which no driver-built frame ever was.
+    // and nullability, and is planned as a bare LocalRelation.
     posEngine // force the positional build
     val dist = new QueryEngine(spark, Seq(posDir), localWandUpTo = 0L)
     val lang = Corpus.docs(spark, sfDir).select(col("docID"), col("lang").as("grp"))
     val calls: Seq[(String, QueryEngine => DataFrame)] = Seq(
       "AND" -> (_.search("hash join")),
+      "AND rounded" -> (_.search("hash join", rounded = true)),
+      "synonym rounded" -> (_.topKSyn("hash|join table", rounded = true)),
       "OR" -> (_.search("hash join", orMode = true)),
       "phrase" -> (_.search("\"table hash\"")),
       "NOT" -> (_.search("hash join -window")),
@@ -452,6 +452,107 @@ class IndexQuerySpec extends AnyFunSuite {
       BuildParams(numBuckets = 8, saltThreshold = 50, saltChunk = 64,
         segmentSize = 128, partitions = 4, storePositions = true))
     new QueryEngine(spark, Seq(posDir))
+  }
+
+  /** A segment as comparable values, arrays by content. */
+  private def segFields(s: PostingSegment): Seq[Any] =
+    s.productIterator.map {
+      case a: Array[_] => a.toSeq
+      case x => x
+    }.toSeq
+
+  test("segment fetch == pruned segmentsFrom collect, every term (default, LSM, uncached)") {
+    posEngine
+    val docs = Corpus.docs(spark, sfDir)
+    val posParams = BuildParams(numBuckets = 8, saltThreshold = 50, saltChunk = 64,
+      segmentSize = 128, partitions = 4, storePositions = true)
+    val lsmDirs = Seq("target/test-index-pos-lsm-a", "target/test-index-pos-lsm-b")
+    lsmDirs.foreach(d => new Directory(new java.io.File(d)).deleteRecursively())
+    Index.buildFrom(spark, docs.filter(col("docID") < 250), lsmDirs(0), posParams)
+    Index.buildFrom(spark, docs.filter(col("docID") >= 250), lsmDirs(1), posParams)
+    val engines = Seq(
+      "default" -> (posEngine, Seq(posDir)),
+      "LSM" -> (new QueryEngine(spark, lsmDirs), lsmDirs),
+      "uncached" -> (new QueryEngine(spark, Seq(posDir), cachePostings = false), Seq(posDir)))
+    for ((name, (e, dirs)) <- engines) {
+      val dicts = dirs.map(d => Index.readDictionary(spark, d).collect().toSeq)
+      // one fetch per bucket covers every term and exercises the pruning
+      for (b <- dicts.flatten.map(_.bucket).distinct.sorted) {
+        val perDir = dicts.map(_.filter(_.bucket == b))
+        val want = dirs.zip(perDir).flatMap { case (d, es) =>
+          if (es.isEmpty) Nil
+          else Index.segmentsFrom(spark, spark.read.parquet(s"$d/postings"),
+            es.map(_.term), Seq(b)).collect().toSeq
+        }
+        val got = e.segFetch(perDir).toSeq
+        assert(want.nonEmpty, s"$name bucket $b: no segments")
+        val order = (s: PostingSegment) => (s.term, s.minDoc)
+        val same = got.sortBy(order).map(segFields) == want.sortBy(order).map(segFields)
+        assert(same, s"$name bucket $b: fetched ${got.size} segments, want ${want.size}")
+        assert(e.segFetch.partitionsFor(perDir).size < e.segFetch.numPartitions,
+          s"$name bucket $b: fetch scans every partition")
+      }
+    }
+    engines.tail.foreach(_._2._1.close())
+    // the last engine over a dir to close drops its postings cache
+    for (d <- lsmDirs)
+      assert(spark.read.parquet(s"$d/postings").storageLevel ==
+        org.apache.spark.storage.StorageLevel.NONE, s"$d still cached after close")
+  }
+
+  test("cold miss: one job over the missed buckets' partitions only") {
+    posEngine
+    spark.read.parquet(s"$posDir/postings").count() // materialise the shared cache entry
+    val sc = spark.sparkContext
+    // taken before the open: the fetch is planned there
+    val persisted = sc.getPersistentRDDs.size
+    val e = new QueryEngine(spark, Seq(posDir))
+    val perDir = Seq(Index.readDictionary(spark, posDir)
+      .filter(col("term").isin("hash", "join")).collect().toSeq)
+    val parts = e.segFetch.partitionsFor(perDir).size
+    assert(parts > 0 && parts < e.segFetch.numPartitions,
+      s"$parts of ${e.segFetch.numPartitions} partitions")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val tasks = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet()
+        tasks.addAndGet(j.stageInfos.map(_.numTasks).sum)
+      }
+    }
+    org.apache.spark.graftshim.ListenerShim.drain(sc)
+    sc.addSparkListener(listener)
+    val cold = collectTopK(e.search("hash join"))
+    org.apache.spark.graftshim.ListenerShim.drain(sc)
+    assert(jobs.get == 1, s"cold miss launched ${jobs.get} jobs")
+    assert(tasks.get == parts, s"cold miss ran ${tasks.get} tasks, not $parts")
+    assert(sc.getPersistentRDDs.size == persisted, "the open or the fetch persisted a copy")
+    assert(collectTopK(e.search("hash join")) == cold)
+    org.apache.spark.graftshim.ListenerShim.drain(sc)
+    sc.removeSparkListener(listener)
+    assert(jobs.get == 1, "warm repeat launched a job")
+    assert(cold == collectTopK(posEngine.search("hash join")))
+    e.close()
+    assert(sc.getPersistentRDDs.size == persisted,
+      "closing a second engine dropped the postings cache posEngine still uses")
+  }
+
+  test("segment cache counters: a cold query misses and loads, a warm one only hits") {
+    posEngine
+    val e = new QueryEngine(spark, Seq(posDir))
+    val s0 = e.segmentCacheStats
+    e.search("hash join").collect()
+    val s1 = e.segmentCacheStats
+    assert(s1.missCount - s0.missCount == 2, s"misses ${s0.missCount} → ${s1.missCount}")
+    assert(s1.loadSuccessCount - s0.loadSuccessCount == 1)
+    assert(s1.totalLoadTime > s0.totalLoadTime)
+    e.search("hash join").collect()
+    val s2 = e.segmentCacheStats
+    assert(s2.missCount == s1.missCount && s2.loadSuccessCount == s1.loadSuccessCount,
+      s"warm query moved misses/loads: $s1 → $s2")
+    assert(s2.hitCount - s1.hitCount == 2)
+    assert(s2.evictionCount == 0)
+    e.close()
   }
 
   test("phrase: rank-identity vs exact phrase oracle (every phrase query)") {
