@@ -160,19 +160,10 @@ object QueryEngine {
           val j = java.util.Arrays.binarySearch(ids, docID)
           require(j >= 0, s"docID $docID absent from docstats")
           i = j
-        } else if (ids(i) < docID) {
-          // gallop forward: ids(i + bound/2) < docID invariant
-          var bound = 1
-          while (i + bound < ids.length && ids(i + bound) < docID) bound <<= 1
-          var lo = i + (bound >> 1)
-          var hi = math.min(i + bound, ids.length)
-          while (lo < hi) {
-            val mid = (lo + hi) >>> 1
-            if (ids(mid) < docID) lo = mid + 1 else hi = mid
-          }
-          require(lo < ids.length && ids(lo) == docID,
+        } else {
+          i = gallop(ids, i, docID)
+          require(i < ids.length && ids(i) == docID,
             s"docID $docID absent from docstats")
-          i = lo
         }
         lens(i)
       }
@@ -316,121 +307,437 @@ object QueryEngine {
   final case class ScoredDoc(docID: Long, score: Double)
   final case class RangedSeg(rangeId: Int, seg: PostingSegment)
 
-  /** Conjunctive block-max WAND over one docID range [lo, hi).
-    * `termsSorted` ascending by term — scores accumulate in that fixed
-    * order (rank-identity contract). Returns up to k (docID, score) with
-    * score EXACT; ordering/rounding applied by the caller. In `rounded`
-    * mode the heap competes on (round4(score), docID) so pruning matches
-    * the final rounded ranking. */
-  def wandRange(
-      segsByTerm: Map[String, Array[PostingSegment]],
-      termsSorted: Array[TermCtx],
-      lenOf: Long => Long,
-      avgdl: Double,
-      lo: Long, hi: Long, k: Int,
-      rounded: Boolean): Seq[ScoredDoc] =
-    conjunctiveRange(segsByTerm, termsSorted, lenOf, avgdl, lo, hi, k,
-      rounded, null, 0, null)
+  /** BM25 length normalisation k1·(1 − b + b·len/avgdl), k1 = 1.2, b = 0.75. */
+  private def lenNorm(len: Long, avgdl: Double): Double =
+    1.2 * (0.25 + 0.75 * len.toDouble / avgdl)
 
-  /** Exact-phrase variant: conjunctive WAND whose aligned candidates must
-    * additionally contain the phrase tokens at CONSECUTIVE positions
-    * (positional index required). Scoring is plain BM25 over the
-    * phrase's distinct terms — identical to the AND score, gated by the
-    * adjacency test, so all WAND bounds stay admissible (phrase matches
-    * ⊆ AND matches). */
-  def phraseRange(phraseSeq: Array[String])(
-      segsByTerm: Map[String, Array[PostingSegment]],
-      termsSorted: Array[TermCtx],
-      lenOf: Long => Long,
-      avgdl: Double,
-      lo: Long, hi: Long, k: Int,
-      rounded: Boolean): Seq[ScoredDoc] =
-    conjunctiveRange(segsByTerm, termsSorted, lenOf, avgdl, lo, hi, k,
-      rounded, Array(phraseSeq), 0, null)
+  /** One term's BM25 contribution at `tf` under `norm` ([[lenNorm]]). */
+  private def contrib(tc: TermCtx, tf: Long, norm: Double): Double = {
+    val tfv = tf.toDouble
+    tc.boost * (tc.idf * (tfv * 2.2) / (tfv + norm))
+  }
 
-  /** Proximity variant: conjunctive WAND whose aligned candidates must
-    * additionally contain ALL query terms within some window of `w`
-    * consecutive tokens (positional index required). Like the phrase
-    * gate, window matches ⊆ AND matches, so scoring and all pruning
-    * bounds are exactly the AND path's. */
-  def windowRange(terms: Array[String], w: Int)(
-      segsByTerm: Map[String, Array[PostingSegment]],
-      termsSorted: Array[TermCtx],
-      lenOf: Long => Long,
-      avgdl: Double,
-      lo: Long, hi: Long, k: Int,
-      rounded: Boolean): Seq[ScoredDoc] =
-    conjunctiveRange(segsByTerm, termsSorted, lenOf, avgdl, lo, hi, k,
-      rounded, Array(terms), w, null)
+  // ----------------------------------------------------------- collectors
 
-  /** Kernel factory for every (AND/OR/phrase/window) × (gated/ungated)
-    * shape — one 8-arg function the physical paths dispatch on. `posGates`
-    * (may be null = no positional gate) carries one or more phrase token
-    * sequences when `windowW == 0` (ALL must match — the unified search
-    * front door composes several quoted phrases conjunctively), else a
-    * single entry holding the distinct terms of a `windowW`-token
-    * proximity gate. Every gate term must be a scoring term (the search
-    * parser guarantees phrase tokens join the positive term set).
-    * `gate` (may be null = unfiltered) restricts
-    * candidates to allowed docIDs at the aligned candidate, BEFORE scoring
-    * and heap entry, so filtered top-k is exact (a post-filter of an
-    * unfiltered top-k would lose filtered docs ranked below the unfiltered
-    * k). Pruning bounds stay admissible: the gate only REMOVES
-    * candidates. */
-  def kernel(posGates: Array[Array[String]], windowW: Int, orMode: Boolean,
-             gate: Long => Boolean,
-             afterKey: Double, afterDoc: Long, msm: Int):
-      (Map[String, Array[PostingSegment]], Array[TermCtx],
-       Long => Long, Double, Long, Long, Int, Boolean) => Seq[ScoredDoc] =
-    if (orMode)
-      (segs, ts, lenOf, av, lo, hi, k, rnd) =>
-        disjunctiveRange(segs, ts, lenOf, av, lo, hi, k, rnd, gate,
-          afterKey, afterDoc, msm)
-    else
-      (segs, ts, lenOf, av, lo, hi, k, rnd) =>
-        conjunctiveRange(segs, ts, lenOf, av, lo, hi, k, rnd, posGates,
-          windowW, gate, afterKey, afterDoc)
+  /** Receives the matches of one posting iterator ([[conjunctive]],
+    * [[disjunctive]]) over one docID range, in ascending docID order,
+    * and feeds back [[minCompetitiveScore]]: a candidate whose padded
+    * block-max bound is below it cannot enter, so the iterator skips it
+    * (Lucene's `setMinCompetitiveScore`). A collector never advances
+    * postings; an iterator never holds results. An unscored collector
+    * (`scores = false`) gets 0.0 for every match and its threshold stays
+    * −∞, so the iterator computes neither a score nor a bound for it.
+    * Stateful: one per iterator invocation. */
+  abstract class Collector(val scores: Boolean) {
+    protected var threshold: Double = Double.NegativeInfinity
+    final def minCompetitiveScore: Double = threshold
+    /** Pre-score admission, after the iterator's own gates; probed at
+      * non-decreasing docIDs. */
+    def admit(doc: Long): Boolean = true
+    def collect(doc: Long, score: Double): Unit
+  }
 
-  /** NOT-aware kernel factory: negated terms become ANTI-POSTING
-    * iterators composed into the candidate gate — a candidate aligned by
-    * the positive terms is rejected iff some negated term's posting list
-    * contains it. The anti iterators ride the exact same compressed
-    * segments (segment/block skip included) as scoring terms, so
-    * exclusion costs O(neg postings ∩ range) with no global docID-set
-    * materialization — the 100 TB-honest shape (a broadcast deny-set of
-    * a negated stop word would be corpus-sized).
+  private final case class Ranked(key: Double, docID: Long, score: Double)
+  /** Root of a top-k heap = its weakest entry under (key desc, docID asc). */
+  private val WeakestFirst = Ordering.fromLessThan[Ranked]((a, b) =>
+    a.key < b.key || (a.key == b.key && a.docID > b.docID)).reverse
+
+  /** The k best collected docs under (key desc, docID asc), key = the
+    * 4-decimal rounding of the exact score in `rounded` mode (so pruning
+    * matches the final rounded ranking), else the score itself. Results
+    * carry the EXACT score; ordering and rounding are the caller's.
     *
-    * The gate is built FRESH per kernel invocation (per docID range):
-    * both kernels probe the gate at non-decreasing candidates within one
-    * invocation — the conjunctive driver only moves forward, the
-    * disjunctive pivot is the min over forward-only iterators — which is
-    * exactly the contract the stateful anti iterators need. Sharing one
-    * gate across ranges (pooled threads, per-task interval lists) would
-    * break it; this factory makes that impossible by construction. */
+    * Search-after cursor (pagination): a doc ranked at or before
+    * (afterKey desc, afterDoc asc) is on an earlier page and never
+    * enters. afterKey = NaN disables it (every comparison with NaN is
+    * false). The threshold still comes from the heap of ELIGIBLE docs,
+    * so pruning stays admissible. */
+  final class TopK(k: Int, rounded: Boolean,
+                   afterKey: Double = Double.NaN, afterDoc: Long = 0L)
+      extends Collector(scores = true) {
+    private val heap = new mutable.PriorityQueue[Ranked]()(WeakestFirst)
+    // r4 is a JBigDecimal round — hundreds of ns. Memoize the last
+    // (score → key) pair: corpora repeat scores heavily (few distinct
+    // (tf, len) combos), so most candidates that survive the fast
+    // reject below hit the memo.
+    private var memoScore = Double.NaN
+    private var memoKey = Double.NaN
+    private def keyOf(score: Double): Double =
+      if (!rounded) score
+      else if (score == memoScore) memoKey
+      else { memoScore = score; memoKey = r4(score); memoKey }
+
+    def full: Boolean = heap.size >= k
+
+    def collect(doc: Long, score: Double): Unit = offer(doc, score)
+
+    /** Whether `doc` entered the heap. */
+    def offer(doc: Long, score: Double): Boolean = {
+      // fast reject on the EXACT score before any rounding: with a full
+      // heap, a score strictly below the root's rounding band
+      // (|r4(s) − s| ≤ 0.00005; unrounded: key = s) can never displace
+      // the root — skip the r4 entirely. The hot exit for dense terms.
+      // The band is widened by 1e-9: the double subtraction can land a
+      // hair above the exact decimal band edge.
+      if (full && {
+            val w = heap.head
+            if (rounded) score < w.key - 0.0000501
+            else score < w.key || (score == w.key && doc > w.docID)
+          }) return false
+      val key = keyOf(score)
+      if (key > afterKey || (key == afterKey && doc <= afterDoc)) return false
+      if (full) {
+        val w = heap.head
+        if (!(key > w.key || (key == w.key && doc < w.docID))) return false
+        heap.dequeue()
+      }
+      heap.enqueue(Ranked(key, doc, score))
+      if (full)
+        threshold = if (rounded) heap.head.key - 0.00005 else heap.head.key
+      true
+    }
+
+    def results: Seq[ScoredDoc] = heap.dequeueAll[Ranked].map(e => ScoredDoc(e.docID, e.score))
+  }
+
+  /** Field collapsing: one [[TopK]] of `n` per group of `groupOf` (the
+    * one-pass "top n per lang" collector of a search service). Docs
+    * `groupOf` leaves unmapped (−1) are skipped before scoring. The
+    * threshold is the MINIMUM over the groups' thresholds, −∞ until
+    * every heap is full — the only admissible bound when a block's docs
+    * may belong to any group, so grouped pruning is inherently weaker
+    * than single-heap pruning. */
+  final class GroupedTopK(n: Int, rounded: Boolean, groupOf: Long => Int,
+                          nGroups: Int) extends Collector(scores = true) {
+    private val tops = Array.fill(nGroups)(new TopK(n, rounded))
+    private var notFull = nGroups
+    private var group = -1
+
+    override def admit(doc: Long): Boolean = { group = groupOf(doc); group >= 0 }
+
+    def collect(doc: Long, score: Double): Unit = {
+      val t = tops(group)
+      val wasFull = t.full
+      if (t.offer(doc, score)) {
+        if (!wasFull && t.full) notFull -= 1
+        if (notFull == 0) {
+          var m = Double.PositiveInfinity
+          var g = 0
+          while (g < nGroups) { m = math.min(m, tops(g).minCompetitiveScore); g += 1 }
+          threshold = m
+        }
+      }
+    }
+
+    /** (group index, doc with EXACT score). */
+    def results: Seq[(Int, ScoredDoc)] =
+      tops.indices.flatMap(g => tops(g).results.map(g -> _))
+  }
+
+  /** Match count — the "About N results" total — or, with `groupOf`,
+    * one count per group (the one-pass histogram: B buckets cost ONE
+    * postings sweep); docs `groupOf` leaves unmapped (−1) are skipped.
+    * Counts add up over disjoint ranges. Unscored. */
+  final class Count(groupOf: Long => Int = null, nGroups: Int = 0)
+      extends Collector(scores = false) {
+    var total = 0L
+    val counts = new Array[Long](nGroups)
+    def collect(doc: Long, score: Double): Unit =
+      if (groupOf == null) total += 1
+      else { val g = groupOf(doc); if (g >= 0) counts(g) += 1 }
+  }
+
+  private final case class Valued(v: Long, docID: Long)
+
+  /** The k matches with the largest STATIC doc-values field (ties: docID
+    * asc) — the search-service `sort:` parameter. Unscored: a doc's
+    * field value is independent of its postings, so without an index
+    * sorted on the field nothing can be skipped — the full intersection
+    * sweep plus an O(log k) heap offer per match, Lucene's sort-by-field
+    * plan on an unsorted index. Per-range results merge by a global
+    * (field desc, docID asc) re-sort. */
+  final class SortedByField(k: Int, fieldOf: Long => Long)
+      extends Collector(scores = false) {
+    private val heap = new mutable.PriorityQueue[Valued]()(
+      Ordering.fromLessThan[Valued]((a, b) =>
+        a.v < b.v || (a.v == b.v && a.docID > b.docID)).reverse)
+    def collect(doc: Long, score: Double): Unit = {
+      val v = fieldOf(doc)
+      if (heap.size < k) heap.enqueue(Valued(v, doc))
+      else {
+        val w = heap.head
+        if (v > w.v || (v == w.v && doc < w.docID)) {
+          heap.dequeue(); heap.enqueue(Valued(v, doc))
+        }
+      }
+    }
+    /** (docID, field value). */
+    def results: Seq[(Long, Long)] = heap.dequeueAll[Valued].map(e => (e.docID, e.v))
+  }
+
+  // ------------------------------------------------------ posting iterators
+
+  /** Conjunctive (AND) block-max WAND over one docID range [lo, hi): every
+    * doc holding all `terms` goes to `c`. `order` is the alignment order:
+    * order(0) leads and the others align on its candidate in turn. Top-k
+    * passes [[rarestFirst]] (least advance() work); count, sorted and
+    * histogram callers pass the task-local driver term first, so per-task
+    * results partition cleanly across tasks holding disjoint driver
+    * segments.
+    *
+    * At an aligned candidate, in this order: the padded block-max bound
+    * against `c`'s threshold (below it, no doc up to the shallowest
+    * current block's end can compete: the leader skips past it); the
+    * `allowed` gate; the positional gate; `c.admit`; then the exact score,
+    * accumulated in `terms` order (ascending term — the rank-identity
+    * contract). Gates only REMOVE candidates, so every bound stays
+    * admissible, and they are probed at non-decreasing docIDs.
+    *
+    * `posGates` (null = none; positional index required): with
+    * `windowW == 0` each entry is a phrase token sequence and ALL must
+    * occur at consecutive positions (the search front door composes
+    * several quoted phrases); with `windowW > 0` the single entry holds
+    * the distinct terms that must co-occur within `windowW` tokens. Every
+    * gate term must be a scoring term. A term absent from `segs` is an
+    * unmatchable conjunct; `segs` may carry extra entries (the
+    * anti-posting lists of negated terms). */
+  def conjunctive[C <: Collector](
+      segs: Map[String, Array[PostingSegment]], terms: Array[TermCtx],
+      order: Array[Int], lenOf: Long => Long, avgdl: Double,
+      lo: Long, hi: Long, c: C,
+      allowed: Long => Boolean = null,
+      posGates: Array[Array[String]] = null, windowW: Int = 0): C = {
+    val n = terms.length
+    if (n == 0 || terms.exists(tc => !segs.contains(tc.term))) return c
+    val iters = terms.map(tc =>
+      new PostingListIterator(segs(tc.term), avgdl, posGates != null))
+    iters.foreach(_.advance(lo))
+    if (iters.exists(_.exhausted)) return c
+    val lead = iters(order(0))
+    while (!lead.exhausted && lead.docID < hi) {
+      val d = lead.docID
+      // align the others on d; `next` = the first docID ≥ d one of them
+      // holds (an exhausted iterator sits at Long.MaxValue)
+      var next = d
+      var oi = 1
+      while (next == d && oi < n) {
+        val it = iters(order(oi))
+        it.advance(d)
+        next = it.docID
+        oi += 1
+      }
+      if (next != d) lead.advance(next)
+      else {
+        val th = c.minCompetitiveScore
+        var ub = 0.0
+        var minLast = Long.MaxValue
+        if (th > Double.NegativeInfinity) {
+          var i = 0
+          while (i < n) {
+            ub += terms(i).boost * (terms(i).idf * iters(i).blockMaxQ)
+            minLast = math.min(minLast, iters(i).blockLastDoc)
+            i += 1
+          }
+        }
+        if (pad(ub) < th) lead.advance(math.max(d + 1, minLast + 1))
+        else {
+          if ((allowed == null || allowed(d)) &&
+              (posGates == null || {
+                val byTerm = terms.iterator.zipWithIndex
+                  .map { case (tc, ti) => tc.term -> iters(ti).positions }.toMap
+                if (windowW > 0) windowMatch(byTerm, posGates(0), windowW)
+                else posGates.forall(p => phraseMatch(byTerm, p))
+              }) && c.admit(d)) {
+            var score = 0.0
+            if (c.scores) {
+              val norm = lenNorm(lenOf(d), avgdl)
+              var i = 0
+              while (i < n) { score += contrib(terms(i), iters(i).tf, norm); i += 1 }
+            }
+            c.collect(d, score)
+          }
+          lead.advance(d + 1)
+        }
+      }
+    }
+    c
+  }
+
+  /** Disjunctive (OR) block-max WAND over one docID range [lo, hi): every
+    * doc holding at least `msm` distinct `terms` (the Lucene
+    * `minimum_should_match` floor; 1 = plain OR) goes to `c`, scored as
+    * the sum over the terms PRESENT in it, accumulated in `terms` order
+    * with absent terms adding an exact +0.0 (so the association matches
+    * the SQL twin's `coalesce(c_i, 0)` fixed-order sum bit-for-bit).
+    *
+    * Pruning: WAND pivot selection on per-term global bounds (idf × max
+    * block quotient over the term's segments), then a block-max re-check
+    * at the pivot before the `allowed` gate and scoring; both bounds are
+    * padded. The msm floor applies at the aligned pivot after both —
+    * msm matches ⊆ OR matches, so every bound stays admissible. Terms
+    * absent from `segs` match nothing. */
+  def disjunctive[C <: Collector](
+      segs: Map[String, Array[PostingSegment]], terms: Array[TermCtx],
+      lenOf: Long => Long, avgdl: Double, lo: Long, hi: Long, c: C,
+      allowed: Long => Boolean = null, msm: Int = 1): C = {
+    val present = terms.filter(tc => segs.contains(tc.term))
+    val n = present.length
+    if (n == 0 || n < msm) return c
+    val iters = present.map(tc => new PostingListIterator(segs(tc.term), avgdl))
+    iters.foreach(_.advance(lo))
+    // global bounds, computed at the first finite threshold (never for
+    // an unscored collector)
+    var ub: Array[Double] = null
+    val order = Array.range(0, n) // indices sorted by current docID
+    var running = true
+    while (running) {
+      // insertion sort by current docID (n is tiny; exhausted → MaxValue)
+      var i = 1
+      while (i < n) {
+        val v = order(i)
+        var j = i - 1
+        while (j >= 0 && iters(order(j)).docID > iters(v).docID) {
+          order(j + 1) = order(j); j -= 1
+        }
+        order(j + 1) = v
+        i += 1
+      }
+      if (iters(order(0)).exhausted || iters(order(0)).docID >= hi) running = false
+      else {
+        // pivot: first prefix of docID-sorted iterators whose Σ bound
+        // reaches the threshold (the first iterator while it is −∞)
+        val th = c.minCompetitiveScore
+        var p = 0
+        if (th > Double.NegativeInfinity) {
+          if (ub == null) ub = present.map(tc => tc.boost * (tc.idf *
+            segs(tc.term).iterator.flatMap(s => s.blockMaxTf.lazyZip(s.blockMinLen)
+              .map(Bm25.quotient(_, _, avgdl))).max))
+          var acc = 0.0
+          p = -1
+          var pi = 0
+          while (p < 0 && pi < n) {
+            val oi = order(pi)
+            if (!iters(oi).exhausted) {
+              acc += ub(oi)
+              if (pad(acc) >= th) p = pi
+            }
+            pi += 1
+          }
+        }
+        if (p < 0) running = false
+        else {
+          val pivotDoc = iters(order(p)).docID
+          if (pivotDoc >= hi) running = false
+          else if (iters(order(0)).docID == pivotDoc) {
+            // align every iterator ≤ pivot on pivotDoc, then block-max check
+            var a = 0
+            while (a <= p) { iters(order(a)).advance(pivotDoc); a += 1 }
+            var bub = 0.0
+            if (th > Double.NegativeInfinity) {
+              var bi = 0
+              while (bi < n) {
+                val it = iters(bi)
+                if (!it.exhausted && it.docID == pivotDoc)
+                  bub += present(bi).boost * (present(bi).idf * it.blockMaxQ)
+                bi += 1
+              }
+            }
+            if (!(pad(bub) < th) && (allowed == null || allowed(pivotDoc)) &&
+                c.admit(pivotDoc)) {
+              val norm = if (c.scores) lenNorm(lenOf(pivotDoc), avgdl) else 0.0
+              var score = 0.0
+              var nMatched = 0
+              var s = 0
+              while (s < n) {
+                val it = iters(s)
+                if (!it.exhausted && it.docID == pivotDoc) {
+                  nMatched += 1
+                  if (c.scores) score += contrib(present(s), it.tf, norm)
+                } else score += 0.0
+                s += 1
+              }
+              if (nMatched >= msm) c.collect(pivotDoc, score)
+            }
+            var m = 0
+            while (m < n) {
+              val it = iters(m)
+              if (!it.exhausted && it.docID == pivotDoc) it.advance(pivotDoc + 1)
+              m += 1
+            }
+          } else {
+            // advance, up to pivotDoc, the largest-bound iterator that is
+            // strictly BEFORE it (order(0) qualifies — this branch means
+            // order(0).docID < pivotDoc — so progress is guaranteed; an
+            // iterator already AT pivotDoc must not be chosen, its advance
+            // would be a no-op and the loop would spin)
+            var best = 0
+            var bi = 1
+            while (bi < p) {
+              if (iters(order(bi)).docID < pivotDoc && ub(order(bi)) > ub(order(best)))
+                best = bi
+              bi += 1
+            }
+            iters(order(best)).advance(pivotDoc)
+          }
+        }
+      }
+    }
+    c
+  }
+
+  /** Term indices ordered by df, rarest first (ties keep term order) —
+    * the top-k alignment order of [[conjunctive]]. */
+  def rarestFirst(terms: Array[TermCtx]): Array[Int] =
+    terms.indices.sortBy(i => terms(i).df).toArray
+
+  /** Every match of `terms` in [lo, hi) into an unscored collector
+    * ([[Count]], [[SortedByField]]): AND led by terms(0), the rest in
+    * the caller's order, or OR over the terms present. */
+  def collectMatches[C <: Collector](
+      segs: Map[String, Array[PostingSegment]], terms: Array[String],
+      avgdl: Double, lo: Long, hi: Long, orMode: Boolean, c: C,
+      allowed: Long => Boolean = null): C = {
+    val ts = terms.map(TermCtx(_, 0L, 0.0))
+    if (orMode) disjunctive(segs, ts, null, avgdl, lo, hi, c, allowed)
+    else conjunctive(segs, ts, ts.indices.toArray, null, avgdl, lo, hi, c, allowed)
+  }
+
+  /** Top-k kernel for every (AND/OR/phrase/window) × (gated/ungated)
+    * shape — one 8-arg function the physical paths run per docID range.
+    * `posGates`/`windowW` are [[conjunctive]]'s positional gate (AND
+    * only); `msm` is [[disjunctive]]'s floor (OR only). The candidate
+    * gate composes `gateFactory` (null = unfiltered) with ANTI-POSTING
+    * iterators over `negTerms` ([[negatedGate]]): a candidate is
+    * rejected iff some negated term's posting list contains it, riding
+    * the same compressed segments (segment/block skip included), so
+    * exclusion costs O(neg postings ∩ range) with no global docID-set
+    * materialization (a broadcast deny-set of a negated stop word would
+    * be corpus-sized). Gating at the aligned candidate, BEFORE scoring,
+    * keeps filtered top-k exact (a post-filter of an unfiltered top-k
+    * would lose filtered docs ranked below the unfiltered k).
+    *
+    * Both gate shapes are STATEFUL cursors probed at non-decreasing
+    * candidates — the conjunctive leader only moves forward, the
+    * disjunctive pivot is the min over forward-only iterators — so the
+    * gate is built FRESH per invocation (per docID range): sharing one
+    * across ranges (pooled threads, per-task interval lists) is
+    * impossible by construction. */
   def kernel(posGates: Array[Array[String]], windowW: Int, orMode: Boolean,
              gateFactory: () => (Long => Boolean), negTerms: Array[String],
-             afterKey: Double = Double.NaN, afterDoc: Long = 0L,
-             // minimum-should-match (OR mode only): a doc must match at
-             // least this many distinct query terms to be scored — the
-             // Lucene `minimum_should_match` contract. 1 = plain OR;
-             // n = AND-equivalent scores (absent terms contribute +0.0)
-             msm: Int = 1):
+             afterKey: Double = Double.NaN, afterDoc: Long = 0L, msm: Int = 1):
       (Map[String, Array[PostingSegment]], Array[TermCtx],
        Long => Long, Double, Long, Long, Int, Boolean) => Seq[ScoredDoc] =
-    if ((negTerms == null || negTerms.isEmpty) && gateFactory == null)
-      kernel(posGates, windowW, orMode, null, afterKey, afterDoc, msm)
-    else
-      (segs, ts, lenOf, av, lo, hi, k, rnd) => {
-        // both gate shapes are STATEFUL cursors (monotone broadcast gate,
-        // anti-posting iterators) — built fresh per invocation here, so
-        // sharing across ranges/threads is impossible by construction
-        val base = if (gateFactory == null) null else gateFactory()
-        val g =
-          if (negTerms == null || negTerms.isEmpty) base
-          else negatedGate(base, negTerms, segs, av, lo)
-        kernel(posGates, windowW, orMode, g, afterKey, afterDoc, msm)(
-          segs, ts, lenOf, av, lo, hi, k, rnd)
-      }
+    (segs, ts, lenOf, av, lo, hi, k, rnd) => {
+      val base = if (gateFactory == null) null else gateFactory()
+      val allowed =
+        if (negTerms == null || negTerms.isEmpty) base
+        else negatedGate(base, negTerms, segs, av, lo)
+      val top = new TopK(k, rnd, afterKey, afterDoc)
+      if (orMode) disjunctive(segs, ts, lenOf, av, lo, hi, top, allowed, msm)
+      else conjunctive(segs, ts, rarestFirst(ts), lenOf, av, lo, hi, top,
+        allowed, posGates, windowW)
+      top.results
+    }
 
   /** Query-time synonym-group posting merge (Lucene SynonymQuery
     * semantics): the group scores as ONE term — tf(d) = Σ member tf(d),
@@ -521,201 +828,54 @@ object QueryEngine {
     prev(s.length)
   }
 
+  /** First index ≥ `from` whose id is ≥ `target` in sorted `ids`,
+    * galloping forward from `from` — amortized O(1) sequential reads for
+    * near-sequential probes, instead of a full log₂(m) cache-missing
+    * binary search per probe. */
+  private def gallop(ids: Array[Long], from: Int, target: Long): Int =
+    if (from >= ids.length || ids(from) >= target) from
+    else {
+      // ids(from + bound/2) < target is invariant entering the search
+      var bound = 1
+      while (from + bound < ids.length && ids(from + bound) < target) bound <<= 1
+      var lo = from + (bound >> 1)
+      var hi = math.min(from + bound, ids.length)
+      while (lo < hi) {
+        val mid = (lo + hi) >>> 1
+        if (ids(mid) < target) lo = mid + 1 else hi = mid
+      }
+      lo
+    }
+
   /** Membership gate over a sorted docID array for ONE kernel
     * invocation: kernels probe gates at NON-DECREASING candidates (the
     * same contract [[negatedGate]]'s anti iterators rely on), so a
-    * galloping cursor answers each probe in amortized O(1) sequential
-    * reads instead of a full log₂(m) cache-missing binary search —
-    * measured on the largest-facet bench pass (1.3M-id lang gate, 4M
-    * docs): faceted p50 487.7 → 59.1 ms, p95 3028.9 → 78.5 ms; the
-    * gated query is now FASTER than its unfiltered twin because the
-    * cursor rejects candidates before they are scored. Stateful:
-    * construct FRESH per invocation (the factory below does), never
-    * share across ranges or threads. */
+    * galloping cursor ([[gallop]]) answers each probe — measured on the
+    * largest-facet bench pass (1.3M-id lang gate, 4M docs): faceted p50
+    * 487.7 → 59.1 ms, p95 3028.9 → 78.5 ms; the gated query is now
+    * FASTER than its unfiltered twin because the cursor rejects
+    * candidates before they are scored. Stateful: construct FRESH per
+    * invocation (the kernel factory does), never share across ranges or
+    * threads. */
   def monotoneGate(ids: Array[Long], negate: Boolean): Long => Boolean = {
     var i = 0
     id => {
-      if (i < ids.length && ids(i) < id) {
-        // gallop: ids(i + bound/2) < id is invariant entering the search
-        var bound = 1
-        while (i + bound < ids.length && ids(i + bound) < id) bound <<= 1
-        var lo = i + (bound >> 1)
-        var hi = math.min(i + bound, ids.length)
-        while (lo < hi) {
-          val mid = (lo + hi) >>> 1
-          if (ids(mid) < id) lo = mid + 1 else hi = mid
-        }
-        i = lo
-      }
+      i = gallop(ids, i, id)
       (i < ids.length && ids(i) == id) != negate
     }
   }
 
   /** Group-membership cursor over a (sorted docID, parallel group index)
     * mapping for ONE kernel invocation: probes at NON-DECREASING docIDs
-    * (the [[monotoneGate]] contract), galloping forward; returns the
-    * docID's group index, or -1 when unmapped. Stateful — construct
-    * fresh per invocation, never share across ranges or threads. */
+    * (the [[monotoneGate]] contract); returns the docID's group index,
+    * or -1 when unmapped. Stateful — construct fresh per invocation,
+    * never share across ranges or threads. */
   def monotoneGroupCursor(ids: Array[Long], groups: Array[Int]): Long => Int = {
     var i = 0
     id => {
-      if (i < ids.length && ids(i) < id) {
-        var bound = 1
-        while (i + bound < ids.length && ids(i + bound) < id) bound <<= 1
-        var lo = i + (bound >> 1)
-        var hi = math.min(i + bound, ids.length)
-        while (lo < hi) {
-          val mid = (lo + hi) >>> 1
-          if (ids(mid) < id) lo = mid + 1 else hi = mid
-        }
-        i = lo
-      }
+      i = gallop(ids, i, id)
       if (i < ids.length && ids(i) == id) groups(i) else -1
     }
-  }
-
-  /** Grouped (field-collapsing) conjunctive top-n over one docID range:
-    * ONE postings pass maintaining an independent top-`n` heap PER GROUP
-    * — the one-pass collector a search service uses for "top n per
-    * lang". Alignment sweep and scoring are exactly
-    * [[conjunctiveRange]]'s (boosts ride [[TermCtx]] unchanged); the
-    * block-max prune compares against the MINIMUM threshold across
-    * groups (−∞ until every group's heap is full), the only admissible
-    * bound when the block's docs may belong to any group — grouped
-    * pruning is inherently weaker than single-heap pruning, the honest
-    * cost of the semantics. Candidates unmapped by the cursor (-1) are
-    * skipped before scoring. Returns (groupIdx, doc, EXACT score). */
-  def groupedRange(
-      segsByTerm: Map[String, Array[PostingSegment]],
-      termsSorted: Array[TermCtx],
-      lenOf: Long => Long,
-      avgdl: Double,
-      lo: Long, hi: Long, nPerGroup: Int,
-      rounded: Boolean,
-      groupOf: Long => Int,
-      nGroups: Int): Seq[(Int, ScoredDoc)] = {
-    val n = termsSorted.length
-    if (n == 0 || nGroups == 0 ||
-        termsSorted.exists(tc => !segsByTerm.contains(tc.term)))
-      return Nil
-    val iters = termsSorted.map(tc =>
-      new PostingListIterator(segsByTerm(tc.term), avgdl))
-    iters.foreach(_.advance(lo))
-    if (iters.exists(_.exhausted)) return Nil
-    val order = termsSorted.indices.sortBy(i => termsSorted(i).df).toArray
-
-    final case class Entry(key: Double, docID: Long, score: Double)
-    val worseFirst = Ordering.fromLessThan[Entry]((a, b) =>
-      a.key < b.key || (a.key == b.key && a.docID > b.docID))
-    val heaps = Array.fill(nGroups)(
-      new mutable.PriorityQueue[Entry]()(worseFirst.reverse))
-    // last (score → key) memo — see [[conjunctiveRange]]
-    var memoScore = Double.NaN
-    var memoKey = Double.NaN
-    def keyOf(score: Double): Double =
-      if (!rounded) score
-      else if (score == memoScore) memoKey
-      else { memoScore = score; memoKey = r4(score); memoKey }
-    def thresholdOf(g: Int): Double =
-      if (heaps(g).size < nPerGroup) Double.NegativeInfinity
-      else if (rounded) heaps(g).head.key - 0.00005
-      else heaps(g).head.key
-    // global prune threshold = min over groups; −∞ while any heap fills
-    var notFull = nGroups
-    var minTh = Double.NegativeInfinity
-    def recomputeMinTh(): Unit =
-      if (notFull == 0) {
-        var m = Double.PositiveInfinity
-        var g = 0
-        while (g < nGroups) {
-          val t = thresholdOf(g); if (t < m) m = t; g += 1
-        }
-        minTh = m
-      }
-
-    var candidate = iters(order(0)).docID
-    var running = !iters(order(0)).exhausted
-    while (running && candidate < hi) {
-      var matched = true
-      var oi = 1
-      var bump = candidate
-      while (matched && oi < n) {
-        val it = iters(order(oi))
-        it.advance(candidate)
-        if (it.exhausted) { running = false; matched = false }
-        else if (it.docID != candidate) { bump = it.docID; matched = false }
-        oi += 1
-      }
-      if (!running) ()
-      else if (!matched) {
-        iters(order(0)).advance(bump)
-        if (iters(order(0)).exhausted) running = false
-        else candidate = iters(order(0)).docID
-      } else {
-        var ub = 0.0
-        var minLast = Long.MaxValue
-        var i = 0
-        while (i < n) {
-          ub += termsSorted(i).boost * (termsSorted(i).idf * iters(i).blockMaxQ)
-          if (iters(i).blockLastDoc < minLast) minLast = iters(i).blockLastDoc
-          i += 1
-        }
-        if (pad(ub) < minTh) {
-          val skipTo = math.max(candidate + 1, minLast + 1)
-          iters(order(0)).advance(skipTo)
-        } else {
-          val g = groupOf(candidate)
-          if (g >= 0) {
-            val len = lenOf(candidate)
-            val norm = 1.2 * (0.25 + 0.75 * len.toDouble / avgdl)
-            var score = 0.0
-            i = 0
-            while (i < n) {
-              val tfv = iters(i).tf.toDouble
-              score += termsSorted(i).boost *
-                (termsSorted(i).idf * (tfv * 2.2) / (tfv + norm))
-              i += 1
-            }
-            val h = heaps(g)
-            // exact-score fast reject before r4 — see [[conjunctiveRange]]
-            val rejectFast = h.size >= nPerGroup && {
-              val w = h.head
-              if (rounded) score < w.key - 0.0000501 // 1e-9 pad: the double
-              // subtraction can land a hair above the exact decimal
-              // band edge; widening the band keeps the reject sound
-              else score < w.key || (score == w.key && candidate > w.docID)
-            }
-            if (!rejectFast) {
-              val key = keyOf(score)
-              if (h.size < nPerGroup) {
-                h.enqueue(Entry(key, candidate, score))
-                if (h.size == nPerGroup) { notFull -= 1; recomputeMinTh() }
-              } else {
-                val w = h.head
-                if (key > w.key || (key == w.key && candidate < w.docID)) {
-                  h.dequeue(); h.enqueue(Entry(key, candidate, score))
-                  recomputeMinTh()
-                }
-              }
-            }
-          }
-          iters(order(0)).advance(candidate + 1)
-        }
-        if (iters(order(0)).exhausted) running = false
-        else candidate = iters(order(0)).docID
-      }
-    }
-    val out = Seq.newBuilder[(Int, ScoredDoc)]
-    var g = 0
-    while (g < nGroups) {
-      val h = heaps(g)
-      while (h.nonEmpty) {
-        val e = h.dequeue()
-        out += ((g, ScoredDoc(e.docID, e.score)))
-      }
-      g += 1
-    }
-    out.result()
   }
 
   /** Compose `base` (nullable) with anti-posting iterators over the
@@ -801,571 +961,6 @@ object QueryEngine {
       if (cur(minI) >= lists(minI).length) running = false
     }
     false
-  }
-
-  private def conjunctiveRange(
-      segsByTerm: Map[String, Array[PostingSegment]],
-      termsSorted: Array[TermCtx],
-      lenOf: Long => Long,
-      avgdl: Double,
-      lo: Long, hi: Long, k: Int,
-      rounded: Boolean,
-      // positional gates (null = none): windowW == 0 → each entry is a
-      // phrase token sequence and ALL must match; windowW > 0 → single
-      // entry holding the proximity gate's distinct terms
-      posGates: Array[Array[String]],
-      windowW: Int,
-      allowed: Long => Boolean,
-      // search-after cursor (pagination): a doc whose ranking key
-      // (rounded-or-exact score, docID) sorts AT OR BEFORE
-      // (afterKey desc, afterDoc asc) is on an earlier page and never
-      // enters the heap. afterKey = NaN disables (every comparison with
-      // NaN is false, so the skip test never fires). Pruning stays
-      // admissible: the cursor only REMOVES candidates, and the WAND
-      // threshold is still derived from the heap of ELIGIBLE docs.
-      afterKey: Double = Double.NaN,
-      afterDoc: Long = 0L): Seq[ScoredDoc] = {
-    val n = termsSorted.length
-    // containment, not size: segsByTerm may carry EXTRA entries (the
-    // anti-posting lists of negated terms) beyond the scoring terms
-    if (n == 0 || termsSorted.exists(tc => !segsByTerm.contains(tc.term)))
-      return Nil
-    val needPos = posGates != null
-    val iters = termsSorted.map(tc =>
-      new PostingListIterator(segsByTerm(tc.term), avgdl, needPos))
-    iters.foreach(_.advance(lo))
-    if (iters.exists(_.exhausted)) return Nil
-    // driver order: rarest first minimizes advance() work
-    val order = termsSorted.indices.sortBy(i => termsSorted(i).df).toArray
-
-    // heap of k best; root = weakest. Better = (key desc, docID asc).
-    final case class Entry(key: Double, docID: Long, score: Double)
-    val worseFirst = Ordering.fromLessThan[Entry]((a, b) =>
-      a.key < b.key || (a.key == b.key && a.docID > b.docID))
-    val heap = new mutable.PriorityQueue[Entry]()(worseFirst.reverse) // dequeue = worst
-    // r4 is a JBigDecimal round — hundreds of ns. Memoize the last
-    // (score → key) pair: synthetic/real corpora alike repeat scores
-    // heavily (few distinct (tf, len) combos), so most candidates that
-    // survive the fast-reject below hit the memo.
-    var memoScore = Double.NaN
-    var memoKey = Double.NaN
-    def keyOf(score: Double): Double =
-      if (!rounded) score
-      else if (score == memoScore) memoKey
-      else { memoScore = score; memoKey = r4(score); memoKey }
-    def threshold: Double =
-      if (heap.size < k) Double.NegativeInfinity
-      else if (rounded) heap.head.key - 0.00005
-      else heap.head.key
-
-    var candidate = iters(order(0)).docID
-    var running = !iters(order(0)).exhausted
-    while (running && candidate < hi) {
-      // align all iterators on candidate
-      var matched = true
-      var oi = 1
-      var bump = candidate
-      while (matched && oi < n) {
-        val it = iters(order(oi))
-        it.advance(candidate)
-        if (it.exhausted) { running = false; matched = false }
-        else if (it.docID != candidate) { bump = it.docID; matched = false }
-        oi += 1
-      }
-      if (!running) ()
-      else if (!matched) {
-        iters(order(0)).advance(bump)
-        if (iters(order(0)).exhausted) running = false
-        else candidate = iters(order(0)).docID
-      } else {
-        // all aligned at candidate: block-max upper bound
-        var ub = 0.0
-        var minLast = Long.MaxValue
-        var i = 0
-        while (i < n) {
-          ub += termsSorted(i).boost * (termsSorted(i).idf * iters(i).blockMaxQ)
-          if (iters(i).blockLastDoc < minLast) minLast = iters(i).blockLastDoc
-          i += 1
-        }
-        if (pad(ub) < threshold) {
-          // no doc in (candidate, minLast] can beat the threshold
-          val skipTo = math.max(candidate + 1, minLast + 1)
-          iters(order(0)).advance(skipTo)
-        } else if (allowed != null && !allowed(candidate)) {
-          // filtered out — never scored, never enters the heap
-          iters(order(0)).advance(candidate + 1)
-        } else if (posGates != null && {
-            val byTerm = termsSorted.iterator.zipWithIndex
-              .map { case (tc, ti) => tc.term -> iters(ti).positions }.toMap
-            if (windowW > 0) !windowMatch(byTerm, posGates(0), windowW)
-            else !posGates.forall(p => phraseMatch(byTerm, p))
-          }) {
-          // all terms present but never consecutively (phrase) / never
-          // within one w-token window (proximity) — not a hit
-          iters(order(0)).advance(candidate + 1)
-        } else {
-          // exact score, fixed ascending-term association
-          val len = lenOf(candidate)
-          val norm = 1.2 * (0.25 + 0.75 * len.toDouble / avgdl)
-          var score = 0.0
-          i = 0
-          while (i < n) {
-            val tfv = iters(i).tf.toDouble
-            score += termsSorted(i).boost *
-              (termsSorted(i).idf * (tfv * 2.2) / (tfv + norm))
-            i += 1
-          }
-          // fast reject on the EXACT score before any rounding: with a
-          // full heap, a candidate whose exact score is strictly below
-          // the rounded threshold band (rounded: |r4(s) − s| ≤ 0.00005;
-          // unrounded: key = s) can never displace the heap root — skip
-          // the r4 entirely. This is the hot exit for dense terms.
-          val rejectFast = heap.size >= k && {
-            val w = heap.head
-            if (rounded) score < w.key - 0.0000501 // 1e-9 pad: the double
-              // subtraction can land a hair above the exact decimal
-              // band edge; widening the band keeps the reject sound
-            else score < w.key || (score == w.key && candidate > w.docID)
-          }
-          if (!rejectFast) {
-            val key = keyOf(score)
-            // search-after gate: ranked at-or-before the cursor → earlier
-            // page, skip (both tests false when afterKey is NaN = no cursor)
-            if (!(key > afterKey || (key == afterKey && candidate <= afterDoc))) {
-              if (heap.size < k) heap.enqueue(Entry(key, candidate, score))
-              else {
-                val w = heap.head
-                if (key > w.key || (key == w.key && candidate < w.docID)) {
-                  heap.dequeue(); heap.enqueue(Entry(key, candidate, score))
-                }
-              }
-            }
-          }
-          iters(order(0)).advance(candidate + 1)
-        }
-        if (iters(order(0)).exhausted) running = false
-        else candidate = iters(order(0)).docID
-      }
-    }
-    val out = Seq.newBuilder[ScoredDoc]
-    while (heap.nonEmpty) {
-      val e = heap.dequeue()
-      out += ScoredDoc(e.docID, e.score)
-    }
-    out.result()
-  }
-
-  /** Count matching docs in [lo, hi) WITHOUT scoring, norms lookups or
-    * materializing matches — the "total hits" aggregate of a search
-    * service. AND mode: alignment sweep led by `terms(0)` (callers on
-    * the scan path MUST pass the task-local driver term first — every
-    * AND match contains it, so per-task counts partition cleanly across
-    * tasks holding disjoint driver segments). OR mode: distinct-doc
-    * sort-merge over the present terms. Memory O(#terms); no top-k
-    * structure of any kind. */
-  def countRange(segsByTerm: Map[String, Array[PostingSegment]],
-                 terms: Array[String], avgdl: Double,
-                 lo: Long, hi: Long, orMode: Boolean,
-                 // optional candidate gate (facet counts); probed at
-                 // non-decreasing docIDs, so monotone-cursor gates work
-                 allowed: Long => Boolean = null): Long = {
-    if (orMode) {
-      val iters = terms.filter(segsByTerm.contains)
-        .map(t => new PostingListIterator(segsByTerm(t), avgdl))
-      if (iters.isEmpty) return 0L
-      iters.foreach(_.advance(lo))
-      var count = 0L
-      var running = true
-      while (running) {
-        var min = Long.MaxValue
-        var i = 0
-        while (i < iters.length) {
-          val it = iters(i)
-          if (!it.exhausted && it.docID < min) min = it.docID
-          i += 1
-        }
-        if (min == Long.MaxValue || min >= hi) running = false
-        else {
-          if (allowed == null || allowed(min)) count += 1
-          i = 0
-          while (i < iters.length) {
-            val it = iters(i)
-            if (!it.exhausted && it.docID == min) it.advance(min + 1)
-            i += 1
-          }
-        }
-      }
-      count
-    } else {
-      if (terms.isEmpty || terms.exists(t => !segsByTerm.contains(t)))
-        return 0L
-      val iters = terms.map(t => new PostingListIterator(segsByTerm(t), avgdl))
-      iters.foreach(_.advance(lo))
-      if (iters.exists(_.exhausted)) return 0L
-      var count = 0L
-      var candidate = iters(0).docID
-      var running = true
-      while (running && candidate < hi) {
-        var matched = true
-        var bump = candidate
-        var i = 1
-        while (matched && i < iters.length) {
-          val it = iters(i)
-          it.advance(candidate)
-          if (it.exhausted) { running = false; matched = false }
-          else if (it.docID != candidate) { bump = it.docID; matched = false }
-          i += 1
-        }
-        if (running) {
-          if (matched) {
-            if (allowed == null || allowed(candidate)) count += 1
-            iters(0).advance(candidate + 1)
-          }
-          else iters(0).advance(bump)
-          if (iters(0).exhausted) running = false
-          else candidate = iters(0).docID
-        }
-      }
-      count
-    }
-  }
-
-  /** Per-group match counts in [lo, hi) — [[countRange]]'s sweep with
-    * the single counter replaced by one counter PER GROUP of a doc→group
-    * mapping probed through a monotone cursor ([[monotoneGroupCursor]]).
-    * This is the one-pass histogram/date-range aggregation of a search
-    * service ("matches by length bucket"): B buckets cost ONE postings
-    * sweep, not B gated sweeps. No scoring, no norms, no materialized
-    * matches; unmapped docs (cursor -1) are skipped. Counts are
-    * additive over disjoint ranges, so pooled/distributed shards merge
-    * by elementwise array addition. */
-  def countGroupsRange(segsByTerm: Map[String, Array[PostingSegment]],
-                       terms: Array[String], avgdl: Double,
-                       lo: Long, hi: Long, orMode: Boolean,
-                       groupOf: Long => Int, nGroups: Int): Array[Long] = {
-    val counts = new Array[Long](nGroups)
-    if (orMode) {
-      val iters = terms.filter(segsByTerm.contains)
-        .map(t => new PostingListIterator(segsByTerm(t), avgdl))
-      if (iters.isEmpty) return counts
-      iters.foreach(_.advance(lo))
-      var running = true
-      while (running) {
-        var min = Long.MaxValue
-        var i = 0
-        while (i < iters.length) {
-          val it = iters(i)
-          if (!it.exhausted && it.docID < min) min = it.docID
-          i += 1
-        }
-        if (min == Long.MaxValue || min >= hi) running = false
-        else {
-          val g = groupOf(min)
-          if (g >= 0) counts(g) += 1
-          i = 0
-          while (i < iters.length) {
-            val it = iters(i)
-            if (!it.exhausted && it.docID == min) it.advance(min + 1)
-            i += 1
-          }
-        }
-      }
-      counts
-    } else {
-      if (terms.isEmpty || terms.exists(t => !segsByTerm.contains(t)))
-        return counts
-      val iters = terms.map(t => new PostingListIterator(segsByTerm(t), avgdl))
-      iters.foreach(_.advance(lo))
-      if (iters.exists(_.exhausted)) return counts
-      var candidate = iters(0).docID
-      var running = true
-      while (running && candidate < hi) {
-        var matched = true
-        var bump = candidate
-        var i = 1
-        while (matched && i < iters.length) {
-          val it = iters(i)
-          it.advance(candidate)
-          if (it.exhausted) { running = false; matched = false }
-          else if (it.docID != candidate) { bump = it.docID; matched = false }
-          i += 1
-        }
-        if (running) {
-          if (matched) {
-            val g = groupOf(candidate)
-            if (g >= 0) counts(g) += 1
-            iters(0).advance(candidate + 1)
-          }
-          else iters(0).advance(bump)
-          if (iters(0).exhausted) running = false
-          else candidate = iters(0).docID
-        }
-      }
-      counts
-    }
-  }
-
-  /** Top-k matching docs in [lo, hi) ordered by a STATIC doc-values
-    * field instead of relevance — the search-service `sort:` parameter
-    * (newest-first, longest-first, …). Relevance is never computed:
-    * the sweep is [[countRange]]'s AND alignment (leader term first —
-    * scan-path callers pass the task-local driver term at index 0) and
-    * each match offers `(fieldOf(docID), docID)` to ONE bounded k-heap
-    * ordered (field desc, docID asc). Without an index sorted on the
-    * field there is no admissible early termination — a doc's field
-    * value is independent of its postings — so the honest cost is the
-    * full intersection sweep plus an O(log k) heap offer per match,
-    * exactly Lucene's sort-by-field plan on an unsorted index. Results
-    * from disjoint ranges merge by a global (field desc, docID asc)
-    * re-sort: per-range top-k is a correct candidate superset because
-    * the order key is per-doc. */
-  def sortedRange(segsByTerm: Map[String, Array[PostingSegment]],
-                  terms: Array[String], avgdl: Double,
-                  lo: Long, hi: Long, k: Int,
-                  fieldOf: Long => Long): Seq[(Long, Long)] = {
-    if (terms.isEmpty || terms.exists(t => !segsByTerm.contains(t)))
-      return Nil
-    val iters = terms.map(t => new PostingListIterator(segsByTerm(t), avgdl))
-    iters.foreach(_.advance(lo))
-    if (iters.exists(_.exhausted)) return Nil
-    final case class E(v: Long, docID: Long)
-    val worseFirst = Ordering.fromLessThan[E]((a, b) =>
-      a.v < b.v || (a.v == b.v && a.docID > b.docID))
-    val heap = new mutable.PriorityQueue[E]()(worseFirst.reverse)
-    def offer(d: Long): Unit = {
-      val v = fieldOf(d)
-      if (heap.size < k) heap.enqueue(E(v, d))
-      else {
-        val w = heap.head
-        if (v > w.v || (v == w.v && d < w.docID)) {
-          heap.dequeue(); heap.enqueue(E(v, d))
-        }
-      }
-    }
-    var candidate = iters(0).docID
-    var running = true
-    while (running && candidate < hi) {
-      var matched = true
-      var bump = candidate
-      var i = 1
-      while (matched && i < iters.length) {
-        val it = iters(i)
-        it.advance(candidate)
-        if (it.exhausted) { running = false; matched = false }
-        else if (it.docID != candidate) { bump = it.docID; matched = false }
-        i += 1
-      }
-      if (running) {
-        if (matched) {
-          offer(candidate)
-          iters(0).advance(candidate + 1)
-        }
-        else iters(0).advance(bump)
-        if (iters(0).exhausted) running = false
-        else candidate = iters(0).docID
-      }
-    }
-    val out = Seq.newBuilder[(Long, Long)]
-    while (heap.nonEmpty) {
-      val e = heap.dequeue()
-      out += ((e.docID, e.v))
-    }
-    out.result()
-  }
-
-  /** Disjunctive (OR-semantics) WAND over one docID range [lo, hi):
-    * score = Σ contributions of the query terms PRESENT in the doc,
-    * accumulated in ascending term order with absent terms contributing
-    * an exact +0.0 (so the association matches the SQL twin's
-    * `coalesce(c_i, 0)` fixed-order sum bit-for-bit).
-    *
-    * Pruning = classic WAND pivot selection on per-term global upper
-    * bounds (idf × max block quotient over the term's segments), plus a
-    * block-max re-check at the pivot before full scoring. Both bounds are
-    * padded (admissibility insurance, same as the AND path). */
-  def wandOrRange(
-      segsByTerm: Map[String, Array[PostingSegment]],
-      termsSorted: Array[TermCtx],
-      lenOf: Long => Long,
-      avgdl: Double,
-      lo: Long, hi: Long, k: Int,
-      rounded: Boolean): Seq[ScoredDoc] =
-    disjunctiveRange(segsByTerm, termsSorted, lenOf, avgdl, lo, hi, k,
-      rounded, null)
-
-  private def disjunctiveRange(
-      segsByTerm: Map[String, Array[PostingSegment]],
-      termsSorted: Array[TermCtx],
-      lenOf: Long => Long,
-      avgdl: Double,
-      lo: Long, hi: Long, k: Int,
-      rounded: Boolean,
-      allowed: Long => Boolean,
-      // search-after cursor — same contract as [[conjunctiveRange]]'s
-      // (NaN = none; skip docs ranked at-or-before (afterKey, afterDoc))
-      afterKey: Double = Double.NaN,
-      afterDoc: Long = 0L,
-      // minimum-should-match: score only docs matching ≥ msm distinct
-      // query terms. Gating happens at the aligned pivot, AFTER the
-      // pivot/block-max pruning decisions — msm matches ⊆ OR matches,
-      // so every pruning bound stays admissible (same argument as the
-      // phrase gate on the conjunctive side). msm = 1 is bit-identical
-      // to plain OR (any aligned pivot matches ≥ 1 term by definition).
-      msm: Int = 1): Seq[ScoredDoc] = {
-    val present = termsSorted.filter(tc => segsByTerm.contains(tc.term))
-    val n = present.length
-    // fewer present terms than the floor → no doc can reach msm matches
-    if (n == 0 || n < msm) return Nil
-    val iters = present.map(tc => new PostingListIterator(segsByTerm(tc.term), avgdl))
-    iters.foreach(_.advance(lo))
-    // global admissible UB per term: idf × max block quotient anywhere
-    val ub = present.map { tc =>
-      tc.boost * (tc.idf * segsByTerm(tc.term).iterator.flatMap(s =>
-        s.blockMaxTf.lazyZip(s.blockMinLen).map(Bm25.quotient(_, _, avgdl))).max)
-    }
-
-    final case class Entry(key: Double, docID: Long, score: Double)
-    val worseFirst = Ordering.fromLessThan[Entry]((a, b) =>
-      a.key < b.key || (a.key == b.key && a.docID > b.docID))
-    val heap = new mutable.PriorityQueue[Entry]()(worseFirst.reverse)
-    // last (score → key) memo + exact-score fast reject — the same two
-    // hot-path cuts as [[conjunctiveRange]] (r4 is a JBigDecimal round)
-    var memoScore = Double.NaN
-    var memoKey = Double.NaN
-    def keyOf(score: Double): Double =
-      if (!rounded) score
-      else if (score == memoScore) memoKey
-      else { memoScore = score; memoKey = r4(score); memoKey }
-    def threshold: Double =
-      if (heap.size < k) Double.NegativeInfinity
-      else if (rounded) heap.head.key - 0.00005
-      else heap.head.key
-    def offer(docID: Long, score: Double): Unit = {
-      if (heap.size >= k) {
-        val w = heap.head
-        val rejectFast =
-          if (rounded) score < w.key - 0.0000501 // 1e-9 pad: the double
-              // subtraction can land a hair above the exact decimal
-              // band edge; widening the band keeps the reject sound
-          else score < w.key || (score == w.key && docID > w.docID)
-        if (rejectFast) return
-      }
-      val key = keyOf(score)
-      // search-after gate (both tests false when afterKey is NaN)
-      if (key > afterKey || (key == afterKey && docID <= afterDoc)) return
-      if (heap.size < k) heap.enqueue(Entry(key, docID, score))
-      else {
-        val w = heap.head
-        if (key > w.key || (key == w.key && docID < w.docID)) {
-          heap.dequeue(); heap.enqueue(Entry(key, docID, score))
-        }
-      }
-    }
-
-    val order = Array.range(0, n) // indices sorted by current docID
-    var running = true
-    while (running) {
-      // insertion sort by current docID (n is tiny; exhausted → MaxValue)
-      var i = 1
-      while (i < n) {
-        val v = order(i)
-        var j = i - 1
-        while (j >= 0 && iters(order(j)).docID > iters(v).docID) {
-          order(j + 1) = order(j); j -= 1
-        }
-        order(j + 1) = v
-        i += 1
-      }
-      if (iters(order(0)).exhausted || iters(order(0)).docID >= hi) running = false
-      else {
-        // pivot: first prefix of docID-sorted iterators whose Σ UB beats θ
-        val th = threshold
-        var acc = 0.0
-        var p = -1
-        var pi = 0
-        while (p < 0 && pi < n) {
-          val oi = order(pi)
-          if (!iters(oi).exhausted) {
-            acc += ub(oi)
-            if (pad(acc) >= th || th == Double.NegativeInfinity) p = pi
-          }
-          pi += 1
-        }
-        if (p < 0) running = false
-        else {
-          val pivotDoc = iters(order(p)).docID
-          if (pivotDoc >= hi) running = false
-          else if (iters(order(0)).docID == pivotDoc) {
-            // align every iterator ≤ pivot on pivotDoc, then block-max check
-            var a = 0
-            while (a <= p) { iters(order(a)).advance(pivotDoc); a += 1 }
-            var bub = 0.0
-            var bi = 0
-            while (bi < n) {
-              val it = iters(bi)
-              if (!it.exhausted && it.docID == pivotDoc)
-                bub += present(bi).boost * (present(bi).idf * it.blockMaxQ)
-              bi += 1
-            }
-            if ((heap.size >= k && pad(bub) < threshold) ||
-                (allowed != null && !allowed(pivotDoc))) {
-              // cannot enter top-k (or gated out by the filter): skip
-              // past pivotDoc on matching iterators
-              var m = 0
-              while (m < n) {
-                val it = iters(m)
-                if (!it.exhausted && it.docID == pivotDoc) it.advance(pivotDoc + 1)
-                m += 1
-              }
-            } else {
-              // exact score, ascending-term order, absent terms +0.0 exact
-              val len = lenOf(pivotDoc)
-              val norm = 1.2 * (0.25 + 0.75 * len.toDouble / avgdl)
-              var score = 0.0
-              var nMatched = 0
-              var s = 0
-              while (s < n) {
-                val it = iters(s)
-                if (!it.exhausted && it.docID == pivotDoc) {
-                  nMatched += 1
-                  val tfv = it.tf.toDouble
-                  score += present(s).boost *
-                    (present(s).idf * (tfv * 2.2) / (tfv + norm))
-                } else score += 0.0
-                s += 1
-              }
-              if (nMatched >= msm) offer(pivotDoc, score)
-              var m = 0
-              while (m < n) {
-                val it = iters(m)
-                if (!it.exhausted && it.docID == pivotDoc) it.advance(pivotDoc + 1)
-                m += 1
-              }
-            }
-          } else {
-            // advance, up to pivotDoc, the largest-UB iterator that is
-            // strictly BEFORE it (order(0) qualifies — this branch means
-            // order(0).docID < pivotDoc — so progress is guaranteed;
-            // an iterator already AT pivotDoc must not be chosen, its
-            // advance would be a no-op and the loop would spin)
-            var best = 0
-            var bi = 1
-            while (bi < p) {
-              if (iters(order(bi)).docID < pivotDoc && ub(order(bi)) > ub(order(best)))
-                best = bi
-              bi += 1
-            }
-            iters(order(best)).advance(pivotDoc)
-          }
-        }
-      }
-    }
-    val out = Seq.newBuilder[ScoredDoc]
-    while (heap.nonEmpty) {
-      val e = heap.dequeue()
-      out += ScoredDoc(e.docID, e.score)
-    }
-    out.result()
   }
 }
 
@@ -1688,7 +1283,7 @@ final class QueryEngine(
   /** Grouped (field-collapsing) top-n: the best `n` docs PER GROUP of
     * the collapse key, scored with corpus-global stats — "top 3 per
     * lang" in one query. Driver-local path (postings resident): ONE
-    * kernel pass with per-group heaps ([[QueryEngine.groupedRange]]);
+    * kernel pass with per-group heaps ([[QueryEngine.GroupedTopK]]);
     * above the serial threshold the same kernel runs sharded by docID
     * range on the driver pool (per-group tops over disjoint ranges
     * merge by concatenation), up to the pooled total-df ceiling.
@@ -1727,10 +1322,11 @@ final class QueryEngine(
         // per-group top-n over disjoint ranges concatenates soundly (the
         // global top-n per group is within the union of shard top-ns);
         // the merge below takes it
+        val order = rarestFirst(termCtx)
         localShards(totalDf) { (lo, hi) =>
-          QueryEngine.groupedRange(byTerm, termCtx, norms.cursor(), avgdl,
-            lo, hi, n, rounded,
-            QueryEngine.monotoneGroupCursor(groups.ids, groups.groups), nG)
+          conjunctive(byTerm, termCtx, order, norms.cursor(), avgdl, lo, hi,
+            new GroupedTopK(n, rounded,
+              monotoneGroupCursor(groups.ids, groups.groups), nG)).results
         }.flatten
       } else {
         groups.names.indices.flatMap { g =>
@@ -2312,7 +1908,7 @@ final class QueryEngine(
 
   /** Total-hits count for a query — the search service's "About N
     * results" aggregate. Never scores, never touches norms, never
-    * materializes matches ([[QueryEngine.countRange]]). Driver-local
+    * materializes matches ([[QueryEngine.Count]]). Driver-local
     * when the query's postings are resident; otherwise the zero-shuffle
     * scan path (AND: every match contains the task-local driver term,
     * so per-task counts partition cleanly; OR: tasks count within their
@@ -2357,7 +1953,7 @@ final class QueryEngine(
       val byTerm = localSegsFor(presentTerms, perDir)
       // counts are additive over disjoint ranges
       return localShards(totalDf) { (lo, hi) =>
-        QueryEngine.countRange(byTerm, leaderFirst, av, lo, hi, orMode, gate())
+        collectMatches(byTerm, leaderFirst, av, lo, hi, orMode, new Count, gate()).total
       }.sum
     }
     val sideDfSum = combinedDf.filter(_._1 != driverTerm).values.sum
@@ -2383,14 +1979,13 @@ final class QueryEngine(
         else {
           val byTerm = sideBc.value + (dt -> mySegs.sortBy(_.minDoc))
           if (rangeDir == null)
-            Iterator.single(QueryEngine.countRange(
-              byTerm, lf, av, 0L, Long.MaxValue, om,
-              if (gf == null) null else gf()))
+            Iterator.single(collectMatches(byTerm, lf, av, 0L, Long.MaxValue, om,
+              new Count, if (gf == null) null else gf()).total)
           else Iterator.single(
             QueryEngine.ownedIntervals(mySegs, rangeDir._1, rangeDir._2)
               .map { case (lo, hi) =>
-                QueryEngine.countRange(byTerm, lf, av, lo, hi, om,
-                  if (gf == null) null else gf()) }.sum)
+                collectMatches(byTerm, lf, av, lo, hi, om,
+                  new Count, if (gf == null) null else gf()).total }.sum)
         }
       }.reduce(_ + _)
     } else {
@@ -2413,8 +2008,8 @@ final class QueryEngine(
         val byTerm = it.map(_.seg).toArray.groupBy(_.term)
           .map { case (t, ss) => t -> ss.sortBy(_.minDoc) }
         val lo = rid.toLong * rs
-        QueryEngine.countRange(byTerm, lf, av, lo, lo + rs, om,
-          if (gf == null) null else gf())
+        collectMatches(byTerm, lf, av, lo, lo + rs, om,
+          new Count, if (gf == null) null else gf()).total
       }.reduce(_ + _)
     }
   }
@@ -2498,7 +2093,7 @@ final class QueryEngine(
   /** Histogram of matching docs by length bucket — the ES-style
     * `histogram` aggregation over the match set: (bucket, n_docs) for
     * every bucket with ≥1 match, bucket ascending. ONE postings sweep
-    * counts ALL buckets ([[QueryEngine.countGroupsRange]]) — B buckets
+    * counts ALL buckets ([[QueryEngine.Count]] per group) — B buckets
     * do not cost B gated counts. Driver-local when the query's postings
     * are resident; sharded by docID range on the driver pool up to the
     * pooled ceiling (bucket counts over disjoint ranges add
@@ -2525,8 +2120,8 @@ final class QueryEngine(
         "the pooled ceiling) — use lenHistogramRelational")
     val byTerm = localSegsFor(presentTerms, perDir)
     val counts: Array[Long] = localShards(totalDf) { (lo, hi) =>
-      QueryEngine.countGroupsRange(byTerm, leaderFirst, av, lo, hi, orMode,
-        QueryEngine.monotoneGroupCursor(groups.ids, groups.groups), nG)
+      collectMatches(byTerm, leaderFirst, av, lo, hi, orMode,
+        new Count(monotoneGroupCursor(groups.ids, groups.groups), nG)).counts
     }.reduce { (a, b) =>
       var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a
     }
@@ -2773,7 +2368,7 @@ final class QueryEngine(
     * mirror [[countMatches]]: driver-local / pooled when the postings
     * are resident, the zero-shuffle broadcast scan otherwise, and the
     * per-query segment shuffle (with cogrouped norms beyond the
-    * broadcast cap) as the 10^12-doc fallback ([[QueryEngine.sortedRange]]
+    * broadcast cap) as the 10^12-doc fallback ([[QueryEngine.SortedByField]]
     * explains why no early termination exists without a field-sorted
     * index). */
   def topKSortedByLen(qtext: String, k: Int = Bm25.K): DataFrame = {
@@ -2796,7 +2391,8 @@ final class QueryEngine(
       val byTerm = localSegsFor(presentTerms, perDir)
       val norms = normsBc.get.value
       val hits = localShards(totalDf) { (lo, hi) =>
-        QueryEngine.sortedRange(byTerm, leaderFirst, av, lo, hi, kk, norms.cursor())
+        collectMatches(byTerm, leaderFirst, av, lo, hi, orMode = false,
+          new SortedByField(kk, norms.cursor())).results
       }.flatten
       return frame(hits.sortBy(h => (-h._2, h._1)).take(k)
         .map { case (d, l) => Row(d, l) }, LenSchema)
@@ -2825,8 +2421,8 @@ final class QueryEngine(
         if (mySegs.isEmpty) Iterator.empty
         else {
           val byTerm = sideBc.value + (dt -> mySegs.sortBy(_.minDoc))
-          QueryEngine.sortedRange(byTerm, lf, av,
-            0L, Long.MaxValue, kk, bc.value.cursor()).iterator
+          collectMatches(byTerm, lf, av, 0L, Long.MaxValue, orMode = false,
+            new SortedByField(kk, bc.value.cursor())).results.iterator
         }
       }
     } else {
@@ -2851,8 +2447,8 @@ final class QueryEngine(
             val byTerm = it.map(_.seg).toArray.groupBy(_.term)
               .map { case (t, ss) => t -> ss.sortBy(_.minDoc) }
             val lo = rid.toLong * rs
-            QueryEngine.sortedRange(byTerm, lf, av,
-              lo, lo + rs, kk, bc.value.cursor()).iterator
+            collectMatches(byTerm, lf, av, lo, lo + rs, orMode = false,
+              new SortedByField(kk, bc.value.cursor())).results.iterator
           }
         case None =>
           val normsByRange = allDocStats
@@ -2864,8 +2460,8 @@ final class QueryEngine(
             else {
               val norms = dsIt.map(d => d.docID -> d.len).toMap
               val lo = rid.toLong * rs
-              QueryEngine.sortedRange(byTerm, lf, av,
-                lo, lo + rs, kk, norms.apply).iterator
+              collectMatches(byTerm, lf, av, lo, lo + rs, orMode = false,
+                new SortedByField(kk, norms.apply)).results.iterator
             }
           }
       }
@@ -2897,7 +2493,7 @@ final class QueryEngine(
     topKImpl(qtext, k, rounded, orMode = false)
 
   /** Disjunctive variant: docs matching ANY query term, scored over the
-    * terms they contain ([[QueryEngine.wandOrRange]]). */
+    * terms they contain ([[QueryEngine.disjunctive]]). */
   def topKOr(qtext: String, k: Int = Bm25.K, rounded: Boolean = false): DataFrame =
     topKImpl(qtext, k, rounded, orMode = true)
 

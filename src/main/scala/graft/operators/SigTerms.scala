@@ -51,13 +51,21 @@ object SigTerms {
     * corpus tokenize (VERDICT r4 #4: the previous version recomputed
     * `Bm25.termFreq(docs)` per run — corpus-sized at scale while the
     * scaladoc promised otherwise). The only corpus touch left is the
-    * bounded fetch-by-id of the ≤ SampleSize sample docs per query. */
+    * bounded fetch-by-id of the ≤ SampleSize sample docs per query.
+    *
+    * The engine must be built over `sfDir` as it is now: an index of
+    * another (or an older) corpus would score against foreign df and N
+    * without any error, so a doc-count mismatch is rejected up front
+    * (the count reads no column — parquet row-group row counts). */
   def significantTerms(spark: SparkSession, sfDir: String,
                        engine: QueryEngine,
                        topK: (String, Int) => DataFrame): DataFrame = {
     val docs = Corpus.docs(spark, sfDir)
-    val dfr = engine.dictionaryDf()
     val n = engine.stats.n
+    val corpusN = docs.count()
+    require(n == corpusN.toDouble,
+      s"stale index: the engine holds ${n.toLong} docs, $sfDir holds $corpusN")
+    val dfr = engine.dictionaryDf()
 
     val perQuery = Bm25.QuerySet.map { case (qid, qtext) =>
       val sample = topK(qtext, SampleSize)

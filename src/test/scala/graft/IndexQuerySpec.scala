@@ -1521,6 +1521,15 @@ class IndexQuerySpec extends AnyFunSuite {
     val ge = QueryEngine.monotoneGate(Array.emptyLongArray, false)
     assert(!ge(7L))
     assert(QueryEngine.monotoneGate(Array.emptyLongArray, true)(7L))
+    // group cursor over the same ids: the mapped id's group, −1 unmapped
+    val groups = ids.indices.map(i => (i * 7) % 5).toArray
+    val gc = QueryEngine.monotoneGroupCursor(ids, groups)
+    probes.foreach { p =>
+      val i = java.util.Arrays.binarySearch(ids, p)
+      assert(gc(p) == (if (i >= 0) groups(i) else -1), s"group probe $p")
+    }
+    assert(QueryEngine.monotoneGroupCursor(Array.emptyLongArray,
+      Array.emptyIntArray)(7L) == -1)
   }
 
   test("windowMatch kernel cases") {
@@ -1875,6 +1884,22 @@ class IndexQuerySpec extends AnyFunSuite {
         r.getLong(3) <= SigTerms.SampleSize), q)
       assert(rs.map(_.getInt(1)).sorted.toSeq == (1 to rs.length), q)
     }
+  }
+
+  test("significant terms: an engine over another corpus is rejected (stale index)") {
+    import graft.operators.SigTerms
+    // an index of the corpus's first half: the corpus has grown since
+    val staleDir = "target/test-index-stale-sf0001"
+    new Directory(new java.io.File(staleDir)).deleteRecursively()
+    Index.buildFrom(spark, Corpus.docs(spark, sfDir).filter(col("docID") < 250),
+      staleDir, params)
+    val stale = new QueryEngine(spark, Seq(staleDir))
+    try {
+      intercept[IllegalArgumentException] {
+        SigTerms.significantTerms(spark, sfDir, stale,
+          (q, n) => stale.topK(q, n, rounded = true))
+      }
+    } finally stale.close()
   }
 
   test("keyword doc-values facet == corpus-derived facet; unknown value is empty") {
