@@ -1046,6 +1046,15 @@ final class QueryEngine(
   }
   private val useBroadcastNorms = stats.n <= broadcastNormsUpTo.toDouble
 
+  /** Source rows the indexes were built from, token-less docs included
+    * (`stats.n` counts only docs with a token, as BM25 does). The
+    * keyword doc-values hold one row per (doc, field), so one field's
+    * rows count the source: the partition filter prunes to that field's
+    * files and the count reads no column. */
+  def sourceDocs(): Long =
+    indexDirs.map(d => Index.readDocVals(spark, d)
+      .filter(col("field") === Index.KeywordFields.head).count()).sum
+
   /** Small-vocab path: every constituent dictionary pinned on the driver
     * (a search service keeps its term dictionary in memory). Vocabulary
     * grows ~log(corpus), so this holds far beyond sandbox scale; above

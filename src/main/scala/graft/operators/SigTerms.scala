@@ -55,16 +55,18 @@ object SigTerms {
     *
     * The engine must be built over `sfDir` as it is now: an index of
     * another (or an older) corpus would score against foreign df and N
-    * without any error, so a doc-count mismatch is rejected up front
-    * (the count reads no column — parquet row-group row counts). */
+    * without any error, so a source-row-count mismatch is rejected up
+    * front. Both counts include token-less docs (which `stats.n` leaves
+    * out) and read no column — parquet row-group row counts. */
   def significantTerms(spark: SparkSession, sfDir: String,
                        engine: QueryEngine,
                        topK: (String, Int) => DataFrame): DataFrame = {
     val docs = Corpus.docs(spark, sfDir)
     val n = engine.stats.n
+    val indexedN = engine.sourceDocs()
     val corpusN = docs.count()
-    require(n == corpusN.toDouble,
-      s"stale index: the engine holds ${n.toLong} docs, $sfDir holds $corpusN")
+    require(indexedN == corpusN,
+      s"stale index: the engine was built over $indexedN docs, $sfDir holds $corpusN")
     val dfr = engine.dictionaryDf()
 
     val perQuery = Bm25.QuerySet.map { case (qid, qtext) =>

@@ -1902,6 +1902,40 @@ class IndexQuerySpec extends AnyFunSuite {
     } finally stale.close()
   }
 
+  test("significant terms: a fresh index over token-less docs is accepted") {
+    built
+    import graft.operators.SigTerms
+    import spark.implicits._
+    // the corpus plus docs that yield no token (empty, null, punctuation
+    // only, non-ASCII only; null lang and source): BM25's N leaves them
+    // out, the source row count does not
+    val corpusDir = "target/test-corpus-tokenless"
+    val tlIndexDir = "target/test-index-tokenless"
+    new Directory(new java.io.File(tlIndexDir)).deleteRecursively()
+    val src = spark.read.parquet(s"$sfDir/documents.parquet")
+    val tokenless = Seq((500L, Some("")), (501L, None),
+      (502L, Some("!!! --- ...")), (503L, Some("日本語 ü"))).toDF("doc_id", "text")
+    val extra = tokenless.select(src.columns.toIndexedSeq.map {
+      case c @ ("doc_id" | "text") => col(c)
+      case c => lit(null).cast(src.schema(c).dataType).as(c)
+    }: _*)
+    src.unionByName(extra).write.mode("overwrite")
+      .parquet(s"$corpusDir/documents.parquet")
+    Index.build(spark, corpusDir, tlIndexDir, params)
+    val fresh = new QueryEngine(spark, Seq(tlIndexDir))
+    try {
+      assert(fresh.stats.n == engine.stats.n)
+      assert(fresh.sourceDocs() == Corpus.docs(spark, corpusDir).count())
+      assert(fresh.sourceDocs() == engine.sourceDocs() + 4)
+      // token-less docs change neither N, df nor the sample: same rows
+      val got = SigTerms.significantTerms(spark, corpusDir, fresh,
+        (q, n) => fresh.topK(q, n, rounded = true)).collect().toSeq
+      val want = SigTerms.significantTerms(spark, sfDir, engine,
+        (q, n) => engine.topK(q, n, rounded = true)).collect().toSeq
+      assert(got.nonEmpty && got == want)
+    } finally fresh.close()
+  }
+
   test("keyword doc-values facet == corpus-derived facet; unknown value is empty") {
     built
     val corpusAllowed = Corpus.docs(spark, sfDir)
