@@ -7,9 +7,10 @@ Reads <verifyOutDir>/oracle_sql.json, registers every parquet table in
 <sfDir> as a DuckDB view (documents, embeddings, events, ...), runs each
 oracle SQL, and compares against the Spark result parquet written by
 graft.Verify: row count, column-name set, and value-hash with columns
-sorted by name (the driver's contract).
+sorted by name (the driver's contract). Each entry's line also gives the
+DuckDB wall time of its oracle SQL (execute + fetch), so a slow twin shows.
 """
-import sys, json, glob, os
+import sys, json, glob, os, time
 import duckdb
 import pyarrow.parquet as pq
 
@@ -43,6 +44,7 @@ def main():
         t = pq.read_table(spark_files[0])
         s_cols = list(t.column_names)
         s_rows = [tuple(row[c] for c in s_cols) for row in t.to_pylist()]
+        t0 = time.perf_counter()
         try:
             res = con.execute(sql)
             o_cols = [d[0] for d in res.description]
@@ -51,16 +53,18 @@ def main():
             print(f"{name}: ORACLE SQL ERROR: {e}")
             n_fail += 1
             continue
+        secs = time.perf_counter() - t0
         ok_rows = len(s_rows) == len(o_rows)
         ok_schema = sorted(s_cols) == sorted(o_cols)
         sf = frame_rows(s_cols, s_rows)
         of = frame_rows(o_cols, o_rows)
         ok_hash = sf == of
         if ok_rows and ok_schema and ok_hash:
-            print(f"{name}: PASS ({len(s_rows)} rows)")
+            print(f"{name}: PASS ({len(s_rows)} rows, {secs:.2f} s)")
             n_pass += 1
         else:
-            print(f"{name}: FAIL rows={len(s_rows)}/{len(o_rows)} schema={ok_schema} hash={ok_hash}")
+            print(f"{name}: FAIL rows={len(s_rows)}/{len(o_rows)} schema={ok_schema} "
+                  f"hash={ok_hash} ({secs:.2f} s)")
             if ok_schema and not ok_hash:
                 for i, (a, b) in enumerate(zip(sf, of)):
                     if a != b:

@@ -166,16 +166,19 @@ object LinkGraph {
   }
 
   /** DuckDB twin of [[hits]]: the same unnormalized rounds unrolled as
-    * chained (a_i, h_i) CTE pairs, max-normalized at the end. */
+    * chained (a_i, h_i) CTE pairs, max-normalized at the end. Each pair
+    * is MATERIALIZED: inlined, every level re-expands the whole chain
+    * below it, so the plan grows geometrically with the iteration count
+    * (about ×2.3 per round). */
   def oracleSqlHits(): String = {
     val iters = (1 to Iterations).map { i =>
-      s"""a$i AS (
+      s"""a$i AS MATERIALIZED (
          |  SELECT nodes.id, coalesce(s.s, 0.0) AS a
          |  FROM nodes LEFT JOIN (
          |    SELECT e.dst AS id, sum(p.h) AS s
          |    FROM edges e JOIN h${i - 1} p ON e.src = p.id GROUP BY e.dst
          |  ) s ON nodes.id = s.id
-         |), h$i AS (
+         |), h$i AS MATERIALIZED (
          |  SELECT nodes.id, coalesce(s.s, 0.0) AS h
          |  FROM nodes LEFT JOIN (
          |    SELECT e.src AS id, sum(p.a) AS s

@@ -4,7 +4,7 @@ import graft.functions.{Analyzer, Codec}
 import graft.operators.Index._
 import com.google.common.cache.{AbstractCache, Cache, CacheBuilder, CacheStats, RemovalNotification}
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Row, SparkSession}
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType, StructType}
@@ -306,6 +306,39 @@ object QueryEngine {
                            boost: Double = 1.0)
   final case class ScoredDoc(docID: Long, score: Double)
   final case class RangedSeg(rangeId: Int, seg: PostingSegment)
+
+  /** `segs` grouped by term, each term's segments in minDoc order. */
+  private def termSegments(segs: Iterable[PostingSegment]): Map[String, Array[PostingSegment]] =
+    segs.groupBy(_.term).map { case (t, ss) => t -> ss.toArray.sortBy(_.minDoc) }
+
+  /** One query's work over one docID range [lo, hi): the segments of its
+    * terms (whole lists, or the range's share), the doc-length lookup
+    * (null when the placement was asked for no norms; fresh per call),
+    * and the bounds. Runs on the driver or in a Spark task, so it must
+    * capture no engine. */
+  type RangeFn[T] = (Map[String, Array[PostingSegment]], Long => Long, Long, Long) => Iterator[T]
+
+  /** A query's terms resolved against every constituent dictionary — the
+    * input of the engine's placement runner.
+    *  - `entries`: per index dir, the entries of the present scoring and
+    *    negated terms (a term of both signs appears once);
+    *  - `df`: combined df of each present scoring term (docID ranges are
+    *    disjoint across dirs, so per-dir dfs add);
+    *  - `anti`: the present negated terms, ascending;
+    *  - `driverTerm`: the highest-df scoring term, ties to the smallest —
+    *    scanned distributed, never collected;
+    *  - `totalDf`: scoring plus anti postings, which size the local and
+    *    range placements;
+    *  - `sideDf`: the postings of every term but the driver, which the
+    *    scan placement broadcasts. */
+  private final case class Resolved(entries: Seq[Seq[DictEntry]], df: Map[String, Long],
+                                    anti: Array[String], driverTerm: String,
+                                    totalDf: Long, sideDf: Long) {
+    /** The present scoring terms, driver first, then ascending: a scan
+      * task's AND sweep must lead with its task-local driver term. */
+    def leaderFirst: Array[String] =
+      (driverTerm +: df.keys.toSeq.sorted.filterNot(_ == driverTerm)).toArray
+  }
 
   /** BM25 length normalisation k1·(1 − b + b·len/avgdl), k1 = 1.2, b = 0.75. */
   private def lenNorm(len: Long, avgdl: Double): Double =
@@ -1113,10 +1146,6 @@ final class QueryEngine(
     * same postings frames. */
   private[graft] val segFetch = new SegmentFetch(indexDirs.map(postingsByDir))
 
-  /** `segs` grouped by term, each term's segments in minDoc order. */
-  private def byTerm(segs: Seq[PostingSegment]): Map[String, Array[PostingSegment]] =
-    segs.groupBy(_.term).map { case (t, ss) => t -> ss.sortBy(_.minDoc).toArray }
-
   /** Small-corpus path: norms as sorted primitive arrays (binary-search
     * lookup) — flat, boxing-free broadcast payload. Collected docID-sorted
     * and filled straight into the primitive arrays via toLocalIterator so
@@ -1141,25 +1170,29 @@ final class QueryEngine(
       Some(spark.sparkContext.broadcast(new NormsTable(ids, lens)))
     } else None
 
-  /** Session cache of side-term segment broadcasts, keyed by the query's
-    * (driver term, term set): repeated queries re-use one broadcast
-    * instead of leaking a new block per call (ADVICE r1). At most 256. */
+  /** Session cache of side-term segment broadcasts, keyed by content
+    * (driver term, sorted side terms): repeated queries re-use one
+    * broadcast instead of leaking a new block per call (ADVICE r1), and
+    * count, top-k and synonym queries over the same terms share it. At
+    * most 256. */
   private val sideBcCache =
     boundedCache[String, Broadcast[Map[String, Array[PostingSegment]]]](256)((_, _) => 1)
 
-  /** The cached broadcast under `key` of every segment of `perDir`'s
-    * terms except `driverTerm`'s: the driver term is scanned distributed
-    * and may be a head term, so it is never collected. Loaded with one
-    * pruned collect per dir, which keeps the batch-stat (or parquet
-    * row-group) pruning that a [[segFetch]] gives up. */
-  private def sideBroadcast(key: String, driverTerm: String, perDir: Seq[Seq[DictEntry]]) =
-    sideBcCache.get(key, () => spark.sparkContext.broadcast(byTerm(
-      indexDirs.zip(perDir).flatMap { case (dir, es) =>
-        val se = es.filter(_.term != driverTerm)
+  /** The cached broadcast of every segment of `perDir`'s terms except
+    * `driverTerm`'s: the driver term is scanned distributed and may be a
+    * head term, so it is never collected. Loaded with one pruned collect
+    * per dir, which keeps the batch-stat (or parquet row-group) pruning
+    * that a [[segFetch]] gives up. */
+  private def sideBroadcast(driverTerm: String, perDir: Seq[Seq[DictEntry]]) = {
+    val side = perDir.map(_.filter(_.term != driverTerm))
+    val key = driverTerm + "|" + side.flatten.map(_.term).distinct.sorted.mkString(",")
+    sideBcCache.get(key, () => spark.sparkContext.broadcast(termSegments(
+      indexDirs.zip(side).flatMap { case (dir, se) =>
         if (se.isEmpty) Nil
         else segmentsOf(dir, se.map(_.term), se.map(_.bucket).distinct)
           .coalesce(spark.sparkContext.defaultParallelism).collect().toSeq
       })))
+  }
 
   /** Session cache of the driver term's GLOBAL segment-range directory
     * (sorted parallel minDoc/maxDoc arrays) — the metadata that lets OR
@@ -1309,43 +1342,30 @@ final class QueryEngine(
     require(p.phrases.isEmpty && p.neg.isEmpty && p.fields.isEmpty &&
       p.prefixes.isEmpty && p.fuzzies.isEmpty && p.wildcards.isEmpty,
       "grouped retrieval supports bare terms and term^w boosts only")
-    val terms = p.pos
-    if (terms.isEmpty || groups.names.isEmpty) return frame(Nil, GroupedSchema)
-    val perDir = lookupPerDir(terms)
-    val combinedDf: Map[String, Long] =
-      perDir.flatten.groupBy(_.term).map { case (t, es) => t -> es.map(_.df).sum }
-    if (combinedDf.size < terms.size) return frame(Nil, GroupedSchema)
-    val nS = stats.n
-    val avgdl = stats.avgdl
-    val termCtx = combinedDf.toSeq
-      .map { case (t, df) =>
-        TermCtx(t, df, Bm25.idf(nS, df), p.boosts.getOrElse(t, 1.0)) }
-      .sortBy(_.term).toArray
-    val totalDf = combinedDf.values.sum
-    val hits: Seq[(Int, ScoredDoc)] =
-      if (!forceComposition && normsBc.isDefined && localWandUpTo > 0 &&
-          totalDf <= math.max(localWandUpTo, localParallelCap)) {
-        val byTerm = localSegsFor(termCtx.map(_.term).toSeq, perDir)
-        val norms = normsBc.get.value
-        val nG = groups.names.size
-        // per-group top-n over disjoint ranges concatenates soundly (the
-        // global top-n per group is within the union of shard top-ns);
-        // the merge below takes it
-        val order = rarestFirst(termCtx)
-        localShards(totalDf) { (lo, hi) =>
-          conjunctive(byTerm, termCtx, order, norms.cursor(), avgdl, lo, hi,
-            new GroupedTopK(n, rounded,
-              monotoneGroupCursor(groups.ids, groups.groups), nG)).results
-        }.flatten
-      } else {
-        groups.names.indices.flatMap { g =>
-          val gids = groups.ids.zip(groups.groups)
-            .collect { case (d, gg) if gg == g => d }
-          topKImpl(terms.mkString(" "), n, rounded, orMode = false,
-            gateBc = gateBroadcast(gids), boosts = p.boosts)
-            .collect().map(r => (g, ScoredDoc(r.getLong(0), r.getDouble(1)))).toSeq
-        }
-      }
+    if (groups.names.isEmpty) return frame(Nil, GroupedSchema)
+    val r = resolve(p.pos).orNull
+    if (r == null) return frame(Nil, GroupedSchema)
+    val termCtx = scoringTerms(r, p.boosts)
+    val order = rarestFirst(termCtx)
+    val av = stats.avgdl
+    val nG = groups.names.size
+    // per-group top-n over disjoint ranges concatenates soundly (the
+    // global top-n per group is within the union of shard top-ns); the
+    // merge below takes it
+    val local = if (forceComposition) None else runLocal(r, needsNorms = true) {
+      (segs, lenOf, lo, hi) =>
+        conjunctive(segs, termCtx, order, lenOf, av, lo, hi,
+          new GroupedTopK(n, rounded, monotoneGroupCursor(groups.ids, groups.groups), nG))
+          .results.iterator
+    }
+    val hits: Seq[(Int, ScoredDoc)] = local.getOrElse(
+      groups.names.indices.flatMap { g =>
+        val gids = groups.ids.zip(groups.groups)
+          .collect { case (d, gg) if gg == g => d }
+        topKImpl(p.pos.mkString(" "), n, rounded, orMode = false,
+          gateBc = gateBroadcast(gids), boosts = p.boosts)
+          .collect().map(row => (g, ScoredDoc(row.getLong(0), row.getDouble(1)))).toSeq
+      })
     frame(hits
       .map { case (g, h) =>
         (g, h.docID, if (rounded) QueryEngine.r4(h.score) else h.score) }
@@ -1475,7 +1495,7 @@ final class QueryEngine(
     val missing = terms.filterNot(hits.contains).toSet
     if (missing.isEmpty) return hits
     val t0 = System.nanoTime()
-    val loaded = byTerm(segFetch(perDir.map(_.filter(e => missing(e.term)))).toSeq)
+    val loaded = termSegments(segFetch(perDir.map(_.filter(e => missing(e.term)))).toSeq)
     segLoads.recordLoadSuccess(System.nanoTime() - t0)
     localSegCache.putAll(loaded.asJava)
     hits ++ loaded
@@ -1515,6 +1535,146 @@ final class QueryEngine(
           .collect().toSeq
       }
     }
+
+  /** Combined df of each term present in `perDir`: docID ranges are
+    * disjoint across dirs, so per-dir dfs add. */
+  private def dfOf(perDir: Seq[Seq[DictEntry]]): Map[String, Long] =
+    perDir.flatten.groupBy(_.term).map { case (t, es) => t -> es.map(_.df).sum }
+
+  // ------------------------------------------------------------ placement
+
+  /** Resolve a query's distinct scoring `terms` and its negated terms
+    * ([[QueryEngine.Resolved]]). None when no doc can match: no present
+    * scoring term, or, unless `orMode`, an absent one (an AND with a
+    * missing term is ∅). Negated terms absent from the dictionary
+    * exclude nothing and drop out here. */
+  private def resolve(terms: Seq[String], negTerms: Seq[String] = Nil,
+                      orMode: Boolean = false): Option[Resolved] = {
+    if (terms.isEmpty) return None
+    val perDir = lookupPerDir(terms)
+    val df = dfOf(perDir)
+    if (df.isEmpty || (!orMode && df.size < terms.size)) return None
+    val negPerDir =
+      if (negTerms.isEmpty) perDir.map(_ => Seq.empty[DictEntry])
+      else lookupPerDir(negTerms.distinct.sorted)
+    val driver = df.minBy { case (t, d) => (-d, t) }._1
+    val all = perDir.flatten ++ negPerDir.flatten
+    Some(Resolved(
+      perDir.zip(negPerDir).map { case (a, b) =>
+        a ++ b.filterNot(e => a.exists(_.term == e.term)) },
+      df, negPerDir.flatten.map(_.term).distinct.sorted.toArray, driver,
+      all.map(_.df).sum, all.filter(_.term != driver).map(_.df).sum))
+  }
+
+  /** The scoring context of `r`'s present terms in ascending term order
+    * (the rank-identity association order), weighted by `boosts`. */
+  private def scoringTerms(r: Resolved, boosts: Map[String, Double]): Array[TermCtx] = {
+    val n = stats.n
+    r.df.toSeq
+      .map { case (t, df) => TermCtx(t, df, Bm25.idf(n, df), boosts.getOrElse(t, 1.0)) }
+      .sortBy(_.term).toArray
+  }
+
+  /** The driver-local placement: `f` against driver-cached segments over
+    * the whole docID space on this thread, or over disjoint ranges on the
+    * driver pool ([[localShards]]). No Spark job, no encoder. None when
+    * the query does not fit: it needs norms (`needsNorms`) the engine
+    * does not hold, or its total df exceeds the pooled ceiling. */
+  private def runLocal[T](r: Resolved, needsNorms: Boolean)(f: RangeFn[T]): Option[Seq[T]] =
+    if ((needsNorms && normsBc.isEmpty) || localWandUpTo <= 0 ||
+        r.totalDf > math.max(localWandUpTo, localParallelCap)) None
+    else {
+      val segs = localSegsFor((r.df.keys ++ r.anti).toSeq.distinct, r.entries)
+      val norms = if (needsNorms) normsBc.get.value else null
+      Some(localShards(r.totalDf) { (lo, hi) =>
+        f(segs, if (norms == null) null else norms.cursor(), lo, hi).toVector
+      }.flatten)
+    }
+
+  /** Where a postings query runs: the one placement decision of every
+    * scored, counted and sorted query, cheapest placement first.
+    *  1. Driver-local ([[runLocal]]), unless `localOk` is false.
+    *  2. Broadcast scan, zero per-query shuffle: the driver term's
+    *     segments are scanned distributed off the pruned postings table
+    *     and every other term's segments are broadcast
+    *     ([[sideBroadcast]], at most `broadcastPostingsUpTo` postings;
+    *     with `needsNorms`, the norms must be broadcast too). A task runs
+    *     `f` over its driver segments' span, which holds every match when
+    *     every match holds the driver term (AND). With `ownIntervals` it
+    *     runs `f` over the intervals it owns in the driver term's global
+    *     range directory ([[driverRangeDir]], [[QueryEngine.ownedIntervals]]),
+    *     which also cover the docs without the driver term (multi-term
+    *     OR, synonym groups).
+    *  3. Range shuffle, the fallback and the shape for norm tables that
+    *     outgrow broadcast: the docID space in up to `numRanges` ranges
+    *     (~100k postings each, so a rare query is one task), every
+    *     segment shuffled to the ranges it spans, the norms broadcast or
+    *     cogrouped per range.
+    * Ranges, intervals and scan tasks are disjoint, so the per-range
+    * results merge by concatenation. Left holds the driver-local results;
+    * Right the distributed ones, and only it evaluates `enc`. */
+  private def place[T](r: Resolved, needsNorms: Boolean, ownIntervals: Boolean,
+                       localOk: Boolean, enc: => Encoder[T])(
+      f: RangeFn[T]): Either[Seq[T], Dataset[T]] = {
+    val local = if (localOk) runLocal(r, needsNorms)(f) else None
+    if (local.isDefined) return Left(local.get)
+    implicit val e: Encoder[T] = enc
+    val norms = if (needsNorms) normsBc.orNull else null
+    val normsOk = !needsNorms || norms != null
+    val dt = r.driverTerm
+    Right(if (normsOk && r.sideDf <= broadcastPostingsUpTo) {
+      val side = sideBroadcast(dt, r.entries)
+      val rangeDir = if (ownIntervals) driverRangeDir(dt, r.entries) else null
+      // coalesce: the pruned read otherwise yields one micro-task per
+      // index file — scheduling dominates at interactive latency
+      indexDirs.zip(r.entries)
+        .filter(_._2.exists(_.term == dt))
+        .map { case (dir, es) =>
+          segmentsOf(dir, Seq(dt), es.filter(_.term == dt).map(_.bucket).distinct)
+        }
+        .reduce(_ union _)
+        .coalesce(spark.sparkContext.defaultParallelism)
+        .mapPartitions { it =>
+          val mySegs = it.toArray
+          def lenOf: Long => Long = if (norms == null) null else norms.value.cursor()
+          if (mySegs.isEmpty) Iterator.empty
+          else {
+            val segs = side.value + (dt -> mySegs.sortBy(_.minDoc))
+            if (rangeDir == null) f(segs, lenOf, 0L, Long.MaxValue)
+            else ownedIntervals(mySegs, rangeDir._1, rangeDir._2).iterator
+              .flatMap { case (lo, hi) => f(segs, lenOf, lo, hi) }
+          }
+        }
+    } else {
+      val nr = math.max(1L, math.min(numRanges.toLong, r.totalDf / 100_000L + 1)).toInt
+      val rs = math.max(1L, (stats.maxDoc + nr) / nr)
+      val ranged = indexDirs.zip(r.entries)
+        .filter(_._2.nonEmpty)
+        .map { case (dir, es) =>
+          segmentsOf(dir, es.map(_.term), es.map(_.bucket).distinct)
+        }
+        .reduce(_ union _)
+        .flatMap(s => ((s.minDoc / rs).toInt to (s.maxDoc / rs).toInt).map(RangedSeg(_, s)))
+        .groupByKey(_.rangeId)
+      if (normsOk)
+        ranged.flatMapGroups { (rid, it) =>
+          val lo = rid.toLong * rs
+          f(termSegments(it.map(_.seg).toSeq),
+            if (norms == null) null else norms.value.cursor(), lo, lo + rs)
+        }
+      else
+        ranged.cogroup(allDocStats.groupByKey(d => (d.docID / rs).toInt)) {
+          (rid, segIt, dsIt) =>
+            val segs = termSegments(segIt.map(_.seg).toSeq)
+            if (segs.isEmpty) Iterator.empty
+            else {
+              val lens = dsIt.map(d => d.docID -> d.len).toMap
+              val lo = rid.toLong * rs
+              f(segs, lens.apply, lo, lo + rs)
+            }
+        }
+    })
+  }
 
   /** Expand a term prefix to every dictionary term starting with it
     * (distinct ascending). Small-vocab path: a binary search of each
@@ -1722,8 +1882,7 @@ final class QueryEngine(
   def suggest(prefix: String, m: Int = 8, cap: Int = 64): Seq[(String, Long)] = {
     val terms = expandPrefix(prefix, cap)
     if (terms.isEmpty) return Nil
-    val dfs = lookupPerDir(terms).flatten.groupBy(_.term)
-      .map { case (t, es) => t -> es.map(_.df).sum }
+    val dfs = dfOf(lookupPerDir(terms))
     terms.map(t => t -> dfs.getOrElse(t, 0L))
       .sortBy { case (t, d) => (-d, t) }.take(m)
   }
@@ -1754,8 +1913,7 @@ final class QueryEngine(
       val cands = expandFuzzy(t, maxDist, cap)
       if (cands.isEmpty) (t, "", 0L)
       else {
-        val dfs = lookupPerDir(cands).flatten.groupBy(_.term)
-          .map { case (c, es) => c -> es.map(_.df).sum }
+        val dfs = dfOf(lookupPerDir(cands))
         val (best, d) = cands.map(c => (c, dfs.getOrElse(c, 0L)))
           .minBy { case (c, d) => (-d, c) }
         (t, best, d)
@@ -1793,8 +1951,7 @@ final class QueryEngine(
       .map(r => (r.getAs[Long]("docID"), r.getAs[String]("term"), r.getAs[Long]("tf")))
     val lens = tfRows.groupBy(_._1).map { case (d, rs) => d -> rs.map(_._3).sum }
     val tfOf = tfRows.map { case (d, t, f) => (d, t) -> f }.toMap
-    val dfs = lookupPerDir(terms).flatten.groupBy(_.term)
-      .map { case (t, es) => t -> es.map(_.df).sum }
+    val dfs = dfOf(lookupPerDir(terms))
     val n = stats.n
     val avgdl = stats.avgdl
     frame(top.zipWithIndex.toSeq.flatMap { case ((docID, _), i) =>
@@ -1859,8 +2016,7 @@ final class QueryEngine(
       .reduce(_ unionAll _)
       .collect().map(r => r.getAs[String]("term") -> r.getAs[Long]("tf"))
     if (tfRows.isEmpty) return frame(Nil)
-    val dfs = lookupPerDir(tfRows.map(_._1).distinct.sorted).flatten
-      .groupBy(_.term).map { case (tm, es) => tm -> es.map(_.df).sum }
+    val dfs = dfOf(lookupPerDir(tfRows.map(_._1).distinct.sorted))
     val n = stats.n
     val terms = tfRows
       .map { case (tm, tf) => (tm, QueryEngine.r4(tf * Bm25.idf(n, dfs(tm)))) }
@@ -1917,13 +2073,10 @@ final class QueryEngine(
 
   /** Total-hits count for a query — the search service's "About N
     * results" aggregate. Never scores, never touches norms, never
-    * materializes matches ([[QueryEngine.Count]]). Driver-local
-    * when the query's postings are resident; otherwise the zero-shuffle
-    * scan path (AND: every match contains the task-local driver term,
-    * so per-task counts partition cleanly; OR: tasks count within their
-    * owned intervals from the driver range directory) — each task ships
-    * ONE long; beyond the side-broadcast cap, the per-query segment
-    * range shuffle. */
+    * materializes matches ([[QueryEngine.Count]]): one long per docID
+    * range, summed. Placed like every postings query ([[place]]), with
+    * no norms asked for, so an engine without broadcast norms still
+    * counts on the driver or in the broadcast scan. */
   def countMatches(qtext: String, orMode: Boolean = false): Long =
     countImpl(qtext, orMode, null)
 
@@ -1944,82 +2097,19 @@ final class QueryEngine(
 
   private def countImpl(qtext: String, orMode: Boolean,
                         gateF: () => (Long => Boolean)): Long = {
-    def gate(): Long => Boolean = if (gateF == null) null else gateF()
-    val terms = Analyzer.queryTerms(qtext)
-    if (terms.isEmpty) return 0L
-    val perDir = lookupPerDir(terms)
-    val combinedDf: Map[String, Long] =
-      perDir.flatten.groupBy(_.term).map { case (t, es) => t -> es.map(_.df).sum }
-    if (!orMode && combinedDf.size < terms.size) return 0L
-    if (combinedDf.isEmpty) return 0L
-    val presentTerms = combinedDf.keys.toSeq.sorted
-    val driverTerm = combinedDf.maxBy(_._2)._1
-    // scan-path invariant: the task-local driver term LEADS the AND sweep
-    val leaderFirst = (driverTerm +: presentTerms.filterNot(_ == driverTerm)).toArray
-    val totalDf = combinedDf.values.sum
+    val r = resolve(Analyzer.queryTerms(qtext), orMode = orMode).orNull
+    if (r == null) return 0L
+    // a scan task's AND sweep leads with its task-local driver term
+    val lf = r.leaderFirst
     val av = stats.avgdl
-    if (localWandUpTo > 0 && totalDf <= math.max(localWandUpTo, localParallelCap)) {
-      val byTerm = localSegsFor(presentTerms, perDir)
-      // counts are additive over disjoint ranges
-      return localShards(totalDf) { (lo, hi) =>
-        collectMatches(byTerm, leaderFirst, av, lo, hi, orMode, new Count, gate()).total
-      }.sum
-    }
-    val sideDfSum = combinedDf.filter(_._1 != driverTerm).values.sum
-    val om = orMode
-    val lf = leaderFirst
-    val dt = driverTerm
-    if (sideDfSum <= broadcastPostingsUpTo) {
-      val para = spark.sparkContext.defaultParallelism
-      val sideBc = sideBroadcast(dt + "|" + presentTerms.mkString(","), dt, perDir)
-      val rangeDir: (Array[Long], Array[Long]) =
-        if (om && presentTerms.length > 1) driverRangeDir(dt, perDir) else null
-      val driverSegs = indexDirs.zip(perDir)
-        .filter(_._2.exists(_.term == dt))
-        .map { case (dir, es) =>
-          segmentsOf(dir, Seq(dt), es.filter(_.term == dt).map(_.bucket).distinct)
-        }
-        .reduce(_ union _)
-        .coalesce(para)
-      val gf = gateF
-      driverSegs.mapPartitions { it =>
-        val mySegs = it.toArray
-        if (mySegs.isEmpty) Iterator.single(0L)
-        else {
-          val byTerm = sideBc.value + (dt -> mySegs.sortBy(_.minDoc))
-          if (rangeDir == null)
-            Iterator.single(collectMatches(byTerm, lf, av, 0L, Long.MaxValue, om,
-              new Count, if (gf == null) null else gf()).total)
-          else Iterator.single(
-            QueryEngine.ownedIntervals(mySegs, rangeDir._1, rangeDir._2)
-              .map { case (lo, hi) =>
-                collectMatches(byTerm, lf, av, lo, hi, om,
-                  new Count, if (gf == null) null else gf()).total }.sum)
-        }
-      }.reduce(_ + _)
-    } else {
-      // per-query segment shuffle — the honest fallback when the side
-      // terms outgrow the broadcast budget
-      val nr = math.max(1L, math.min(numRanges.toLong,
-        totalDf / 100_000L + 1)).toInt
-      val rs = math.max(1L, (stats.maxDoc + nr) / nr)
-      val segs = indexDirs.zip(perDir)
-        .filter(_._2.nonEmpty)
-        .map { case (dir, es) =>
-          segmentsOf(dir, es.map(_.term), es.map(_.bucket).distinct)
-        }
-        .reduce(_ union _)
-      val gf = gateF
-      segs.flatMap { s =>
-        ((s.minDoc / rs).toInt to (s.maxDoc / rs).toInt)
-          .map(r => RangedSeg(r, s))
-      }.groupByKey(_.rangeId).mapGroups { (rid, it) =>
-        val byTerm = it.map(_.seg).toArray.groupBy(_.term)
-          .map { case (t, ss) => t -> ss.sortBy(_.minDoc) }
-        val lo = rid.toLong * rs
-        collectMatches(byTerm, lf, av, lo, lo + rs, om,
-          new Count, if (gf == null) null else gf()).total
-      }.reduce(_ + _)
+    // counts are additive over disjoint ranges
+    place(r, needsNorms = false, ownIntervals = orMode && lf.length > 1, localOk = true,
+        Encoders.scalaLong) { (segs, _, lo, hi) =>
+      Iterator.single(collectMatches(segs, lf, av, lo, hi, orMode, new Count,
+        if (gateF == null) null else gateF()).total)
+    } match {
+      case Left(counts) => counts.sum
+      case Right(counts) => counts.collect().sum
     }
   }
 
@@ -2110,30 +2200,21 @@ final class QueryEngine(
     * [[lenHistogramRelational]] — identical by the path-identity spec. */
   def lenHistogram(qtext: String, groups: Groups,
                    orMode: Boolean = false): Seq[(Int, Long)] = {
-    val terms = Analyzer.queryTerms(qtext)
-    if (terms.isEmpty || groups.names.isEmpty) return Nil
-    val perDir = lookupPerDir(terms)
-    val combinedDf: Map[String, Long] =
-      perDir.flatten.groupBy(_.term).map { case (t, es) => t -> es.map(_.df).sum }
-    if (!orMode && combinedDf.size < terms.size) return Nil
-    if (combinedDf.isEmpty) return Nil
-    val presentTerms = combinedDf.keys.toSeq.sorted
-    val driverTerm = combinedDf.maxBy(_._2)._1
-    val leaderFirst = (driverTerm +: presentTerms.filterNot(_ == driverTerm)).toArray
-    val totalDf = combinedDf.values.sum
+    if (groups.names.isEmpty) return Nil
+    val r = resolve(Analyzer.queryTerms(qtext), orMode = orMode).orNull
+    if (r == null) return Nil
+    val lf = r.leaderFirst
     val av = stats.avgdl
     val nG = groups.names.size
-    require(localWandUpTo > 0 &&
-      totalDf <= math.max(localWandUpTo, localParallelCap),
-      s"histogram kernel needs resident postings (total df $totalDf beyond " +
-        "the pooled ceiling) — use lenHistogramRelational")
-    val byTerm = localSegsFor(presentTerms, perDir)
-    val counts: Array[Long] = localShards(totalDf) { (lo, hi) =>
-      collectMatches(byTerm, leaderFirst, av, lo, hi, orMode,
-        new Count(monotoneGroupCursor(groups.ids, groups.groups), nG)).counts
-    }.reduce { (a, b) =>
-      var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a
-    }
+    val counts: Array[Long] = runLocal(r, needsNorms = false) { (segs, _, lo, hi) =>
+      Iterator.single(collectMatches(segs, lf, av, lo, hi, orMode,
+        new Count(monotoneGroupCursor(groups.ids, groups.groups), nG)).counts)
+    }.getOrElse(throw new IllegalArgumentException(
+      s"histogram kernel needs resident postings (total df ${r.totalDf} beyond " +
+        "the pooled ceiling) — use lenHistogramRelational"))
+      .reduce { (a, b) =>
+        var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a
+      }
     counts.zipWithIndex.collect { case (c, g) if c > 0 =>
       (groups.names(g).toInt, c) }.sortBy(_._1).toSeq
   }
@@ -2373,111 +2454,26 @@ final class QueryEngine(
     * `len` is the doc-values column the index already materializes as
     * norms, so the field lookup rides the same resident/broadcast array
     * relevance scoring uses; a deployment sorting by recency would wire
-    * its timestamp column through the identical shape. Physical paths
-    * mirror [[countMatches]]: driver-local / pooled when the postings
-    * are resident, the zero-shuffle broadcast scan otherwise, and the
-    * per-query segment shuffle (with cogrouped norms beyond the
-    * broadcast cap) as the 10^12-doc fallback ([[QueryEngine.SortedByField]]
-    * explains why no early termination exists without a field-sorted
-    * index). */
+    * its timestamp column through the identical shape. Placed like every
+    * postings query ([[place]]), with norms, which hold the field;
+    * [[QueryEngine.SortedByField]] explains why no early termination
+    * exists without a field-sorted index. */
   def topKSortedByLen(qtext: String, k: Int = Bm25.K): DataFrame = {
-    val terms = Analyzer.queryTerms(qtext)
-    if (terms.isEmpty) return frame(Nil, LenSchema)
-    val perDir = lookupPerDir(terms)
-    val combinedDf: Map[String, Long] =
-      perDir.flatten.groupBy(_.term).map { case (t, es) => t -> es.map(_.df).sum }
-    if (combinedDf.size < terms.size) return frame(Nil, LenSchema) // AND: missing term → ∅
-    val presentTerms = combinedDf.keys.toSeq.sorted
-    val driverTerm = combinedDf.maxBy(_._2)._1
-    val leaderFirst = (driverTerm +: presentTerms.filterNot(_ == driverTerm)).toArray
-    val totalDf = combinedDf.values.sum
+    val r = resolve(Analyzer.queryTerms(qtext)).orNull
+    if (r == null) return frame(Nil, LenSchema)
+    val lf = r.leaderFirst
     val av = stats.avgdl
-    val kk = k
-
-    // driver-local / pooled fast path (postings + norms resident)
-    if (normsBc.isDefined && localWandUpTo > 0 &&
-        totalDf <= math.max(localWandUpTo, localParallelCap)) {
-      val byTerm = localSegsFor(presentTerms, perDir)
-      val norms = normsBc.get.value
-      val hits = localShards(totalDf) { (lo, hi) =>
-        collectMatches(byTerm, leaderFirst, av, lo, hi, orMode = false,
-          new SortedByField(kk, norms.cursor())).results
-      }.flatten
-      return frame(hits.sortBy(h => (-h._2, h._1)).take(k)
-        .map { case (d, l) => Row(d, l) }, LenSchema)
+    place(r, needsNorms = true, ownIntervals = false, localOk = true,
+        Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)) { (segs, lenOf, lo, hi) =>
+      collectMatches(segs, lf, av, lo, hi, orMode = false,
+        new SortedByField(k, lenOf)).results.iterator
+    } match {
+      case Left(hits) =>
+        frame(hits.sortBy(h => (-h._2, h._1)).take(k)
+          .map { case (d, l) => Row(d, l) }, LenSchema)
+      case Right(hits) =>
+        hits.toDF("docID", "len").orderBy(col("len").desc, col("docID").asc).limit(k)
     }
-
-    val sideDfSum = combinedDf.filter(_._1 != driverTerm).values.sum
-    val lf = leaderFirst
-    val dt = driverTerm
-    val local: org.apache.spark.sql.Dataset[(Long, Long)] =
-    if (normsBc.isDefined && sideDfSum <= broadcastPostingsUpTo) {
-      // zero-shuffle scan path: driver-term segments scanned distributed,
-      // side terms broadcast; AND matches always contain the driver term,
-      // so per-task results partition cleanly across disjoint segments
-      val bc = normsBc.get
-      val para = spark.sparkContext.defaultParallelism
-      val sideBc = sideBroadcast(dt + "|" + presentTerms.mkString(","), dt, perDir)
-      val driverSegs = indexDirs.zip(perDir)
-        .filter(_._2.exists(_.term == dt))
-        .map { case (dir, es) =>
-          segmentsOf(dir, Seq(dt), es.filter(_.term == dt).map(_.bucket).distinct)
-        }
-        .reduce(_ union _)
-        .coalesce(para)
-      driverSegs.mapPartitions { it =>
-        val mySegs = it.toArray
-        if (mySegs.isEmpty) Iterator.empty
-        else {
-          val byTerm = sideBc.value + (dt -> mySegs.sortBy(_.minDoc))
-          collectMatches(byTerm, lf, av, 0L, Long.MaxValue, orMode = false,
-            new SortedByField(kk, bc.value.cursor())).results.iterator
-        }
-      }
-    } else {
-      // per-query segment shuffle; norms broadcast when available,
-      // cogrouped per docID range beyond the cap (the 10^12-doc shape)
-      val nr = math.max(1L, math.min(numRanges.toLong,
-        totalDf / 100_000L + 1)).toInt
-      val rs = math.max(1L, (stats.maxDoc + nr) / nr)
-      val segs = indexDirs.zip(perDir)
-        .filter(_._2.nonEmpty)
-        .map { case (dir, es) =>
-          segmentsOf(dir, es.map(_.term), es.map(_.bucket).distinct)
-        }
-        .reduce(_ union _)
-      val ranged = segs.flatMap { s =>
-        ((s.minDoc / rs).toInt to (s.maxDoc / rs).toInt)
-          .map(r => RangedSeg(r, s))
-      }
-      normsBc match {
-        case Some(bc) =>
-          ranged.groupByKey(_.rangeId).flatMapGroups { (rid, it) =>
-            val byTerm = it.map(_.seg).toArray.groupBy(_.term)
-              .map { case (t, ss) => t -> ss.sortBy(_.minDoc) }
-            val lo = rid.toLong * rs
-            collectMatches(byTerm, lf, av, lo, lo + rs, orMode = false,
-              new SortedByField(kk, bc.value.cursor())).results.iterator
-          }
-        case None =>
-          val normsByRange = allDocStats
-            .groupByKey(d => (d.docID / rs).toInt)
-          ranged.groupByKey(_.rangeId).cogroup(normsByRange) { (rid, segIt, dsIt) =>
-            val byTerm = segIt.map(_.seg).toArray.groupBy(_.term)
-              .map { case (t, ss) => t -> ss.sortBy(_.minDoc) }
-            if (byTerm.isEmpty) Iterator.empty
-            else {
-              val norms = dsIt.map(d => d.docID -> d.len).toMap
-              val lo = rid.toLong * rs
-              collectMatches(byTerm, lf, av, lo, lo + rs, orMode = false,
-                new SortedByField(kk, norms.apply)).results.iterator
-            }
-          }
-      }
-    }
-    local.toDF("docID", "len")
-      .orderBy(col("len").desc, col("docID").asc)
-      .limit(k)
   }
 
   /** Driver-contract frame over the fixed query set: (query, rank,
@@ -2757,52 +2753,19 @@ final class QueryEngine(
                        // terms are not scored. 1 = plain OR
                        msm: Int = 1): DataFrame = {
     val terms = Analyzer.queryTerms(qtext)
-    if (terms.isEmpty) return frame(Nil)
+    val r = resolve(terms, negTerms, orMode).orNull
+    // msm: fewer dictionary-present terms than the floor → ∅ (no doc
+    // can match msm distinct terms the corpus doesn't contain)
+    if (r == null || (orMode && r.df.size < msm)) return frame(Nil)
     val posGates: Array[Array[String]] =
       if (phraseSeqs != null) phraseSeqs
       else if (phraseMode) Array(Analyzer.tokenize(qtext).toArray)
       else if (windowW > 0) Array(terms.toArray)
       else null
-    val perDir = lookupPerDir(terms)
-    // negated terms absent from the dictionary exclude nothing — drop
-    // them here so every downstream path sees only real posting lists
-    val negPerDir =
-      if (negTerms.isEmpty) perDir.map(_ => Seq.empty[DictEntry])
-      else lookupPerDir(negTerms.distinct.sorted)
-    val negPresent: Array[String] =
-      negPerDir.flatten.map(_.term).distinct.sorted.toArray
-    val negDfSum = negPerDir.flatten.map(_.df).sum
-    // per-dir union of scoring + anti entries (deduped by term for the
-    // both-signs case, where the same posting list serves both roles)
-    val perDirAll = perDir.zip(negPerDir).map { case (a, b) =>
-      (a ++ b.filterNot(e => a.exists(_.term == e.term)))
-    }
-    // exact combined df: sum of per-index dfs (docID ranges are disjoint)
-    val combinedDf: Map[String, Long] =
-      perDir.flatten.groupBy(_.term).map { case (t, es) => t -> es.map(_.df).sum }
-    if (!orMode && combinedDf.size < terms.size) return frame(Nil) // AND: missing term → ∅
-    if (combinedDf.isEmpty) return frame(Nil)
-    // msm: fewer dictionary-present terms than the floor → ∅ (no doc
-    // can match msm distinct terms the corpus doesn't contain)
-    if (orMode && combinedDf.size < msm) return frame(Nil)
-
-    val n = stats.n
-    val avgdl = stats.avgdl
-    val termCtx = combinedDf.toSeq
-      .map { case (t, df) =>
-        TermCtx(t, df, Bm25.idf(n, df), boosts.getOrElse(t, 1.0)) }
-      .sortBy(_.term).toArray
-    // shard the docID space ∝ posting volume (~100k postings per task,
-    // capped at numRanges): a rare-term query runs in one task with no
-    // fan-out, a stop-word query spreads across the cluster
-    val ranges = math.max(1L,
-      math.min(numRanges.toLong,
-        (combinedDf.values.sum + negDfSum) / 100_000L + 1)).toInt
-    val rs = math.max(1L, (stats.maxDoc + ranges) / ranges)
+    val termCtx = scoringTerms(r, boosts)
     // postFilter mode disables per-range top-k pruning: a range's
     // filtered survivors may all rank below its unfiltered top k
     val kk = if (postFilter != null) Int.MaxValue else k
-    val rnd = rounded
     // gate FACTORY, not gate: the monotone-cursor gate is stateful, so
     // the kernel factory constructs a fresh one per range invocation
     val gateF: () => (Long => Boolean) = if (gateBc == null) null else {
@@ -2813,162 +2776,15 @@ final class QueryEngine(
     val afterKey =
       if (rounded && !afterScore.isNaN) QueryEngine.r4(afterScore)
       else afterScore
-    val wandFn: (Map[String, Array[PostingSegment]], Array[TermCtx],
-      Long => Long, Double, Long, Long, Int, Boolean) => Seq[ScoredDoc] =
-      QueryEngine.kernel(posGates, windowW, orMode, gateF, negPresent,
-        afterKey, afterDoc, msm)
-
-    // ---- driver-local fast path -------------------------------------
-    // All of the query's postings fit the driver cache and norms are
-    // resident → run the WAND kernel here: zero jobs, zero scheduling
-    // latency. The top k become `Row`s under the fixed (docID, score)
-    // schema ([[frame]]), so the returned plan is a bare LocalRelation
-    // with no encoder built and a collect() that stays on the driver.
-    // Identical kernel + identical final (rounded-score desc, docID asc)
-    // ordering as the distributed paths, so results are rank-identical
-    // by construction (asserted in IndexQuerySpec across all three
-    // paths). Works for AND, OR and phrase (all terms are co-located on
-    // the driver).
-    val totalDf = combinedDf.values.sum + negDfSum
-    if (postFilter == null && normsBc.isDefined && localWandUpTo > 0 &&
-        totalDf <= math.max(localWandUpTo, localParallelCap)) {
-      val byTerm =
-        localSegsFor((termCtx.map(_.term) ++ negPresent.toSeq).distinct, perDirAll)
-      val norms = normsBc.get.value
-      // pooled ranges mirror the distributed range path (disjoint ranges,
-      // per-range top-k, one global merge): rank identity by construction
-      val hits = localShards(totalDf) { (lo, hi) =>
-        wandFn(byTerm, termCtx, norms.cursor(), avgdl, lo, hi, k, rounded)
-      }.flatten
-      val ordered =
-        (if (rounded) hits.map(h => ScoredDoc(h.docID, r4(h.score))) else hits)
-          .sortBy(h => (-h.score, h.docID)).take(k)
-      return frame(ordered.map(h => Row(h.docID, h.score)))
-    }
-
-    // ---- physical path selection ------------------------------------
-    // SCAN path (default): zero per-query shuffle. The highest-df
-    // ("driver") term is scanned distributed straight off the
-    // partition/row-group-pruned postings table; every other query
-    // term's compressed segments are collected (they are the RARER
-    // terms — bounded by broadcastPostingsUpTo total postings) and
-    // broadcast. Each scan task runs WAND over its driver segments'
-    // docID ranges; ranges are disjoint across tasks, so the union of
-    // per-task top-k feeds one global TakeOrderedAndProject.
-    // Precondition: broadcast norms available.
-    //
-    // OR mode (multi-term) rides the SAME scan (VERDICT r3 #5 — it used
-    // to fall back to the per-query segment shuffle): disjunction must
-    // also score docs that DON'T contain the driver term, so docID-range
-    // ownership can't stay implicit in the driver postings. Each task
-    // instead derives explicit owned intervals from the GLOBAL range
-    // directory of the driver term's segments ([[driverRangeDir]] —
-    // per-term metadata, cached across queries): the owner of global
-    // segment i owns (maxDoc(i−1), maxDoc(i)]; the owner of segment 0
-    // also owns [0, minDoc(0)) and the owner of the last also owns
-    // (maxDoc(last), ∞). Segment ranges are pairwise disjoint (build
-    // invariant), so the intervals tile the docID space exactly once
-    // across tasks and the union of per-interval top-k stays a correct
-    // global candidate set.
-    //
-    // RANGE path (fallback; also the 10^12-scale plan for norm tables
-    // that outgrow broadcast): shard the docID space, shuffle segments
-    // (and, beyond the norms cap, cogroup norms) to range tasks.
-    val driverTerm = termCtx.maxBy(_.df).term
-    // anti segments of negated terms travel exactly like scoring side
-    // segments (broadcast on the scan path, shuffled on the range path),
-    // so they count against the same broadcast budget — except a term
-    // that is ALSO the driver, whose segments already ride the scan
-    val sideDfSum = termCtx.filter(_.term != driverTerm).map(_.df).sum +
-      negPerDir.flatten.filter(_.term != driverTerm).map(_.df).sum
-    val scanPath = normsBc.isDefined && sideDfSum <= broadcastPostingsUpTo
-
-    val local: org.apache.spark.sql.Dataset[ScoredDoc] =
-    if (scanPath) {
-      val bc = normsBc.get
-      val para = spark.sparkContext.defaultParallelism
-      val sideBc = sideBroadcast(driverTerm + "|" + terms.sorted.mkString(",") +
-          (if (negPresent.isEmpty) "" else "|!" + negPresent.mkString(",")),
-        driverTerm, perDirAll)
-      // global driver-segment range directory — OR multi-term only (AND
-      // matches always contain the driver term, so ownership is implicit)
-      val rangeDir: (Array[Long], Array[Long]) =
-        if (orMode && termCtx.length > 1) driverRangeDir(driverTerm, perDir)
-        else null
-      // coalesce: the pruned read otherwise yields one micro-task per
-      // index file — scheduling dominates at interactive latency
-      val driverSegs = indexDirs.zip(perDir)
-        .filter(_._2.exists(_.term == driverTerm))
-        .map { case (dir, es) =>
-          segmentsOf(dir, Seq(driverTerm),
-            es.filter(_.term == driverTerm).map(_.bucket).distinct)
-        }
-        .reduce(_ union _)
-        .coalesce(para)
-      val tc = termCtx
-      val dt = driverTerm
-      val av = avgdl
-      val wf = wandFn
-      driverSegs.mapPartitions { it =>
-        val mySegs = it.toArray
-        if (mySegs.isEmpty) Iterator.empty
-        else {
-          val byTerm = sideBc.value + (dt -> mySegs.sortBy(_.minDoc))
-          val norms = bc.value
-          if (rangeDir == null)
-            wf(byTerm, tc, norms.cursor(), av, 0L, Long.MaxValue, kk, rnd).iterator
-          else
-            QueryEngine.ownedIntervals(mySegs, rangeDir._1, rangeDir._2)
-              .iterator.flatMap { case (lo, hi) =>
-                wf(byTerm, tc, norms.cursor(), av, lo, hi, kk, rnd) }
-        }
-      }
-    } else {
-      val segs = indexDirs.zip(perDirAll)
-        .filter(_._2.nonEmpty)
-        .map { case (dir, es) =>
-          segmentsOf(dir, es.map(_.term), es.map(_.bucket).distinct)
-        }
-        .reduce(_ union _)
-      val ranged = segs.flatMap { s =>
-        val loR = (s.minDoc / rs).toInt
-        val hiR = (s.maxDoc / rs).toInt
-        (loR to hiR).map(r => RangedSeg(r, s))
-      }
-
-      normsBc match {
-        case Some(bc) =>
-          ranged.groupByKey(_.rangeId).flatMapGroups { (rid, it) =>
-            val byTerm = it.map(_.seg).toArray.groupBy(_.term)
-              .map { case (t, ss) => t -> ss.sortBy(_.minDoc) }
-            val lo = rid.toLong * rs
-            val norms = bc.value
-            wandFn(byTerm, termCtx, norms.cursor(), avgdl, lo, lo + rs, kk, rnd)
-              .iterator
-          }
-        case None =>
-          val normsByRange = allDocStats
-            .groupByKey(d => (d.docID / rs).toInt)
-          ranged.groupByKey(_.rangeId).cogroup(normsByRange) { (rid, segIt, dsIt) =>
-            val byTerm = segIt.map(_.seg).toArray.groupBy(_.term)
-              .map { case (t, ss) => t -> ss.sortBy(_.minDoc) }
-            if (byTerm.isEmpty) Iterator.empty
-            else {
-              val norms = dsIt.map(d => d.docID -> d.len).toMap
-              val lo = rid.toLong * rs
-              wandFn(byTerm, termCtx, norms.apply, avgdl, lo, lo + rs, kk, rnd)
-                .iterator
-            }
-          }
-      }
-    }
-
-    finishTopK(
-      if (postFilter == null) local.toDF()
-      else local.toDF().join(
-        postFilter.select(col("docID").cast("long").as("docID")).distinct(),
-        Seq("docID"), "left_semi"),
-      k, rounded)
+    val wandFn = QueryEngine.kernel(posGates, windowW, orMode, gateF, r.anti,
+      afterKey, afterDoc, msm)
+    val av = stats.avgdl
+    // the score-all postFilter plan never runs on the driver; multi-term
+    // OR must also score docs without the driver term
+    topKFrame(place(r, needsNorms = true, ownIntervals = orMode && termCtx.length > 1,
+        localOk = postFilter == null, Encoders.product[ScoredDoc]) { (segs, lenOf, lo, hi) =>
+      wandFn(segs, termCtx, lenOf, av, lo, hi, kk, rounded).iterator
+    }, k, rounded, postFilter)
   }
 
   /** Driver-contract shape over the whole fixed query set:
@@ -2993,153 +2809,66 @@ final class QueryEngine(
     * segments ([[QueryEngine.mergeGroupSegments]]), so the ordinary
     * conjunctive kernel runs unchanged and a pipe-free query is
     * IDENTICAL to [[topK]] (singleton group ≡ plain term; spec-pinned).
-    * Paths: driver-local / pooled below the caps (each pooled shard
-    * merges its own docID slice), the distributed range path beyond
-    * them (each range task merges its slice — member postings ship to
-    * range tasks exactly like plain terms, no driver materialization). */
+    * Placed like every postings query ([[place]]) over the member
+    * terms, sized by merge volume: each pooled shard, scan interval or
+    * range task merges its own docID slice (member postings ship like
+    * plain terms, no driver materialization). */
   def topKSyn(qtext: String, k: Int = Bm25.K,
               rounded: Boolean = true): DataFrame = {
     val groups = Analyzer.synGroups(qtext)
-    if (groups.isEmpty) return frame(Nil)
-    val memberTerms = groups.flatten.distinct.sorted
-    val perDir = lookupPerDir(memberTerms)
-    val combinedDf: Map[String, Long] =
-      perDir.flatten.groupBy(_.term).map { case (t, es) => t -> es.map(_.df).sum }
+    val members = resolve(groups.flatten.distinct.sorted, orMode = true).orNull
+    if (members == null) return frame(Nil)
     // (name, present members, dfG, merge volume); a fully absent group
     // is an unmatchable conjunct → ∅
     val resolved: Seq[(String, Array[String], Long, Long)] = groups.map { g =>
-      val present = g.filter(combinedDf.contains)
+      val present = g.filter(members.df.contains)
       if (present.isEmpty) return frame(Nil)
       (g.mkString("|"), present.toArray,
-        present.map(combinedDf).max, present.map(combinedDf).sum)
+        present.map(members.df).max, present.map(members.df).sum)
     }
+    // placed by merge volume: a member of two groups is merged twice
+    val volume = resolved.map(_._4).sum
+    val r = members.copy(totalDf = volume,
+      sideDf = volume - members.df(members.driverTerm))
     val n = stats.n
-    val avgdl = stats.avgdl
+    val av = stats.avgdl
     val termCtx = resolved
       .map { case (nm, _, dfG, _) => TermCtx(nm, dfG, Bm25.idf(n, dfG)) }
       .sortBy(_.term).toArray
+    val specs = resolved.map { case (nm, ms, dfG, _) => (nm, ms, dfG) }
     val wandFn = QueryEngine.kernel(null, 0, orMode = false,
       null, Array.empty[String])
-    val totalDf = resolved.map(_._4).sum
-    val specs = resolved.map { case (nm, ms, dfG, _) => (nm, ms, dfG) }
-
-    // ---- driver-local / pooled path (same caps as topKImpl) ----------
-    if (normsBc.isDefined && localWandUpTo > 0 &&
-        totalDf <= math.max(localWandUpTo, localParallelCap)) {
-      val byReal = localSegsFor(memberTerms, perDir)
-      val norms = normsBc.get.value
-      val hits = localShards(totalDf) { (lo, hi) =>
-        wandFn(QueryEngine.mergeAllGroups(specs, byReal, norms.cursor(), avgdl, lo, hi),
-          termCtx, norms.cursor(), avgdl, lo, hi, k, rounded)
-      }.flatten
-      val ordered =
-        (if (rounded) hits.map(h => ScoredDoc(h.docID, QueryEngine.r4(h.score)))
-         else hits)
-          .sortBy(h => (-h.score, h.docID)).take(k)
-      return frame(ordered.map(h => Row(h.docID, h.score)))
-    }
-
-    val tc = termCtx
-    val av = avgdl
-    val wf = wandFn
-    val sp = specs
-    val rnd = rounded
-
-    // ---- distributed SCAN path (zero per-query Exchange) -------------
-    // Mirrors the multi-term OR scan path (VERDICT r3 #5): the highest-
-    // df MEMBER is the driver; every other member's segments broadcast
-    // (shared cache key with plain queries — side segments are by TERM,
-    // so a synonym query warms the same entries); each task derives its
-    // owned docID intervals from the driver member's global range
-    // directory (gap coverage included — an AND match may contain the
-    // driver GROUP only via a non-driver member, exactly OR's problem)
-    // and merges each group's members WITHIN the interval before the
-    // ordinary conjunctive kernel.
-    val driverTerm = combinedDf.maxBy(_._2)._1
-    val sideDfSum = totalDf - combinedDf(driverTerm)
-    if (normsBc.isDefined && sideDfSum <= broadcastPostingsUpTo) {
-      val bc = normsBc.get
-      val para = spark.sparkContext.defaultParallelism
-      val sideBc = sideBroadcast(
-        driverTerm + "|" + memberTerms.sorted.mkString(","), driverTerm, perDir)
-      val rangeDir = driverRangeDir(driverTerm, perDir)
-      val driverSegs = indexDirs.zip(perDir)
-        .filter(_._2.exists(_.term == driverTerm))
-        .map { case (dir, es) =>
-          segmentsOf(dir, Seq(driverTerm),
-            es.filter(_.term == driverTerm).map(_.bucket).distinct)
-        }
-        .reduce(_ union _)
-        .coalesce(para)
-      val dt = driverTerm
-      val local = driverSegs.mapPartitions { it =>
-        val mySegs = it.toArray
-        if (mySegs.isEmpty) Iterator.empty
-        else {
-          val byReal = sideBc.value + (dt -> mySegs.sortBy(_.minDoc))
-          val norms = bc.value
-          QueryEngine.ownedIntervals(mySegs, rangeDir._1, rangeDir._2)
-            .iterator.flatMap { case (lo, hi) =>
-              wf(QueryEngine.mergeAllGroups(sp, byReal, norms.cursor(), av, lo, hi),
-                tc, norms.cursor(), av, lo, hi, k, rnd)
-            }
-        }
-      }
-      return finishTopK(local.toDF(), k, rounded)
-    }
-
-    // ---- distributed range path (fallback beyond the broadcast cap) --
-    val ranges = math.max(1L, math.min(numRanges.toLong,
-      totalDf / 100_000L + 1)).toInt
-    val rs = math.max(1L, (stats.maxDoc + ranges) / ranges)
-    val segs = indexDirs.zip(perDir)
-      .filter(_._2.nonEmpty)
-      .map { case (dir, es) =>
-        segmentsOf(dir, es.map(_.term), es.map(_.bucket).distinct)
-      }
-      .reduce(_ union _)
-    val ranged = segs.flatMap { s =>
-      val loR = (s.minDoc / rs).toInt
-      val hiR = (s.maxDoc / rs).toInt
-      (loR to hiR).map(r => RangedSeg(r, s))
-    }
-    val local: org.apache.spark.sql.Dataset[ScoredDoc] = normsBc match {
-      case Some(bc) =>
-        ranged.groupByKey(_.rangeId).flatMapGroups { (rid, it) =>
-          val byReal = it.map(_.seg).toArray.groupBy(_.term)
-            .map { case (t, ss) => t -> ss.sortBy(_.minDoc) }
-          val lo = rid.toLong * rs
-          val norms = bc.value
-          wf(QueryEngine.mergeAllGroups(sp, byReal, norms.cursor(), av, lo, lo + rs),
-            tc, norms.cursor(), av, lo, lo + rs, k, rnd).iterator
-        }
-      case None =>
-        val normsByRange = allDocStats.groupByKey(d => (d.docID / rs).toInt)
-        ranged.groupByKey(_.rangeId).cogroup(normsByRange) { (rid, segIt, dsIt) =>
-          val segArr = segIt.map(_.seg).toArray
-          if (segArr.isEmpty) Iterator.empty
-          else {
-            val byReal = segArr.groupBy(_.term)
-              .map { case (t, ss) => t -> ss.sortBy(_.minDoc) }
-            val norms = dsIt.map(d => d.docID -> d.len).toMap
-            val lo = rid.toLong * rs
-            wf(QueryEngine.mergeAllGroups(sp, byReal, norms.apply, av, lo, lo + rs),
-              tc, norms.apply, av, lo, lo + rs, k, rnd).iterator
-          }
-        }
-    }
-    finishTopK(local.toDF(), k, rounded)
+    // the driver is a MEMBER: an AND match may hold the driver GROUP only
+    // through another member, so scan tasks own explicit intervals; each
+    // range merges its groups' members before the conjunctive kernel
+    topKFrame(place(r, needsNorms = true, ownIntervals = true, localOk = true,
+        Encoders.product[ScoredDoc]) { (byReal, lenOf, lo, hi) =>
+      wandFn(mergeAllGroups(specs, byReal, lenOf, av, lo, hi),
+        termCtx, lenOf, av, lo, hi, k, rounded).iterator
+    }, k, rounded)
   }
 
-  /** Global top-k over per-range (docID, score) candidates — the shared
-    * tail of the distributed paths. `round` is nullable in Spark; the
-    * no-op `coalesce` keeps the rounded score non-nullable, like every
-    * driver-built frame and the unrounded tail. */
-  private def finishTopK(local: DataFrame, k: Int, rounded: Boolean): DataFrame =
-    (if (rounded) local.withColumn("score", coalesce(round(col("score"), 4), lit(0.0)))
-     else local)
-      .orderBy(col("score").desc, col("docID").asc)
-      .limit(k)
+  /** Global top-k of per-range (docID, score) candidates, ordered
+    * (score desc, docID asc) on the mode's score: sorted here for the
+    * driver-local placement, a TakeOrderedAndProject for the distributed
+    * ones, after the semi-join with `postFilter` (null = none). `round`
+    * is nullable in Spark; the no-op `coalesce` keeps the rounded score
+    * non-nullable, like every driver-built frame and the unrounded tail. */
+  private def topKFrame(placed: Either[Seq[ScoredDoc], Dataset[ScoredDoc]], k: Int,
+                        rounded: Boolean, postFilter: DataFrame = null): DataFrame =
+    placed match {
+      case Left(hits) =>
+        frame((if (rounded) hits.map(h => ScoredDoc(h.docID, r4(h.score))) else hits)
+          .sortBy(h => (-h.score, h.docID)).take(k).map(h => Row(h.docID, h.score)))
+      case Right(hits) =>
+        val local = if (postFilter == null) hits.toDF() else hits.toDF().join(
+          postFilter.select(col("docID").cast("long").as("docID")).distinct(),
+          Seq("docID"), "left_semi")
+        (if (rounded) local.withColumn("score", coalesce(round(col("score"), 4), lit(0.0)))
+         else local)
+          .orderBy(col("score").desc, col("docID").asc)
+          .limit(k)
+    }
 
   /** Driver-contract frame over the fixed SYNONYM query set. */
   def topKAllSyn(k: Int = Bm25.K): DataFrame =

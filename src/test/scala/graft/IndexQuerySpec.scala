@@ -53,10 +53,37 @@ class IndexQuerySpec extends AnyFunSuite {
 
   test("cogroup (non-broadcast norms) path is identical") {
     built
+    // no norms → neither the driver-local nor the scan path can score:
+    // every scored or sorted query takes the range shuffle with norms
+    // cogrouped per docID range
     val cg = new QueryEngine(spark, Seq(indexDir), broadcastNormsUpTo = 0L)
-    for ((_, qtext) <- Bm25.QuerySet.take(4)) {
-      assert(collectTopK(cg.topK(qtext)) == collectTopK(engine.topK(qtext)))
+    def lens(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    for ((qid, qtext) <- Bm25.QuerySet.take(4)) {
+      assert(collectTopK(cg.topK(qtext)) == collectTopK(engine.topK(qtext)), s"$qid AND")
+      assert(collectTopK(cg.topKOr(qtext)) == collectTopK(engine.topKOr(qtext)), s"$qid OR")
+      assert(lens(cg.topKSortedByLen(qtext)) == lens(engine.topKSortedByLen(qtext)),
+        s"$qid sorted")
     }
+    for ((qid, qtext) <- Bm25.NotQuerySet.take(2)) {
+      assert(collectTopK(cg.topKNot(qtext)) == collectTopK(engine.topKNot(qtext)),
+        s"$qid AND-NOT")
+      assert(collectTopK(cg.topKOrNot(qtext)) == collectTopK(engine.topKOrNot(qtext)),
+        s"$qid OR-NOT")
+    }
+    for ((qid, qtext) <- Bm25.SynQuerySet.take(2))
+      assert(collectTopK(cg.topKSyn(qtext)) == collectTopK(engine.topKSyn(qtext)),
+        s"$qid synonym")
+    // counting needs no norms: a norm-less engine still counts on the
+    // driver, and launches no job once the postings are resident
+    for ((qid, q) <- Bm25.QuerySet; or <- Seq(false, true))
+      assert(cg.countMatches(q, or) == engine.countMatches(q, or), s"$qid count or=$or")
+    val sc = spark.sparkContext
+    val before = sc.statusTracker.getJobIdsForGroup(null).length
+    Bm25.QuerySet.foreach { case (_, q) => cg.countMatches(q); cg.countMatches(q, orMode = true) }
+    val after = sc.statusTracker.getJobIdsForGroup(null).length
+    assert(after == before, s"norm-less count launched ${after - before} job(s)")
+    cg.close()
   }
 
   test("range-shuffle path identical to the default scan path (AND + OR)") {
@@ -1854,14 +1881,20 @@ class IndexQuerySpec extends AnyFunSuite {
     // distributed RANGE fallback (broadcast cap disabled too)
     val rangePath = new QueryEngine(spark, Seq(indexDir),
       localWandUpTo = 0L, broadcastPostingsUpTo = -1L)
+    // pooled driver-local path: each shard merges its own docID slice
+    val pooledPath = new QueryEngine(spark, Seq(indexDir),
+      localWandUpTo = 1L, localWandThreads = 8,
+      localWandParallelUpTo = 1_000_000L)
     try {
       for ((_, qtext) <- Bm25.SynQuerySet) {
         assert(collectTopK(scanPath.topKSyn(qtext)) ==
           collectTopK(engine.topKSyn(qtext)), s"syn scan '$qtext'")
         assert(collectTopK(rangePath.topKSyn(qtext)) ==
           collectTopK(engine.topKSyn(qtext)), s"syn range '$qtext'")
+        assert(collectTopK(pooledPath.topKSyn(qtext)) ==
+          collectTopK(engine.topKSyn(qtext)), s"syn pooled '$qtext'")
       }
-    } finally { scanPath.close(); rangePath.close() }
+    } finally { scanPath.close(); rangePath.close(); pooledPath.close() }
   }
 
   test("significant terms: sampler invariants hold over the fixed set") {

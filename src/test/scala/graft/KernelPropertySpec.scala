@@ -286,6 +286,23 @@ class KernelPropertySpec extends AnyFunSuite {
     assert(cursors > 80 && pruned > 100, s"weak generator: $cursors cursors, $pruned over-k cases")
   }
 
+  test("TopK rounded fast reject: a same-key offer just below the root still enters") {
+    // exact scores under 0.00005 apart that round to one 4-decimal key
+    // (2.49996 and 2.499962 round up to 2.5; 2.49993 and 2.49994 round
+    // down to 2.4999): a smaller docID at an equal key must displace the
+    // root even though its exact score lies below the root's
+    val offers = Seq(10L -> 2.5, 12L -> 2.50001, 5L -> 2.49996,
+      3L -> 2.49993, 7L -> 2.499962, 1L -> 2.49994)
+    val brute = offers.sortBy { case (d, s) => (-QueryEngine.r4(s), d) }
+    for (k <- 1 to 4; order <- offers.permutations) {
+      val top = new QueryEngine.TopK(k, rounded = true)
+      order.foreach { case (d, s) => top.offer(d, s) }
+      val got = top.results.map(h => (h.docID, h.score))
+        .sortBy { case (d, s) => (-QueryEngine.r4(s), d) }
+      assert(got == brute.take(k), s"k=$k offers=$order")
+    }
+  }
+
   test("grouped top-n == brute per-group ranking; unmapped docs skipped (property)") {
     forAllGen(scoredCase, n = 300) { c =>
       // docs ≡ 0 (mod 4) are unmapped (cursor −1); the rest group by d mod 3
