@@ -227,7 +227,7 @@ object Bench {
     val filteredJson = if (!phrase) "" else {
       // facet prep from the index's own keyword doc-values artifact —
       // the corpus is never touched (the 100 TB facet shape)
-      val facet = engine.prepareLangFacet("en")
+      val facet = engine.prepareKeywordFacet("lang", "en")
       Bm25.QuerySet.foreach { case (_, q) =>
         engine.topKFiltered(q, facet, Bm25.K, rounded = true, orMode = false).collect()
       }

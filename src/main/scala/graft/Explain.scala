@@ -77,7 +77,7 @@ object Explain {
         "artifact (docvals), never the corpus.",
       {
         val eng = new QueryEngine(spark, Seq(indexDir), localWandUpTo = 0L)
-        eng.topKFiltered("hash join", eng.prepareLangFacet("en"),
+        eng.topKFiltered("hash join", eng.prepareKeywordFacet("lang", "en"),
           Bm25.K, rounded = false, orMode = false)
       })
 
@@ -188,7 +188,8 @@ object Explain {
       {
         val eng = new QueryEngine(spark, Seq(indexDir))
         graft.operators.Snippets.searchSnippets(
-          spark, Corpus.docs(spark, sfDir), eng.topKAll())
+          spark, Corpus.docs(spark, sfDir), SparkEntry.ranked(Bm25.QuerySet.map {
+            case (qid, q) => qid -> eng.topK(q, rounded = true) }))
       })
 
     show("indexed BM25 top-k (driver-local fast path)",

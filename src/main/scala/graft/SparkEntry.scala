@@ -1,6 +1,8 @@
 package graft
 
+import scala.reflect.runtime.universe.TypeTag
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.operators.{Bm25, Crawl, Dedup, Hybrid, Index, Media, Metrics, QueryEngine, SigTerms, Similarity, Snippets, SubstringSearch, TextStats}
 import graft.streaming.{Events, IncrementalIndex}
@@ -10,6 +12,8 @@ import graft.streaming.{Events, IncrementalIndex}
   * Every `queries` entry reads parquet from the given sfDir; every entry
   * with an `oracleSql` twin produces column names, value rounding and row
   * order identical to what DuckDB computes for that SQL on the same files.
+  * The indexed entries run each fixed query set through the engine's
+  * per-query methods, one query at a time, and shape the frame here.
   */
 object SparkEntry {
 
@@ -17,260 +21,59 @@ object SparkEntry {
     * BM25 top-k over the fixed query set via the INDEXED engine (build
     * resumable inverted index, then block-max WAND query). */
   def entry(spark: SparkSession): DataFrame =
-    indexedTopK(spark, "/root/testdata/sf0.001")
+    queries("bm25_topk_indexed")(spark, "/root/testdata/sf0.001")
 
-  /** Build (or resume) the inverted index for sfDir in a deterministic
-    * scratch dir, then answer the whole query set through it. */
-  def indexedTopK(spark: SparkSession, sfDir: String,
-                  orMode: Boolean = false): DataFrame = {
-    val indexDir = "/tmp/graft/index_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    Index.build(spark, sfDir, indexDir)
-    new QueryEngine(spark, Seq(indexDir)).topKAll(orMode = orMode)
+  /** Index layouts: plain, positional (phrase, window and search-box
+    * queries need positions) and fielded (BM25F: the `path` field folded
+    * into the token stream, so df/avgdl/len differ from the plain index
+    * by construction). Each has its own scratch dir. */
+  private sealed abstract class Layout(val tag: String)
+  private case object Plain extends Layout("")
+  private case object Positional extends Layout("pos_")
+  private case object Fielded extends Layout("f_")
+
+  /** Build (or resume) the index of `sfDir` in a deterministic scratch
+    * dir, then open an engine over it. */
+  private def open(s: SparkSession, sfDir: String,
+                   layout: Layout = Plain): QueryEngine = {
+    val indexDir = s"/tmp/graft/index_${layout.tag}" +
+      sfDir.replaceAll("[^A-Za-z0-9.]", "_")
+    if (layout == Fielded)
+      Index.buildFrom(s, Bm25.fieldedDocs(Corpus.docs(s, sfDir)), indexDir)
+    else
+      Index.build(s, sfDir, indexDir,
+        Index.BuildParams(storePositions = layout == Positional))
+    new QueryEngine(s, Seq(indexDir))
   }
 
-  /** Faceted retrieval: the full query set restricted to one lang facet
-    * (scoring stats stay corpus-global; the gate applies inside the WAND
-    * kernel, before top-k pruning). The allowed set comes from the
-    * index's OWN keyword doc-values artifact
-    * (QueryEngine.prepareLangFacet) — facet prep never scans the
-    * corpus, the 100 TB-honest shape. */
-  def indexedTopKFiltered(spark: SparkSession, sfDir: String,
-                          lang: String): DataFrame = {
-    val indexDir = "/tmp/graft/index_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    Index.build(spark, sfDir, indexDir)
-    val eng = new QueryEngine(spark, Seq(indexDir))
-    eng.topKAllFiltered(eng.prepareLangFacet(lang), Bm25.K, orMode = false)
-  }
+  /** Ranked contract frame (`key`, rank, docID, `by`): each query's
+    * top-k frame ranked by (`by` desc, docID asc) under its query id,
+    * ordered (`key`, rank). `rankOffset` reports GLOBAL ranks (page 2 of
+    * a k-deep ranking ranks k+1 .. 2k). Column-identical to the
+    * brute-force oracles and their DuckDB twins. */
+  def ranked(perQuery: Seq[(Any, DataFrame)], rankOffset: Int = 0,
+             by: String = "score", key: String = "query"): DataFrame =
+    stacked(perQuery.map { case (q, df) =>
+      q -> df.withColumn("rank",
+          (row_number().over(Window.orderBy(col(by).desc, col("docID").asc))
+            + lit(rankOffset)).cast("int"))
+        .select(col("rank"), col("docID"), col(by))
+    }, key, "rank")
 
-  /** Repo-faceted retrieval: the SECOND keyword doc-values dimension
-    * (`repo`, VERDICT r4 #8) through the same per-field resolver and
-    * artifact — facet prep reads only the field-partitioned docvals. */
-  def indexedTopKRepoFacet(spark: SparkSession, sfDir: String,
-                           repo: String): DataFrame = {
-    val indexDir = "/tmp/graft/index_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    Index.build(spark, sfDir, indexDir)
-    val eng = new QueryEngine(spark, Seq(indexDir))
-    eng.topKAllFiltered(eng.prepareKeywordFacet("repo", repo),
-      Bm25.K, orMode = false)
-  }
+  /** Per-query frames stacked under a leading `key` column holding each
+    * frame's query id, ordered by (`key`, `order`...). */
+  private[graft] def stacked(perQuery: Seq[(Any, DataFrame)], key: String,
+                             order: String*): DataFrame =
+    perQuery.map { case (q, df) =>
+      df.select(lit(q).as(key) +: df.columns.toSeq.map(col): _*)
+    }.reduce(_ unionAll _).orderBy((key +: order).map(col): _*)
 
-  /** Boolean-NOT retrieval: the fixed NOT query set, negated terms
-    * excluded by anti-posting iterators inside the WAND gate. */
-  def indexedTopKNot(spark: SparkSession, sfDir: String): DataFrame = {
-    val indexDir = "/tmp/graft/index_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    Index.build(spark, sfDir, indexDir)
-    new QueryEngine(spark, Seq(indexDir)).topKAllNot()
-  }
-
-  /** Hybrid retrieval: BM25 (indexed, OR-mode) + embedding-cosine legs
-    * fused by Reciprocal Rank Fusion (operators.Hybrid) — the two-leg
-    * lexical+semantic stack of a modern search / RAG service. */
-  def indexedHybridTopK(spark: SparkSession, sfDir: String): DataFrame = {
-    val indexDir = "/tmp/graft/index_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    Index.build(spark, sfDir, indexDir)
-    Hybrid.hybridTopK(spark, sfDir, new QueryEngine(spark, Seq(indexDir)))
-  }
-
-  /** Search-after pagination: PAGE 2 (global ranks k+1 .. 2k) of the
-    * fixed query set — page 1 supplies the (score, docID) cursor, the
-    * engine's after-gate retrieves the next k inside the WAND kernels
-    * (QueryEngine.topKAfter; no take-2k-and-slice plan anywhere). */
-  def indexedTopKPage2(spark: SparkSession, sfDir: String): DataFrame = {
-    val indexDir = "/tmp/graft/index_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    Index.build(spark, sfDir, indexDir)
-    new QueryEngine(spark, Seq(indexDir)).topKAllPage2()
-  }
-
-  /** LSM deletes: tombstone docs (docID % 7 == 3), then run the fixed
-    * query set with the tombstone deny facet applied — deleted docs
-    * excluded from results, scoring stats as-built (Lucene deleted-doc
-    * semantics; compaction recomputes stats — StreamingSpec). */
-  def indexedTopKDeleted(spark: SparkSession, sfDir: String): DataFrame = {
-    val indexDir = "/tmp/graft/index_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    Index.build(spark, sfDir, indexDir)
-    IncrementalIndex.delete(
-      Corpus.docs(spark, sfDir).filter(col("docID") % 7 === 3)
-        .select(col("docID")), indexDir)
-    val eng = new QueryEngine(spark, Seq(indexDir))
-    val deny = IncrementalIndex.denyFacet(spark, indexDir, eng).get
-    eng.topKAllFiltered(deny, Bm25.K, orMode = false)
-  }
-
-  /** BM25F fielded retrieval: the `path` field folded into the token
-    * stream with integer weight Bm25.FieldWeightPath — tf' and dl' per
-    * Robertson's BM25F with shared k1/b — so the standard builder,
-    * dictionary and WAND kernels rank the two-field model unchanged.
-    * Separate index dir: fielded df/avgdl/len differ from the plain
-    * index by construction. */
-  def indexedBm25fTopK(spark: SparkSession, sfDir: String): DataFrame = {
-    val indexDir = "/tmp/graft/index_f_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    Index.buildFrom(spark, Bm25.fieldedDocs(Corpus.docs(spark, sfDir)), indexDir)
-    new QueryEngine(spark, Seq(indexDir)).topKAllOver(Bm25.FieldedQuerySet)
-  }
-
-  /** Synonym-group retrieval: `a|b` pieces score as one pseudo-term
-    * (tf summed over members, df = max member df — Lucene SynonymQuery),
-    * AND-composed; member postings merge into synthetic block-max
-    * segments at query prep (QueryEngine.mergeGroupSegments), so the
-    * ordinary conjunctive kernel runs unchanged. */
-  def indexedSynTopK(spark: SparkSession, sfDir: String): DataFrame = {
-    val indexDir = "/tmp/graft/index_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    Index.build(spark, sfDir, indexDir)
-    new QueryEngine(spark, Seq(indexDir)).topKAllSyn()
-  }
-
-  /** Phrase queries need positions: a separate positional index dir. */
-  def indexedPhraseTopK(spark: SparkSession, sfDir: String): DataFrame = {
-    val indexDir = "/tmp/graft/index_pos_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    Index.build(spark, sfDir, indexDir,
-      Index.BuildParams(storePositions = true))
-    new QueryEngine(spark, Seq(indexDir)).topKAllPhrase()
-  }
-
-  /** Query-focused snippets for the fixed query set's top-k: indexed
-    * ranking, then fetch-by-id of the result docs and a codegen'd
-    * best-window argmax + highlight (operators.Snippets). */
-  def indexedSnippets(spark: SparkSession, sfDir: String): DataFrame = {
-    val indexDir = "/tmp/graft/index_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    Index.build(spark, sfDir, indexDir)
-    val ranked = new QueryEngine(spark, Seq(indexDir)).topKAll()
-    Snippets.searchSnippets(spark, Corpus.docs(spark, sfDir), ranked)
-  }
-
-  /** Prefix retrieval: each fixed prefix expands against the dictionary
-    * and runs with OR semantics over the expansion (no positions needed
-    * — reuses the non-positional index). */
-  def indexedPrefixTopK(spark: SparkSession, sfDir: String): DataFrame = {
-    val indexDir = "/tmp/graft/index_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    Index.build(spark, sfDir, indexDir)
-    new QueryEngine(spark, Seq(indexDir)).topKAllPrefix()
-  }
-
-  /** Total-hits counts (AND + OR) for every fixed query — the "About N
-    * results" aggregate, computed from posting intersections without
-    * scoring or materializing matches. */
-  def indexedMatchCounts(spark: SparkSession, sfDir: String): DataFrame = {
-    val indexDir = "/tmp/graft/index_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    Index.build(spark, sfDir, indexDir)
-    new QueryEngine(spark, Seq(indexDir)).matchCountsAll()
-  }
-
-  /** Per-facet hit counts — the facet-navigation sidebar ("lang:en
-    * (1,234)"): one gated count per (query, lang), each facet gate
-    * prepared ONCE and reused across all queries; zero-hit facet values
-    * omitted (matching the SQL twin's inner join). */
-  def indexedFacetCounts(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val indexDir = "/tmp/graft/index_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    Index.build(spark, sfDir, indexDir)
-    val eng = new QueryEngine(spark, Seq(indexDir))
-    // facet vocabulary AND per-value gates from the index's own keyword
-    // doc-values artifact — facet navigation never scans the corpus
-    val facets = eng.langFacetValues().map(l => l -> eng.prepareLangFacet(l))
-    val rows = for {
-      (qid, q) <- Bm25.QuerySet
-      (lang, facet) <- facets
-      n = eng.countMatchesFiltered(q, facet)
-      if n > 0
-    } yield (qid, lang, n)
-    rows.toDF("query", "lang", "n_docs").orderBy(col("query"), col("lang"))
-  }
-
-  /** Fuzzy retrieval: each fixed query term expands to its
-    * Levenshtein-≤-1 dictionary neighborhood, then OR semantics. */
-  def indexedFuzzyTopK(spark: SparkSession, sfDir: String): DataFrame = {
-    val indexDir = "/tmp/graft/index_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    Index.build(spark, sfDir, indexDir)
-    new QueryEngine(spark, Seq(indexDir)).topKAllFuzzy()
-  }
-
-  /** Wildcard retrieval: each fixed fragment expands to every dictionary
-    * term containing it, then OR semantics over the expansion. */
-  def indexedWildcardTopK(spark: SparkSession, sfDir: String): DataFrame = {
-    val indexDir = "/tmp/graft/index_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    Index.build(spark, sfDir, indexDir)
-    new QueryEngine(spark, Seq(indexDir)).topKAllWildcard()
-  }
-
-  def indexedRegexTopK(spark: SparkSession, sfDir: String): DataFrame = {
-    val indexDir = "/tmp/graft/index_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    Index.build(spark, sfDir, indexDir)
-    new QueryEngine(spark, Seq(indexDir)).topKAllRegex()
-  }
-
-  /** Numeric doc-values range facet: every fixed AND query gated to
-    * docs whose length lies in [lo, hi] — the allowed set read from the
-    * index's own docStats column, corpus untouched. */
-  def indexedTopKLenRange(spark: SparkSession, sfDir: String,
-                          lo: Long, hi: Long): DataFrame = {
-    val indexDir = "/tmp/graft/index_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    Index.build(spark, sfDir, indexDir)
-    val eng = new QueryEngine(spark, Seq(indexDir))
-    eng.topKAllFiltered(eng.prepareLenRange(lo, hi), Bm25.K, orMode = false)
-  }
-
-  /** Per-length-bucket match histogram: for every fixed AND query, the
-    * count of matching docs per ⌊len/16⌋ bucket — B buckets from ONE
-    * grouped-counting kernel pass, not B gated counts. */
-  def indexedLenHistogram(spark: SparkSession, sfDir: String): DataFrame = {
-    val indexDir = "/tmp/graft/index_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    Index.build(spark, sfDir, indexDir)
-    new QueryEngine(spark, Seq(indexDir)).lenHistogramAll()
-  }
-
-  /** Proximity (window) retrieval over the positional index: each fixed
-    * query's terms must co-occur within its w-token window. */
-  def indexedWindowTopK(spark: SparkSession, sfDir: String): DataFrame = {
-    val indexDir = "/tmp/graft/index_pos_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    Index.build(spark, sfDir, indexDir,
-      Index.BuildParams(storePositions = true))
-    new QueryEngine(spark, Seq(indexDir)).topKAllWindow()
-  }
-
-  /** Faceted exact-phrase retrieval: phrase query set gated to one lang
-    * facet (corpus-global stats; gate checked before the adjacency test). */
-  def indexedPhraseTopKFiltered(spark: SparkSession, sfDir: String,
-                                lang: String): DataFrame = {
-    val indexDir = "/tmp/graft/index_pos_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    Index.build(spark, sfDir, indexDir,
-      Index.BuildParams(storePositions = true))
-    val eng = new QueryEngine(spark, Seq(indexDir))
-    eng.topKAllPhraseFiltered(eng.langFacetDocs(lang))
-  }
-
-  /** Unified search-box queries — ONE raw string per query mixing bare
-    * terms, quoted phrases and `-negations` (QueryEngine.search) — over
-    * the positional index (phrases need positions). */
-  def indexedSearchTopK(spark: SparkSession, sfDir: String): DataFrame = {
-    val indexDir = "/tmp/graft/index_pos_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    Index.build(spark, sfDir, indexDir,
-      Index.BuildParams(storePositions = true))
-    new QueryEngine(spark, Seq(indexDir)).searchAll()
-  }
-
-  /** Field-faceted search-box queries: the mixed grammar plus one
-    * `lang:value` facet piece per query string, resolved to a prepared
-    * Facet gate over the index's keyword doc-values artifact
-    * (content-keyed broadcast LRU — repeated field values reship
-    * nothing; the corpus is never scanned). */
-  def indexedSearchFieldTopK(spark: SparkSession, sfDir: String): DataFrame = {
-    val indexDir = "/tmp/graft/index_pos_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    Index.build(spark, sfDir, indexDir,
-      Index.BuildParams(storePositions = true))
-    val eng = new QueryEngine(spark, Seq(indexDir))
-    // index-side per-field doc-values, no corpus access: any field in
-    // Index.KeywordFields (lang, repo) resolves through one call
-    val resolver = (f: String, v: String) => eng.prepareKeywordFacet(f, v)
-    eng.searchFieldAll(resolver)
-  }
-
-  /** Boosted search-box queries: `term^w` weighted pieces in the mixed
-    * grammar (positional index — the set includes a boost×phrase case). */
-  def indexedSearchBoostedTopK(spark: SparkSession, sfDir: String): DataFrame = {
-    val indexDir = "/tmp/graft/index_pos_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    Index.build(spark, sfDir, indexDir,
-      Index.BuildParams(storePositions = true))
-    new QueryEngine(spark, Seq(indexDir)).searchBoostedAll()
+  /** Per-query rows as a frame with columns `cols`, ordered by the first
+    * two (the query id, then the row's key within the query). */
+  private def table[T <: Product : TypeTag](s: SparkSession, cols: String*)(
+      rows: Seq[T]): DataFrame = {
+    import s.implicits._
+    rows.toDF(cols: _*).orderBy(col(cols(0)), col(cols(1)))
   }
 
   /** One entry per implemented operator from SURVEY.md §2. */
@@ -305,230 +108,338 @@ object SparkEntry {
 
     // -- THE headline operator (M1+M2): resumable partitioned inverted
     //    index + block-max WAND top-k; rank-identical to the oracle SQL
-    "bm25_topk_indexed" -> ((s, dir) => indexedTopK(s, dir)),
+    "bm25_topk_indexed" -> ((s, dir) => {
+      val eng = open(s, dir)
+      ranked(Bm25.QuerySet.map { case (qid, q) => qid -> eng.topK(q, rounded = true) })
+    }),
 
     // -- disjunctive (OR) BM25: brute-force oracle + WAND-pruned engine
     "bm25_topk_or_oracle" -> ((s, dir) => Bm25.oracleTopKOr(s, dir)),
-    "bm25_topk_or_indexed" -> ((s, dir) => indexedTopK(s, dir, orMode = true)),
+    "bm25_topk_or_indexed" -> ((s, dir) => {
+      val eng = open(s, dir)
+      ranked(Bm25.QuerySet.map { case (qid, q) => qid -> eng.topKOr(q, rounded = true) })
+    }),
 
     // -- minimum-should-match: OR scoring gated on >= m distinct
     //    matched terms (Lucene minimum_should_match semantics)
     "bm25_topk_msm_oracle" -> ((s, dir) => Bm25.oracleTopKMsm(s, dir)),
     "bm25_topk_msm_indexed" -> ((s, dir) => {
-      val indexDir = "/tmp/graft/index_" + dir.replaceAll("[^A-Za-z0-9.]", "_")
-      Index.build(s, dir, indexDir)
-      new QueryEngine(s, Seq(indexDir)).topKAllMsm()
+      val eng = open(s, dir)
+      ranked(Bm25.MsmQuerySet.map { case (qid, q, m) =>
+        qid -> eng.topKMsm(q, m, rounded = true) })
     }),
 
     // -- boolean NOT (`-term`): exclusion via anti-posting iterators in
     //    the WAND gate; brute twin anti-joins before ranking
     "bm25_topk_not_oracle" -> ((s, dir) => Bm25.oracleTopKNot(s, dir)),
-    "bm25_topk_not_indexed" -> ((s, dir) => indexedTopKNot(s, dir)),
+    "bm25_topk_not_indexed" -> ((s, dir) => {
+      val eng = open(s, dir)
+      ranked(Bm25.NotQuerySet.map { case (qid, q) => qid -> eng.topKNot(q, rounded = true) })
+    }),
 
     // -- search-after pagination: page 2 (ranks k+1..2k) via the
-    //    kernel-level after-cursor gate
-    "bm25_topk_page2" -> ((s, dir) => indexedTopKPage2(s, dir)),
+    //    kernel-level after-cursor gate. Page 1's last row is the cursor
+    //    (nothing ranks after a short page 1; an empty one is its own page 2)
+    "bm25_topk_page2" -> ((s, dir) => {
+      val eng = open(s, dir)
+      ranked(Bm25.QuerySet.map { case (qid, q) =>
+        val page1 = eng.topK(q, rounded = true)
+        qid -> page1.collect().lastOption.fold(page1)(last =>
+          eng.topKAfter(q, Bm25.K, last.getDouble(1), last.getLong(0), rounded = true))
+      }, rankOffset = Bm25.K)
+    }),
 
     // -- sort-by-field retrieval: AND matches ordered by the len
     //    doc-values column (longest-first), relevance never computed
     "search_sorted_oracle" -> ((s, dir) => Bm25.oracleSortedTopK(s, dir)),
     "search_sorted" -> ((s, dir) => {
-      val indexDir = "/tmp/graft/index_" + dir.replaceAll("[^A-Za-z0-9.]", "_")
-      Index.build(s, dir, indexDir)
-      new QueryEngine(s, Seq(indexDir)).sortedAll()
+      val eng = open(s, dir)
+      ranked(Bm25.QuerySet.map { case (qid, q) => qid -> eng.topKSortedByLen(q) },
+        by = "len")
     }),
 
     // -- hybrid lexical+semantic retrieval fused by RRF
-    "hybrid_rrf" -> ((s, dir) => indexedHybridTopK(s, dir)),
+    "hybrid_rrf" -> ((s, dir) => Hybrid.hybridTopK(s, dir, open(s, dir))),
 
     // -- LSM deletes: tombstoned docs (docID%7==3) excluded via the
     //    deny facet; stats as-built (Lucene deleted-doc semantics)
-    "bm25_topk_deleted" -> ((s, dir) => indexedTopKDeleted(s, dir)),
+    "bm25_topk_deleted" -> ((s, dir) => {
+      val eng = open(s, dir)
+      val indexDir = eng.indexDirs.head
+      IncrementalIndex.delete(
+        Corpus.docs(s, dir).filter(col("docID") % 7 === 3).select(col("docID")),
+        indexDir)
+      val deny = IncrementalIndex.denyFacet(s, indexDir, eng).get
+      ranked(Bm25.QuerySet.map { case (qid, q) =>
+        qid -> eng.topKFiltered(q, deny, Bm25.K, rounded = true, orMode = false) })
+    }),
 
-    // -- faceted BM25: lang-filtered result set, corpus-global stats
+    // -- faceted BM25: lang-filtered result set, corpus-global stats; the
+    //    gate comes from the index's own keyword doc-values artifact
+    //    (facet prep never scans the corpus) and is prepared once per set
     "bm25_topk_filtered_oracle" -> ((s, dir) =>
       Bm25.oracleTopK(s, dir, langFilter = "de")),
-    "bm25_topk_filtered" -> ((s, dir) => indexedTopKFiltered(s, dir, "de")),
+    "bm25_topk_filtered" -> ((s, dir) => {
+      val eng = open(s, dir)
+      val facet = eng.prepareKeywordFacet("lang", "de")
+      ranked(Bm25.QuerySet.map { case (qid, q) =>
+        qid -> eng.topKFiltered(q, facet, Bm25.K, rounded = true, orMode = false) })
+    }),
 
     // -- numeric doc-values range facet: len:[32 TO 79] from the
     // index's own docStats, no corpus join
-    "bm25_topk_lenrange" -> ((s, dir) => indexedTopKLenRange(s, dir, 32, 79)),
+    "bm25_topk_lenrange" -> ((s, dir) => {
+      val eng = open(s, dir)
+      val facet = eng.prepareLenRange(32, 79)
+      ranked(Bm25.QuerySet.map { case (qid, q) =>
+        qid -> eng.topKFiltered(q, facet, Bm25.K, rounded = true, orMode = false) })
+    }),
 
     // -- SECOND keyword facet dimension: repo-faceted result set from
     //    the field-partitioned docvals artifact (same resolver as lang)
-    "bm25_topk_repofacet" -> ((s, dir) => indexedTopKRepoFacet(s, dir, "src3")),
+    "bm25_topk_repofacet" -> ((s, dir) => {
+      val eng = open(s, dir)
+      val facet = eng.prepareKeywordFacet("repo", "src3")
+      ranked(Bm25.QuerySet.map { case (qid, q) =>
+        qid -> eng.topKFiltered(q, facet, Bm25.K, rounded = true, orMode = false) })
+    }),
 
     // -- BM25F two-field (path + content) ranking, integer field weights
     "bm25f_topk_oracle" -> ((s, dir) => Bm25.oracleFieldedTopK(s, dir)),
-    "bm25f_topk_indexed" -> ((s, dir) => indexedBm25fTopK(s, dir)),
+    "bm25f_topk_indexed" -> ((s, dir) => {
+      val eng = open(s, dir, Fielded)
+      ranked(Bm25.FieldedQuerySet.map { case (qid, q) => qid -> eng.topK(q, rounded = true) })
+    }),
 
     // -- synonym groups (a|b scored as one term, Lucene SynonymQuery)
     "bm25_syn_oracle" -> ((s, dir) => Bm25.oracleSynTopK(s, dir)),
-    "bm25_syn_indexed" -> ((s, dir) => indexedSynTopK(s, dir)),
+    "bm25_syn_indexed" -> ((s, dir) => {
+      val eng = open(s, dir)
+      ranked(Bm25.SynQuerySet.map { case (qid, q) => qid -> eng.topKSyn(q) })
+    }),
 
     // -- significant terms of each query's top-100 sample (ES
     //    significant_terms under a sampler: log lift vs corpus df)
     "sig_terms" -> ((s, dir) => {
-      val indexDir = "/tmp/graft/index_" + dir.replaceAll("[^A-Za-z0-9.]", "_")
-      Index.build(s, dir, indexDir)
-      val eng = new QueryEngine(s, Seq(indexDir))
+      val eng = open(s, dir)
       SigTerms.significantTerms(s, dir, eng,
         (q, n) => eng.topK(q, n, rounded = true))
     }),
 
     // -- exact-phrase BM25 over the positional index
     "bm25_phrase_oracle" -> ((s, dir) => Bm25.oraclePhraseTopK(s, dir)),
-    "bm25_phrase_indexed" -> ((s, dir) => indexedPhraseTopK(s, dir)),
+    "bm25_phrase_indexed" -> ((s, dir) => {
+      val eng = open(s, dir, Positional)
+      ranked(Bm25.PhraseQuerySet.map { case (qid, q) =>
+        qid -> eng.topKPhrase(q, rounded = true) })
+    }),
 
     // -- unified search-box front door: terms + "phrases" + -negations
     //    parsed from one raw string, composed in one WAND kernel pass
     "search_mixed_oracle" -> ((s, dir) => Bm25.oracleMixedTopK(s, dir)),
-    "search_mixed" -> ((s, dir) => indexedSearchTopK(s, dir)),
+    "search_mixed" -> ((s, dir) => {
+      val eng = open(s, dir, Positional)
+      ranked(Bm25.MixedQuerySet.map { case (qid, q) => qid -> eng.search(q, rounded = true) })
+    }),
 
     // -- field-faceted search box: `lang:value` pieces resolve to facet
-    //    gates inside the same kernel pass (corpus-global stats)
+    //    gates inside the same kernel pass (corpus-global stats), through
+    //    the index's keyword doc-values, never the corpus
     "search_field_oracle" -> ((s, dir) => Bm25.oracleFieldTopK(s, dir)),
-    "search_field" -> ((s, dir) => indexedSearchFieldTopK(s, dir)),
+    "search_field" -> ((s, dir) => {
+      val eng = open(s, dir, Positional)
+      ranked(Bm25.FieldQuerySet.map { case (qid, q) =>
+        qid -> eng.search(q, rounded = true, fieldFacet = eng.prepareKeywordFacet) })
+    }),
 
     // -- boosted search box: `term^w` weights fold into the WAND bounds
     //    as an outer multiply (bit-exact no-op at w = 1.0)
     "search_boosted_oracle" -> ((s, dir) => Bm25.oracleBoostedTopK(s, dir)),
-    "search_boosted" -> ((s, dir) => indexedSearchBoostedTopK(s, dir)),
+    "search_boosted" -> ((s, dir) => {
+      val eng = open(s, dir, Positional)
+      ranked(Bm25.BoostQuerySet.map { case (qid, q) => qid -> eng.search(q, rounded = true) })
+    }),
 
     // -- grouped (field-collapsing) retrieval: top-n per lang in one
     //    per-group-heap kernel pass (corpus-global stats)
     "search_grouped_oracle" -> ((s, dir) => Bm25.oracleGroupedTopK(s, dir)),
     "search_grouped" -> ((s, dir) => {
-      val indexDir = "/tmp/graft/index_" + dir.replaceAll("[^A-Za-z0-9.]", "_")
-      Index.build(s, dir, indexDir)
-      val eng = new QueryEngine(s, Seq(indexDir))
+      val eng = open(s, dir)
       val groups = eng.prepareGroups(
         Corpus.docs(s, dir).select(col("docID"), col("lang").as("grp")))
-      eng.searchGroupedAll(groups)
+      stacked(Bm25.GroupedQuerySet.map { case (qid, q) =>
+        qid -> eng.searchGroupedTopK(q, groups) }, "query", "grp", "rank")
     }),
 
     // -- static-rank rescoring: top-window BM25 re-ranked by the
     //    blended bm25 + PageRank score (ES rescore / FeatureField)
     "search_rescored_oracle" -> ((s, dir) =>
       graft.operators.Rescore.rescoredOracle(s, dir)),
-    "search_rescored" -> ((s, dir) => {
-      val indexDir = "/tmp/graft/index_" + dir.replaceAll("[^A-Za-z0-9.]", "_")
-      Index.build(s, dir, indexDir)
-      graft.operators.Rescore.rescoredAll(s, dir,
-        new QueryEngine(s, Seq(indexDir)))
-    }),
+    "search_rescored" -> ((s, dir) =>
+      graft.operators.Rescore.rescoredAll(s, dir, open(s, dir))),
 
-    // -- query-focused snippets over the top-k result docs
-    "search_snippets" -> ((s, dir) => indexedSnippets(s, dir)),
+    // -- query-focused snippets over the top-k result docs: fetch-by-id
+    //    of the ranked docs, codegen'd best-window argmax + highlight
+    "search_snippets" -> ((s, dir) => {
+      val eng = open(s, dir)
+      Snippets.searchSnippets(s, Corpus.docs(s, dir),
+        ranked(Bm25.QuerySet.map { case (qid, q) => qid -> eng.topK(q, rounded = true) }))
+    }),
 
     // -- prefix BM25: dictionary expansion, OR semantics over expansion
     "bm25_prefix_oracle" -> ((s, dir) => Bm25.oraclePrefixTopK(s, dir)),
-    "bm25_prefix_indexed" -> ((s, dir) => indexedPrefixTopK(s, dir)),
+    "bm25_prefix_indexed" -> ((s, dir) => {
+      val eng = open(s, dir)
+      ranked(Bm25.PrefixQuerySet.map { case (qid, p) =>
+        qid -> eng.topKPrefix(p, rounded = true) })
+    }),
 
-    // -- autocomplete: top-df dictionary completions per fixed prefix
+    // -- autocomplete: top-df dictionary completions per fixed prefix;
+    //    an absent prefix contributes no rows
     "suggest_terms" -> ((s, dir) => {
-      val indexDir = "/tmp/graft/index_" + dir.replaceAll("[^A-Za-z0-9.]", "_")
-      Index.build(s, dir, indexDir)
-      new QueryEngine(s, Seq(indexDir)).suggestAll()
+      val eng = open(s, dir)
+      table(s, "query", "rank", "term", "df")(Bm25.PrefixQuerySet.flatMap {
+        case (qid, p) =>
+          eng.suggest(p).zipWithIndex.map { case ((t, d), i) => (qid, i + 1, t, d) }
+      })
     }),
 
     // -- score explanation: per-term (tf, df, contrib) breakdown of the
     //    top-k, cross-gated against corpus-derived ingredients
     "explain_scores" -> ((s, dir) => {
-      val indexDir = "/tmp/graft/index_" + dir.replaceAll("[^A-Za-z0-9.]", "_")
-      Index.build(s, dir, indexDir)
-      new QueryEngine(s, Seq(indexDir)).explainScoresAll()
+      val eng = open(s, dir)
+      stacked(Bm25.QuerySet.map { case (qid, q) => qid -> eng.explainScores(q) },
+        "query", "rank", "term")
     }),
 
     // -- did-you-mean: max-df Levenshtein-1 spell suggestion per term
     "did_you_mean" -> ((s, dir) => {
-      val indexDir = "/tmp/graft/index_" + dir.replaceAll("[^A-Za-z0-9.]", "_")
-      Index.build(s, dir, indexDir)
-      new QueryEngine(s, Seq(indexDir)).didYouMeanAll()
+      val eng = open(s, dir)
+      table(s, "query", "term", "suggestion", "sugg_df")(
+        Bm25.DidYouMeanQuerySet.flatMap { case (qid, q) =>
+          eng.didYouMean(q).map { case (t, sg, d) => (qid, t, sg, d) }
+        })
     }),
 
     // -- more-like-this: top-k similar docs via top-tfidf expansion
     "more_like_this" -> ((s, dir) => {
-      val indexDir = "/tmp/graft/index_" + dir.replaceAll("[^A-Za-z0-9.]", "_")
-      Index.build(s, dir, indexDir)
-      new QueryEngine(s, Seq(indexDir)).moreLikeThisAll()
+      val eng = open(s, dir)
+      ranked(Bm25.MltSources.map(src => src -> eng.moreLikeThis(src)), key = "src")
     }),
 
     // -- index metadata surface, cross-gated against corpus truth
-    "index_stats" -> ((s, dir) => {
-      val indexDir = "/tmp/graft/index_" + dir.replaceAll("[^A-Za-z0-9.]", "_")
-      Index.build(s, dir, indexDir)
-      new QueryEngine(s, Seq(indexDir)).indexStats()
-    }),
+    "index_stats" -> ((s, dir) => open(s, dir).indexStats()),
 
     // -- total-hits counts per query (AND + OR), no scoring
-    "match_counts" -> ((s, dir) => indexedMatchCounts(s, dir)),
+    "match_counts" -> ((s, dir) => {
+      val eng = open(s, dir)
+      table(s, "query", "n_docs", "n_docs_or")(Bm25.QuerySet.map { case (qid, q) =>
+        (qid, eng.countMatches(q), eng.countMatches(q, orMode = true)) })
+    }),
 
-    // -- per-facet hit counts (facet-navigation sidebar)
-    "facet_counts" -> ((s, dir) => indexedFacetCounts(s, dir)),
+    // -- per-facet hit counts (facet-navigation sidebar, "lang:en
+    //    (1,234)"): one gated count per (query, lang), each facet gate
+    //    prepared once from the index's own keyword doc-values and
+    //    reused across all queries; zero-hit facet values omitted
+    //    (matching the SQL twin's inner join)
+    "facet_counts" -> ((s, dir) => {
+      val eng = open(s, dir)
+      val facets = eng.facetValues("lang").map(l => l -> eng.prepareKeywordFacet("lang", l))
+      table(s, "query", "lang", "n_docs")(for {
+        (qid, q) <- Bm25.QuerySet
+        (lang, facet) <- facets
+        n = eng.countMatchesFiltered(q, facet)
+        if n > 0
+      } yield (qid, lang, n))
+    }),
 
-    // -- per-length-bucket match histogram (one-pass grouped counting)
-    "len_histogram" -> ((s, dir) => indexedLenHistogram(s, dir)),
+    // -- per-length-bucket match histogram: B buckets from ONE
+    //    grouped-counting kernel pass per query, not B gated counts
+    "len_histogram" -> ((s, dir) => {
+      val eng = open(s, dir)
+      val groups = eng.prepareLenGroups(Bm25.HistogramWidth)
+      table(s, "query", "bucket", "n_docs")(Bm25.QuerySet.flatMap { case (qid, q) =>
+        eng.lenHistogram(q, groups).map { case (b, n) => (qid, b, n) } })
+    }),
+    // -- ES `range` aggregation at Bm25.RangeBounds on the same kernel
     "len_ranges" -> ((s, dir) => {
-      val indexDir = "/tmp/graft/index_" + dir.replaceAll("[^A-Za-z0-9.]", "_")
-      Index.build(s, dir, indexDir)
-      new QueryEngine(s, Seq(indexDir)).lenRangesAll()
+      val eng = open(s, dir)
+      val groups = eng.prepareLenRangeGroups(Bm25.RangeBounds)
+      table(s, "query", "lo", "n_docs")(Bm25.QuerySet.flatMap { case (qid, q) =>
+        eng.lenHistogram(q, groups).map { case (b, n) => (qid, b.toLong, n) } })
     }),
     "match_docs" -> ((s, dir) => {
-      val indexDir = "/tmp/graft/index_" + dir.replaceAll("[^A-Za-z0-9.]", "_")
-      Index.build(s, dir, indexDir)
-      new QueryEngine(s, Seq(indexDir)).matchDocsAll()
+      val eng = open(s, dir)
+      stacked(Bm25.QuerySet.map { case (qid, q) => qid -> eng.matchDocs(q) },
+        "query", "docID")
     }),
     "len_percentile_ranks" -> ((s, dir) => {
-      val indexDir = "/tmp/graft/index_" + dir.replaceAll("[^A-Za-z0-9.]", "_")
-      Index.build(s, dir, indexDir)
-      new QueryEngine(s, Seq(indexDir)).lenPercentileRanksAll()
+      val eng = open(s, dir)
+      table(s, "query", "value", "frac")(Bm25.QuerySet.flatMap { case (qid, q) =>
+        eng.lenPercentileRanks(q).map { case (v, f) => (qid, v, f) } })
     }),
 
     // -- exact nearest-rank len percentiles of each match set (ES
     //    percentiles agg; value-distribution resolve, no global sort)
     "len_percentiles" -> ((s, dir) => {
-      val indexDir = "/tmp/graft/index_" + dir.replaceAll("[^A-Za-z0-9.]", "_")
-      Index.build(s, dir, indexDir)
-      new QueryEngine(s, Seq(indexDir)).lenPercentilesAll()
+      val eng = open(s, dir)
+      table(s, "query", "p", "len")(Bm25.QuerySet.flatMap { case (qid, q) =>
+        eng.lenPercentilesRelational(q).map { case (p, l) => (qid, p, l) } })
     }),
 
     // -- ES stats + cardinality bundle over the match set (artifact-side)
     "match_stats" -> ((s, dir) => {
-      val indexDir = "/tmp/graft/index_" + dir.replaceAll("[^A-Za-z0-9.]", "_")
-      Index.build(s, dir, indexDir)
-      new QueryEngine(s, Seq(indexDir)).matchStatsAll()
+      val eng = open(s, dir)
+      table(s, "query", "n_docs", "n_langs", "min_len", "max_len", "avg_len")(
+        Bm25.QuerySet.flatMap { case (qid, q) =>
+          eng.matchStats(q).map { case (n, l, lo, hi, avg) => (qid, n, l, lo, hi, avg) }
+        })
     }),
 
     // -- fuzzy BM25: Levenshtein-1 dictionary expansion, OR semantics
     "bm25_fuzzy_oracle" -> ((s, dir) => Bm25.oracleFuzzyTopK(s, dir)),
-    "bm25_fuzzy_indexed" -> ((s, dir) => indexedFuzzyTopK(s, dir)),
+    "bm25_fuzzy_indexed" -> ((s, dir) => {
+      val eng = open(s, dir)
+      ranked(Bm25.FuzzyQuerySet.map { case (qid, q) => qid -> eng.topKFuzzy(q, rounded = true) })
+    }),
 
     // -- wildcard BM25: *frag* contains dictionary expansion, OR semantics
     "bm25_wildcard_oracle" -> ((s, dir) => Bm25.oracleWildcardTopK(s, dir)),
-    "bm25_wildcard_indexed" -> ((s, dir) => indexedWildcardTopK(s, dir)),
+    "bm25_wildcard_indexed" -> ((s, dir) => {
+      val eng = open(s, dir)
+      ranked(Bm25.WildcardQuerySet.map { case (qid, f) =>
+        qid -> eng.topKWildcard(f, rounded = true) })
+    }),
 
     // -- regexp BM25: full-match dictionary expansion, OR semantics
     "bm25_regex_oracle" -> ((s, dir) => Bm25.oracleRegexTopK(s, dir)),
-    "bm25_regex_indexed" -> ((s, dir) => indexedRegexTopK(s, dir)),
+    "bm25_regex_indexed" -> ((s, dir) => {
+      val eng = open(s, dir)
+      ranked(Bm25.RegexQuerySet.map { case (qid, p) => qid -> eng.topKRegex(p, rounded = true) })
+    }),
 
     // -- ES /termvectors parity: per-doc (term, tf, df) from the
     //    index's own artifacts, cross-gated against corpus truth
-    "term_vectors" -> ((s, dir) => {
-      val indexDir = "/tmp/graft/index_" + dir.replaceAll("[^A-Za-z0-9.]", "_")
-      Index.build(s, dir, indexDir)
-      new QueryEngine(s, Seq(indexDir)).termVectorsAll()
-    }),
+    "term_vectors" -> ((s, dir) => open(s, dir).termVectors(Bm25.TermVectorDocs)),
 
     // -- proximity (window) BM25: all terms within w consecutive tokens
     "bm25_window_oracle" -> ((s, dir) => Bm25.oracleWindowTopK(s, dir)),
-    "bm25_window_indexed" -> ((s, dir) => indexedWindowTopK(s, dir)),
+    "bm25_window_indexed" -> ((s, dir) => {
+      val eng = open(s, dir, Positional)
+      ranked(Bm25.WindowQuerySet.map { case (qid, q, w) =>
+        qid -> eng.topKWindow(q, w, rounded = true) })
+    }),
 
-    // -- faceted exact-phrase BM25: lang-gated phrase results
+    // -- faceted exact-phrase BM25: lang-gated phrase results (gate
+    //    checked before the adjacency test; one facet for the set)
     "bm25_phrase_filtered_oracle" -> ((s, dir) =>
       Bm25.oraclePhraseTopK(s, dir, langFilter = "en")),
-    "bm25_phrase_filtered" -> ((s, dir) =>
-      indexedPhraseTopKFiltered(s, dir, "en")),
+    "bm25_phrase_filtered" -> ((s, dir) => {
+      val eng = open(s, dir, Positional)
+      val facet = eng.prepareKeywordFacet("lang", "en")
+      ranked(Bm25.PhraseQuerySet.map { case (qid, q) =>
+        qid -> eng.topKPhraseFiltered(q, facet, Bm25.K, rounded = true) })
+    }),
 
     // -- reference LIKE-substring parity (SURVEY §2.4 P8 / §2.7 O3)
     "substring_search" -> ((s, dir) => SubstringSearch.searchAll(s, dir)),

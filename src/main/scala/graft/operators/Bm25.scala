@@ -1586,8 +1586,8 @@ object Bm25 {
     * its `term^w` weight before the fixed-order sum. */
   def oracleSqlBoostedTopK(k: Int = K): String = searchBoxSql(BoostQuerySet, k)
 
-  /** DuckDB twin of [[oracleGroupedTopK]] (and of the engine's
-    * `searchGroupedAll`): rank partitioned by the doc's lang. */
+  /** DuckDB twin of [[oracleGroupedTopK]] (and of the `search_grouped`
+    * entry): rank partitioned by the doc's lang. */
   def oracleSqlGroupedTopK(n: Int = 3): String = {
     val base =
       s"""WITH tok AS (
@@ -1717,7 +1717,7 @@ object Bm25 {
     s"$base\nSELECT * FROM (\n$perQuery\n) ORDER BY query, rank"
   }
 
-  /** DuckDB twin of `QueryEngine.suggestAll`: per fixed prefix, the
+  /** DuckDB twin of the `suggest_terms` entry: per fixed prefix, the
     * top-m dictionary terms starting with it by (df desc, term asc) —
     * document frequency straight off the tokenization CTE. */
   def suggestSql(m: Int = 8): String = {
@@ -1741,7 +1741,7 @@ object Bm25 {
     s"$base\nSELECT * FROM (\n$perPrefix\n) ORDER BY query, rank"
   }
 
-  /** DuckDB twin of `QueryEngine.explainScoresAll`: the AND twin's
+  /** DuckDB twin of the `explain_scores` entry: the AND twin's
     * ranked top-k joined back to the per-(doc, term) scored rows, so
     * every (tf, df, contrib) ingredient is re-derived from the raw
     * corpus and cross-gates the engine's index-side point read. */
@@ -1805,7 +1805,7 @@ object Bm25 {
     ("d05", "the"),
   )
 
-  /** DuckDB twin of `QueryEngine.didYouMeanAll`: per input term, the
+  /** DuckDB twin of the `did_you_mean` entry: per input term, the
     * max-df dictionary term within Levenshtein distance 1 (ties term
     * asc), '' / 0 when none — `levenshtein` is a DuckDB built-in with
     * unit-cost edits, same metric as the engine's expansion. */
@@ -2049,7 +2049,7 @@ object Bm25 {
     s"$base\nSELECT * FROM (\n$perQuery\n) ORDER BY query, rank"
   }
 
-  /** DuckDB twin of `QueryEngine.moreLikeThisAll`: per source doc, the
+  /** DuckDB twin of the `more_like_this` entry: per source doc, the
     * top-t terms by round4(tf·idf) (term-asc ties), then OR-mode BM25
     * over that data-dependent expansion — the ordered `list_reduce`
     * fold, source doc excluded before ranking. */
@@ -2105,7 +2105,7 @@ object Bm25 {
   }
 
   /** DuckDB twin of the engine's total-hits counts
-    * (`QueryEngine.matchCountsAll`): per query, the number of docs
+    * (the `match_counts` entry): per query, the number of docs
     * containing ALL terms (AND) and ANY term (OR) — pure relational
     * counting over the tf CTE, no scoring involved. */
   def oracleSqlMatchCounts(): String = {
@@ -2131,7 +2131,7 @@ object Bm25 {
   }
 
   /** DuckDB twin of the engine's per-facet hit counts
-    * (`SparkEntry.indexedFacetCounts`): per query, matching docs grouped
+    * (the `facet_counts` entry): per query, matching docs grouped
     * by lang — facet values with zero hits are absent on both sides. */
   def oracleSqlFacetCounts(): String = {
     val base =
@@ -2197,7 +2197,7 @@ object Bm25 {
     s"$base\nSELECT * FROM (\n$perQuery\n) ORDER BY query, rank"
   }
 
-  /** DuckDB twin of `QueryEngine.lenHistogramAll`: per AND query, the
+  /** DuckDB twin of the `len_histogram` entry: per AND query, the
     * matching docs bucketed by ⌊len/width⌋ — zero buckets absent on
     * both sides, bucket ascending. The absent-term query (q05)
     * contributes no rows (HAVING can never reach the term count). */
@@ -2226,9 +2226,8 @@ object Bm25 {
     s"$base\nSELECT * FROM (\n$perQuery\n) ORDER BY query, bucket"
   }
 
-  /** DuckDB twin of the `len_percentile_ranks` entry
-    * (QueryEngine.lenPercentileRanksAll): fraction of each match set
-    * with len ≤ each probe value — exact-integer count over
+  /** DuckDB twin of the `len_percentile_ranks` entry: fraction of each
+    * match set with len ≤ each probe value — exact-integer count over
     * exact-integer total, one round4 division. */
   def oracleSqlLenPercentileRanks(values: Seq[Long]): String = {
     val base =
@@ -2257,7 +2256,7 @@ object Bm25 {
     s"$base\nSELECT * FROM (\n$perQuery\n) ORDER BY query, value"
   }
 
-  /** DuckDB twin of the `match_docs` entry (QueryEngine.matchDocsAll):
+  /** DuckDB twin of the `match_docs` entry:
     * the full AND match set per fixed query, docID-ordered — the
     * scroll/export contract re-derived from the corpus. */
   def oracleSqlMatchDocs(): String = {
@@ -2278,7 +2277,7 @@ object Bm25 {
     s"$base\nSELECT * FROM (\n$perQuery\n) ORDER BY query, docID"
   }
 
-  /** DuckDB twin of the `len_ranges` entry (QueryEngine.lenRangesAll):
+  /** DuckDB twin of the `len_ranges` entry:
     * the histogram twin with the floor-division bucket swapped for the
     * containing range's lower bound (CASE over descending bounds);
     * docs below the first bound drop out — ES range-agg semantics. */
@@ -2310,9 +2309,9 @@ object Bm25 {
     s"$base\nSELECT * FROM (\n$perQuery\n) ORDER BY query, lo"
   }
 
-  /** DuckDB twin of the `len_percentiles` entry (QueryEngine
-    * .lenPercentilesAll): exact nearest-rank — the len at sorted
-    * position ceil(p·cnt) of each match set, (len, docID)-ordered.
+  /** DuckDB twin of the `len_percentiles` entry: exact nearest-rank —
+    * the len at sorted position ceil(p·cnt) of each match set, (len,
+    * docID)-ordered.
     * The rank product is the same IEEE double on both engines, so both
     * land on the same position. The twin may use a plain row_number
     * (DuckDB is single-node); the engine resolves the rank from the
@@ -2351,7 +2350,7 @@ object Bm25 {
     s"$base,\n$ordCtes\nSELECT * FROM (\n$perCell\n) ORDER BY query, p"
   }
 
-  /** DuckDB twin of the `match_stats` entry (QueryEngine.matchStatsAll):
+  /** DuckDB twin of the `match_stats` entry:
     * the same integer min/max/sum + exact distinct-lang count over the
     * match set, one final rounded division. */
   def oracleSqlMatchStats(): String = {
@@ -2471,7 +2470,7 @@ object Bm25 {
     s"$base\nSELECT * FROM (\n$perQuery\n) ORDER BY query, rank"
   }
 
-  /** DuckDB twin of `QueryEngine.termVectorsAll`: the per-doc term
+  /** DuckDB twin of the `term_vectors` entry: the per-doc term
     * vector re-derived from the corpus — what the index's stage-1 tf +
     * dictionary artifacts must agree with row-for-row. */
   def oracleSqlTermVectors(ids: Seq[Long] = TermVectorDocs): String = {

@@ -1010,7 +1010,7 @@ object QueryEngine {
   * quotient baked against a stale avgdl. */
 final class QueryEngine(
     spark: SparkSession,
-    indexDirs: Seq[String],
+    private[graft] val indexDirs: Seq[String],
     numRanges: Int = 32,
     broadcastNormsUpTo: Long = 40_000_000L,
     dictCacheUpTo: Long = 1_000_000L,
@@ -1229,32 +1229,6 @@ final class QueryEngine(
   private[graft] def gateBroadcast(arr: Array[Long]): Broadcast[Array[Long]] =
     gateBcCache.get(new GateKey(arr), () => spark.sparkContext.broadcast(arr))
 
-  /** Resolve a caller-supplied allowed-docID frame into one of the three
-    * filter shapes, cheapest first:
-    *   1. allowed set ≤ cap → broadcast gate over the sorted allowed ids;
-    *   2. complement ≤ cap → broadcast NEGATED gate over the sorted
-    *      disallowed ids (near-universal filters, e.g. lang != rare);
-    *   3. both sides over cap → exact score-all + semi-join postFilter.
-    * Returns (gateBc, negate, postFilter); exactly one of gateBc /
-    * postFilter is non-null. */
-  private def resolveFilter(allowedDocs: DataFrame):
-      (org.apache.spark.broadcast.Broadcast[Array[Long]], Boolean, DataFrame) = {
-    val ids = allowedDocs.select(col("docID").cast("long").as("docID")).distinct()
-    val cap = filterBroadcastUpTo
-    val take = ids.as[Long].take(cap + 1)
-    if (take.length <= cap) {
-      java.util.Arrays.sort(take)
-      (gateBroadcast(take), false, null)
-    } else {
-      val dis = allDocStats.map(_.docID).toDF("docID")
-        .except(ids).as[Long].take(cap + 1)
-      if (dis.length <= cap) {
-        java.util.Arrays.sort(dis)
-        (gateBroadcast(dis), true, null)
-      } else (null, false, ids)
-    }
-  }
-
   /** A resolved filter, reusable across queries: resolving costs one
     * Spark job (the distinct+take over the allowed frame), so callers
     * serving many queries against the same facet prepare it ONCE and
@@ -1265,10 +1239,27 @@ final class QueryEngine(
       private[QueryEngine] val negate: Boolean,
       private[QueryEngine] val postFilter: DataFrame)
 
-  /** Resolve `allowedDocs` into a reusable [[Facet]] handle. */
+  /** Resolve `allowedDocs` into a reusable [[Facet]] handle of one of
+    * the three filter shapes, cheapest first:
+    *   1. allowed set ≤ cap → broadcast gate over the sorted allowed ids;
+    *   2. complement ≤ cap → broadcast NEGATED gate over the sorted
+    *      disallowed ids (near-universal filters, e.g. lang != rare);
+    *   3. both sides over cap → exact score-all + semi-join postFilter. */
   def prepareFilter(allowedDocs: DataFrame): Facet = {
-    val (g, neg, post) = resolveFilter(allowedDocs)
-    new Facet(g, neg, post)
+    val ids = allowedDocs.select(col("docID").cast("long").as("docID")).distinct()
+    val cap = filterBroadcastUpTo
+    val take = ids.as[Long].take(cap + 1)
+    if (take.length <= cap) {
+      java.util.Arrays.sort(take)
+      new Facet(gateBroadcast(take), false, null)
+    } else {
+      val dis = allDocStats.map(_.docID).toDF("docID")
+        .except(ids).as[Long].take(cap + 1)
+      if (dis.length <= cap) {
+        java.util.Arrays.sort(dis)
+        new Facet(gateBroadcast(dis), true, null)
+      } else new Facet(null, false, ids)
+    }
   }
 
   /** Resolve a DENIED-docID frame into a negated-gate [[Facet]] —
@@ -1377,14 +1368,6 @@ final class QueryEngine(
       .sortBy(r => (r._1, r._2))
       .map { case (g, r, d, s) => Row(g, r, d, s) }, GroupedSchema)
   }
-
-  /** Driver-contract frame over the fixed grouped query set
-    * ([[Bm25.GroupedQuerySet]]): (query, grp, rank, docID, score). */
-  def searchGroupedAll(groups: Groups, n: Int = 3): DataFrame =
-    Bm25.GroupedQuerySet.map { case (qid, q) =>
-      searchGroupedTopK(q, groups, n).select(lit(qid).as("query"),
-        col("grp"), col("rank"), col("docID"), col("score"))
-    }.reduce(_ unionAll _).orderBy(col("query"), col("grp"), col("rank"))
 
   /** Filtered top-k: BM25 top-k restricted to `allowedDocs` (any frame
     * with a docID column — e.g. `Corpus.docs(...).filter(lang === "de")
@@ -1762,8 +1745,7 @@ final class QueryEngine(
     * `^(?:pat)$`, a codegen'd row filter like the wildcard scan; an
     * infix regex has no sortable prefix to push down, the honest
     * fuzzy-lookup cost). Patterns should stay in the java/RE2 shared
-    * construct subset when a DuckDB twin is in play
-    * ([[Bm25.RegexQuerySet]]). */
+    * construct subset when a DuckDB twin is in play. */
   def expandRegex(pattern: String, cap: Int = 64): Seq[String] = {
     require(pattern.nonEmpty, "empty pattern")
     // user-facing guard rail (ADVICE r4): a malformed pattern fails with
@@ -1806,13 +1788,6 @@ final class QueryEngine(
     else topKImpl(terms.mkString(" "), k, rounded, orMode = true)
   }
 
-  /** Driver-contract frame over the fixed FUZZY query set
-    * ([[Bm25.FuzzyQuerySet]]): (query, rank, docID, score), rounded. */
-  def topKAllFuzzy(k: Int = Bm25.K): DataFrame =
-    contractFrame(Bm25.FuzzyQuerySet.map { case (qid, q) =>
-      qid -> topKFuzzy(q, k, rounded = true)
-    })
-
   /** Prefix retrieval: the prefix expands to every dictionary term
     * starting with it ([[expandPrefix]]) and runs with OR semantics over
     * the expansion — score = ordered sum of the contributions of the
@@ -1825,13 +1800,6 @@ final class QueryEngine(
     if (terms.isEmpty) frame(Nil)
     else topKImpl(terms.mkString(" "), k, rounded, orMode = true)
   }
-
-  /** Driver-contract frame over the fixed PREFIX query set
-    * ([[Bm25.PrefixQuerySet]]): (query, rank, docID, score), rounded. */
-  def topKAllPrefix(k: Int = Bm25.K): DataFrame =
-    contractFrame(Bm25.PrefixQuerySet.map { case (qid, prefix) =>
-      qid -> topKPrefix(prefix, k, rounded = true)
-    })
 
   /** Wildcard (contains) retrieval: the fragment expands to every
     * dictionary term containing it ([[expandContains]]) and runs with
@@ -1846,13 +1814,6 @@ final class QueryEngine(
     else topKImpl(terms.mkString(" "), k, rounded, orMode = true)
   }
 
-  /** Driver-contract frame over the fixed WILDCARD query set
-    * ([[Bm25.WildcardQuerySet]]): (query, rank, docID, score), rounded. */
-  def topKAllWildcard(k: Int = Bm25.K): DataFrame =
-    contractFrame(Bm25.WildcardQuerySet.map { case (qid, frag) =>
-      qid -> topKWildcard(frag, k, rounded = true)
-    })
-
   /** Regexp retrieval (Lucene RegexpQuery): the pattern expands to its
     * full-match dictionary neighborhood ([[expandRegex]]) and runs with
     * OR semantics over the expansion — identical scoring/path story to
@@ -1865,13 +1826,6 @@ final class QueryEngine(
     if (terms.isEmpty) frame(Nil)
     else topKImpl(terms.mkString(" "), k, rounded, orMode = true)
   }
-
-  /** Driver-contract frame over the fixed REGEXP query set
-    * ([[Bm25.RegexQuerySet]]): (query, rank, docID, score), rounded. */
-  def topKAllRegex(k: Int = Bm25.K): DataFrame =
-    contractFrame(Bm25.RegexQuerySet.map { case (qid, pat) =>
-      qid -> topKRegex(pat, k, rounded = true)
-    })
 
   /** Autocomplete: the top-m dictionary completions of `prefix` by
     * (df desc, term asc) — the suggest-as-you-type surface. Rides
@@ -1886,17 +1840,6 @@ final class QueryEngine(
     terms.map(t => t -> dfs.getOrElse(t, 0L))
       .sortBy { case (t, d) => (-d, t) }.take(m)
   }
-
-  /** Driver-contract frame over the fixed PREFIX query set:
-    * (query, rank, term, df) — completions ranked by document frequency.
-    * An absent prefix (x04) contributes no rows. */
-  def suggestAll(m: Int = 8): DataFrame =
-    Bm25.PrefixQuerySet.flatMap { case (qid, prefix) =>
-      suggest(prefix, m).zipWithIndex.map { case ((t, d), i) =>
-        (qid, i + 1, t, d)
-      }
-    }.toDF("query", "rank", "term", "df")
-      .orderBy(col("query"), col("rank"))
 
   /** Spell suggestion ("did you mean"): per analyzer token of `qtext`,
     * the dictionary term within Levenshtein distance `maxDist` with the
@@ -1919,15 +1862,6 @@ final class QueryEngine(
         (t, best, d)
       }
     }
-
-  /** Driver-contract frame over the fixed did-you-mean query set
-    * ([[Bm25.DidYouMeanQuerySet]]): (query, term, suggestion, sugg_df),
-    * one row per input term, ordered (query, term). */
-  def didYouMeanAll(): DataFrame =
-    Bm25.DidYouMeanQuerySet.flatMap { case (qid, q) =>
-      didYouMean(q).map { case (t, s, d) => (qid, t, s, d) }
-    }.toDF("query", "term", "suggestion", "sugg_df")
-      .orderBy(col("query"), col("term"))
 
   /** Score explanation (the relevance-debugging surface): for each of
     * the query's top-k docs, one row per query term with the raw
@@ -1964,16 +1898,6 @@ final class QueryEngine(
     }, ExplainSchema).orderBy(col("rank"), col("term"))
   }
 
-  /** Driver-contract frame over the fixed AND query set
-    * ([[Bm25.QuerySet]]): (query, rank, docID, term, tf, df, contrib) —
-    * the per-term breakdown of every top-k hit. Absent-term q05
-    * contributes no rows. */
-  def explainScoresAll(k: Int = Bm25.K): DataFrame =
-    Bm25.QuerySet.map { case (qid, q) =>
-      explainScores(q, k).select(lit(qid).as("query"), col("rank"),
-        col("docID"), col("term"), col("tf"), col("df"), col("contrib"))
-    }.reduce(_ unionAll _).orderBy(col("query"), col("rank"), col("term"))
-
   /** ES /termvectors parity: the per-doc term vector — (docID, term,
     * tf, df) for each requested doc — from the INDEX's own artifacts:
     * stage-1 tf rows by docID-pushdown point read (as
@@ -1998,10 +1922,6 @@ final class QueryEngine(
       .orderBy(col("docID"), col("term"))
   }
 
-  /** Driver-contract frame: [[termVectors]] over the fixed
-    * [[Bm25.TermVectorDocs]] fixture ids. */
-  def termVectorsAll(): DataFrame = termVectors(Bm25.TermVectorDocs)
-
   /** More-like-this: the top-k docs most similar to `srcDoc`, by BM25
     * over the source doc's top-`t` tf·idf terms (the classic Lucene MLT
     * recipe). Term selection reads the source doc's rows from the
@@ -2025,19 +1945,6 @@ final class QueryEngine(
       .filter(col("docID") =!= srcDoc)
       .orderBy(col("score").desc, col("docID").asc)
       .limit(k)
-  }
-
-  /** Driver-contract frame over the fixed source-doc set: for each
-    * source, (src, rank, docID, score) of its k most similar docs. */
-  def moreLikeThisAll(k: Int = Bm25.K): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    Bm25.MltSources.map { src =>
-      moreLikeThis(src, k)
-        .withColumn("rank",
-          row_number().over(Window.orderBy(col("score").desc, col("docID").asc))
-            .cast("int"))
-        .select(lit(src).as("src"), col("rank"), col("docID"), col("score"))
-    }.reduce(_ unionAll _).orderBy(col("src"), col("rank"))
   }
 
   /** (term, df) over the whole index — the background document-frequency
@@ -2113,13 +2020,6 @@ final class QueryEngine(
     }
   }
 
-  /** Driver-contract frame over the fixed query set: (query, n_docs,
-    * n_docs_or) — AND and OR total-hit counts per query. */
-  def matchCountsAll(): DataFrame =
-    Bm25.QuerySet.map { case (qid, q) =>
-      (qid, countMatches(q), countMatches(q, orMode = true))
-    }.toDF("query", "n_docs", "n_docs_or").orderBy(col("query"))
-
   /** Doc-values RANGE facet — the search-service `len:[lo TO hi]`
     * numeric filter: the allowed set comes from the index's OWN
     * docStats doc-values column, no corpus join (Lucene's points/
@@ -2169,11 +2069,6 @@ final class QueryEngine(
       .filter(col("field") === field)
       .select(col("value")).distinct().as[String].collect().sorted.toSeq
   }
-
-  /** `lang` convenience wrappers over the per-field resolver. */
-  def prepareLangFacet(lang: String): Facet = prepareKeywordFacet("lang", lang)
-  def langFacetDocs(lang: String): DataFrame = keywordFacetDocs("lang", lang)
-  def langFacetValues(): Seq[String] = facetValues("lang")
 
   /** Doc→length-bucket [[Groups]] for [[lenHistogram]]: bucket =
     * ⌊len/width⌋ over the index's own docStats doc-values column,
@@ -2239,17 +2134,6 @@ final class QueryEngine(
       .orderBy(col("bucket"))
   }
 
-  /** Driver-contract frame over the fixed AND query set: (query,
-    * bucket, n_docs) — the per-length-bucket match histogram, zero
-    * buckets omitted, bucket width [[Bm25.HistogramWidth]]. The bucket
-    * groups are prepared once and every query reuses them. */
-  def lenHistogramAll(width: Int = Bm25.HistogramWidth): DataFrame = {
-    val groups = prepareLenGroups(width)
-    Bm25.QuerySet.flatMap { case (qid, q) =>
-      lenHistogram(q, groups).map { case (b, n) => (qid, b, n) }
-    }.toDF("query", "bucket", "n_docs").orderBy(col("query"), col("bucket"))
-  }
-
   /** Distributed match-set EXPORT — the ES scroll / point-in-time
     * export, and the bridge from retrieval to the training-data tier
     * ("all docs matching q" as a frame feeding a curation step): the
@@ -2270,13 +2154,6 @@ final class QueryEngine(
     else tf.groupBy(col("docID")).agg(count(lit(1)).as("nt"))
       .filter(col("nt") === terms.size).select(col("docID"))
   }
-
-  /** Driver-contract frame over the fixed AND query set: (query,
-    * docID) — every match of every query, docID-ordered per query. */
-  def matchDocsAll(): DataFrame =
-    Bm25.QuerySet.map { case (qid, q) =>
-      matchDocs(q).select(lit(qid).as("query"), col("docID"))
-    }.reduce(_ unionAll _).orderBy(col("query"), col("docID"))
 
   /** Doc→range [[Groups]] for the ES `range` AGGREGATION (custom bucket
     * boundaries, vs [[prepareLenGroups]]'s fixed width): ascending
@@ -2324,19 +2201,6 @@ final class QueryEngine(
       .orderBy(col("lo"))
   }
 
-  /** Driver-contract frame over the fixed AND query set: (query, lo,
-    * n_docs) — the ES `range` aggregation of each match set over the
-    * len doc-values column at the [[Bm25.RangeBounds]] boundaries.
-    * Rides [[lenHistogram]]'s grouped-counting kernel unchanged (ONE
-    * sweep counts all ranges; pooled shards add elementwise); the
-    * range groups are prepared once and every query reuses them. */
-  def lenRangesAll(bounds: Seq[Long] = Bm25.RangeBounds): DataFrame = {
-    val groups = prepareLenRangeGroups(bounds)
-    Bm25.QuerySet.flatMap { case (qid, q) =>
-      lenHistogram(q, groups).map { case (b, n) => (qid, b.toLong, n) }
-    }.toDF("query", "lo", "n_docs").orderBy(col("query"), col("lo"))
-  }
-
   /** EXACT length percentiles of a query's match set — the ES
     * `percentiles` aggregation over a doc-values column, computed
     * nearest-rank (the len at sorted position ceil(p·cnt); IEEE
@@ -2375,14 +2239,6 @@ final class QueryEngine(
     }
   }
 
-  /** Driver-contract frame over the fixed AND query set: (query, p,
-    * len) — exact nearest-rank length percentiles of each match set;
-    * a query with no matches contributes no rows. */
-  def lenPercentilesAll(): DataFrame =
-    Bm25.QuerySet.flatMap { case (qid, q) =>
-      lenPercentilesRelational(q).map { case (p, l) => (qid, p, l) }
-    }.toDF("query", "p", "len").orderBy(col("query"), col("p"))
-
   /** EXACT percentile RANKS — the inverse of [[lenPercentilesRelational]]
     * (the ES `percentile_ranks` aggregation): for each probe value v,
     * the fraction of the match set with len ≤ v, round4. Same scale
@@ -2408,44 +2264,33 @@ final class QueryEngine(
     }
   }
 
-  /** Driver-contract frame over the fixed AND query set: (query,
-    * value, frac) — percentile ranks of each match set at the fixed
-    * probe values; a query with no matches contributes no rows. */
-  def lenPercentileRanksAll(): DataFrame =
-    Bm25.QuerySet.flatMap { case (qid, q) =>
-      lenPercentileRanks(q).map { case (v, f) => (qid, v, f) }
-    }.toDF("query", "value", "frac").orderBy(col("query"), col("value"))
-
   /** Match-set stats bundle — the ES `stats` + `cardinality`
-    * aggregations over the doc-values columns: per fixed AND query,
-    * (n_docs, n_langs, min_len, max_len, avg_len) where n_langs is the
-    * exact distinct count of the keyword doc-values column and avg_len
-    * = round4(Σlen / n). Entirely artifact-side (term-pruned tf +
-    * docstats + docvals) — the corpus is never read; every aggregate
-    * is an integer min/max/sum or an exact distinct over the tiny
-    * keyword domain, so cross-engine FP parity is trivial (one final
-    * division). A query with no matches contributes no row. */
-  def matchStatsAll(): DataFrame = {
+    * aggregations over the doc-values columns: (n_docs, n_langs,
+    * min_len, max_len, avg_len) of the query's AND match set, where
+    * n_langs is the exact distinct count of the keyword doc-values
+    * column and avg_len = round4(Σlen / n). Entirely artifact-side
+    * (term-pruned tf + docstats + docvals) — the corpus is never read;
+    * every aggregate is an integer min/max/sum or an exact distinct over
+    * the tiny keyword domain, so cross-engine FP parity is trivial (one
+    * final division). None when nothing matches. */
+  def matchStats(qtext: String): Option[(Long, Long, Long, Long, Double)] = {
     val docvals = indexDirs.map(d => Index.readDocVals(spark, d))
       .reduce(_ unionAll _)
       .filter(col("field") === "lang")
       .select(col("docID"), col("value").as("lang"))
-    Bm25.QuerySet.flatMap { case (qid, q) =>
-      val row = matchDocs(q)
-        .join(allDocStats.select(col("docID"), col("len")), "docID")
-        .join(docvals, "docID")
-        .agg(count(lit(1)).as("n_docs"),
-          countDistinct(col("lang")).as("n_langs"),
-          min(col("len")).as("min_len"),
-          max(col("len")).as("max_len"),
-          round(sum(col("len")).cast("double") / count(lit(1)), 4)
-            .as("avg_len"))
-        .collect()(0)
-      if (row.getLong(0) == 0L) Nil
-      else Seq((qid, row.getLong(0), row.getLong(1), row.getLong(2),
-        row.getLong(3), row.getDouble(4)))
-    }.toDF("query", "n_docs", "n_langs", "min_len", "max_len", "avg_len")
-      .orderBy(col("query"))
+    val row = matchDocs(qtext)
+      .join(allDocStats.select(col("docID"), col("len")), "docID")
+      .join(docvals, "docID")
+      .agg(count(lit(1)).as("n_docs"),
+        countDistinct(col("lang")).as("n_langs"),
+        min(col("len")).as("min_len"),
+        max(col("len")).as("max_len"),
+        round(sum(col("len")).cast("double") / count(lit(1)), 4)
+          .as("avg_len"))
+      .collect()(0)
+    if (row.getLong(0) == 0L) None
+    else Some((row.getLong(0), row.getLong(1), row.getLong(2), row.getLong(3),
+      row.getDouble(4)))
   }
 
   /** Sort-by-field retrieval — the search-service "sort by a doc-values
@@ -2476,20 +2321,6 @@ final class QueryEngine(
     }
   }
 
-  /** Driver-contract frame over the fixed query set: (query, rank,
-    * docID, len) — per query, the k matching docs longest-first.
-    * Column-identical to the DuckDB twin ([[Bm25.oracleSqlSortedTopK]]). */
-  def sortedAll(k: Int = Bm25.K): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    Bm25.QuerySet.map { case (qid, q) =>
-      topKSortedByLen(q, k)
-        .withColumn("rank",
-          row_number().over(Window.orderBy(col("len").desc, col("docID").asc))
-            .cast("int"))
-        .select(lit(qid).as("query"), col("rank"), col("docID"), col("len"))
-    }.reduce(_ unionAll _).orderBy(col("query"), col("rank"))
-  }
-
   /** Top-k (docID, score) for a query string; AND semantics; empty
     * result if any term is absent (or the query has no terms). Score is
     * exact in exact mode, rounded to 4 decimals in rounded mode; order
@@ -2515,14 +2346,6 @@ final class QueryEngine(
     require(m >= 1, s"minimum-should-match must be >= 1, got $m")
     topKImpl(qtext, k, rounded, orMode = true, msm = m)
   }
-
-  /** Driver-contract frame over [[Bm25.MsmQuerySet]] (query, rank,
-    * docID, score) — column-identical to [[Bm25.oracleTopKMsm]] and its
-    * DuckDB SQL twin. */
-  def topKAllMsm(k: Int = Bm25.K): DataFrame =
-    contractFrame(Bm25.MsmQuerySet.map { case (qid, qtext, m) =>
-      qid -> topKImpl(qtext, k, rounded = true, orMode = true, msm = m)
-    })
 
   /** Search-after pagination: the k results ranked strictly AFTER the
     * cursor `(afterScore, afterDoc)` in (score desc, docID asc) order —
@@ -2566,15 +2389,6 @@ final class QueryEngine(
     topKImpl(pos.mkString(" "), k, rounded, orMode = true, negTerms = neg)
   }
 
-  /** Driver-contract shape over the fixed NOT query set
-    * ([[Bm25.NotQuerySet]]): (query, rank, docID, score), rounded. */
-  def topKAllNot(k: Int = Bm25.K): DataFrame =
-    contractFrame(Bm25.NotQuerySet.map { case (qid, q) =>
-      val (pos, neg) = Analyzer.signedTerms(q)
-      qid -> topKImpl(pos.mkString(" "), k, rounded = true, orMode = false,
-        negTerms = neg)
-    })
-
   /** Exact-phrase variant: docs containing the query tokens at
     * consecutive positions, BM25-scored over the distinct terms.
     * Requires an index built with storePositions=true. */
@@ -2593,13 +2407,6 @@ final class QueryEngine(
     require(w >= 1, s"window width must be >= 1, got $w")
     topKImpl(qtext, k, rounded, orMode = false, windowW = w)
   }
-
-  /** Driver-contract frame over the fixed WINDOW query set
-    * ([[Bm25.WindowQuerySet]]): (query, rank, docID, score), rounded. */
-  def topKAllWindow(k: Int = Bm25.K): DataFrame =
-    contractFrame(Bm25.WindowQuerySet.map { case (qid, qtext, w) =>
-      qid -> topKImpl(qtext, k, rounded = true, orMode = false, windowW = w)
-    })
 
   /** Faceted exact-phrase retrieval: [[topKPhrase]] restricted to
     * `allowedDocs`, same corpus-global scoring and filter-shape
@@ -2690,29 +2497,6 @@ final class QueryEngine(
     }
   }
 
-  /** Driver-contract frame over the fixed mixed search-box query set
-    * ([[Bm25.MixedQuerySet]]): (query, rank, docID, score), rounded. */
-  def searchAll(k: Int = Bm25.K): DataFrame =
-    contractFrame(Bm25.MixedQuerySet.map { case (qid, q) =>
-      qid -> search(q, k, rounded = true)
-    })
-
-  /** Driver-contract frame over the fixed field-faceted search-box set
-    * ([[Bm25.FieldQuerySet]]), resolving `field:value` pieces through
-    * the caller-supplied facet resolver. */
-  def searchFieldAll(fieldFacet: (String, String) => Facet,
-                     k: Int = Bm25.K): DataFrame =
-    contractFrame(Bm25.FieldQuerySet.map { case (qid, q) =>
-      qid -> search(q, k, rounded = true, fieldFacet = fieldFacet)
-    })
-
-  /** Driver-contract frame over the fixed boosted search-box set
-    * ([[Bm25.BoostQuerySet]] — `term^w` weighted queries). */
-  def searchBoostedAll(k: Int = Bm25.K): DataFrame =
-    contractFrame(Bm25.BoostQuerySet.map { case (qid, q) =>
-      qid -> search(q, k, rounded = true)
-    })
-
   private def topKImpl(qtext: String, k: Int, rounded: Boolean,
                        orMode: Boolean, phraseMode: Boolean = false,
                        // >0: proximity gate — all query terms within some
@@ -2787,21 +2571,6 @@ final class QueryEngine(
     }, k, rounded, postFilter)
   }
 
-  /** Driver-contract shape over the whole fixed query set:
-    * (query, rank, docID, score) with rounded ranking — column-identical
-    * to Bm25.oracleTopK / its DuckDB SQL twin. */
-  def topKAll(k: Int = Bm25.K, orMode: Boolean = false): DataFrame =
-    topKAllOver(Bm25.QuerySet, k, orMode)
-
-  /** [[topKAll]] over an arbitrary fixed query set — the fielded (BM25F)
-    * entry runs [[Bm25.FieldedQuerySet]] through the same kernels
-    * against its fielded index. */
-  def topKAllOver(querySet: Seq[(String, String)], k: Int = Bm25.K,
-                  orMode: Boolean = false): DataFrame =
-    contractFrame(querySet.map { case (qid, qtext) =>
-      qid -> topKImpl(qtext, k, rounded = true, orMode = orMode)
-    })
-
   /** Synonym-group retrieval (Lucene SynonymQuery semantics): `a|b`
     * pieces score as ONE pseudo-term — tf summed across members,
     * df = max member df — AND-composed with the query's other pieces.
@@ -2869,78 +2638,4 @@ final class QueryEngine(
           .orderBy(col("score").desc, col("docID").asc)
           .limit(k)
     }
-
-  /** Driver-contract frame over the fixed SYNONYM query set. */
-  def topKAllSyn(k: Int = Bm25.K): DataFrame =
-    contractFrame(Bm25.SynQuerySet.map { case (qid, qtext) =>
-      qid -> topKSyn(qtext, k)
-    })
-
-  /** Driver-contract frame for PAGE 2 of the fixed query set: for each
-    * query, page 1 (top k) supplies the cursor — its k-th (score, docID)
-    * — and [[topKAfter]] retrieves the next k. Ranks are GLOBAL
-    * (k+1 .. 2k). A query with fewer than k page-1 results has no page 2
-    * (∅ — nothing ranks after a short page 1 by definition). */
-  def topKAllPage2(k: Int = Bm25.K): DataFrame = {
-    contractFrame(Bm25.QuerySet.map { case (qid, qtext) =>
-      val page1 = topKImpl(qtext, k, rounded = true, orMode = false)
-        .collect().sortBy(r => (-r.getDouble(1), r.getLong(0)))
-      if (page1.length < k) qid -> frame(Nil)
-      else {
-        val last = page1.last
-        qid -> topKImpl(qtext, k, rounded = true, orMode = false,
-          afterScore = last.getDouble(1), afterDoc = last.getLong(0))
-      }
-    }, rankOffset = k)
-  }
-
-  /** Driver-contract frame over the fixed PHRASE query set. */
-  def topKAllPhrase(k: Int = Bm25.K): DataFrame =
-    contractFrame(Bm25.PhraseQuerySet.map { case (qid, qtext) =>
-      qid -> topKImpl(qtext, k, rounded = true, orMode = false, phraseMode = true)
-    })
-
-  /** Driver-contract frame over the fixed query set, every query
-    * restricted to `allowedDocs`. The filter resolves ONCE (one gate
-    * broadcast shared by all queries), not per query. */
-  def topKAllFiltered(allowedDocs: DataFrame, k: Int = Bm25.K,
-                      orMode: Boolean = false): DataFrame = {
-    val (g, neg, post) = resolveFilter(allowedDocs)
-    contractFrame(Bm25.QuerySet.map { case (qid, qtext) =>
-      qid -> topKImpl(qtext, k, rounded = true, orMode = orMode,
-        gateBc = g, gateNegate = neg, postFilter = post)
-    })
-  }
-
-  /** [[topKAllFiltered]] against a prepared [[Facet]] handle (e.g. the
-    * deny facet of [[prepareDeny]]) — no per-call filter resolve. */
-  def topKAllFiltered(facet: Facet, k: Int, orMode: Boolean): DataFrame =
-    contractFrame(Bm25.QuerySet.map { case (qid, qtext) =>
-      qid -> topKImpl(qtext, k, rounded = true, orMode = orMode,
-        gateBc = facet.gateBc, gateNegate = facet.negate,
-        postFilter = facet.postFilter)
-    })
-
-  /** Faceted twin of [[topKAllPhrase]]: the fixed PHRASE query set, every
-    * query restricted to `allowedDocs`; one filter resolve for the set. */
-  def topKAllPhraseFiltered(allowedDocs: DataFrame, k: Int = Bm25.K): DataFrame = {
-    val (g, neg, post) = resolveFilter(allowedDocs)
-    contractFrame(Bm25.PhraseQuerySet.map { case (qid, qtext) =>
-      qid -> topKImpl(qtext, k, rounded = true, orMode = false,
-        phraseMode = true, gateBc = g, gateNegate = neg, postFilter = post)
-    })
-  }
-
-  private def contractFrame(perQuery: Seq[(String, DataFrame)],
-                            // pagination: report GLOBAL ranks (page 2 of
-                            // a k-deep ranking ranks k+1 .. 2k)
-                            rankOffset: Int = 0): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    perQuery.map { case (qid, df) =>
-      df.withColumn("rank",
-          (row_number().over(Window.orderBy(col("score").desc, col("docID").asc))
-            + lit(rankOffset)).cast("int"))
-        .select(lit(qid).as("query"), col("rank"), col("docID"), col("score"))
-    }.reduce(_ unionAll _).orderBy(col("query"), col("rank"))
-  }
 }

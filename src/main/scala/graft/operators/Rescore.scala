@@ -74,7 +74,8 @@ object Rescore {
     * it — also what the bench times). */
   def rescoredAllWith(eng: QueryEngine, pr: DataFrame,
                       k: Int = Bm25.K): DataFrame =
-    blend(eng.topKAllOver(Bm25.QuerySet, WindowSize), pr, k)
+    blend(graft.SparkEntry.ranked(Bm25.QuerySet.map { case (qid, q) =>
+      qid -> eng.topK(q, WindowSize, rounded = true) }), pr, k)
 
   /** Brute-force twin of [[rescoredAll]]: stage 1 from the DataFrame
     * BM25 oracle instead of the index — the engine-independent Spark
@@ -87,7 +88,9 @@ object Rescore {
   /** DuckDB twin: the BM25 base CTEs + the PageRank CTE chain
     * ([[LinkGraph.oracleSql]]'s recurrence, prefixed `pr*` to avoid
     * colliding with the BM25 `stats`), then per query the top-window
-    * BM25 ranking joined to the rank vector and re-ranked blended. */
+    * BM25 ranking joined to the rank vector and re-ranked blended.
+    * `scored` and `prvec` are MATERIALIZED: every per-query subquery
+    * reads both, and inlined they are recomputed once per query. */
   def oracleSql(k: Int = Bm25.K): String = {
     val d = LinkGraph.Damping
     val iters = (1 to LinkGraph.Iterations).map { i =>
@@ -120,7 +123,7 @@ object Rescore {
          |  FROM dl
          |), dfr AS (
          |  SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY term
-         |), scored AS (
+         |), scored AS MATERIALIZED (
          |  SELECT tf.docID, tf.term,
          |         ln((stats.n - CAST(dfr.df AS DOUBLE) + 0.5) / (CAST(dfr.df AS DOUBLE) + 0.5) + 1.0)
          |           * (CAST(tf.tf AS DOUBLE) * 2.2)
@@ -146,7 +149,7 @@ object Rescore {
          |  SELECT prnodes.id, 1.0 / prstats.n AS r FROM prnodes CROSS JOIN prstats
          |),
          |$iters,
-         |prvec AS (
+         |prvec AS MATERIALIZED (
          |  SELECT id AS docID, round(r * prstats.n, 4) AS prs
          |  FROM pr${LinkGraph.Iterations} CROSS JOIN prstats
          |)""".stripMargin

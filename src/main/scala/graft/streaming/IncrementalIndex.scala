@@ -76,7 +76,7 @@ object IncrementalIndex {
     else None
 
   /** Deny [[QueryEngine.Facet]] over the live tombstones — pass to
-    * `topKFiltered`/`topKAllFiltered` to query with deletes applied.
+    * `topKFiltered` to query with deletes applied.
     * None when the index has no tombstones (query unfiltered). */
   def denyFacet(spark: SparkSession, baseDir: String,
                 engine: QueryEngine): Option[engine.Facet] =

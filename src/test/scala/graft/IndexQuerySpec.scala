@@ -27,6 +27,12 @@ class IndexQuerySpec extends AnyFunSuite {
   }
   private lazy val engine: QueryEngine = { built; new QueryEngine(spark, Seq(indexDir)) }
 
+  /** The ranked driver-contract frame of a fixed query set, one
+    * per-query engine call each. */
+  private def contract(qs: Seq[(String, String)])(
+      run: String => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    SparkEntry.ranked(qs.map { case (qid, q) => qid -> run(q) })
+
   private def collectTopK(df: org.apache.spark.sql.DataFrame): Seq[(Long, Double)] =
     df.select(col("docID").cast("long"), col("score").cast("double"))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
@@ -47,7 +53,7 @@ class IndexQuerySpec extends AnyFunSuite {
   test("rounded driver-contract output matches M0 oracle frame") {
     built
     val oracle = Bm25.oracleTopK(spark, sfDir).collect().map(_.toSeq).toSeq
-    val indexed = engine.topKAll().collect().map(_.toSeq).toSeq
+    val indexed = contract(Bm25.QuerySet)(engine.topK(_, rounded = true)).collect().map(_.toSeq).toSeq
     assert(indexed == oracle)
   }
 
@@ -251,7 +257,12 @@ class IndexQuerySpec extends AnyFunSuite {
     built
     val oracle20 = Bm25.oracleTopK(spark, sfDir, k = 20).collect()
       .map(_.toSeq).toSeq.filter(r => r(1).asInstanceOf[Int] > 10)
-    val page2 = engine.topKAllPage2().collect().map(_.toSeq).toSeq
+    // page 1's last row is the cursor
+    val page2 = SparkEntry.ranked(Bm25.QuerySet.map { case (qid, q) =>
+      val page1 = engine.topK(q, rounded = true)
+      qid -> page1.collect().lastOption.fold(page1)(last =>
+        engine.topKAfter(q, Bm25.K, last.getDouble(1), last.getLong(0), rounded = true))
+    }, rankOffset = Bm25.K).collect().map(_.toSeq).toSeq
     assert(page2 == oracle20)
   }
 
@@ -323,14 +334,14 @@ class IndexQuerySpec extends AnyFunSuite {
   test("OR mode: rounded driver-contract frame matches brute-force OR oracle") {
     built
     val oracle = Bm25.oracleTopKOr(spark, sfDir).collect().map(_.toSeq).toSeq
-    val indexed = engine.topKAll(orMode = true).collect().map(_.toSeq).toSeq
+    val indexed = contract(Bm25.QuerySet)(engine.topKOr(_, rounded = true)).collect().map(_.toSeq).toSeq
     assert(indexed == oracle)
   }
 
   test("NOT mode: rounded driver-contract frame matches brute-force NOT oracle") {
     built
     val oracle = Bm25.oracleTopKNot(spark, sfDir).collect().map(_.toSeq).toSeq
-    val indexed = engine.topKAllNot().collect().map(_.toSeq).toSeq
+    val indexed = contract(Bm25.NotQuerySet)(engine.topKNot(_, rounded = true)).collect().map(_.toSeq).toSeq
     assert(indexed == oracle)
   }
 
@@ -397,7 +408,8 @@ class IndexQuerySpec extends AnyFunSuite {
     built
     // contract frame == brute-force construction (len desc, docID asc)
     val oracle = Bm25.oracleSortedTopK(spark, sfDir).collect().map(_.toSeq).toSeq
-    val indexed = engine.sortedAll().collect().map(_.toSeq).toSeq
+    val indexed = SparkEntry.ranked(Bm25.QuerySet.map { case (qid, q) =>
+      qid -> engine.topKSortedByLen(q) }, by = "len").collect().map(_.toSeq).toSeq
     assert(indexed == oracle)
     // result set = the AND match set's k longest docs (vs raw tf + lens)
     import spark.implicits._
@@ -432,7 +444,8 @@ class IndexQuerySpec extends AnyFunSuite {
   test("MSM: rounded driver-contract frame matches brute-force MSM oracle") {
     built
     val oracle = Bm25.oracleTopKMsm(spark, sfDir).collect().map(_.toSeq).toSeq
-    val indexed = engine.topKAllMsm().collect().map(_.toSeq).toSeq
+    val indexed = SparkEntry.ranked(Bm25.MsmQuerySet.map { case (qid, q, m) =>
+      qid -> engine.topKMsm(q, m, rounded = true) }).collect().map(_.toSeq).toSeq
     assert(indexed == oracle)
   }
 
@@ -598,7 +611,7 @@ class IndexQuerySpec extends AnyFunSuite {
 
   test("phrase: rounded driver-contract frame matches brute-force phrase oracle") {
     val oracle = Bm25.oraclePhraseTopK(spark, sfDir).collect().map(_.toSeq).toSeq
-    val indexed = posEngine.topKAllPhrase().collect().map(_.toSeq).toSeq
+    val indexed = contract(Bm25.PhraseQuerySet)(posEngine.topKPhrase(_, rounded = true)).collect().map(_.toSeq).toSeq
     assert(indexed == oracle)
   }
 
@@ -658,7 +671,8 @@ class IndexQuerySpec extends AnyFunSuite {
 
   test("window: rounded driver-contract frame matches brute-force window oracle") {
     val oracle = Bm25.oracleWindowTopK(spark, sfDir).collect().map(_.toSeq).toSeq
-    val indexed = posEngine.topKAllWindow().collect().map(_.toSeq).toSeq
+    val indexed = SparkEntry.ranked(Bm25.WindowQuerySet.map { case (qid, q, w) =>
+      qid -> posEngine.topKWindow(q, w, rounded = true) }).collect().map(_.toSeq).toSeq
     assert(indexed == oracle)
   }
 
@@ -715,7 +729,7 @@ class IndexQuerySpec extends AnyFunSuite {
 
   test("search: rounded mixed frame matches brute-force mixed oracle (every query)") {
     val oracle = Bm25.oracleMixedTopK(spark, sfDir).collect().map(_.toSeq).toSeq
-    val indexed = posEngine.searchAll().collect().map(_.toSeq).toSeq
+    val indexed = contract(Bm25.MixedQuerySet)(posEngine.search(_, rounded = true)).collect().map(_.toSeq).toSeq
     assert(indexed == oracle)
     // the set exercises non-trivial matches: term+phrase and phrase+NOT
     // queries must return rows on this corpus
@@ -786,7 +800,8 @@ class IndexQuerySpec extends AnyFunSuite {
       posEngine.prepareFilter(docs.filter(col("lang") === v).select(col("docID")))
     }
     val oracle = Bm25.oracleFieldTopK(spark, sfDir).collect().map(_.toSeq).toSeq
-    val indexed = posEngine.searchFieldAll(resolver).collect().map(_.toSeq).toSeq
+    val indexed = contract(Bm25.FieldQuerySet)(
+      posEngine.search(_, rounded = true, fieldFacet = resolver)).collect().map(_.toSeq).toSeq
     assert(indexed == oracle)
     val qids = indexed.map(_.head).toSet
     assert(qids.contains("f05"), "stop-word + facet should match documents")
@@ -814,7 +829,7 @@ class IndexQuerySpec extends AnyFunSuite {
     intercept[IllegalArgumentException] { parseSearch("\"table hash\"^2") }
     // engine vs brute over the whole fixed boosted set
     val oracle = Bm25.oracleBoostedTopK(spark, sfDir).collect().map(_.toSeq).toSeq
-    val indexed = posEngine.searchBoostedAll().collect().map(_.toSeq).toSeq
+    val indexed = contract(Bm25.BoostQuerySet)(posEngine.search(_, rounded = true)).collect().map(_.toSeq).toSeq
     assert(indexed == oracle)
     val byQid = indexed.groupBy(_.head)
     assert(!byQid.contains("w06"), "AND with an absent term must stay empty")
@@ -844,7 +859,7 @@ class IndexQuerySpec extends AnyFunSuite {
   test("prefix: rounded driver-contract frame matches brute-force prefix oracle") {
     built
     val oracle = Bm25.oraclePrefixTopK(spark, sfDir).collect().map(_.toSeq).toSeq
-    val indexed = engine.topKAllPrefix().collect().map(_.toSeq).toSeq
+    val indexed = contract(Bm25.PrefixQuerySet)(engine.topKPrefix(_, rounded = true)).collect().map(_.toSeq).toSeq
     assert(indexed == oracle)
   }
 
@@ -1026,7 +1041,7 @@ class IndexQuerySpec extends AnyFunSuite {
   test("wildcard: rounded driver-contract frame matches brute-force contains oracle") {
     built
     val oracle = Bm25.oracleWildcardTopK(spark, sfDir).collect().map(_.toSeq).toSeq
-    val indexed = engine.topKAllWildcard().collect().map(_.toSeq).toSeq
+    val indexed = contract(Bm25.WildcardQuerySet)(engine.topKWildcard(_, rounded = true)).collect().map(_.toSeq).toSeq
     assert(indexed == oracle)
   }
 
@@ -1067,7 +1082,7 @@ class IndexQuerySpec extends AnyFunSuite {
     }
     // driver-contract frame vs brute oracle
     val oracleAll = Bm25.oracleRegexTopK(spark, sfDir).collect().map(_.toSeq).toSeq
-    val indexedAll = engine.topKAllRegex().collect().map(_.toSeq).toSeq
+    val indexedAll = contract(Bm25.RegexQuerySet)(engine.topKRegex(_, rounded = true)).collect().map(_.toSeq).toSeq
     assert(indexedAll == oracleAll)
     // a pattern full-matching exactly one term behaves like the plain OR query
     assert(collectTopK(engine.topKRegex("ha.h")) ==
@@ -1229,10 +1244,11 @@ class IndexQuerySpec extends AnyFunSuite {
   test("snippets: every contract row carries a highlighted query term") {
     built
     val snips = graft.operators.Snippets.searchSnippets(
-      spark, Corpus.docs(spark, sfDir), engine.topKAll())
+      spark, Corpus.docs(spark, sfDir), contract(Bm25.QuerySet)(engine.topK(_, rounded = true)))
     val rows = snips.collect()
     assert(rows.nonEmpty)
-    val ranked = engine.topKAll().select("query", "rank", "docID")
+    val ranked = contract(Bm25.QuerySet)(engine.topK(_, rounded = true))
+      .select("query", "rank", "docID")
       .collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2))).toSet
     // one snippet per ranked hit, and AND semantics guarantee a highlight
     assert(rows.map(r => (r.getString(0), r.getInt(1), r.getLong(2))).toSet
@@ -1259,7 +1275,7 @@ class IndexQuerySpec extends AnyFunSuite {
   test("fuzzy: rounded driver-contract frame matches brute-force fuzzy oracle") {
     built
     val oracle = Bm25.oracleFuzzyTopK(spark, sfDir).collect().map(_.toSeq).toSeq
-    val indexed = engine.topKAllFuzzy().collect().map(_.toSeq).toSeq
+    val indexed = contract(Bm25.FuzzyQuerySet)(engine.topKFuzzy(_, rounded = true)).collect().map(_.toSeq).toSeq
     assert(indexed == oracle)
   }
 
@@ -1272,7 +1288,8 @@ class IndexQuerySpec extends AnyFunSuite {
     assert(groups.names.nonEmpty)
     // engine (one-pass kernel path) vs brute Spark oracle, whole set
     val oracle = Bm25.oracleGroupedTopK(spark, sfDir).collect().map(_.toSeq).toSeq
-    val indexed = engine.searchGroupedAll(groups).collect().map(_.toSeq).toSeq
+    val indexed = SparkEntry.stacked(Bm25.GroupedQuerySet.map { case (qid, q) =>
+      qid -> engine.searchGroupedTopK(q, groups) }, "query", "grp", "rank").collect().map(_.toSeq).toSeq
     assert(indexed == oracle)
     // path identity: the faceted-composition fallback AND the pooled
     // sharded kernel produce the identical frame for every query of the
@@ -1329,13 +1346,13 @@ class IndexQuerySpec extends AnyFunSuite {
     // rescore window contract: every rescored hit sits inside its
     // query's bm25 top-WindowSize (authority can never pull a doc in
     // from outside the relevance window)
-    val win = engine.topKAllOver(Bm25.QuerySet, Rescore.WindowSize)
+    val win = contract(Bm25.QuerySet)(engine.topK(_, Rescore.WindowSize, rounded = true))
       .collect().map(r => (r.getString(0), r.getLong(2))).toSet
     assert(indexed.forall(r =>
       win.contains((r(0).asInstanceOf[String], r(2).asInstanceOf[Long]))))
     // the blend is live on the fixture: at least one query's (rank →
     // docID) assignment differs from the plain bm25 top-k
-    val plain = engine.topKAll().collect()
+    val plain = contract(Bm25.QuerySet)(engine.topK(_, rounded = true)).collect()
       .map(r => (r.getString(0), r.getInt(1), r.getLong(2))).toSet
     val res = indexed.map(r => (r(0).asInstanceOf[String],
       r(1).asInstanceOf[Int], r(2).asInstanceOf[Long])).toSet
@@ -1384,8 +1401,9 @@ class IndexQuerySpec extends AnyFunSuite {
         val (s, d) = brute(t); (qid, t, s, d)
       }
     }.sortBy(r => (r._1, r._2))
-    val got = engine.didYouMeanAll().collect()
-      .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq
+    val got = Bm25.DidYouMeanQuerySet.flatMap { case (qid, q) =>
+      engine.didYouMean(q).map { case (t, s, d) => (qid, t, s, d) }
+    }.sortBy(r => (r._1, r._2))
     assert(got == expected)
     // the ∅-candidate case must be exercised by the fixed set
     assert(got.exists { case (_, t, s, d) => t == "zzzz" && s == "" && d == 0L })
@@ -1702,7 +1720,7 @@ class IndexQuerySpec extends AnyFunSuite {
 
   test("resumable build: postings-only rebuild reuses earlier stages, identical results") {
     built
-    val before = engine.topKAll().collect().map(_.toSeq).toSeq
+    val before = contract(Bm25.QuerySet)(engine.topK(_, rounded = true)).collect().map(_.toSeq).toSeq
     val docstatsMarker = Paths.get(s"$indexDir/_done_docstats")
     val mtime = Files.getLastModifiedTime(docstatsMarker)
     // simulate a crash after dictionary: drop postings output + marker
@@ -1711,7 +1729,8 @@ class IndexQuerySpec extends AnyFunSuite {
     Index.build(spark, sfDir, indexDir, params)
     assert(Files.getLastModifiedTime(docstatsMarker) == mtime,
       "completed stages must not be recomputed")
-    val after = new QueryEngine(spark, Seq(indexDir)).topKAll().collect().map(_.toSeq).toSeq
+    val after = contract(Bm25.QuerySet)(new QueryEngine(spark, Seq(indexDir)).topK(_, rounded = true))
+      .collect().map(_.toSeq).toSeq
     assert(after == before)
   }
 
@@ -1738,14 +1757,16 @@ class IndexQuerySpec extends AnyFunSuite {
     val dir = "target/test-index-version"
     new Directory(new java.io.File(dir)).deleteRecursively()
     Index.build(spark, sfDir, dir, params)
-    val before = new QueryEngine(spark, Seq(dir)).topKAll().collect().map(_.toSeq).toSeq
+    val before = contract(Bm25.QuerySet)(new QueryEngine(spark, Seq(dir)).topK(_, rounded = true))
+      .collect().map(_.toSeq).toSeq
     // simulate an old-layout dir: markers present, version file missing
     Files.delete(Paths.get(s"$dir/_format_version"))
     Index.build(spark, sfDir, dir, params)
     assert(Files.exists(Paths.get(s"$dir/_format_version")))
     assert(Index.lastBuildMetrics.get.postings > 0L,
       "version mismatch must force a full rebuild, not a resume")
-    val after = new QueryEngine(spark, Seq(dir)).topKAll().collect().map(_.toSeq).toSeq
+    val after = contract(Bm25.QuerySet)(new QueryEngine(spark, Seq(dir)).topK(_, rounded = true))
+      .collect().map(_.toSeq).toSeq
     assert(after == before)
   }
 
@@ -1767,7 +1788,9 @@ class IndexQuerySpec extends AnyFunSuite {
     for (lang <- Seq("en", "de")) {
       val oracle = Bm25.oracleTopK(spark, sfDir, langFilter = lang)
         .collect().map(_.toSeq).toSeq
-      val indexed = engine.topKAllFiltered(langAllowed(lang))
+      val facet = engine.prepareFilter(langAllowed(lang))
+      val indexed = contract(Bm25.QuerySet)(
+          engine.topKFiltered(_, facet, Bm25.K, rounded = true, orMode = false))
         .collect().map(_.toSeq).toSeq
       assert(indexed == oracle, s"lang=$lang")
       // exactness, not post-filtering: every returned doc IS of the lang
@@ -1837,7 +1860,7 @@ class IndexQuerySpec extends AnyFunSuite {
     val eng = new QueryEngine(spark, Seq(fDir))
     try {
       val oracle = Bm25.oracleFieldedTopK(spark, sfDir).collect().map(_.toSeq).toSeq
-      val indexed = eng.topKAllOver(Bm25.FieldedQuerySet).collect().map(_.toSeq).toSeq
+      val indexed = contract(Bm25.FieldedQuerySet)(eng.topK(_, rounded = true)).collect().map(_.toSeq).toSeq
       assert(indexed == oracle)
       val byQ = indexed.groupBy(_.head)
       // f03 "txt": the extension token is in EVERY doc's path → a full
@@ -1858,7 +1881,7 @@ class IndexQuerySpec extends AnyFunSuite {
     built
     // driver-contract parity against the relational oracle
     val oracle = Bm25.oracleSynTopK(spark, sfDir).collect().map(_.toSeq).toSeq
-    val indexed = engine.topKAllSyn().collect().map(_.toSeq).toSeq
+    val indexed = contract(Bm25.SynQuerySet)(engine.topKSyn(_)).collect().map(_.toSeq).toSeq
     assert(indexed == oracle)
     // y05 (pipe-free) ≡ plain AND — bit-equal unrounded scores
     assert(collectTopK(engine.topKSyn("scan", rounded = false)) ==
@@ -1975,16 +1998,16 @@ class IndexQuerySpec extends AnyFunSuite {
       .filter(col("lang") === "en").select(col("docID"))
     for ((_, qtext) <- Bm25.QuerySet.take(4)) {
       assert(collectTopK(engine.topKFiltered(qtext,
-          engine.prepareLangFacet("en"), Bm25.K, rounded = false,
+          engine.prepareKeywordFacet("lang", "en"), Bm25.K, rounded = false,
           orMode = false)) ==
         collectTopK(engine.topKFiltered(qtext, corpusAllowed)), s"'$qtext'")
     }
     // the artifact's facet vocabulary is exactly the corpus's
     val corpusLangs = Corpus.docs(spark, sfDir).select(col("lang"))
       .distinct().collect().map(_.getString(0)).sorted.toSeq
-    assert(engine.langFacetValues() == corpusLangs)
+    assert(engine.facetValues("lang") == corpusLangs)
     assert(collectTopK(engine.topKFiltered("window",
-      engine.prepareLangFacet("zz"), Bm25.K, rounded = false,
+      engine.prepareKeywordFacet("lang", "zz"), Bm25.K, rounded = false,
       orMode = false)).isEmpty)
     // SECOND facet dimension (repo) through the same per-field resolver:
     // identical to the corpus-derived gate, vocabulary exact, unknown ∅

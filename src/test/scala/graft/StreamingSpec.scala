@@ -15,6 +15,12 @@ class StreamingSpec extends AnyFunSuite {
   private lazy val spark = SparkFixture.spark
   private val sfDir = SparkFixture.Sf0001
 
+  /** The ranked driver-contract frame of a fixed query set, one
+    * per-query engine call each. */
+  private def contract(qs: Seq[(String, String)])(
+      run: String => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    SparkEntry.ranked(qs.map { case (qid, q) => qid -> run(q) })
+
   // ------------------------------------------------- incremental index
 
   test("incremental ingestion: base+deltas rank-identical to one-shot build") {
@@ -51,17 +57,17 @@ class StreamingSpec extends AnyFunSuite {
     val merged = IncrementalIndex.engine(spark, lsm)
 
     assert(merged.stats == oneShot.stats, "combined stats must be exact")
-    val a = merged.topKAll().collect().map(_.toSeq).toSeq
-    val b = oneShot.topKAll().collect().map(_.toSeq).toSeq
+    val a = contract(Bm25.QuerySet)(merged.topK(_, rounded = true)).collect().map(_.toSeq).toSeq
+    val b = contract(Bm25.QuerySet)(oneShot.topK(_, rounded = true)).collect().map(_.toSeq).toSeq
     assert(a == b, "LSM query result must equal the one-shot index")
-    val ao = merged.topKAll(orMode = true).collect().map(_.toSeq).toSeq
-    val bo = oneShot.topKAll(orMode = true).collect().map(_.toSeq).toSeq
+    val ao = contract(Bm25.QuerySet)(merged.topKOr(_, rounded = true)).collect().map(_.toSeq).toSeq
+    val bo = contract(Bm25.QuerySet)(oneShot.topKOr(_, rounded = true)).collect().map(_.toSeq).toSeq
     assert(ao == bo)
     // synonym groups across constituent indexes: member df sums across
     // the disjoint deltas BEFORE the group max, so the pseudo-term's
     // df/idf equal the one-shot index's
-    val as = merged.topKAllSyn().collect().map(_.toSeq).toSeq
-    val bs = oneShot.topKAllSyn().collect().map(_.toSeq).toSeq
+    val as = contract(Bm25.SynQuerySet)(merged.topKSyn(_)).collect().map(_.toSeq).toSeq
+    val bs = contract(Bm25.SynQuerySet)(oneShot.topKSyn(_)).collect().map(_.toSeq).toSeq
     assert(as == bs, "LSM synonym result must equal the one-shot index")
   }
 
@@ -79,8 +85,8 @@ class StreamingSpec extends AnyFunSuite {
     val c = new QueryEngine(spark, Seq(compacted))
     val oneShot = new QueryEngine(spark, Seq(full))
     assert(c.stats == oneShot.stats)
-    assert(c.topKAll().collect().map(_.toSeq).toSeq ==
-      oneShot.topKAll().collect().map(_.toSeq).toSeq)
+    assert(contract(Bm25.QuerySet)(c.topK(_, rounded = true)).collect().map(_.toSeq).toSeq ==
+      contract(Bm25.QuerySet)(oneShot.topK(_, rounded = true)).collect().map(_.toSeq).toSeq)
   }
 
   test("tombstone deletes: queries exclude deleted docs, brute-twin exact, idempotent") {
@@ -136,10 +142,10 @@ class StreamingSpec extends AnyFunSuite {
     val f = new QueryEngine(spark, Seq(fresh))
     assert(c.stats == f.stats,
       s"compaction must recompute N/avgdl over survivors: ${c.stats} vs ${f.stats}")
-    assert(c.topKAll().collect().map(_.toSeq).toSeq ==
-      f.topKAll().collect().map(_.toSeq).toSeq)
-    assert(c.topKAll(orMode = true).collect().map(_.toSeq).toSeq ==
-      f.topKAll(orMode = true).collect().map(_.toSeq).toSeq)
+    assert(contract(Bm25.QuerySet)(c.topK(_, rounded = true)).collect().map(_.toSeq).toSeq ==
+      contract(Bm25.QuerySet)(f.topK(_, rounded = true)).collect().map(_.toSeq).toSeq)
+    assert(contract(Bm25.QuerySet)(c.topKOr(_, rounded = true)).collect().map(_.toSeq).toSeq ==
+      contract(Bm25.QuerySet)(f.topKOr(_, rounded = true)).collect().map(_.toSeq).toSeq)
   }
 
   test("deny set beyond the gate cap demands compaction") {
