@@ -33,6 +33,11 @@ import scala.sys.process._
   */
 object Bench {
 
+  /** Nearest-rank percentile of an ascending sample: xs(⌈p·n⌉ − 1),
+    * clamped to the sample. */
+  private def pct(xs: Seq[Double], p: Double): Double =
+    xs(math.min(xs.length - 1, math.ceil(p * xs.length).toInt - 1).max(0))
+
   private def newSession(cpus: Int): SparkSession = {
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
@@ -239,9 +244,7 @@ object Bench {
         }.sorted
         ts(ts.length / 2)
       }.sorted
-      def fpct(p: Double) = flats(
-        math.min(flats.length - 1, math.ceil(p * flats.length).toInt - 1).max(0))
-      f""""filtered_p50_ms":${fpct(0.5)}%.3f,"filtered_p95_ms":${fpct(0.95)}%.3f,"""
+      f""""filtered_p50_ms":${pct(flats, 0.5)}%.3f,"filtered_p95_ms":${pct(flats, 0.95)}%.3f,"""
     }
 
     // positional build + phrase latency (peak child only): tracks the
@@ -265,8 +268,6 @@ object Bench {
         }.sorted
         ts(ts.length / 2)
       }.sorted
-      def ppct(p: Double) = lats(
-        math.min(lats.length - 1, math.ceil(p * lats.length).toInt - 1).max(0))
       // proximity (window) latency rides the same positional engine
       Bm25.WindowQuerySet.foreach { case (_, q, w) =>
         pengine.topKWindow(q, w, rounded = true).collect()
@@ -279,8 +280,6 @@ object Bench {
         }.sorted
         ts(ts.length / 2)
       }.sorted
-      def wpct(p: Double) = wlats(
-        math.min(wlats.length - 1, math.ceil(p * wlats.length).toInt - 1).max(0))
       // unified search-box latency rides the same positional engine: the
       // fixed mixed set (bare terms + "phrases" + -negations per string)
       Bm25.MixedQuerySet.foreach { case (_, q) =>
@@ -294,8 +293,6 @@ object Bench {
         }.sorted
         ts(ts.length / 2)
       }.sorted
-      def mpct(p: Double) = mlats(
-        math.min(mlats.length - 1, math.ceil(p * mlats.length).toInt - 1).max(0))
       // boosted search-box latency on the same positional engine: the
       // weight is an outer multiply in the kernel, so this should track
       // the plain mixed latency — the bench PROVES boosts cost nothing
@@ -310,9 +307,7 @@ object Bench {
         }.sorted
         ts(ts.length / 2)
       }.sorted
-      def bpct(p: Double) = blats(
-        math.min(blats.length - 1, math.ceil(p * blats.length).toInt - 1).max(0))
-      f""""build_pos_sec":$posBuildSec%.3f,"phrase_p50_ms":${ppct(0.5)}%.3f,"phrase_p95_ms":${ppct(0.95)}%.3f,"window_p50_ms":${wpct(0.5)}%.3f,"window_p95_ms":${wpct(0.95)}%.3f,"search_p50_ms":${mpct(0.5)}%.3f,"search_p95_ms":${mpct(0.95)}%.3f,"boosted_p50_ms":${bpct(0.5)}%.3f,"""
+      f""""build_pos_sec":$posBuildSec%.3f,"phrase_p50_ms":${pct(lats, 0.5)}%.3f,"phrase_p95_ms":${pct(lats, 0.95)}%.3f,"window_p50_ms":${pct(wlats, 0.5)}%.3f,"window_p95_ms":${pct(wlats, 0.95)}%.3f,"search_p50_ms":${pct(mlats, 0.5)}%.3f,"search_p95_ms":${pct(mlats, 0.95)}%.3f,"boosted_p50_ms":${pct(blats, 0.5)}%.3f,"""
     }
 
     // grouped (field-collapsing) latency (peak child only): top-3 per
@@ -338,9 +333,7 @@ object Bench {
       }
       val klats = med(force = false)
       val clats2 = med(force = true)
-      def gpct(l: Seq[Double], p: Double) = l(
-        math.min(l.length - 1, math.ceil(p * l.length).toInt - 1).max(0))
-      f""""grouped_p50_ms":${gpct(klats, 0.5)}%.3f,"grouped_comp_p50_ms":${gpct(clats2, 0.5)}%.3f,"""
+      f""""grouped_p50_ms":${pct(klats, 0.5)}%.3f,"grouped_comp_p50_ms":${pct(clats2, 0.5)}%.3f,"""
     }
 
     // total-hits count latency (peak child only): the pooled/driver count
@@ -355,9 +348,7 @@ object Bench {
         }.sorted
         ts(ts.length / 2)
       }.sorted
-      def cpct(p: Double) = clats(
-        math.min(clats.length - 1, math.ceil(p * clats.length).toInt - 1).max(0))
-      f""""count_p50_ms":${cpct(0.5)}%.3f,"count_p95_ms":${cpct(0.95)}%.3f,"""
+      f""""count_p50_ms":${pct(clats, 0.5)}%.3f,"count_p95_ms":${pct(clats, 0.95)}%.3f,"""
     }
 
     // prefix latency (peak child only): dictionary expansion + OR WAND
@@ -374,9 +365,7 @@ object Bench {
         }.sorted
         ts(ts.length / 2)
       }.sorted
-      def xpct(p: Double) = plats(
-        math.min(plats.length - 1, math.ceil(p * plats.length).toInt - 1).max(0))
-      f""""prefix_p50_ms":${xpct(0.5)}%.3f,"prefix_p95_ms":${xpct(0.95)}%.3f,"""
+      f""""prefix_p50_ms":${pct(plats, 0.5)}%.3f,"prefix_p95_ms":${pct(plats, 0.95)}%.3f,"""
     }
 
     // sustained concurrent QPS (peak child only): T client threads
@@ -439,9 +428,7 @@ object Bench {
         }.sorted
         ts(ts.length / 2)
       }.sorted
-      def opct(p: Double) = olats(
-        math.min(olats.length - 1, math.ceil(p * olats.length).toInt - 1).max(0))
-      f""""or_p50_ms":${opct(0.5)}%.3f,"or_p95_ms":${opct(0.95)}%.3f,"""
+      f""""or_p50_ms":${pct(olats, 0.5)}%.3f,"or_p95_ms":${pct(olats, 0.95)}%.3f,"""
     }
 
     // minimum-should-match + sort-by-field latency (peak child only):
@@ -468,8 +455,6 @@ object Bench {
         }.sorted
         ts(ts.length / 2)
       }.sorted
-      def mpct(xs: Seq[Double], p: Double) = xs(
-        math.min(xs.length - 1, math.ceil(p * xs.length).toInt - 1).max(0))
       // wildcard latency: contains-expansion against the pinned dict
       // (driver-side, no job) + the ordinary OR pipeline over it
       Bm25.WildcardQuerySet.foreach { case (_, f) =>
@@ -509,9 +494,9 @@ object Bench {
         }.sorted
         ts(ts.length / 2)
       }.sorted
-      f""""msm_p50_ms":${mpct(mlats, 0.5)}%.3f,"sorted_p50_ms":${mpct(slats, 0.5)}%.3f,""" +
-      f""""wildcard_p50_ms":${mpct(wclats, 0.5)}%.3f,"histogram_p50_ms":${mpct(hlats, 0.5)}%.3f,""" +
-      f""""syn_p50_ms":${mpct(ylats, 0.5)}%.3f,"""
+      f""""msm_p50_ms":${pct(mlats, 0.5)}%.3f,"sorted_p50_ms":${pct(slats, 0.5)}%.3f,""" +
+      f""""wildcard_p50_ms":${pct(wclats, 0.5)}%.3f,"histogram_p50_ms":${pct(hlats, 0.5)}%.3f,""" +
+      f""""syn_p50_ms":${pct(ylats, 0.5)}%.3f,"""
     }
 
     // hybrid + ANN latency (peak child only): the 6-query hybrid RRF
@@ -610,12 +595,10 @@ object Bench {
     }
     spark.stop()
     val lat = perQuery.map(_._2).sorted
-    def pct(p: Double) =
-      lat(math.min(lat.length - 1, math.ceil(p * lat.length).toInt - 1).max(0))
     val qs = perQuery.map { case (k, ms) => s""""$k":$ms""" }.mkString("{", ",", "}")
     val host = f""""host_ext_busy_frac":$extBusyFrac%.4f,"host_steal_frac":$stealFrac%.4f,"loadavg":${readLoadAvg()}%.2f,"""
     println(
-      f"""GRAFT_CHILD{"cpus":$cpus,"docs":$docs,"build_sec":$buildSec,"docs_per_sec":${docs / buildSec},"build_gc_sec":$buildGcSec%.2f,"build_own_cores":$buildOwnCores%.1f,"p50_ms":${pct(0.5)},"p95_ms":${pct(0.95)},$host$filteredJson$phraseJson$groupedJson$countJson$prefixJson$qpsJson$orJson$msmJson$annJson$rescoreJson$pipeJson$bm"queries":$qs}""")
+      f"""GRAFT_CHILD{"cpus":$cpus,"docs":$docs,"build_sec":$buildSec,"docs_per_sec":${docs / buildSec},"build_gc_sec":$buildGcSec%.2f,"build_own_cores":$buildOwnCores%.1f,"p50_ms":${pct(lat, 0.5)},"p95_ms":${pct(lat, 0.95)},$host$filteredJson$phraseJson$groupedJson$countJson$prefixJson$qpsJson$orJson$msmJson$annJson$rescoreJson$pipeJson$bm"queries":$qs}""")
   }
 
   /** Spawn a child JVM (same classpath, JDK17 module opens) for one level.

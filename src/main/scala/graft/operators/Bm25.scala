@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * (reference `src/searcher/searcher.cpp:16-39`) with real IR semantics:
   * multi-term AND + BM25 top-k, deterministic `(score DESC, docID ASC)`
   * order. It is deliberately the simplest obviously-correct formulation —
-  * everything in the indexed engine (Index/QueryEngine) is tested
+  * everything in the indexed engine is tested
   * rank-identical against it.
   *
   * Floating-point determinism contract (BASELINE.md "rank-identity"):
@@ -186,7 +186,7 @@ object Bm25 {
 
   /** The fielded corpus: `path` folded into the token stream with weight
     * [[FieldWeightPath]] (see there). Output shape == input shape, so
-    * [[graft.operators.Index.buildFrom]] consumes it directly. */
+    * the index builder consumes it directly. */
   def fieldedDocs(docs: DataFrame): DataFrame =
     docs.withColumn("content",
       concat_ws(" ",
@@ -248,7 +248,7 @@ object Bm25 {
 
   /** Fixed mixed search-box query set (FIXTURES.md §23): ONE raw string
     * combining bare terms, quoted phrases and `-negations` — the unified
-    * front door's grammar (QueryEngine.search). Covers: term+phrase,
+    * front door's grammar (the engine's `search`). Covers: term+phrase,
     * phrase+NOT, term+phrase+NOT, two phrases conjoined, trigram
     * phrase+term, absent-phrase-term (∅), self-negation (∅), plain
     * single term (parser degenerate case), single-token quoted piece
@@ -381,331 +381,240 @@ object Bm25 {
     (tf.toDouble * 2.2) / (tf.toDouble + 1.2 * (0.25 + 0.75 * len.toDouble / avgdl))
 
   // --------------------------------------------------------------- oracle
+  //
+  // Every brute-force oracle is the same four parts: one corpus context
+  // ([[Context]]), one per-query scorer ([[score]] over a [[Match]]), one
+  // rank tail ([[rank]]), and — for the DuckDB twins — one base-CTE
+  // builder ([[baseSql]]) with its per-query scorer and tail
+  // ([[candSql]], [[rankSql]]). None of it reads the index.
 
-  /** Brute-force BM25 AND-semantics top-k for every query in [[QuerySet]].
-    * Output: (query, rank, docID, score) with score rounded to 4 decimals
-    * and rank computed over the ROUNDED score (see class doc).
-    *
-    * Implementation: per query, pivot per-term contributions into columns
-    * and add them in ascending-term order — a fixed-association sum, and
-    * the pivot doubles as the AND filter (all columns non-null).
-    *
-    * `langFilter` (faceted retrieval twin): restrict the RESULT SET to
-    * docs of that lang; scoring stats stay corpus-global (the filter
-    * selects candidates, it does not change the ranking model).
-    */
+  /** The corpus side of every brute-force oracle, derived from one `docs`
+    * frame: term frequencies, doc lengths, corpus stats, document
+    * frequencies and `scored` (docID, term, contrib). `cached` keeps `tf`
+    * in memory for the set-level oracles, which score many queries
+    * against it; the exact per-query oracles persist nothing. */
+  final class Context(val docs: DataFrame, cached: Boolean) {
+    val tf: DataFrame = if (cached) termFreq(docs).cache() else termFreq(docs)
+    val doclen: DataFrame = docLengths(tf)
+    val stats: DataFrame = corpusStats(doclen)
+    val df: DataFrame = docFreq(tf)
+
+    /** (docID, term, contrib) for (docID, term, tf) rows `terms` whose
+      * document frequencies are the (term, df) rows `dfs`. */
+    def contribs(terms: DataFrame, dfs: DataFrame): DataFrame =
+      terms.join(dfs, "term").join(doclen, "docID").crossJoin(broadcast(stats))
+        .withColumn("contrib",
+          contribCol(idfCol(col("n"), col("df")), col("tf"), col("len"), col("avgdl")))
+        .select(col("docID"), col("term"), col("contrib"))
+
+    val scored: DataFrame = contribs(tf, df)
+
+    /** (docID, toks): the token arrays the phrase and window gates read. */
+    def toks: DataFrame =
+      docs.select(col("docID"), Analyzer.tokensCol(col("content")).as("toks"))
+  }
+
+  object Context {
+    def apply(spark: SparkSession, sfDir: String, cached: Boolean = false): Context =
+      new Context(Corpus.docs(spark, sfDir), cached)
+  }
+
+  /** One brute-force query. A doc is a candidate when it holds at least
+    * `minMatch` of the positive `terms` (AND: all of them, OR: one, msm:
+    * m) — or, with `expand`, any corpus term the expansion predicate
+    * accepts (prefix, fuzzy, wildcard, regex; OR semantics) — and passes
+    * every gate: each of `phrases` at consecutive positions, all `terms`
+    * within some `window` of consecutive tokens (0 = no window), its lang
+    * equal to each of `langs`, and none of the `neg` terms. Gates never
+    * score, so ranks among survivors are the ungated ranks. `boosts`
+    * multiplies a term's contribution by its `term^w` weight. `expand`
+    * holds one predicate on `term` twice: as a Spark column and as
+    * DuckDB SQL. */
+  final case class Match(
+      terms: Seq[String] = Nil,
+      minMatch: Int = 1,
+      boosts: Map[String, Double] = Map.empty,
+      neg: Seq[String] = Nil,
+      phrases: Seq[Seq[String]] = Nil,
+      window: Int = 0,
+      langs: Seq[String] = Nil,
+      expand: Option[(Column, String)] = None)
+
+  object Match {
+    def and(q: String): Match = { val t = Analyzer.queryTerms(q); Match(t, t.size) }
+    def or(q: String): Match = Match(Analyzer.queryTerms(q))
+    def msm(q: String, m: Int): Match = Match(Analyzer.queryTerms(q), m)
+    def not(q: String): Match = {
+      val (pos, neg) = Analyzer.signedTerms(q)
+      Match(pos, pos.size, neg = neg)
+    }
+    def phrase(q: String): Match = and(q).copy(phrases = Seq(Analyzer.tokenize(q)))
+    def window(q: String, w: Int): Match = and(q).copy(window = w)
+
+    /** The search-box grammar ([[Analyzer.parseSearch]]): all positive
+      * terms ANDed, with their boosts, quoted phrases, NOT terms and
+      * `lang:value` facets. */
+    def search(q: String): Match = {
+      val p = Analyzer.parseSearch(q)
+      val langs = p.fields.map { case (f, v) =>
+        require(f == "lang", s"oracle supports the lang field, got $f"); v
+      }
+      Match(p.pos, p.pos.size, p.boosts, p.neg, p.phrases, langs = langs)
+    }
+
+    def prefix(p: String): Match =
+      expansion(col("term").startsWith(p), s"term LIKE '$p%'")
+    /** Levenshtein distance ≤ maxDist (unit-cost edits on both engines). */
+    def fuzzy(q: String, maxDist: Int = 1): Match =
+      expansion(levenshtein(col("term"), lit(q)) <= maxDist,
+        s"levenshtein(term, '$q') <= $maxDist")
+    /** Contains the fragment (an analyzer token: no LIKE metacharacters). */
+    def wildcard(frag: String): Match =
+      expansion(col("term").contains(frag), s"term LIKE '%$frag%'")
+    /** Anchored full match: `rlike("^(?:pat)$")` ≡ java.util.regex
+      * `matches()` ≡ RE2 `regexp_full_match` on [[RegexQuerySet]]'s
+      * construct subset. */
+    def regex(pat: String): Match =
+      expansion(col("term").rlike("^(?:" + pat + ")$"), s"regexp_full_match(term, '$pat')")
+
+    private def expansion(c: Column, sql: String): Match = Match(expand = Some((c, sql)))
+  }
+
+  /** The one brute-force scorer: (docID, score) for every candidate of
+    * `m` (see [[Match]]). The score folds the candidate's (boosted)
+    * contributions from 0.0 in ascending term order — bit-identical to
+    * the engine's fixed association ((c1 + c2) + c3)..., since 0.0 + c1
+    * == c1, and to the DuckDB twin's ordered `list_reduce`. `rows`
+    * replaces the context's `scored` rows (the synonym oracle scores its
+    * groups as pseudo-terms). */
+  def score(c: Context, m: Match, rows: DataFrame = null): DataFrame = {
+    def ids(gate: DataFrame): DataFrame = gate.select(col("docID"))
+    val gates =
+      m.langs.map(v => ids(c.docs.filter(col("lang") === v)) -> "left_semi") ++
+      m.phrases.map(p => ids(c.toks.filter(phraseAdjCol(col("toks"), p))) -> "left_semi") ++
+      (if (m.window <= 0) Nil
+       else Seq(ids(c.toks.filter(windowCol(col("toks"), m.terms, m.window))) -> "left_semi")) ++
+      (if (m.neg.isEmpty) Nil
+       else Seq(ids(c.tf.filter(col("term").isin(m.neg: _*))) -> "left_anti"))
+    val hit = m.expand.map(_._1).getOrElse(col("term").isin(m.terms: _*))
+    val cands = gates.foldLeft(Option(rows).getOrElse(c.scored).filter(hit)) {
+      case (acc, (gate, how)) => acc.join(gate, Seq("docID"), how)
+    }
+    val boosted = m.boosts.foldLeft(col("contrib")) { case (acc, (t, w)) =>
+      when(col("term") === t, col("contrib") * lit(w)).otherwise(acc)
+    }
+    cands.groupBy(col("docID"))
+      .agg(count(lit(1)).as("nt"), aggregate(
+        sort_array(collect_list(struct(col("term"), boosted.as("contrib")))),
+        lit(0.0), (acc, x) => acc + x.getField("contrib")).as("score"))
+      .filter(col("nt") >= m.minMatch)
+      .select(col("docID"), col("score"))
+  }
+
+  /** The one rank tail.
+    *   - `rounded` (the set-level shape): `cands` carries a `query`
+    *     column (and the `partition` column, when given). Scores round to
+    *     4 decimals, each query's (and partition's) candidates rank by
+    *     (score desc, docID asc), and the top k come out as
+    *     (query, [partition,] rank, docID, score) ordered by those keys.
+    *   - exact: one query's top k by exact score, as (docID, score).
+    * Rounding before ranking keeps ULP-level libm differences between
+    * the JVM and DuckDB from flipping ranks (see the object doc). */
+  def rank(cands: DataFrame, k: Int, rounded: Boolean,
+           partition: String = null): DataFrame =
+    if (!rounded)
+      cands.orderBy(col("score").desc, col("docID").asc).limit(k)
+        .select(col("docID"), col("score"))
+    else {
+      val keys = (Seq("query") ++ Option(partition)).map(col)
+      cands.withColumn("score", round(col("score"), 4))
+        .withColumn("rank", row_number().over(
+          Window.partitionBy(keys: _*).orderBy(col("score").desc, col("docID").asc)))
+        .filter(col("rank") <= k)
+        .select(keys ++ Seq(col("rank"), col("docID"), col("score")): _*)
+        .orderBy(keys :+ col("rank"): _*)
+    }
+
+  /** Each query's candidates, tagged with its id and unioned — the input
+    * of [[rank]]'s set-level shape. */
+  private def tagged(qs: Seq[(String, DataFrame)]): DataFrame =
+    qs.map { case (qid, cands) => cands.withColumn("query", lit(qid)) }.reduce(_ unionAll _)
+
+  /** A set-level oracle: every query scored against one cached context,
+    * ranked by the rounded tail. */
+  private def ranked(c: Context, qs: Seq[(String, Match)], k: Int): DataFrame =
+    rank(tagged(qs.map { case (qid, m) => qid -> score(c, m) }), k, rounded = true)
+
+  /** Brute-force BM25 AND top-k over [[QuerySet]] as (query, rank, docID,
+    * score), score rounded to 4 decimals. `langFilter` (the faceted
+    * retrieval twin) gates the candidates to one lang; scoring stats stay
+    * corpus-global. */
   def oracleTopK(spark: SparkSession, sfDir: String, k: Int = K,
                  langFilter: String = null): DataFrame =
-    oracleTopKCore(Corpus.docs(spark, sfDir), QuerySet, k, langFilter)
+    ranked(Context(spark, sfDir, cached = true), QuerySet.map { case (qid, q) =>
+      qid -> Match.and(q).copy(langs = Option(langFilter).toSeq) }, k)
 
   /** BM25F twin of [[oracleTopK]]: plain BM25 over [[fieldedDocs]] with
     * the [[FieldedQuerySet]] — see [[FieldWeightPath]] for why that IS
     * Robertson's BM25F with integer field weights. */
   def oracleFieldedTopK(spark: SparkSession, sfDir: String,
                         k: Int = K): DataFrame =
-    oracleTopKCore(fieldedDocs(Corpus.docs(spark, sfDir)), FieldedQuerySet, k, null)
+    ranked(new Context(fieldedDocs(Corpus.docs(spark, sfDir)), cached = true),
+      FieldedQuerySet.map { case (qid, q) => qid -> Match.and(q) }, k)
 
-  /** Synonym-group brute-force top-k (Lucene SynonymQuery semantics;
-    * see [[SynQuerySet]]): per group, tf sums over the members and df
-    * is the MAX member df; the group contribution then follows the
-    * ordinary BM25 formula and groups AND-compose. Association order =
-    * ascending canonical group name (Analyzer.synGroups), mirrored by
-    * the engine's pseudo-term sort and the SQL twin's generated sum. */
+  /** Synonym-group brute-force top-k (Lucene SynonymQuery semantics; see
+    * [[SynQuerySet]]): each group is one pseudo-term named by its
+    * canonical name, with tf summed over the members and df the MAX
+    * member df; groups AND-compose. The names sort as
+    * [[Analyzer.synGroups]] orders the groups, so the scorer's ascending
+    * fold is the engine's association order. A fully absent group has no
+    * tf rows, so the query yields ∅, as the engine's early-out. */
   def oracleSynTopK(spark: SparkSession, sfDir: String, k: Int = K): DataFrame = {
-    val docs   = Corpus.docs(spark, sfDir)
-    val tf     = termFreq(docs).cache()
-    val doclen = docLengths(tf)
-    val stats  = corpusStats(doclen)
-    val dfr    = docFreq(tf)
-
-    val perQuery = SynQuerySet.map { case (qid, qtext) =>
-      val groups = Analyzer.synGroups(qtext)
-      val parts = groups.zipWithIndex.map { case (g, i) =>
-        val gtf = tf.filter(col("term").isin(g: _*))
-          .groupBy(col("docID")).agg(sum(col("tf")).as(s"tf$i"))
-        val gdf = dfr.filter(col("term").isin(g: _*))
-          .agg(max(col("df")).as(s"df$i"))
-        (gtf, gdf)
-      }
-      // inner joins = AND across groups; a fully absent group's tf frame
-      // is empty, so the query yields ∅ — same as the engine's early-out
-      val joined = parts.map(_._2).foldLeft(
-          parts.map(_._1).reduce((a, b) => a.join(b, "docID"))
-            .join(doclen, "docID").crossJoin(broadcast(stats))
-        )((acc, gdf) => acc.crossJoin(broadcast(gdf)))
-      val score = groups.indices
-        .map { i =>
-          contribCol(idfCol(col("n"), col(s"df$i")),
-            col(s"tf$i"), col("len"), col("avgdl"))
-        }
-        .reduce(_ + _) // fixed left-to-right association, group-name order
-      joined
-        .withColumn("score", round(score, 4))
-        .withColumn("rank",
-          row_number().over(Window.orderBy(col("score").desc, col("docID").asc)))
-        .filter(col("rank") <= k)
-        .select(lit(qid).as("query"), col("rank"), col("docID"), col("score"))
-    }
-    perQuery.reduce(_ unionAll _).orderBy(col("query"), col("rank"))
+    val c = Context(spark, sfDir, cached = true)
+    rank(tagged(SynQuerySet.map { case (qid, qtext) =>
+      val groups = Analyzer.synGroups(qtext).map(g => g.mkString("|") -> g)
+      def members(f: DataFrame, g: Seq[String]) = f.filter(col("term").isin(g: _*))
+      val gtf = groups.map { case (name, g) =>
+        members(c.tf, g).groupBy(col("docID")).agg(sum(col("tf")).as("tf"))
+          .withColumn("term", lit(name))
+      }.reduce(_ unionAll _)
+      val gdf = groups.map { case (name, g) =>
+        members(c.df, g).agg(max(col("df")).as("df")).withColumn("term", lit(name))
+      }.reduce(_ unionAll _)
+      qid -> score(c, Match(groups.map(_._1), groups.size), c.contribs(gtf, gdf))
+    }), k, rounded = true)
   }
 
-  private def oracleTopKCore(docs: DataFrame, querySet: Seq[(String, String)],
-                             k: Int, langFilter: String): DataFrame = {
-    val tf     = termFreq(docs).cache()
-    val doclen = docLengths(tf)
-    val stats  = corpusStats(doclen)
-    val df     = docFreq(tf)
-    val allowed =
-      if (langFilter == null) null
-      else docs.filter(col("lang") === langFilter).select(col("docID"))
+  /** Disjunctive (OR) brute-force top-k over [[QuerySet]]: docs matching
+    * ANY query term. */
+  def oracleTopKOr(spark: SparkSession, sfDir: String, k: Int = K): DataFrame =
+    ranked(Context(spark, sfDir, cached = true),
+      QuerySet.map { case (qid, q) => qid -> Match.or(q) }, k)
 
-    val scored = tf
-      .join(df, "term")
-      .join(doclen, "docID")
-      .crossJoin(broadcast(stats))
-      .withColumn("contrib",
-        contribCol(idfCol(col("n"), col("df")), col("tf"), col("len"), col("avgdl")))
-      .select(col("docID"), col("term"), col("contrib"))
+  /** Minimum-should-match top-k over [[MsmQuerySet]]: OR scoring over the
+    * docs holding ≥ m distinct query terms, dropped BEFORE ranking (a
+    * post-filter of the OR top-k would lose docs below the unfiltered k). */
+  def oracleTopKMsm(spark: SparkSession, sfDir: String, k: Int = K): DataFrame =
+    ranked(Context(spark, sfDir, cached = true),
+      MsmQuerySet.map { case (qid, q, m) => qid -> Match.msm(q, m) }, k)
 
-    val perQuery = querySet.map { case (qid, qtext) =>
-      val terms = Analyzer.queryTerms(qtext)
-      val pivoted = scored
-        .filter(col("term").isin(terms: _*))
-        .groupBy(col("docID"))
-        .pivot("term", terms)
-        .agg(first(col("contrib")))
-      val allPresent = terms.map(t => col(t).isNotNull).reduce(_ && _)
-      // fixed left-to-right association: ((c1 + c2) + c3) ...
-      val score = terms.map(t => col(t)).reduce(_ + _)
-      (if (allowed == null) pivoted
-       else pivoted.join(broadcast(allowed), Seq("docID"), "left_semi"))
-        .filter(allPresent)
-        .withColumn("score", round(score, 4))
-        .withColumn("rank",
-          row_number().over(Window.orderBy(col("score").desc, col("docID").asc)))
-        .filter(col("rank") <= k)
-        .select(lit(qid).as("query"), col("rank"), col("docID"), col("score"))
-    }
-
-    perQuery.reduce(_ unionAll _).orderBy(col("query"), col("rank"))
-  }
-
-  /** Disjunctive (OR-semantics) brute-force top-k: docs matching ANY
-    * query term; absent-term contribution is an exact +0.0 in the same
-    * fixed ascending-term association (`coalesce` twin of the AND sum,
-    * bit-identical because x + 0.0 == x for finite non-negative x). */
-  def oracleTopKOr(spark: SparkSession, sfDir: String, k: Int = K): DataFrame = {
-    val docs   = Corpus.docs(spark, sfDir)
-    val tf     = termFreq(docs).cache()
-    val doclen = docLengths(tf)
-    val stats  = corpusStats(doclen)
-    val df     = docFreq(tf)
-
-    val scored = tf
-      .join(df, "term")
-      .join(doclen, "docID")
-      .crossJoin(broadcast(stats))
-      .withColumn("contrib",
-        contribCol(idfCol(col("n"), col("df")), col("tf"), col("len"), col("avgdl")))
-      .select(col("docID"), col("term"), col("contrib"))
-
-    val perQuery = QuerySet.map { case (qid, qtext) =>
-      val terms = Analyzer.queryTerms(qtext)
-      val pivoted = scored
-        .filter(col("term").isin(terms: _*))
-        .groupBy(col("docID"))
-        .pivot("term", terms)
-        .agg(first(col("contrib")))
-      val score = terms.map(t => coalesce(col(t), lit(0.0))).reduce(_ + _)
-      pivoted
-        .withColumn("score", round(score, 4))
-        .withColumn("rank",
-          row_number().over(Window.orderBy(col("score").desc, col("docID").asc)))
-        .filter(col("rank") <= k)
-        .select(lit(qid).as("query"), col("rank"), col("docID"), col("score"))
-    }
-
-    perQuery.reduce(_ unionAll _).orderBy(col("query"), col("rank"))
-  }
-
-  /** Brute-force minimum-should-match top-k over [[MsmQuerySet]]: the
-    * OR-semantics pivot-and-sum of [[oracleTopKOr]] plus a distinct
-    * matched-term count floor — docs with fewer than m non-null term
-    * columns are dropped BEFORE ranking, so the top-k is exact (a
-    * post-filter of the OR top-k would lose qualifying docs ranked
-    * below the unfiltered k). */
-  def oracleTopKMsm(spark: SparkSession, sfDir: String, k: Int = K): DataFrame = {
-    val docs   = Corpus.docs(spark, sfDir)
-    val tf     = termFreq(docs).cache()
-    val doclen = docLengths(tf)
-    val stats  = corpusStats(doclen)
-    val df     = docFreq(tf)
-
-    val scored = tf
-      .join(df, "term")
-      .join(doclen, "docID")
-      .crossJoin(broadcast(stats))
-      .withColumn("contrib",
-        contribCol(idfCol(col("n"), col("df")), col("tf"), col("len"), col("avgdl")))
-      .select(col("docID"), col("term"), col("contrib"))
-
-    val perQuery = MsmQuerySet.map { case (qid, qtext, m) =>
-      val terms = Analyzer.queryTerms(qtext)
-      val pivoted = scored
-        .filter(col("term").isin(terms: _*))
-        .groupBy(col("docID"))
-        .pivot("term", terms)
-        .agg(first(col("contrib")))
-      val score = terms.map(t => coalesce(col(t), lit(0.0))).reduce(_ + _)
-      val matched = terms.map(t =>
-        when(col(t).isNotNull, 1).otherwise(0)).reduce(_ + _)
-      pivoted
-        .filter(matched >= m)
-        .withColumn("score", round(score, 4))
-        .withColumn("rank",
-          row_number().over(Window.orderBy(col("score").desc, col("docID").asc)))
-        .filter(col("rank") <= k)
-        .select(lit(qid).as("query"), col("rank"), col("docID"), col("score"))
-    }
-
-    perQuery.reduce(_ unionAll _).orderBy(col("query"), col("rank"))
-  }
-
-  /** Brute-force sort-by-field top-k over [[QuerySet]]: docs matching
-    * ALL query terms ordered by document length descending (docID
-    * ascending tie-break) — relevance is never computed. The twin of
-    * QueryEngine.topKSortedByLen / [[oracleSqlSortedTopK]]. */
+  /** Sort-by-field top-k over [[QuerySet]]: the AND candidates ordered by
+    * document length descending (docID ascending tie-break) — relevance
+    * is never used. The twin of the engine's sort-by-length top-k /
+    * [[oracleSqlSortedTopK]]. Rounding a long length is the identity. */
   def oracleSortedTopK(spark: SparkSession, sfDir: String, k: Int = K): DataFrame = {
-    val docs   = Corpus.docs(spark, sfDir)
-    val tf     = termFreq(docs).cache()
-    val doclen = docLengths(tf)
-    val perQuery = QuerySet.map { case (qid, qtext) =>
-      val terms = Analyzer.queryTerms(qtext)
-      val matching = tf
-        .filter(col("term").isin(terms: _*))
-        .groupBy(col("docID")).agg(count(lit(1)).as("nt"))
-        .filter(col("nt") === terms.size)
-        .select(col("docID"))
-      matching.join(doclen, "docID")
-        .withColumn("rank",
-          row_number().over(Window.orderBy(col("len").desc, col("docID").asc))
-            .cast("int"))
-        .filter(col("rank") <= k)
-        .select(lit(qid).as("query"), col("rank"), col("docID"), col("len"))
-    }
-    perQuery.reduce(_ unionAll _).orderBy(col("query"), col("rank"))
+    val c = Context(spark, sfDir, cached = true)
+    rank(tagged(QuerySet.map { case (qid, q) =>
+      qid -> score(c, Match.and(q)).join(c.doclen, "docID")
+        .select(col("docID"), col("len").as("score"))
+    }), k, rounded = true).withColumnRenamed("score", "len")
   }
 
-  /** DuckDB twin of [[oracleSortedTopK]]: the AND match set (per-doc
-    * matched-term count = |terms|) joined to doc lengths, ranked
-    * (len DESC, docID ASC), top k per query. */
-  def oracleSqlSortedTopK(k: Int = K): String = {
-    val base =
-      s"""WITH tok AS (
-         |  SELECT doc_id AS docID, t.term AS term
-         |  FROM documents, unnest(regexp_split_to_array(lower(text), '[^a-z0-9]+')) AS t(term)
-         |  WHERE t.term <> ''
-         |), tf AS (
-         |  SELECT docID, term, CAST(count(*) AS BIGINT) AS tf FROM tok GROUP BY docID, term
-         |), dl AS (
-         |  SELECT docID, CAST(sum(tf) AS BIGINT) AS len FROM tf GROUP BY docID
-         |)""".stripMargin
-    val perQuery = QuerySet.map { case (qid, qtext) =>
-      val terms = Analyzer.queryTerms(qtext)
-      val inList = terms.map(t => s"'$t'").mkString(", ")
-      s"""(SELECT '$qid' AS query, CAST(rank AS INTEGER) AS rank, docID, len FROM (
-         |  SELECT dl.docID AS docID, dl.len AS len,
-         |         row_number() OVER (ORDER BY dl.len DESC, dl.docID ASC) AS rank
-         |  FROM dl JOIN (
-         |    SELECT docID FROM tf WHERE term IN ($inList)
-         |    GROUP BY docID HAVING count(*) = ${terms.size}
-         |  ) m USING (docID)
-         |) WHERE rank <= $k)""".stripMargin
-    }.mkString("\n UNION ALL \n")
-    s"$base\nSELECT * FROM (\n$perQuery\n) ORDER BY query, rank"
-  }
-
-  /** Brute-force boolean-NOT top-k over [[NotQuerySet]]: AND-semantics
-    * BM25 over each query's positive terms, docs containing ANY negated
-    * term removed by an anti-join BEFORE ranking (so the top-k is exact
-    * among survivors, not a post-filter of an unfiltered top-k). The
-    * negated terms never contribute to the score — survivor scores equal
-    * the plain-AND scores, the property the indexed engine's anti-gate
-    * relies on. */
-  def oracleTopKNot(spark: SparkSession, sfDir: String, k: Int = K): DataFrame = {
-    val docs   = Corpus.docs(spark, sfDir)
-    val tf     = termFreq(docs).cache()
-    val doclen = docLengths(tf)
-    val stats  = corpusStats(doclen)
-    val df     = docFreq(tf)
-
-    val scored = tf
-      .join(df, "term")
-      .join(doclen, "docID")
-      .crossJoin(broadcast(stats))
-      .withColumn("contrib",
-        contribCol(idfCol(col("n"), col("df")), col("tf"), col("len"), col("avgdl")))
-      .select(col("docID"), col("term"), col("contrib"))
-
-    val perQuery = NotQuerySet.map { case (qid, qtext) =>
-      val (terms, neg) = graft.functions.Analyzer.signedTerms(qtext)
-      val pivoted = scored
-        .filter(col("term").isin(terms: _*))
-        .groupBy(col("docID"))
-        .pivot("term", terms)
-        .agg(first(col("contrib")))
-      val excluded =
-        if (neg.isEmpty) pivoted
-        else pivoted.join(
-          broadcast(tf.filter(col("term").isin(neg: _*))
-            .select(col("docID")).distinct()),
-          Seq("docID"), "left_anti")
-      val allPresent = terms.map(t => col(t).isNotNull).reduce(_ && _)
-      val score = terms.map(t => col(t)).reduce(_ + _)
-      excluded
-        .filter(allPresent)
-        .withColumn("score", round(score, 4))
-        .withColumn("rank",
-          row_number().over(Window.orderBy(col("score").desc, col("docID").asc)))
-        .filter(col("rank") <= k)
-        .select(lit(qid).as("query"), col("rank"), col("docID"), col("score"))
-    }
-
-    perQuery.reduce(_ unionAll _).orderBy(col("query"), col("rank"))
-  }
-
-  /** Exact-score variant for internal rank-identity tests (no rounding;
-    * order by the exact score). */
-  def oracleTopKExact(spark: SparkSession, sfDir: String, qtext: String,
-                      k: Int = K): DataFrame = {
-    val docs   = Corpus.docs(spark, sfDir)
-    val tf     = termFreq(docs)
-    val doclen = docLengths(tf)
-    val stats  = corpusStats(doclen)
-    val df     = docFreq(tf)
-    val terms  = Analyzer.queryTerms(qtext)
-    if (terms.isEmpty) return spark.emptyDataFrame
-      .selectExpr() // never hit by the fixed set; guarded in tests
-    val scored = tf
-      .join(df, "term")
-      .join(doclen, "docID")
-      .crossJoin(broadcast(stats))
-      .withColumn("contrib",
-        contribCol(idfCol(col("n"), col("df")), col("tf"), col("len"), col("avgdl")))
-    val pivoted = scored
-      .filter(col("term").isin(terms: _*))
-      .groupBy(col("docID"))
-      .pivot("term", terms)
-      .agg(first(col("contrib")))
-    val allPresent = terms.map(t => col(t).isNotNull).reduce(_ && _)
-    val score = terms.map(t => col(t)).reduce(_ + _)
-    pivoted
-      .filter(allPresent)
-      .withColumn("score", score)
-      .orderBy(col("score").desc, col("docID").asc)
-      .limit(k)
-      .select(col("docID"), col("score"))
-  }
+  /** Boolean-NOT top-k over [[NotQuerySet]]: AND over the positive
+    * terms, docs holding any negated term removed before ranking. */
+  def oracleTopKNot(spark: SparkSession, sfDir: String, k: Int = K): DataFrame =
+    ranked(Context(spark, sfDir, cached = true),
+      NotQuerySet.map { case (qid, q) => qid -> Match.not(q) }, k)
 
   /** Column predicate: does `toks` contain the phrase tokens at
     * consecutive positions? Pure built-ins (exists over an index
@@ -721,271 +630,6 @@ object Bm25 {
     ).otherwise(lit(false))
   }
 
-  /** Brute-force exact-phrase BM25 top-k over [[PhraseQuerySet]]:
-    * adjacency filter on the token array, then the same pivoted
-    * fixed-association AND scoring as [[oracleTopK]]. `langFilter`
-    * restricts the RESULT set to one lang facet while scoring stats stay
-    * corpus-global (the faceted-retrieval contract, as in [[oracleTopK]]). */
-  def oraclePhraseTopK(spark: SparkSession, sfDir: String, k: Int = K,
-                       langFilter: String = null): DataFrame = {
-    val docs   = Corpus.docs(spark, sfDir)
-    val tf     = termFreq(docs).cache()
-    val doclen = docLengths(tf)
-    val stats  = corpusStats(doclen)
-    val df     = docFreq(tf)
-    val allowed =
-      if (langFilter == null) null
-      else docs.filter(col("lang") === langFilter).select(col("docID"))
-    val scored = tf
-      .join(df, "term")
-      .join(doclen, "docID")
-      .crossJoin(broadcast(stats))
-      .withColumn("contrib",
-        contribCol(idfCol(col("n"), col("df")), col("tf"), col("len"), col("avgdl")))
-      .select(col("docID"), col("term"), col("contrib"))
-    val toks = docs.select(col("docID"),
-      Analyzer.tokensCol(col("content")).as("toks"))
-
-    val perQuery = PhraseQuerySet.map { case (qid, qtext) =>
-      val phrase = Analyzer.tokenize(qtext)
-      val terms = Analyzer.queryTerms(qtext)
-      val adj = toks.filter(phraseAdjCol(col("toks"), phrase)).select(col("docID"))
-      val pivoted = scored
-        .filter(col("term").isin(terms: _*))
-        .join(adj, "docID")
-        .groupBy(col("docID"))
-        .pivot("term", terms)
-        .agg(first(col("contrib")))
-      val allPresent = terms.map(t => col(t).isNotNull).reduce(_ && _)
-      val score = terms.map(t => col(t)).reduce(_ + _)
-      (if (allowed == null) pivoted
-       else pivoted.join(broadcast(allowed), Seq("docID"), "left_semi"))
-        .filter(allPresent)
-        .withColumn("score", round(score, 4))
-        .withColumn("rank",
-          row_number().over(Window.orderBy(col("score").desc, col("docID").asc)))
-        .filter(col("rank") <= k)
-        .select(lit(qid).as("query"), col("rank"), col("docID"), col("score"))
-    }
-    perQuery.reduce(_ unionAll _).orderBy(col("query"), col("rank"))
-  }
-
-  /** Brute-force mixed search-box BM25 top-k over [[MixedQuerySet]]:
-    * parse each raw query string ([[Analyzer.parseSearch]]), then the
-    * same pivoted fixed-association AND scoring as [[oracleTopK]] over
-    * ALL positive terms, gated by one adjacency filter per quoted phrase
-    * ([[phraseAdjCol]]) and an anti-join on the negated terms — phrase
-    * and NOT are pure gates, so ranks among survivors equal plain-AND
-    * ranks (the same contract the engine's kernel gates keep). */
-  def oracleMixedTopK(spark: SparkSession, sfDir: String, k: Int = K): DataFrame = {
-    val docs   = Corpus.docs(spark, sfDir)
-    val tf     = termFreq(docs).cache()
-    val doclen = docLengths(tf)
-    val stats  = corpusStats(doclen)
-    val df     = docFreq(tf)
-    val scored = tf
-      .join(df, "term")
-      .join(doclen, "docID")
-      .crossJoin(broadcast(stats))
-      .withColumn("contrib",
-        contribCol(idfCol(col("n"), col("df")), col("tf"), col("len"), col("avgdl")))
-      .select(col("docID"), col("term"), col("contrib"))
-    val toks = docs.select(col("docID"),
-      Analyzer.tokensCol(col("content")).as("toks"))
-
-    val perQuery = MixedQuerySet.map { case (qid, qtext) =>
-      val p = Analyzer.parseSearch(qtext)
-      val terms = p.pos
-      var base = scored.filter(col("term").isin(terms: _*))
-      for (phrase <- p.phrases) {
-        val adj = toks.filter(phraseAdjCol(col("toks"), phrase)).select(col("docID"))
-        base = base.join(adj, "docID")
-      }
-      if (p.neg.nonEmpty) {
-        val negDocs = tf.filter(col("term").isin(p.neg: _*))
-          .select(col("docID")).distinct()
-        base = base.join(negDocs, Seq("docID"), "left_anti")
-      }
-      val pivoted = base
-        .groupBy(col("docID"))
-        .pivot("term", terms)
-        .agg(first(col("contrib")))
-      val allPresent = terms.map(t => col(t).isNotNull).reduce(_ && _)
-      val score = terms.map(t => col(t)).reduce(_ + _)
-      pivoted
-        .filter(allPresent)
-        .withColumn("score", round(score, 4))
-        .withColumn("rank",
-          row_number().over(Window.orderBy(col("score").desc, col("docID").asc)))
-        .filter(col("rank") <= k)
-        .select(lit(qid).as("query"), col("rank"), col("docID"), col("score"))
-    }
-    perQuery.reduce(_ unionAll _).orderBy(col("query"), col("rank"))
-  }
-
-  /** Brute-force field-faceted search-box BM25 top-k over
-    * [[FieldQuerySet]]: [[oracleMixedTopK]]'s gate construction plus a
-    * semi-join on the `lang:value` facet's docID set — the facet is a
-    * pure gate over corpus-global scoring, the faceted-retrieval
-    * contract ([[oraclePhraseTopK]]'s `langFilter` generalized to the
-    * parsed grammar). */
-  def oracleFieldTopK(spark: SparkSession, sfDir: String, k: Int = K): DataFrame = {
-    val docs   = Corpus.docs(spark, sfDir)
-    val tf     = termFreq(docs).cache()
-    val doclen = docLengths(tf)
-    val stats  = corpusStats(doclen)
-    val df     = docFreq(tf)
-    val scored = tf
-      .join(df, "term")
-      .join(doclen, "docID")
-      .crossJoin(broadcast(stats))
-      .withColumn("contrib",
-        contribCol(idfCol(col("n"), col("df")), col("tf"), col("len"), col("avgdl")))
-      .select(col("docID"), col("term"), col("contrib"))
-    val toks = docs.select(col("docID"),
-      Analyzer.tokensCol(col("content")).as("toks"))
-
-    val perQuery = FieldQuerySet.map { case (qid, qtext) =>
-      val p = Analyzer.parseSearch(qtext)
-      val terms = p.pos
-      var base = scored.filter(col("term").isin(terms: _*))
-      for ((f, v) <- p.fields) {
-        require(f == "lang", s"oracle supports the lang field, got $f")
-        base = base.join(
-          broadcast(docs.filter(col("lang") === v).select(col("docID"))),
-          Seq("docID"), "left_semi")
-      }
-      for (phrase <- p.phrases) {
-        val adj = toks.filter(phraseAdjCol(col("toks"), phrase)).select(col("docID"))
-        base = base.join(adj, "docID")
-      }
-      if (p.neg.nonEmpty) {
-        val negDocs = tf.filter(col("term").isin(p.neg: _*))
-          .select(col("docID")).distinct()
-        base = base.join(negDocs, Seq("docID"), "left_anti")
-      }
-      val pivoted = base
-        .groupBy(col("docID"))
-        .pivot("term", terms)
-        .agg(first(col("contrib")))
-      val allPresent = terms.map(t => col(t).isNotNull).reduce(_ && _)
-      val score = terms.map(t => col(t)).reduce(_ + _)
-      pivoted
-        .filter(allPresent)
-        .withColumn("score", round(score, 4))
-        .withColumn("rank",
-          row_number().over(Window.orderBy(col("score").desc, col("docID").asc)))
-        .filter(col("rank") <= k)
-        .select(lit(qid).as("query"), col("rank"), col("docID"), col("score"))
-    }
-    perQuery.reduce(_ unionAll _).orderBy(col("query"), col("rank"))
-  }
-
-  /** Brute-force boosted search-box BM25 top-k over [[BoostQuerySet]]:
-    * [[oracleMixedTopK]]'s gate construction with each term's pivoted
-    * contribution multiplied by its `term^w` weight before the fixed
-    * ascending-term sum — `contrib * w` commutes bit-exactly with the
-    * kernel's `w * contrib` (IEEE multiplication), so rank identity
-    * holds with no new FP hazard. */
-  def oracleBoostedTopK(spark: SparkSession, sfDir: String, k: Int = K): DataFrame = {
-    val docs   = Corpus.docs(spark, sfDir)
-    val tf     = termFreq(docs).cache()
-    val doclen = docLengths(tf)
-    val stats  = corpusStats(doclen)
-    val df     = docFreq(tf)
-    val scored = tf
-      .join(df, "term")
-      .join(doclen, "docID")
-      .crossJoin(broadcast(stats))
-      .withColumn("contrib",
-        contribCol(idfCol(col("n"), col("df")), col("tf"), col("len"), col("avgdl")))
-      .select(col("docID"), col("term"), col("contrib"))
-    val toks = docs.select(col("docID"),
-      Analyzer.tokensCol(col("content")).as("toks"))
-
-    val perQuery = BoostQuerySet.map { case (qid, qtext) =>
-      val p = Analyzer.parseSearch(qtext)
-      val terms = p.pos
-      var base = scored.filter(col("term").isin(terms: _*))
-      for (phrase <- p.phrases) {
-        val adj = toks.filter(phraseAdjCol(col("toks"), phrase)).select(col("docID"))
-        base = base.join(adj, "docID")
-      }
-      if (p.neg.nonEmpty) {
-        val negDocs = tf.filter(col("term").isin(p.neg: _*))
-          .select(col("docID")).distinct()
-        base = base.join(negDocs, Seq("docID"), "left_anti")
-      }
-      val pivoted = base
-        .groupBy(col("docID"))
-        .pivot("term", terms)
-        .agg(first(col("contrib")))
-      val allPresent = terms.map(t => col(t).isNotNull).reduce(_ && _)
-      val score = terms.map { t =>
-        p.boosts.get(t) match {
-          case Some(w) => col(t) * lit(w)
-          case None    => col(t)
-        }
-      }.reduce(_ + _)
-      pivoted
-        .filter(allPresent)
-        .withColumn("score", round(score, 4))
-        .withColumn("rank",
-          row_number().over(Window.orderBy(col("score").desc, col("docID").asc)))
-        .filter(col("rank") <= k)
-        .select(lit(qid).as("query"), col("rank"), col("docID"), col("score"))
-    }
-    perQuery.reduce(_ unionAll _).orderBy(col("query"), col("rank"))
-  }
-
-  /** Brute-force grouped (field-collapsing) BM25 top-n per lang over
-    * [[GroupedQuerySet]]: the AND pivot with `term^w` weights, ranked by
-    * row_number over (partition by lang, round4(score) desc, docID asc)
-    * — the declarative twin of the per-group-heap kernel. */
-  def oracleGroupedTopK(spark: SparkSession, sfDir: String, n: Int = 3): DataFrame = {
-    val docs   = Corpus.docs(spark, sfDir)
-    val tf     = termFreq(docs).cache()
-    val doclen = docLengths(tf)
-    val stats  = corpusStats(doclen)
-    val df     = docFreq(tf)
-    val scored = tf
-      .join(df, "term")
-      .join(doclen, "docID")
-      .crossJoin(broadcast(stats))
-      .withColumn("contrib",
-        contribCol(idfCol(col("n"), col("df")), col("tf"), col("len"), col("avgdl")))
-      .select(col("docID"), col("term"), col("contrib"))
-    val langOf = docs.select(col("docID"), col("lang").as("grp"))
-
-    val perQuery = GroupedQuerySet.map { case (qid, qtext) =>
-      val p = Analyzer.parseSearch(qtext)
-      val terms = p.pos
-      val pivoted = scored.filter(col("term").isin(terms: _*))
-        .groupBy(col("docID"))
-        .pivot("term", terms)
-        .agg(first(col("contrib")))
-      val allPresent = terms.map(t => col(t).isNotNull).reduce(_ && _)
-      val score = terms.map { t =>
-        p.boosts.get(t) match {
-          case Some(w) => col(t) * lit(w)
-          case None    => col(t)
-        }
-      }.reduce(_ + _)
-      pivoted
-        .filter(allPresent)
-        .withColumn("score", round(score, 4))
-        .join(langOf, "docID")
-        .withColumn("rank",
-          row_number().over(Window.partitionBy(col("grp"))
-            .orderBy(col("score").desc, col("docID").asc)))
-        .filter(col("rank") <= n)
-        .select(lit(qid).as("query"), col("grp"), col("rank"),
-          col("docID"), col("score"))
-    }
-    perQuery.reduce(_ unionAll _)
-      .orderBy(col("query"), col("grp"), col("rank"))
-  }
-
   /** Column predicate: do all `terms` co-occur within some window of `w`
     * consecutive tokens? Pure built-ins — exists over every 1-based start
     * position, slice clamps at the array end. `greatest(..., 1)` guards
@@ -995,391 +639,219 @@ object Bm25 {
       i => terms.map(t => array_contains(slice(toks, i, lit(w)), t))
         .reduce(_ && _))
 
-  /** Brute-force proximity (window) BM25 top-k over [[WindowQuerySet]]:
-    * co-occurrence-within-w filter on the token array, then the same
-    * pivoted fixed-association AND scoring as [[oracleTopK]]. Window
-    * matches ⊆ AND matches, so scoring semantics are exactly AND's. */
-  def oracleWindowTopK(spark: SparkSession, sfDir: String, k: Int = K): DataFrame = {
-    val docs   = Corpus.docs(spark, sfDir)
-    val tf     = termFreq(docs).cache()
-    val doclen = docLengths(tf)
-    val stats  = corpusStats(doclen)
-    val df     = docFreq(tf)
-    val scored = tf
-      .join(df, "term")
-      .join(doclen, "docID")
-      .crossJoin(broadcast(stats))
-      .withColumn("contrib",
-        contribCol(idfCol(col("n"), col("df")), col("tf"), col("len"), col("avgdl")))
-      .select(col("docID"), col("term"), col("contrib"))
-    val toks = docs.select(col("docID"),
-      Analyzer.tokensCol(col("content")).as("toks"))
+  /** Exact-phrase top-k over [[PhraseQuerySet]]: AND scoring gated by the
+    * adjacency of the query's tokens; `langFilter` gates the candidates
+    * to one lang as in [[oracleTopK]]. */
+  def oraclePhraseTopK(spark: SparkSession, sfDir: String, k: Int = K,
+                       langFilter: String = null): DataFrame =
+    ranked(Context(spark, sfDir, cached = true), PhraseQuerySet.map { case (qid, q) =>
+      qid -> Match.phrase(q).copy(langs = Option(langFilter).toSeq) }, k)
 
-    val perQuery = WindowQuerySet.map { case (qid, qtext, w) =>
-      val terms = Analyzer.queryTerms(qtext)
-      val near = toks.filter(windowCol(col("toks"), terms, w)).select(col("docID"))
-      val pivoted = scored
-        .filter(col("term").isin(terms: _*))
-        .join(near, "docID")
-        .groupBy(col("docID"))
-        .pivot("term", terms)
-        .agg(first(col("contrib")))
-      val allPresent = terms.map(t => col(t).isNotNull).reduce(_ && _)
-      val score = terms.map(t => col(t)).reduce(_ + _)
-      pivoted
-        .filter(allPresent)
-        .withColumn("score", round(score, 4))
-        .withColumn("rank",
-          row_number().over(Window.orderBy(col("score").desc, col("docID").asc)))
-        .filter(col("rank") <= k)
-        .select(lit(qid).as("query"), col("rank"), col("docID"), col("score"))
-    }
-    perQuery.reduce(_ unionAll _).orderBy(col("query"), col("rank"))
+  /** Mixed search-box top-k over [[MixedQuerySet]] ([[Match.search]]):
+    * AND over all positive terms, gated by each quoted phrase and the
+    * negated terms — the contract the engine's kernel gates keep. */
+  def oracleMixedTopK(spark: SparkSession, sfDir: String, k: Int = K): DataFrame =
+    ranked(Context(spark, sfDir, cached = true),
+      MixedQuerySet.map { case (qid, q) => qid -> Match.search(q) }, k)
+
+  /** Field-faceted search-box top-k over [[FieldQuerySet]]: the mixed
+    * grammar plus a `lang:value` facet gate over corpus-global scoring. */
+  def oracleFieldTopK(spark: SparkSession, sfDir: String, k: Int = K): DataFrame =
+    ranked(Context(spark, sfDir, cached = true),
+      FieldQuerySet.map { case (qid, q) => qid -> Match.search(q) }, k)
+
+  /** Boosted search-box top-k over [[BoostQuerySet]]: each contribution
+    * times its `term^w` weight — `contrib * w` commutes bit-exactly with
+    * the kernel's `w * contrib`, so rank identity holds. */
+  def oracleBoostedTopK(spark: SparkSession, sfDir: String, k: Int = K): DataFrame =
+    ranked(Context(spark, sfDir, cached = true),
+      BoostQuerySet.map { case (qid, q) => qid -> Match.search(q) }, k)
+
+  /** Grouped (field-collapsing) top-n per lang over [[GroupedQuerySet]]:
+    * the boosted AND candidates ranked per (query, lang) — the
+    * declarative twin of the per-group-heap kernel. */
+  def oracleGroupedTopK(spark: SparkSession, sfDir: String, n: Int = 3): DataFrame = {
+    val c = Context(spark, sfDir, cached = true)
+    val langOf = c.docs.select(col("docID"), col("lang").as("grp"))
+    rank(tagged(GroupedQuerySet.map { case (qid, q) =>
+      qid -> score(c, Match.search(q)).join(langOf, "docID")
+    }), n, rounded = true, partition = "grp")
   }
 
-  /** Exact-score window variant for internal rank-identity tests. */
-  def oracleWindowTopKExact(spark: SparkSession, sfDir: String, qtext: String,
-                            w: Int, k: Int = K): DataFrame = {
-    val docs   = Corpus.docs(spark, sfDir)
-    val tf     = termFreq(docs)
-    val doclen = docLengths(tf)
-    val stats  = corpusStats(doclen)
-    val df     = docFreq(tf)
-    val terms  = Analyzer.queryTerms(qtext)
-    val scored = tf
-      .join(df, "term")
-      .join(doclen, "docID")
-      .crossJoin(broadcast(stats))
-      .withColumn("contrib",
-        contribCol(idfCol(col("n"), col("df")), col("tf"), col("len"), col("avgdl")))
-    val near = docs
-      .select(col("docID"), Analyzer.tokensCol(col("content")).as("toks"))
-      .filter(windowCol(col("toks"), terms, w)).select(col("docID"))
-    val pivoted = scored
-      .filter(col("term").isin(terms: _*))
-      .join(near, "docID")
-      .groupBy(col("docID"))
-      .pivot("term", terms)
-      .agg(first(col("contrib")))
-    val allPresent = terms.map(t => col(t).isNotNull).reduce(_ && _)
-    val score = terms.map(t => col(t)).reduce(_ + _)
-    pivoted
-      .filter(allPresent)
-      .withColumn("score", score)
-      .orderBy(col("score").desc, col("docID").asc)
-      .limit(k)
-      .select(col("docID"), col("score"))
-  }
+  /** Proximity top-k over [[WindowQuerySet]]: AND scoring gated by the
+    * co-occurrence of all terms within w tokens. */
+  def oracleWindowTopK(spark: SparkSession, sfDir: String, k: Int = K): DataFrame =
+    ranked(Context(spark, sfDir, cached = true),
+      WindowQuerySet.map { case (qid, q, w) => qid -> Match.window(q, w) }, k)
 
-  /** Brute-force prefix BM25 top-k over [[PrefixQuerySet]]: every corpus
-    * term starting with the prefix contributes with OR semantics. The
-    * score folds the matching contributions in ASCENDING TERM ORDER
-    * starting from 0.0 — bit-identical to both the engine's disjunctive
-    * accumulation (absent terms add an exact +0.0) and the DuckDB twin's
-    * `list_reduce(list(contrib ORDER BY term), +)`. */
-  def oraclePrefixTopK(spark: SparkSession, sfDir: String, k: Int = K): DataFrame = {
-    val docs   = Corpus.docs(spark, sfDir)
-    val tf     = termFreq(docs).cache()
-    val doclen = docLengths(tf)
-    val stats  = corpusStats(doclen)
-    val df     = docFreq(tf)
-    val scored = tf
-      .join(df, "term")
-      .join(doclen, "docID")
-      .crossJoin(broadcast(stats))
-      .withColumn("contrib",
-        contribCol(idfCol(col("n"), col("df")), col("tf"), col("len"), col("avgdl")))
-      .select(col("docID"), col("term"), col("contrib"))
+  /** Prefix top-k over [[PrefixQuerySet]]: every corpus term starting
+    * with the prefix contributes with OR semantics. */
+  def oraclePrefixTopK(spark: SparkSession, sfDir: String, k: Int = K): DataFrame =
+    ranked(Context(spark, sfDir, cached = true),
+      PrefixQuerySet.map { case (qid, p) => qid -> Match.prefix(p) }, k)
 
-    val perQuery = PrefixQuerySet.map { case (qid, prefix) =>
-      scored
-        .filter(col("term").startsWith(prefix))
-        .groupBy(col("docID"))
-        .agg(aggregate(
-          sort_array(collect_list(struct(col("term"), col("contrib")))),
-          lit(0.0),
-          (acc, x) => acc + x.getField("contrib")).as("raw"))
-        .withColumn("score", round(col("raw"), 4))
-        .withColumn("rank",
-          row_number().over(Window.orderBy(col("score").desc, col("docID").asc)))
-        .filter(col("rank") <= k)
-        .select(lit(qid).as("query"), col("rank"), col("docID"), col("score"))
-    }
-    perQuery.reduce(_ unionAll _).orderBy(col("query"), col("rank"))
-  }
-
-  /** Exact-score prefix variant for internal rank-identity tests. */
-  def oraclePrefixTopKExact(spark: SparkSession, sfDir: String,
-                            prefix: String, k: Int = K): DataFrame = {
-    val docs   = Corpus.docs(spark, sfDir)
-    val tf     = termFreq(docs)
-    val doclen = docLengths(tf)
-    val stats  = corpusStats(doclen)
-    val df     = docFreq(tf)
-    tf.join(df, "term")
-      .join(doclen, "docID")
-      .crossJoin(broadcast(stats))
-      .withColumn("contrib",
-        contribCol(idfCol(col("n"), col("df")), col("tf"), col("len"), col("avgdl")))
-      .filter(col("term").startsWith(prefix))
-      .groupBy(col("docID"))
-      .agg(aggregate(
-        sort_array(collect_list(struct(col("term"), col("contrib")))),
-        lit(0.0),
-        (acc, x) => acc + x.getField("contrib")).as("score"))
-      .orderBy(col("score").desc, col("docID").asc)
-      .limit(k)
-      .select(col("docID"), col("score"))
-  }
-
-  /** Brute-force fuzzy BM25 top-k over [[FuzzyQuerySet]]: every corpus
-    * term within Levenshtein distance 1 of the query contributes with OR
-    * semantics; scoring is the same ascending-term ordered fold as
-    * [[oraclePrefixTopK]] (bit-identical to the engine and the DuckDB
-    * `list_reduce` twin). */
+  /** Fuzzy top-k over [[FuzzyQuerySet]]: every corpus term within
+    * Levenshtein distance `maxDist` contributes with OR semantics. */
   def oracleFuzzyTopK(spark: SparkSession, sfDir: String, k: Int = K,
-                      maxDist: Int = 1): DataFrame = {
-    val docs   = Corpus.docs(spark, sfDir)
-    val tf     = termFreq(docs).cache()
-    val doclen = docLengths(tf)
-    val stats  = corpusStats(doclen)
-    val df     = docFreq(tf)
-    val scored = tf
-      .join(df, "term")
-      .join(doclen, "docID")
-      .crossJoin(broadcast(stats))
-      .withColumn("contrib",
-        contribCol(idfCol(col("n"), col("df")), col("tf"), col("len"), col("avgdl")))
-      .select(col("docID"), col("term"), col("contrib"))
+                      maxDist: Int = 1): DataFrame =
+    ranked(Context(spark, sfDir, cached = true),
+      FuzzyQuerySet.map { case (qid, q) => qid -> Match.fuzzy(q, maxDist) }, k)
 
-    val perQuery = FuzzyQuerySet.map { case (qid, q) =>
-      scored
-        .filter(levenshtein(col("term"), lit(q)) <= maxDist)
-        .groupBy(col("docID"))
-        .agg(aggregate(
-          sort_array(collect_list(struct(col("term"), col("contrib")))),
-          lit(0.0),
-          (acc, x) => acc + x.getField("contrib")).as("raw"))
-        .withColumn("score", round(col("raw"), 4))
-        .withColumn("rank",
-          row_number().over(Window.orderBy(col("score").desc, col("docID").asc)))
-        .filter(col("rank") <= k)
-        .select(lit(qid).as("query"), col("rank"), col("docID"), col("score"))
-    }
-    perQuery.reduce(_ unionAll _).orderBy(col("query"), col("rank"))
-  }
+  /** Wildcard (contains) top-k over [[WildcardQuerySet]]. */
+  def oracleWildcardTopK(spark: SparkSession, sfDir: String, k: Int = K): DataFrame =
+    ranked(Context(spark, sfDir, cached = true),
+      WildcardQuerySet.map { case (qid, f) => qid -> Match.wildcard(f) }, k)
 
-  /** Exact-score fuzzy variant for internal rank-identity tests. */
-  def oracleFuzzyTopKExact(spark: SparkSession, sfDir: String, q: String,
-                           k: Int = K, maxDist: Int = 1): DataFrame = {
-    val docs   = Corpus.docs(spark, sfDir)
-    val tf     = termFreq(docs)
-    val doclen = docLengths(tf)
-    val stats  = corpusStats(doclen)
-    val df     = docFreq(tf)
-    tf.join(df, "term")
-      .join(doclen, "docID")
-      .crossJoin(broadcast(stats))
-      .withColumn("contrib",
-        contribCol(idfCol(col("n"), col("df")), col("tf"), col("len"), col("avgdl")))
-      .filter(levenshtein(col("term"), lit(q)) <= maxDist)
-      .groupBy(col("docID"))
-      .agg(aggregate(
-        sort_array(collect_list(struct(col("term"), col("contrib")))),
-        lit(0.0),
-        (acc, x) => acc + x.getField("contrib")).as("score"))
-      .orderBy(col("score").desc, col("docID").asc)
-      .limit(k)
-      .select(col("docID"), col("score"))
-  }
+  /** Regexp top-k over [[RegexQuerySet]]. */
+  def oracleRegexTopK(spark: SparkSession, sfDir: String, k: Int = K): DataFrame =
+    ranked(Context(spark, sfDir, cached = true),
+      RegexQuerySet.map { case (qid, p) => qid -> Match.regex(p) }, k)
 
-  /** Brute-force wildcard (contains) BM25 top-k over
-    * [[WildcardQuerySet]]: every corpus term CONTAINING the fragment
-    * contributes with OR semantics; scoring is the same ascending-term
-    * ordered fold as [[oraclePrefixTopK]] (bit-identical to the engine
-    * and the DuckDB `list_reduce` twin). */
-  def oracleWildcardTopK(spark: SparkSession, sfDir: String, k: Int = K): DataFrame = {
-    val docs   = Corpus.docs(spark, sfDir)
-    val tf     = termFreq(docs).cache()
-    val doclen = docLengths(tf)
-    val stats  = corpusStats(doclen)
-    val df     = docFreq(tf)
-    val scored = tf
-      .join(df, "term")
-      .join(doclen, "docID")
-      .crossJoin(broadcast(stats))
-      .withColumn("contrib",
-        contribCol(idfCol(col("n"), col("df")), col("tf"), col("len"), col("avgdl")))
-      .select(col("docID"), col("term"), col("contrib"))
+  // Exact-score per-query oracles (no rounding; order by the exact score)
+  // for the rank-identity specs and the benchmark's correctness check.
+  // Other families call rank(score(Context(spark, sfDir), m), k,
+  // rounded = false) directly.
 
-    val perQuery = WildcardQuerySet.map { case (qid, frag) =>
-      scored
-        .filter(col("term").contains(frag))
-        .groupBy(col("docID"))
-        .agg(aggregate(
-          sort_array(collect_list(struct(col("term"), col("contrib")))),
-          lit(0.0),
-          (acc, x) => acc + x.getField("contrib")).as("raw"))
-        .withColumn("score", round(col("raw"), 4))
-        .withColumn("rank",
-          row_number().over(Window.orderBy(col("score").desc, col("docID").asc)))
-        .filter(col("rank") <= k)
-        .select(lit(qid).as("query"), col("rank"), col("docID"), col("score"))
-    }
-    perQuery.reduce(_ unionAll _).orderBy(col("query"), col("rank"))
-  }
+  def oracleTopKExact(spark: SparkSession, sfDir: String, qtext: String,
+                      k: Int = K): DataFrame =
+    rank(score(Context(spark, sfDir), Match.and(qtext)), k, rounded = false)
 
-  /** Exact-score wildcard variant for internal rank-identity tests. */
-  def oracleWildcardTopKExact(spark: SparkSession, sfDir: String,
-                              frag: String, k: Int = K): DataFrame = {
-    val docs   = Corpus.docs(spark, sfDir)
-    val tf     = termFreq(docs)
-    val doclen = docLengths(tf)
-    val stats  = corpusStats(doclen)
-    val df     = docFreq(tf)
-    tf.join(df, "term")
-      .join(doclen, "docID")
-      .crossJoin(broadcast(stats))
-      .withColumn("contrib",
-        contribCol(idfCol(col("n"), col("df")), col("tf"), col("len"), col("avgdl")))
-      .filter(col("term").contains(frag))
-      .groupBy(col("docID"))
-      .agg(aggregate(
-        sort_array(collect_list(struct(col("term"), col("contrib")))),
-        lit(0.0),
-        (acc, x) => acc + x.getField("contrib")).as("score"))
-      .orderBy(col("score").desc, col("docID").asc)
-      .limit(k)
-      .select(col("docID"), col("score"))
-  }
-
-  /** Regexp brute-force top-k over [[RegexQuerySet]] — the wildcard
-    * oracle with the contains-predicate swapped for an ANCHORED regex
-    * match (`rlike("^(?:pat)$")` ≡ java.util.regex `matches()`, the
-    * engine's dictionary-expansion predicate). */
-  def oracleRegexTopK(spark: SparkSession, sfDir: String, k: Int = K): DataFrame = {
-    val docs   = Corpus.docs(spark, sfDir)
-    val tf     = termFreq(docs).cache()
-    val doclen = docLengths(tf)
-    val stats  = corpusStats(doclen)
-    val df     = docFreq(tf)
-    val scored = tf
-      .join(df, "term")
-      .join(doclen, "docID")
-      .crossJoin(broadcast(stats))
-      .withColumn("contrib",
-        contribCol(idfCol(col("n"), col("df")), col("tf"), col("len"), col("avgdl")))
-      .select(col("docID"), col("term"), col("contrib"))
-
-    val perQuery = RegexQuerySet.map { case (qid, pat) =>
-      scored
-        .filter(col("term").rlike("^(?:" + pat + ")$"))
-        .groupBy(col("docID"))
-        .agg(aggregate(
-          sort_array(collect_list(struct(col("term"), col("contrib")))),
-          lit(0.0),
-          (acc, x) => acc + x.getField("contrib")).as("raw"))
-        .withColumn("score", round(col("raw"), 4))
-        .withColumn("rank",
-          row_number().over(Window.orderBy(col("score").desc, col("docID").asc)))
-        .filter(col("rank") <= k)
-        .select(lit(qid).as("query"), col("rank"), col("docID"), col("score"))
-    }
-    perQuery.reduce(_ unionAll _).orderBy(col("query"), col("rank"))
-  }
-
-  /** Exact-score regexp variant for internal rank-identity tests. */
-  def oracleRegexTopKExact(spark: SparkSession, sfDir: String,
-                           pat: String, k: Int = K): DataFrame = {
-    val docs   = Corpus.docs(spark, sfDir)
-    val tf     = termFreq(docs)
-    val doclen = docLengths(tf)
-    val stats  = corpusStats(doclen)
-    val df     = docFreq(tf)
-    tf.join(df, "term")
-      .join(doclen, "docID")
-      .crossJoin(broadcast(stats))
-      .withColumn("contrib",
-        contribCol(idfCol(col("n"), col("df")), col("tf"), col("len"), col("avgdl")))
-      .filter(col("term").rlike("^(?:" + pat + ")$"))
-      .groupBy(col("docID"))
-      .agg(aggregate(
-        sort_array(collect_list(struct(col("term"), col("contrib")))),
-        lit(0.0),
-        (acc, x) => acc + x.getField("contrib")).as("score"))
-      .orderBy(col("score").desc, col("docID").asc)
-      .limit(k)
-      .select(col("docID"), col("score"))
-  }
-
-  /** Exact-score phrase variant for internal rank-identity tests. */
-  def oraclePhraseTopKExact(spark: SparkSession, sfDir: String, qtext: String,
-                            k: Int = K): DataFrame = {
-    val docs   = Corpus.docs(spark, sfDir)
-    val tf     = termFreq(docs)
-    val doclen = docLengths(tf)
-    val stats  = corpusStats(doclen)
-    val df     = docFreq(tf)
-    val phrase = Analyzer.tokenize(qtext)
-    val terms  = Analyzer.queryTerms(qtext)
-    val scored = tf
-      .join(df, "term")
-      .join(doclen, "docID")
-      .crossJoin(broadcast(stats))
-      .withColumn("contrib",
-        contribCol(idfCol(col("n"), col("df")), col("tf"), col("len"), col("avgdl")))
-    val adj = docs
-      .select(col("docID"), Analyzer.tokensCol(col("content")).as("toks"))
-      .filter(phraseAdjCol(col("toks"), phrase)).select(col("docID"))
-    val pivoted = scored
-      .filter(col("term").isin(terms: _*))
-      .join(adj, "docID")
-      .groupBy(col("docID"))
-      .pivot("term", terms)
-      .agg(first(col("contrib")))
-    val allPresent = terms.map(t => col(t).isNotNull).reduce(_ && _)
-    val score = terms.map(t => col(t)).reduce(_ + _)
-    pivoted
-      .filter(allPresent)
-      .withColumn("score", score)
-      .orderBy(col("score").desc, col("docID").asc)
-      .limit(k)
-      .select(col("docID"), col("score"))
-  }
-
-  /** Exact-score disjunctive variant for internal rank-identity tests. */
   def oracleTopKOrExact(spark: SparkSession, sfDir: String, qtext: String,
-                        k: Int = K): DataFrame = {
-    val docs   = Corpus.docs(spark, sfDir)
-    val tf     = termFreq(docs)
-    val doclen = docLengths(tf)
-    val stats  = corpusStats(doclen)
-    val df     = docFreq(tf)
-    val terms  = Analyzer.queryTerms(qtext)
-    val scored = tf
-      .join(df, "term")
-      .join(doclen, "docID")
-      .crossJoin(broadcast(stats))
-      .withColumn("contrib",
-        contribCol(idfCol(col("n"), col("df")), col("tf"), col("len"), col("avgdl")))
-    val pivoted = scored
-      .filter(col("term").isin(terms: _*))
-      .groupBy(col("docID"))
-      .pivot("term", terms)
-      .agg(first(col("contrib")))
-    val score = terms.map(t => coalesce(col(t), lit(0.0))).reduce(_ + _)
-    pivoted
-      .withColumn("score", score)
-      .orderBy(col("score").desc, col("docID").asc)
-      .limit(k)
-      .select(col("docID"), col("score"))
-  }
+                        k: Int = K): DataFrame =
+    rank(score(Context(spark, sfDir), Match.or(qtext)), k, rounded = false)
+
+  def oraclePhraseTopKExact(spark: SparkSession, sfDir: String, qtext: String,
+                            k: Int = K): DataFrame =
+    rank(score(Context(spark, sfDir), Match.phrase(qtext)), k, rounded = false)
+
+  def oraclePrefixTopKExact(spark: SparkSession, sfDir: String,
+                            prefix: String, k: Int = K): DataFrame =
+    rank(score(Context(spark, sfDir), Match.prefix(prefix)), k, rounded = false)
 
   // ------------------------------------------------------- DuckDB twin SQL
 
-  /** ANSI SQL (DuckDB dialect) twin of [[oracleTopK]], generated from the
-    * same QuerySet so both sides share one source of truth. Table name
-    * `documents` = the driver-registered parquet. */
+  /** The DuckDB base every BM25 twin builds on, over the tokenized text
+    * expression `textExpr` (table `documents` = the driver-registered
+    * parquet): `tok` (one row per token), `tokarr` (each doc's token
+    * array), `tf`, `dl`, `stats`, `dfr`, and `scored` (docID, term, tf,
+    * df, idf, contrib) — the SQL side of [[Context]]. `scored` is
+    * MATERIALIZED: every per-query subquery reads it, and inlined it is
+    * recomputed once per query. Twins append their own CTEs after a
+    * comma. */
+  def baseSql(textExpr: String = "lower(text)"): String =
+    s"""WITH tok AS (
+       |  SELECT doc_id AS docID, t.term AS term
+       |  FROM documents, unnest(regexp_split_to_array($textExpr, '[^a-z0-9]+')) AS t(term)
+       |  WHERE t.term <> ''
+       |), tokarr AS (
+       |  SELECT doc_id AS docID,
+       |         list_filter(regexp_split_to_array($textExpr, '[^a-z0-9]+'), t -> t <> '') AS toks
+       |  FROM documents
+       |), tf AS (
+       |  SELECT docID, term, CAST(count(*) AS BIGINT) AS tf FROM tok GROUP BY docID, term
+       |), dl AS (
+       |  SELECT docID, CAST(sum(tf) AS BIGINT) AS len FROM tf GROUP BY docID
+       |), stats AS (
+       |  SELECT CAST(count(*) AS DOUBLE) AS n,
+       |         CAST(sum(len) AS DOUBLE) / count(*) AS avgdl
+       |  FROM dl
+       |), dfr AS (
+       |  SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY term
+       |), scored AS MATERIALIZED (
+       |  SELECT docID, term, tf, df, idf,
+       |         idf * (CAST(tf AS DOUBLE) * 2.2)
+       |           / (CAST(tf AS DOUBLE) + 1.2 * (0.25 + 0.75 * CAST(len AS DOUBLE) / avgdl))
+       |           AS contrib
+       |  FROM (
+       |    SELECT tf.docID, tf.term, tf.tf, dfr.df, dl.len, stats.avgdl,
+       |           ln((stats.n - CAST(dfr.df AS DOUBLE) + 0.5) / (CAST(dfr.df AS DOUBLE) + 0.5) + 1.0)
+       |             AS idf
+       |    FROM tf JOIN dfr USING (term) JOIN dl USING (docID) CROSS JOIN stats
+       |  )
+       |)""".stripMargin
+
+  private def inList(ts: Seq[String]): String = ts.map(t => s"'$t'").mkString(", ")
+
+  /** DuckDB twin of [[score]]: (docID, raw) for every candidate of `m`,
+    * raw = `list_reduce` over the (boosted) contributions in ascending
+    * term order — the same left-to-right fold. Reads [[baseSql]]'s
+    * `scored`, `tf` and `tokarr`; `docPred` is one more raw predicate on
+    * the candidate docID (e.g. the tombstone exclusion). Phrase and
+    * window gates test every 1-based start i (DuckDB `range(a, b)` is
+    * empty when b <= a, and slices clamp at the list end, as Spark's
+    * `slice`). */
+  def candSql(m: Match, docPred: String = null): String = {
+    def tokGate(hi: String, cond: String) =
+      s"docID IN (SELECT docID FROM tokarr WHERE len(list_filter(range(1, $hi), i -> $cond)) > 0)"
+    val gates =
+      m.langs.map(v => s"docID IN (SELECT doc_id FROM documents WHERE lang = '$v')") ++
+      m.phrases.map(p => tokGate(s"len(toks) - ${p.length - 1} + 1", p.zipWithIndex
+        .map { case (w, j) => s"toks[CAST(i AS BIGINT)+$j] = '$w'" }.mkString(" AND "))) ++
+      (if (m.window <= 0) Nil
+       else Seq(tokGate("len(toks) + 1", m.terms.map(t =>
+         s"list_contains(toks[CAST(i AS BIGINT):CAST(i AS BIGINT)+${m.window - 1}], '$t')")
+         .mkString(" AND ")))) ++
+      (if (m.neg.isEmpty) Nil
+       else Seq(s"docID NOT IN (SELECT docID FROM tf WHERE term IN (${inList(m.neg)}))")) ++
+      Option(docPred)
+    val hit = m.expand.map(_._2).getOrElse(s"term IN (${inList(m.terms)})")
+    // `term^w` boosts: `contrib * w` — commutes bit-exactly with the
+    // kernel's `w * contrib`
+    val boosted =
+      if (m.boosts.isEmpty) "contrib"
+      else m.boosts.map { case (t, w) => s"WHEN term = '$t' THEN contrib * $w" }
+        .mkString("CASE ", " ", " ELSE contrib END")
+    s"""SELECT docID, list_reduce(list($boosted ORDER BY term), (a, b) -> a + b) AS raw
+       |    FROM scored WHERE ${(hit +: gates).mkString("\n      AND ")}
+       |    GROUP BY docID HAVING count(*) >= ${m.minMatch}""".stripMargin
+  }
+
+  /** The one DuckDB rank tail ([[rank]]'s set-level shape): per query,
+    * its candidates' (docID, raw[, grp]) ranked by (round(raw, 4) desc,
+    * docID asc), ranks rankLo..k kept as (query, [grp,] rank, docID,
+    * score). `grp` partitions each query's ranking by its `grp` column. */
+  def rankSql(qs: Seq[(String, String)], k: Int, rankLo: Int = 1,
+              grp: Boolean = false, base: String = baseSql()): String = {
+    val (g, part) = if (grp) ("grp, ", "PARTITION BY grp ") else ("", "")
+    val perQuery = qs.map { case (qid, cands) =>
+      s"""(SELECT '$qid' AS query, ${g}CAST(rank AS INTEGER) AS rank, docID, score FROM (
+         |  SELECT ${g}docID, round(raw, 4) AS score,
+         |         row_number() OVER (${part}ORDER BY round(raw, 4) DESC, docID ASC) AS rank
+         |  FROM (
+         |    $cands
+         |  )
+         |) WHERE rank BETWEEN $rankLo AND $k)""".stripMargin
+    }.mkString("\n UNION ALL \n")
+    s"$base\nSELECT * FROM (\n$perQuery\n) ORDER BY query, ${g}rank"
+  }
+
+  /** A rounded set-level twin: every query's [[candSql]] through
+    * [[rankSql]]. */
+  private def rankedSql(qs: Seq[(String, Match)], k: Int): String =
+    rankSql(qs.map { case (qid, m) => qid -> candSql(m) }, k)
+
+  /** The AND match set of `q` (docIDs holding every query term), for the
+    * unscored twins. */
+  private def matchSql(q: String): String = {
+    val terms = Analyzer.queryTerms(q)
+    s"SELECT docID FROM tf WHERE term IN (${inList(terms)}) " +
+      s"GROUP BY docID HAVING count(*) = ${terms.size}"
+  }
+
+  /** DuckDB twin of [[oracleTopK]] (and of every entry that must
+    * reproduce its frame), generated from the same query set.
+    * `docPred` is an extra raw SQL predicate on the candidate docID
+    * (e.g. the tombstone-exclusion twin). `rankLo` is the pagination
+    * twin: ranks [rankLo, k] — page 2 of a k-deep ranking is (k+1, 2k).
+    * The fielded (BM25F) twin swaps `querySet` and `textExpr`. */
+  def oracleSqlTopK(k: Int = K, langFilter: String = null,
+                    docPred: String = null, rankLo: Int = 1,
+                    querySet: Seq[(String, String)] = QuerySet,
+                    textExpr: String = "lower(text)"): String =
+    rankSql(querySet.map { case (qid, q) =>
+      qid -> candSql(Match.and(q).copy(langs = Option(langFilter).toSeq), docPred)
+    }, k, rankLo, base = baseSql(textExpr))
+
   /** DuckDB text expression of [[fieldedDocs]]: the raw `documents`
     * columns reassembled into `content ⊕ path×w` (path is derived, not
     * stored — `source || '/' || doc_id || '.txt'`, Corpus.scala:32). */
@@ -1395,342 +867,108 @@ object Bm25 {
     * group a summed-tf derived table and a max-df scalar, contributions
     * summed in canonical group-name order (identical association). */
   def oracleSqlSynTopK(k: Int = K): String = {
-    val base =
-      s"""WITH tok AS (
-         |  SELECT doc_id AS docID, t.term AS term
-         |  FROM documents, unnest(regexp_split_to_array(lower(text), '[^a-z0-9]+')) AS t(term)
-         |  WHERE t.term <> ''
-         |), tf AS (
-         |  SELECT docID, term, CAST(count(*) AS BIGINT) AS tf FROM tok GROUP BY docID, term
-         |), dl AS (
-         |  SELECT docID, CAST(sum(tf) AS BIGINT) AS len FROM tf GROUP BY docID
-         |), stats AS (
-         |  SELECT CAST(count(*) AS DOUBLE) AS n,
-         |         CAST(sum(len) AS DOUBLE) / count(*) AS avgdl
-         |  FROM dl
-         |), dfr AS (
-         |  SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY term
-         |)""".stripMargin
     val perQuery = SynQuerySet.map { case (qid, qtext) =>
       val groups = Analyzer.synGroups(qtext)
-      def in(g: Seq[String]): String = g.map(t => s"'$t'").mkString(", ")
       val fromChain = groups.indices.map { i =>
         val sub = s"(SELECT docID, CAST(sum(tf) AS DOUBLE) AS tf FROM tf " +
-          s"WHERE term IN (${in(groups(i))}) GROUP BY docID) t$i"
+          s"WHERE term IN (${inList(groups(i))}) GROUP BY docID) t$i"
         if (i == 0) sub else s"JOIN $sub USING (docID)"
-      }.mkString("\n    ")
+      }.mkString("\n      ")
       val dJoins = groups.indices.map { i =>
         s"CROSS JOIN (SELECT CAST(max(df) AS DOUBLE) AS df FROM dfr " +
-          s"WHERE term IN (${in(groups(i))})) d$i"
-      }.mkString("\n    ")
+          s"WHERE term IN (${inList(groups(i))})) d$i"
+      }.mkString("\n      ")
       val gCols = groups.indices.map { i =>
         s"ln((stats.n - d$i.df + 0.5) / (d$i.df + 0.5) + 1.0)" +
           s" * (t$i.tf * 2.2)" +
-          s" / (t$i.tf + 1.2 * (0.25 + 0.75 * CAST(dl.len AS DOUBLE) / stats.avgdl)) AS g$i"
-      }.mkString(",\n           ")
-      val scoreExpr = groups.indices.map(i => s"g$i").mkString(" + ")
-      s"""(SELECT '$qid' AS query, CAST(rank AS INTEGER) AS rank, docID, score FROM (
-         |  SELECT docID, round($scoreExpr, 4) AS score,
-         |         row_number() OVER (ORDER BY round($scoreExpr, 4) DESC, docID ASC) AS rank
-         |  FROM (
-         |    SELECT docID,
-         |           $gCols
-         |    FROM $fromChain
-         |    JOIN dl USING (docID)
-         |    CROSS JOIN stats
-         |    $dJoins
-         |  )
-         |) WHERE rank <= $k)""".stripMargin
-    }.mkString("\n UNION ALL \n")
-    s"$base\nSELECT * FROM (\n$perQuery\n) ORDER BY query, rank"
+          s" / (t$i.tf + 1.2 * (0.25 + 0.75 * CAST(dl.len AS DOUBLE) / stats.avgdl))"
+      }.mkString(" +\n      ")
+      qid ->
+        s"""SELECT docID,
+           |      $gCols AS raw
+           |    FROM $fromChain
+           |    JOIN dl USING (docID)
+           |    CROSS JOIN stats
+           |    $dJoins""".stripMargin
+    }
+    rankSql(perQuery, k)
   }
 
-  def oracleSqlTopK(k: Int = K, langFilter: String = null,
-                    // extra raw SQL predicate on the candidate docID
-                    // (e.g. the tombstone-exclusion twin); appended to
-                    // the per-query WHERE clause verbatim
-                    docPred: String = null,
-                    // pagination twin: emit ranks in [rankLo, k] — page 2
-                    // of a k-deep ranking is (k+1, 2k). 1 = from the top.
-                    rankLo: Int = 1,
-                    // the query set and tokenized-text expression — the
-                    // fielded (BM25F) twin swaps both, nothing else
-                    querySet: Seq[(String, String)] = QuerySet,
-                    textExpr: String = "lower(text)"): String = {
-    val base =
-      s"""WITH tok AS (
-         |  SELECT doc_id AS docID, t.term AS term
-         |  FROM documents, unnest(regexp_split_to_array($textExpr, '[^a-z0-9]+')) AS t(term)
-         |  WHERE t.term <> ''
-         |), tf AS (
-         |  SELECT docID, term, CAST(count(*) AS BIGINT) AS tf FROM tok GROUP BY docID, term
-         |), dl AS (
-         |  SELECT docID, CAST(sum(tf) AS BIGINT) AS len FROM tf GROUP BY docID
-         |), stats AS (
-         |  SELECT CAST(count(*) AS DOUBLE) AS n,
-         |         CAST(sum(len) AS DOUBLE) / count(*) AS avgdl
-         |  FROM dl
-         |), dfr AS (
-         |  SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY term
-         |), scored AS (
-         |  SELECT tf.docID, tf.term,
-         |         ln((stats.n - CAST(dfr.df AS DOUBLE) + 0.5) / (CAST(dfr.df AS DOUBLE) + 0.5) + 1.0)
-         |           * (CAST(tf.tf AS DOUBLE) * 2.2)
-         |           / (CAST(tf.tf AS DOUBLE) + 1.2 * (0.25 + 0.75 * CAST(dl.len AS DOUBLE) / stats.avgdl))
-         |           AS contrib
-         |  FROM tf JOIN dfr USING (term) JOIN dl USING (docID) CROSS JOIN stats
-         |)""".stripMargin
-    val perQuery = querySet.map { case (qid, qtext) =>
-      val terms = Analyzer.queryTerms(qtext)
-      val inList = terms.map(t => s"'$t'").mkString(", ")
-      val cs = terms.zipWithIndex.map { case (t, i) =>
-        s"max(CASE WHEN term = '$t' THEN contrib END) AS c$i"
-      }.mkString(", ")
-      val scoreExpr = terms.indices.map(i => s"c$i").mkString(" + ")
-      val langPred =
-        (if (langFilter == null) ""
-         else s"\n      AND docID IN (SELECT doc_id FROM documents WHERE lang = '$langFilter')") +
-        (if (docPred == null) "" else s"\n      AND $docPred")
-      s"""(SELECT '$qid' AS query, CAST(rank AS INTEGER) AS rank, docID, score FROM (
-         |  SELECT docID, round($scoreExpr, 4) AS score,
-         |         row_number() OVER (ORDER BY round($scoreExpr, 4) DESC, docID ASC) AS rank
-         |  FROM (
-         |    SELECT docID, $cs
-         |    FROM scored WHERE term IN ($inList)$langPred
-         |    GROUP BY docID
-         |    HAVING count(*) = ${terms.size}
-         |  )
-         |) WHERE rank BETWEEN $rankLo AND $k)""".stripMargin
-    }.mkString("\n UNION ALL \n")
-    s"$base\nSELECT * FROM (\n$perQuery\n) ORDER BY query, rank"
-  }
+  /** DuckDB twin of [[oraclePhraseTopK]]. */
+  def oracleSqlPhraseTopK(k: Int = K, langFilter: String = null): String =
+    rankedSql(PhraseQuerySet.map { case (qid, q) =>
+      qid -> Match.phrase(q).copy(langs = Option(langFilter).toSeq) }, k)
 
-  /** DuckDB twin of [[oraclePhraseTopK]]: same CTEs plus a token-array
-    * CTE; adjacency via list_filter over 1-based index range (DuckDB
-    * range(a, b) is empty when b <= a, so short docs need no guard).
-    * `langFilter` gates the result set like [[oracleSqlTopK]]'s. */
-  def oracleSqlPhraseTopK(k: Int = K, langFilter: String = null): String = {
-    val base =
-      s"""WITH tok AS (
-         |  SELECT doc_id AS docID, t.term AS term
-         |  FROM documents, unnest(regexp_split_to_array(lower(text), '[^a-z0-9]+')) AS t(term)
-         |  WHERE t.term <> ''
-         |), tokarr AS (
-         |  SELECT doc_id AS docID,
-         |         list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), t -> t <> '') AS toks
-         |  FROM documents
-         |), tf AS (
-         |  SELECT docID, term, CAST(count(*) AS BIGINT) AS tf FROM tok GROUP BY docID, term
-         |), dl AS (
-         |  SELECT docID, CAST(sum(tf) AS BIGINT) AS len FROM tf GROUP BY docID
-         |), stats AS (
-         |  SELECT CAST(count(*) AS DOUBLE) AS n,
-         |         CAST(sum(len) AS DOUBLE) / count(*) AS avgdl
-         |  FROM dl
-         |), dfr AS (
-         |  SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY term
-         |), scored AS (
-         |  SELECT tf.docID, tf.term,
-         |         ln((stats.n - CAST(dfr.df AS DOUBLE) + 0.5) / (CAST(dfr.df AS DOUBLE) + 0.5) + 1.0)
-         |           * (CAST(tf.tf AS DOUBLE) * 2.2)
-         |           / (CAST(tf.tf AS DOUBLE) + 1.2 * (0.25 + 0.75 * CAST(dl.len AS DOUBLE) / stats.avgdl))
-         |           AS contrib
-         |  FROM tf JOIN dfr USING (term) JOIN dl USING (docID) CROSS JOIN stats
-         |)""".stripMargin
-    val perQuery = PhraseQuerySet.map { case (qid, qtext) =>
-      val phrase = graft.functions.Analyzer.tokenize(qtext)
-      val terms = graft.functions.Analyzer.queryTerms(qtext)
-      val m = phrase.length
-      val inList = terms.map(t => s"'$t'").mkString(", ")
-      val adjCond = phrase.zipWithIndex
-        .map { case (w, j) => s"toks[CAST(i AS BIGINT)+$j] = '$w'" }.mkString(" AND ")
-      val cs = terms.zipWithIndex.map { case (t, i) =>
-        s"max(CASE WHEN term = '$t' THEN contrib END) AS c$i"
-      }.mkString(", ")
-      val scoreExpr = terms.indices.map(i => s"c$i").mkString(" + ")
-      val langPred =
-        if (langFilter == null) ""
-        else s"\n      AND docID IN (SELECT doc_id FROM documents WHERE lang = '$langFilter')"
-      s"""(SELECT '$qid' AS query, CAST(rank AS INTEGER) AS rank, docID, score FROM (
-         |  SELECT docID, round($scoreExpr, 4) AS score,
-         |         row_number() OVER (ORDER BY round($scoreExpr, 4) DESC, docID ASC) AS rank
-         |  FROM (
-         |    SELECT docID, $cs
-         |    FROM scored WHERE term IN ($inList) AND docID IN (
-         |      SELECT docID FROM tokarr
-         |      WHERE len(list_filter(range(1, len(toks) - ${m - 1} + 1),
-         |                            i -> $adjCond)) > 0)$langPred
-         |    GROUP BY docID
-         |    HAVING count(*) = ${terms.size}
-         |  )
-         |) WHERE rank <= $k)""".stripMargin
-    }.mkString("\n UNION ALL \n")
-    s"$base\nSELECT * FROM (\n$perQuery\n) ORDER BY query, rank"
-  }
+  /** DuckDB twin of [[oracleMixedTopK]] (and of the engine's `search`). */
+  def oracleSqlMixedTopK(k: Int = K): String =
+    rankedSql(MixedQuerySet.map { case (qid, q) => qid -> Match.search(q) }, k)
 
-  /** DuckDB twin of [[oracleMixedTopK]] (and of the engine's
-    * `searchAll`): the AND-semantics per-query SQL over ALL positive
-    * terms of the parsed search string, plus one list_filter adjacency
-    * subquery per quoted phrase (as the phrase twin) and a `NOT IN` over
-    * the negated terms (as the NOT twin) — both pure gates before
-    * ranking. */
-  def oracleSqlMixedTopK(k: Int = K): String = searchBoxSql(MixedQuerySet, k)
+  /** DuckDB twin of [[oracleFieldTopK]]. */
+  def oracleSqlFieldTopK(k: Int = K): String =
+    rankedSql(FieldQuerySet.map { case (qid, q) => qid -> Match.search(q) }, k)
 
-  /** DuckDB twin of [[oracleFieldTopK]] (and of the engine's
-    * `searchFieldAll`): the mixed twin plus a `docID IN (docs of the
-    * lang facet)` gate per `field:value` piece. */
-  def oracleSqlFieldTopK(k: Int = K): String = searchBoxSql(FieldQuerySet, k)
-
-  /** DuckDB twin of [[oracleBoostedTopK]] (and of the engine's
-    * `searchBoostedAll`): each pivoted term contribution multiplied by
-    * its `term^w` weight before the fixed-order sum. */
-  def oracleSqlBoostedTopK(k: Int = K): String = searchBoxSql(BoostQuerySet, k)
+  /** DuckDB twin of [[oracleBoostedTopK]]. */
+  def oracleSqlBoostedTopK(k: Int = K): String =
+    rankedSql(BoostQuerySet.map { case (qid, q) => qid -> Match.search(q) }, k)
 
   /** DuckDB twin of [[oracleGroupedTopK]] (and of the `search_grouped`
     * entry): rank partitioned by the doc's lang. */
-  def oracleSqlGroupedTopK(n: Int = 3): String = {
-    val base =
-      s"""WITH tok AS (
-         |  SELECT doc_id AS docID, t.term AS term
-         |  FROM documents, unnest(regexp_split_to_array(lower(text), '[^a-z0-9]+')) AS t(term)
-         |  WHERE t.term <> ''
-         |), tf AS (
-         |  SELECT docID, term, CAST(count(*) AS BIGINT) AS tf FROM tok GROUP BY docID, term
-         |), dl AS (
-         |  SELECT docID, CAST(sum(tf) AS BIGINT) AS len FROM tf GROUP BY docID
-         |), stats AS (
-         |  SELECT CAST(count(*) AS DOUBLE) AS n,
-         |         CAST(sum(len) AS DOUBLE) / count(*) AS avgdl
-         |  FROM dl
-         |), dfr AS (
-         |  SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY term
-         |), scored AS (
-         |  SELECT tf.docID, tf.term,
-         |         ln((stats.n - CAST(dfr.df AS DOUBLE) + 0.5) / (CAST(dfr.df AS DOUBLE) + 0.5) + 1.0)
-         |           * (CAST(tf.tf AS DOUBLE) * 2.2)
-         |           / (CAST(tf.tf AS DOUBLE) + 1.2 * (0.25 + 0.75 * CAST(dl.len AS DOUBLE) / stats.avgdl))
-         |           AS contrib
-         |  FROM tf JOIN dfr USING (term) JOIN dl USING (docID) CROSS JOIN stats
-         |)""".stripMargin
-    val perQuery = GroupedQuerySet.map { case (qid, qtext) =>
-      val p = graft.functions.Analyzer.parseSearch(qtext)
-      val terms = p.pos
-      val inList = terms.map(t => s"'$t'").mkString(", ")
-      val cs = terms.zipWithIndex.map { case (t, i) =>
-        s"max(CASE WHEN term = '$t' THEN contrib END) AS c$i"
-      }.mkString(", ")
-      val scoreExpr = terms.zipWithIndex.map { case (t, i) =>
-        p.boosts.get(t) match {
-          case Some(w) => s"(c$i * $w)"
-          case None    => s"c$i"
-        }
-      }.mkString(" + ")
-      s"""(SELECT '$qid' AS query, grp, CAST(rank AS INTEGER) AS rank, docID, score FROM (
-         |  SELECT d.lang AS grp, s.docID, round($scoreExpr, 4) AS score,
-         |         row_number() OVER (PARTITION BY d.lang
-         |           ORDER BY round($scoreExpr, 4) DESC, s.docID ASC) AS rank
-         |  FROM (
-         |    SELECT docID, $cs
-         |    FROM scored WHERE term IN ($inList)
-         |    GROUP BY docID
-         |    HAVING count(*) = ${terms.size}
-         |  ) s JOIN documents d ON d.doc_id = s.docID
-         |) WHERE rank <= $n)""".stripMargin
-    }.mkString("\n UNION ALL \n")
-    s"$base\nSELECT * FROM (\n$perQuery\n) ORDER BY query, grp, rank"
-  }
+  def oracleSqlGroupedTopK(n: Int = 3): String =
+    rankSql(GroupedQuerySet.map { case (qid, q) =>
+      qid -> (s"SELECT c.docID, c.raw, d.lang AS grp FROM (${candSql(Match.search(q))}) c" +
+        " JOIN documents d ON d.doc_id = c.docID")
+    }, n, grp = true)
 
-  private def searchBoxSql(querySet: Seq[(String, String)], k: Int): String = {
-    val base =
-      s"""WITH tok AS (
-         |  SELECT doc_id AS docID, t.term AS term
-         |  FROM documents, unnest(regexp_split_to_array(lower(text), '[^a-z0-9]+')) AS t(term)
-         |  WHERE t.term <> ''
-         |), tokarr AS (
-         |  SELECT doc_id AS docID,
-         |         list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), t -> t <> '') AS toks
-         |  FROM documents
-         |), tf AS (
-         |  SELECT docID, term, CAST(count(*) AS BIGINT) AS tf FROM tok GROUP BY docID, term
-         |), dl AS (
-         |  SELECT docID, CAST(sum(tf) AS BIGINT) AS len FROM tf GROUP BY docID
-         |), stats AS (
-         |  SELECT CAST(count(*) AS DOUBLE) AS n,
-         |         CAST(sum(len) AS DOUBLE) / count(*) AS avgdl
-         |  FROM dl
-         |), dfr AS (
-         |  SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY term
-         |), scored AS (
-         |  SELECT tf.docID, tf.term,
-         |         ln((stats.n - CAST(dfr.df AS DOUBLE) + 0.5) / (CAST(dfr.df AS DOUBLE) + 0.5) + 1.0)
-         |           * (CAST(tf.tf AS DOUBLE) * 2.2)
-         |           / (CAST(tf.tf AS DOUBLE) + 1.2 * (0.25 + 0.75 * CAST(dl.len AS DOUBLE) / stats.avgdl))
-         |           AS contrib
-         |  FROM tf JOIN dfr USING (term) JOIN dl USING (docID) CROSS JOIN stats
-         |)""".stripMargin
-    val perQuery = querySet.map { case (qid, qtext) =>
-      val p = graft.functions.Analyzer.parseSearch(qtext)
-      val terms = p.pos
-      val inList = terms.map(t => s"'$t'").mkString(", ")
-      val cs = terms.zipWithIndex.map { case (t, i) =>
-        s"max(CASE WHEN term = '$t' THEN contrib END) AS c$i"
-      }.mkString(", ")
-      // `term^w` boosts: `(c_i * w)` — commutes bit-exactly with the
-      // kernel's `w * contrib`; unboosted terms stay bare (x * 1.0 == x)
-      val scoreExpr = terms.zipWithIndex.map { case (t, i) =>
-        p.boosts.get(t) match {
-          case Some(w) => s"(c$i * $w)"
-          case None    => s"c$i"
-        }
-      }.mkString(" + ")
-      val fieldPreds = p.fields.map { case (f, v) =>
-        require(f == "lang", s"SQL twin supports the lang field, got $f")
-        s"\n      AND docID IN (SELECT doc_id FROM documents WHERE lang = '$v')"
-      }.mkString
-      val phrasePreds = p.phrases.map { phrase =>
-        val m = phrase.length
-        val adjCond = phrase.zipWithIndex
-          .map { case (w, j) => s"toks[CAST(i AS BIGINT)+$j] = '$w'" }.mkString(" AND ")
-        s"""
-           |      AND docID IN (
-           |        SELECT docID FROM tokarr
-           |        WHERE len(list_filter(range(1, len(toks) - ${m - 1} + 1),
-           |                              i -> $adjCond)) > 0)""".stripMargin
-      }.mkString
-      val negPred =
-        if (p.neg.isEmpty) ""
-        else {
-          val negList = p.neg.map(t => s"'$t'").mkString(", ")
-          s"\n      AND docID NOT IN (SELECT docID FROM tf WHERE term IN ($negList))"
-        }
-      s"""(SELECT '$qid' AS query, CAST(rank AS INTEGER) AS rank, docID, score FROM (
-         |  SELECT docID, round($scoreExpr, 4) AS score,
-         |         row_number() OVER (ORDER BY round($scoreExpr, 4) DESC, docID ASC) AS rank
-         |  FROM (
-         |    SELECT docID, $cs
-         |    FROM scored WHERE term IN ($inList)$fieldPreds$phrasePreds$negPred
-         |    GROUP BY docID
-         |    HAVING count(*) = ${terms.size}
-         |  )
+  /** DuckDB twin of [[oracleTopKOr]]: a query whose terms all miss the
+    * corpus (q05) has no scored rows → empty. */
+  def oracleSqlTopKOr(k: Int = K): String =
+    rankedSql(QuerySet.map { case (qid, q) => qid -> Match.or(q) }, k)
+
+  /** DuckDB twin of [[oracleTopKMsm]]: `scored` has exactly one row per
+    * (docID, matched term), so the group count IS the distinct
+    * matched-term count. */
+  def oracleSqlTopKMsm(k: Int = K): String =
+    rankedSql(MsmQuerySet.map { case (qid, q, m) => qid -> Match.msm(q, m) }, k)
+
+  /** DuckDB twin of [[oracleTopKNot]]. */
+  def oracleSqlTopKNot(k: Int = K): String =
+    rankedSql(NotQuerySet.map { case (qid, q) => qid -> Match.not(q) }, k)
+
+  /** DuckDB twin of [[oracleWindowTopK]]. */
+  def oracleSqlWindowTopK(k: Int = K): String =
+    rankedSql(WindowQuerySet.map { case (qid, q, w) => qid -> Match.window(q, w) }, k)
+
+  /** DuckDB twin of [[oraclePrefixTopK]]. */
+  def oracleSqlPrefixTopK(k: Int = K): String =
+    rankedSql(PrefixQuerySet.map { case (qid, p) => qid -> Match.prefix(p) }, k)
+
+  /** DuckDB twin of [[oracleFuzzyTopK]]. */
+  def oracleSqlFuzzyTopK(k: Int = K, maxDist: Int = 1): String =
+    rankedSql(FuzzyQuerySet.map { case (qid, q) => qid -> Match.fuzzy(q, maxDist) }, k)
+
+  /** DuckDB twin of [[oracleWildcardTopK]]. */
+  def oracleSqlWildcardTopK(k: Int = K): String =
+    rankedSql(WildcardQuerySet.map { case (qid, f) => qid -> Match.wildcard(f) }, k)
+
+  /** DuckDB twin of [[oracleRegexTopK]]. */
+  def oracleSqlRegexTopK(k: Int = K): String =
+    rankedSql(RegexQuerySet.map { case (qid, p) => qid -> Match.regex(p) }, k)
+
+  /** DuckDB twin of [[oracleSortedTopK]]: the AND match set joined to
+    * doc lengths, ranked (len DESC, docID ASC), top k per query. */
+  def oracleSqlSortedTopK(k: Int = K): String = {
+    val perQuery = QuerySet.map { case (qid, q) =>
+      s"""(SELECT '$qid' AS query, CAST(rank AS INTEGER) AS rank, docID, len FROM (
+         |  SELECT docID, len, row_number() OVER (ORDER BY len DESC, docID ASC) AS rank
+         |  FROM (${matchSql(q)}) m JOIN dl USING (docID)
          |) WHERE rank <= $k)""".stripMargin
     }.mkString("\n UNION ALL \n")
-    s"$base\nSELECT * FROM (\n$perQuery\n) ORDER BY query, rank"
+    s"${baseSql()}\nSELECT * FROM (\n$perQuery\n) ORDER BY query, rank"
   }
 
   /** DuckDB twin of the `suggest_terms` entry: per fixed prefix, the
-    * top-m dictionary terms starting with it by (df desc, term asc) —
-    * document frequency straight off the tokenization CTE. */
+    * top-m dictionary terms starting with it by (df desc, term asc). */
   def suggestSql(m: Int = 8): String = {
-    val base =
-      s"""WITH tok AS (
-         |  SELECT doc_id AS docID, t.term AS term
-         |  FROM documents, unnest(regexp_split_to_array(lower(text), '[^a-z0-9]+')) AS t(term)
-         |  WHERE t.term <> ''
-         |), tfd AS (
-         |  SELECT DISTINCT docID, term FROM tok
-         |), dfr AS (
-         |  SELECT term, CAST(count(*) AS BIGINT) AS df FROM tfd GROUP BY term
-         |)""".stripMargin
     val perPrefix = PrefixQuerySet.map { case (qid, p) =>
       s"""(SELECT '$qid' AS query, CAST(rank AS INTEGER) AS rank, term, df FROM (
          |  SELECT term, df,
@@ -1738,59 +976,26 @@ object Bm25 {
          |  FROM dfr WHERE term LIKE '$p%'
          |) WHERE rank <= $m)""".stripMargin
     }.mkString("\n UNION ALL \n")
-    s"$base\nSELECT * FROM (\n$perPrefix\n) ORDER BY query, rank"
+    s"${baseSql()}\nSELECT * FROM (\n$perPrefix\n) ORDER BY query, rank"
   }
 
-  /** DuckDB twin of the `explain_scores` entry: the AND twin's
-    * ranked top-k joined back to the per-(doc, term) scored rows, so
-    * every (tf, df, contrib) ingredient is re-derived from the raw
-    * corpus and cross-gates the engine's index-side point read. */
+  /** DuckDB twin of the `explain_scores` entry: the AND twin's ranked
+    * top-k joined back to the per-(doc, term) scored rows, so every
+    * (tf, df, contrib) ingredient is re-derived from the raw corpus and
+    * cross-gates the engine's index-side point read. */
   def explainSql(k: Int = K): String = {
-    val base =
-      s"""WITH tok AS (
-         |  SELECT doc_id AS docID, t.term AS term
-         |  FROM documents, unnest(regexp_split_to_array(lower(text), '[^a-z0-9]+')) AS t(term)
-         |  WHERE t.term <> ''
-         |), tf AS (
-         |  SELECT docID, term, CAST(count(*) AS BIGINT) AS tf FROM tok GROUP BY docID, term
-         |), dl AS (
-         |  SELECT docID, CAST(sum(tf) AS BIGINT) AS len FROM tf GROUP BY docID
-         |), stats AS (
-         |  SELECT CAST(count(*) AS DOUBLE) AS n,
-         |         CAST(sum(len) AS DOUBLE) / count(*) AS avgdl
-         |  FROM dl
-         |), dfr AS (
-         |  SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY term
-         |), scored AS (
-         |  SELECT tf.docID, tf.term, tf.tf, dfr.df,
-         |         ln((stats.n - CAST(dfr.df AS DOUBLE) + 0.5) / (CAST(dfr.df AS DOUBLE) + 0.5) + 1.0)
-         |           * (CAST(tf.tf AS DOUBLE) * 2.2)
-         |           / (CAST(tf.tf AS DOUBLE) + 1.2 * (0.25 + 0.75 * CAST(dl.len AS DOUBLE) / stats.avgdl))
-         |           AS contrib
-         |  FROM tf JOIN dfr USING (term) JOIN dl USING (docID) CROSS JOIN stats
-         |)""".stripMargin
-    val perQuery = QuerySet.map { case (qid, qtext) =>
-      val terms = graft.functions.Analyzer.queryTerms(qtext)
-      val inList = terms.map(t => s"'$t'").mkString(", ")
-      val cs = terms.zipWithIndex.map { case (t, i) =>
-        s"max(CASE WHEN term = '$t' THEN contrib END) AS c$i"
-      }.mkString(", ")
-      val scoreExpr = terms.indices.map(i => s"c$i").mkString(" + ")
+    val perQuery = QuerySet.map { case (qid, q) =>
+      val m = Match.and(q)
       s"""(SELECT '$qid' AS query, CAST(r.rank AS INTEGER) AS rank, r.docID,
          |        s.term, s.tf, s.df, round(s.contrib, 4) AS contrib
          | FROM (
          |   SELECT docID,
-         |          row_number() OVER (ORDER BY round($scoreExpr, 4) DESC, docID ASC) AS rank
-         |   FROM (
-         |     SELECT docID, $cs
-         |     FROM scored WHERE term IN ($inList)
-         |     GROUP BY docID
-         |     HAVING count(*) = ${terms.size}
-         |   )
+         |          row_number() OVER (ORDER BY round(raw, 4) DESC, docID ASC) AS rank
+         |   FROM (${candSql(m)})
          | ) r JOIN scored s USING (docID)
-         | WHERE r.rank <= $k AND s.term IN ($inList))""".stripMargin
+         | WHERE r.rank <= $k AND s.term IN (${inList(m.terms)}))""".stripMargin
     }.mkString("\n UNION ALL \n")
-    s"$base\nSELECT * FROM (\n$perQuery\n) ORDER BY query, rank, term"
+    s"${baseSql()}\nSELECT * FROM (\n$perQuery\n) ORDER BY query, rank, term"
   }
 
   /** Fixed did-you-mean query set: two misspellings, exact+misspelled,
@@ -1810,18 +1015,8 @@ object Bm25 {
     * asc), '' / 0 when none — `levenshtein` is a DuckDB built-in with
     * unit-cost edits, same metric as the engine's expansion. */
   def didYouMeanSql(maxDist: Int = 1): String = {
-    val base =
-      s"""WITH tok AS (
-         |  SELECT doc_id AS docID, t.term AS term
-         |  FROM documents, unnest(regexp_split_to_array(lower(text), '[^a-z0-9]+')) AS t(term)
-         |  WHERE t.term <> ''
-         |), tfd AS (
-         |  SELECT DISTINCT docID, term FROM tok
-         |), dfr AS (
-         |  SELECT term, CAST(count(*) AS BIGINT) AS df FROM tfd GROUP BY term
-         |)""".stripMargin
     val perTerm = DidYouMeanQuerySet.flatMap { case (qid, q) =>
-      graft.functions.Analyzer.queryTerms(q).map { t =>
+      Analyzer.queryTerms(q).map { t =>
         s"""(SELECT '$qid' AS query, '$t' AS term,
            |        coalesce(s.term, '') AS suggestion,
            |        CAST(coalesce(s.df, 0) AS BIGINT) AS sugg_df
@@ -1830,253 +1025,24 @@ object Bm25 {
            |   ORDER BY df DESC, term ASC LIMIT 1) s ON TRUE)""".stripMargin
       }
     }.mkString("\n UNION ALL \n")
-    s"$base\nSELECT * FROM (\n$perTerm\n) ORDER BY query, term"
+    s"${baseSql()}\nSELECT * FROM (\n$perTerm\n) ORDER BY query, term"
   }
 
-  /** DuckDB twin of `QueryEngine.indexStats`: every index-metadata value
+  /** DuckDB twin of the engine's index stats: every index-metadata value
     * re-derived from the raw corpus. */
   def indexStatsSql(): String =
-    s"""WITH tok AS (
-       |  SELECT doc_id AS docID, t.term AS term
-       |  FROM documents, unnest(regexp_split_to_array(lower(text), '[^a-z0-9]+')) AS t(term)
-       |  WHERE t.term <> ''
-       |), tf AS (
-       |  SELECT docID, term, CAST(count(*) AS BIGINT) AS tf FROM tok GROUP BY docID, term
-       |), dl AS (
-       |  SELECT docID, CAST(sum(tf) AS BIGINT) AS len FROM tf GROUP BY docID
-       |), dfr AS (
-       |  SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY term
-       |)
+    s"""${baseSql()}
        |SELECT CAST((SELECT count(*) FROM dl) AS BIGINT) AS n_docs,
        |       CAST((SELECT count(*) FROM dfr) AS BIGINT) AS n_terms,
        |       CAST((SELECT sum(df) FROM dfr) AS BIGINT) AS n_postings,
        |       CAST((SELECT max(df) FROM dfr) AS BIGINT) AS max_df,
        |       round((SELECT CAST(sum(len) AS DOUBLE) / count(*) FROM dl), 4) AS avgdl""".stripMargin
 
-  /** DuckDB twin of [[oracleTopKOr]]: same CTEs, no HAVING gate, absent
-    * terms coalesce to 0.0 in the same fixed-order sum. A query whose
-    * terms all miss the corpus (q05) matches no scored rows → empty. */
-  def oracleSqlTopKOr(k: Int = K): String = {
-    val base =
-      s"""WITH tok AS (
-         |  SELECT doc_id AS docID, t.term AS term
-         |  FROM documents, unnest(regexp_split_to_array(lower(text), '[^a-z0-9]+')) AS t(term)
-         |  WHERE t.term <> ''
-         |), tf AS (
-         |  SELECT docID, term, CAST(count(*) AS BIGINT) AS tf FROM tok GROUP BY docID, term
-         |), dl AS (
-         |  SELECT docID, CAST(sum(tf) AS BIGINT) AS len FROM tf GROUP BY docID
-         |), stats AS (
-         |  SELECT CAST(count(*) AS DOUBLE) AS n,
-         |         CAST(sum(len) AS DOUBLE) / count(*) AS avgdl
-         |  FROM dl
-         |), dfr AS (
-         |  SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY term
-         |), scored AS (
-         |  SELECT tf.docID, tf.term,
-         |         ln((stats.n - CAST(dfr.df AS DOUBLE) + 0.5) / (CAST(dfr.df AS DOUBLE) + 0.5) + 1.0)
-         |           * (CAST(tf.tf AS DOUBLE) * 2.2)
-         |           / (CAST(tf.tf AS DOUBLE) + 1.2 * (0.25 + 0.75 * CAST(dl.len AS DOUBLE) / stats.avgdl))
-         |           AS contrib
-         |  FROM tf JOIN dfr USING (term) JOIN dl USING (docID) CROSS JOIN stats
-         |)""".stripMargin
-    val perQuery = QuerySet.map { case (qid, qtext) =>
-      val terms = Analyzer.queryTerms(qtext)
-      val inList = terms.map(t => s"'$t'").mkString(", ")
-      val cs = terms.zipWithIndex.map { case (t, i) =>
-        s"coalesce(max(CASE WHEN term = '$t' THEN contrib END), 0.0) AS c$i"
-      }.mkString(", ")
-      val scoreExpr = terms.indices.map(i => s"c$i").mkString(" + ")
-      s"""(SELECT '$qid' AS query, CAST(rank AS INTEGER) AS rank, docID, score FROM (
-         |  SELECT docID, round($scoreExpr, 4) AS score,
-         |         row_number() OVER (ORDER BY round($scoreExpr, 4) DESC, docID ASC) AS rank
-         |  FROM (
-         |    SELECT docID, $cs
-         |    FROM scored WHERE term IN ($inList)
-         |    GROUP BY docID
-         |  )
-         |) WHERE rank <= $k)""".stripMargin
-    }.mkString("\n UNION ALL \n")
-    s"$base\nSELECT * FROM (\n$perQuery\n) ORDER BY query, rank"
-  }
-
-  /** DuckDB twin of [[oracleTopKMsm]]: the OR-semantics per-query SQL
-    * plus `HAVING count(*) >= m` on the per-doc pivot — `scored` has
-    * exactly one row per (docID, matched term), so the group count IS
-    * the distinct matched-term count. */
-  def oracleSqlTopKMsm(k: Int = K): String = {
-    val base =
-      s"""WITH tok AS (
-         |  SELECT doc_id AS docID, t.term AS term
-         |  FROM documents, unnest(regexp_split_to_array(lower(text), '[^a-z0-9]+')) AS t(term)
-         |  WHERE t.term <> ''
-         |), tf AS (
-         |  SELECT docID, term, CAST(count(*) AS BIGINT) AS tf FROM tok GROUP BY docID, term
-         |), dl AS (
-         |  SELECT docID, CAST(sum(tf) AS BIGINT) AS len FROM tf GROUP BY docID
-         |), stats AS (
-         |  SELECT CAST(count(*) AS DOUBLE) AS n,
-         |         CAST(sum(len) AS DOUBLE) / count(*) AS avgdl
-         |  FROM dl
-         |), dfr AS (
-         |  SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY term
-         |), scored AS (
-         |  SELECT tf.docID, tf.term,
-         |         ln((stats.n - CAST(dfr.df AS DOUBLE) + 0.5) / (CAST(dfr.df AS DOUBLE) + 0.5) + 1.0)
-         |           * (CAST(tf.tf AS DOUBLE) * 2.2)
-         |           / (CAST(tf.tf AS DOUBLE) + 1.2 * (0.25 + 0.75 * CAST(dl.len AS DOUBLE) / stats.avgdl))
-         |           AS contrib
-         |  FROM tf JOIN dfr USING (term) JOIN dl USING (docID) CROSS JOIN stats
-         |)""".stripMargin
-    val perQuery = MsmQuerySet.map { case (qid, qtext, m) =>
-      val terms = Analyzer.queryTerms(qtext)
-      val inList = terms.map(t => s"'$t'").mkString(", ")
-      val cs = terms.zipWithIndex.map { case (t, i) =>
-        s"coalesce(max(CASE WHEN term = '$t' THEN contrib END), 0.0) AS c$i"
-      }.mkString(", ")
-      val scoreExpr = terms.indices.map(i => s"c$i").mkString(" + ")
-      s"""(SELECT '$qid' AS query, CAST(rank AS INTEGER) AS rank, docID, score FROM (
-         |  SELECT docID, round($scoreExpr, 4) AS score,
-         |         row_number() OVER (ORDER BY round($scoreExpr, 4) DESC, docID ASC) AS rank
-         |  FROM (
-         |    SELECT docID, $cs
-         |    FROM scored WHERE term IN ($inList)
-         |    GROUP BY docID
-         |    HAVING count(*) >= $m
-         |  )
-         |) WHERE rank <= $k)""".stripMargin
-    }.mkString("\n UNION ALL \n")
-    s"$base\nSELECT * FROM (\n$perQuery\n) ORDER BY query, rank"
-  }
-
-  /** DuckDB twin of [[oracleTopKNot]]: the AND-semantics per-query SQL
-    * plus `docID NOT IN (docs containing any negated term)` applied
-    * before ranking — the same exclusion-before-top-k the engine's
-    * anti-posting gate performs. */
-  def oracleSqlTopKNot(k: Int = K): String = {
-    val base =
-      s"""WITH tok AS (
-         |  SELECT doc_id AS docID, t.term AS term
-         |  FROM documents, unnest(regexp_split_to_array(lower(text), '[^a-z0-9]+')) AS t(term)
-         |  WHERE t.term <> ''
-         |), tf AS (
-         |  SELECT docID, term, CAST(count(*) AS BIGINT) AS tf FROM tok GROUP BY docID, term
-         |), dl AS (
-         |  SELECT docID, CAST(sum(tf) AS BIGINT) AS len FROM tf GROUP BY docID
-         |), stats AS (
-         |  SELECT CAST(count(*) AS DOUBLE) AS n,
-         |         CAST(sum(len) AS DOUBLE) / count(*) AS avgdl
-         |  FROM dl
-         |), dfr AS (
-         |  SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY term
-         |), scored AS (
-         |  SELECT tf.docID, tf.term,
-         |         ln((stats.n - CAST(dfr.df AS DOUBLE) + 0.5) / (CAST(dfr.df AS DOUBLE) + 0.5) + 1.0)
-         |           * (CAST(tf.tf AS DOUBLE) * 2.2)
-         |           / (CAST(tf.tf AS DOUBLE) + 1.2 * (0.25 + 0.75 * CAST(dl.len AS DOUBLE) / stats.avgdl))
-         |           AS contrib
-         |  FROM tf JOIN dfr USING (term) JOIN dl USING (docID) CROSS JOIN stats
-         |)""".stripMargin
-    val perQuery = NotQuerySet.map { case (qid, qtext) =>
-      val (terms, neg) = graft.functions.Analyzer.signedTerms(qtext)
-      val inList = terms.map(t => s"'$t'").mkString(", ")
-      val cs = terms.zipWithIndex.map { case (t, i) =>
-        s"max(CASE WHEN term = '$t' THEN contrib END) AS c$i"
-      }.mkString(", ")
-      val scoreExpr = terms.indices.map(i => s"c$i").mkString(" + ")
-      val negPred =
-        if (neg.isEmpty) ""
-        else {
-          val negList = neg.map(t => s"'$t'").mkString(", ")
-          s"\n      AND docID NOT IN (SELECT docID FROM tf WHERE term IN ($negList))"
-        }
-      s"""(SELECT '$qid' AS query, CAST(rank AS INTEGER) AS rank, docID, score FROM (
-         |  SELECT docID, round($scoreExpr, 4) AS score,
-         |         row_number() OVER (ORDER BY round($scoreExpr, 4) DESC, docID ASC) AS rank
-         |  FROM (
-         |    SELECT docID, $cs
-         |    FROM scored WHERE term IN ($inList)$negPred
-         |    GROUP BY docID
-         |    HAVING count(*) = ${terms.size}
-         |  )
-         |) WHERE rank <= $k)""".stripMargin
-    }.mkString("\n UNION ALL \n")
-    s"$base\nSELECT * FROM (\n$perQuery\n) ORDER BY query, rank"
-  }
-
-  /** DuckDB twin of [[oraclePrefixTopK]]: the dynamic expansion is a
-    * `term LIKE 'p%'` predicate, and the data-dependent score sum is an
-    * ORDERED FOLD — `list_reduce(list(contrib ORDER BY term), +)` —
-    * which associates left-to-right over ascending terms exactly like
-    * the engine's disjunctive accumulator (+0.0 init is bit-neutral for
-    * the positive contributions). */
-  def oracleSqlPrefixTopK(k: Int = K): String = {
-    val base =
-      s"""WITH tok AS (
-         |  SELECT doc_id AS docID, t.term AS term
-         |  FROM documents, unnest(regexp_split_to_array(lower(text), '[^a-z0-9]+')) AS t(term)
-         |  WHERE t.term <> ''
-         |), tf AS (
-         |  SELECT docID, term, CAST(count(*) AS BIGINT) AS tf FROM tok GROUP BY docID, term
-         |), dl AS (
-         |  SELECT docID, CAST(sum(tf) AS BIGINT) AS len FROM tf GROUP BY docID
-         |), stats AS (
-         |  SELECT CAST(count(*) AS DOUBLE) AS n,
-         |         CAST(sum(len) AS DOUBLE) / count(*) AS avgdl
-         |  FROM dl
-         |), dfr AS (
-         |  SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY term
-         |), scored AS (
-         |  SELECT tf.docID, tf.term,
-         |         ln((stats.n - CAST(dfr.df AS DOUBLE) + 0.5) / (CAST(dfr.df AS DOUBLE) + 0.5) + 1.0)
-         |           * (CAST(tf.tf AS DOUBLE) * 2.2)
-         |           / (CAST(tf.tf AS DOUBLE) + 1.2 * (0.25 + 0.75 * CAST(dl.len AS DOUBLE) / stats.avgdl))
-         |           AS contrib
-         |  FROM tf JOIN dfr USING (term) JOIN dl USING (docID) CROSS JOIN stats
-         |)""".stripMargin
-    val perQuery = PrefixQuerySet.map { case (qid, prefix) =>
-      s"""(SELECT '$qid' AS query, CAST(rank AS INTEGER) AS rank, docID, score FROM (
-         |  SELECT docID, round(raw, 4) AS score,
-         |         row_number() OVER (ORDER BY round(raw, 4) DESC, docID ASC) AS rank
-         |  FROM (
-         |    SELECT docID,
-         |           list_reduce(list(contrib ORDER BY term), (a, b) -> a + b) AS raw
-         |    FROM scored WHERE term LIKE '$prefix%'
-         |    GROUP BY docID
-         |  )
-         |) WHERE rank <= $k)""".stripMargin
-    }.mkString("\n UNION ALL \n")
-    s"$base\nSELECT * FROM (\n$perQuery\n) ORDER BY query, rank"
-  }
-
   /** DuckDB twin of the `more_like_this` entry: per source doc, the
     * top-t terms by round4(tf·idf) (term-asc ties), then OR-mode BM25
     * over that data-dependent expansion — the ordered `list_reduce`
     * fold, source doc excluded before ranking. */
   def oracleSqlMoreLikeThis(k: Int = K, t: Int = MltTerms): String = {
-    val base =
-      s"""WITH tok AS (
-         |  SELECT doc_id AS docID, t.term AS term
-         |  FROM documents, unnest(regexp_split_to_array(lower(text), '[^a-z0-9]+')) AS t(term)
-         |  WHERE t.term <> ''
-         |), tf AS (
-         |  SELECT docID, term, CAST(count(*) AS BIGINT) AS tf FROM tok GROUP BY docID, term
-         |), dl AS (
-         |  SELECT docID, CAST(sum(tf) AS BIGINT) AS len FROM tf GROUP BY docID
-         |), stats AS (
-         |  SELECT CAST(count(*) AS DOUBLE) AS n,
-         |         CAST(sum(len) AS DOUBLE) / count(*) AS avgdl
-         |  FROM dl
-         |), dfr AS (
-         |  SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY term
-         |), scored AS (
-         |  SELECT tf.docID, tf.term,
-         |         ln((stats.n - CAST(dfr.df AS DOUBLE) + 0.5) / (CAST(dfr.df AS DOUBLE) + 0.5) + 1.0)
-         |           * (CAST(tf.tf AS DOUBLE) * 2.2)
-         |           / (CAST(tf.tf AS DOUBLE) + 1.2 * (0.25 + 0.75 * CAST(dl.len AS DOUBLE) / stats.avgdl))
-         |           AS contrib
-         |  FROM tf JOIN dfr USING (term) JOIN dl USING (docID) CROSS JOIN stats
-         |)""".stripMargin
     val perSrc = MltSources.map { src =>
       s"""(SELECT CAST($src AS BIGINT) AS src, CAST(rank AS INTEGER) AS rank, docID, score FROM (
          |  SELECT docID, round(raw, 4) AS score,
@@ -2087,114 +1053,44 @@ object Bm25 {
          |    FROM scored
          |    WHERE docID <> $src AND term IN (
          |      SELECT term FROM (
-         |        SELECT tf.term,
+         |        SELECT term,
          |               row_number() OVER (
-         |                 ORDER BY round(CAST(tf.tf AS DOUBLE)
-         |                   * ln((stats.n - CAST(dfr.df AS DOUBLE) + 0.5)
-         |                        / (CAST(dfr.df AS DOUBLE) + 0.5) + 1.0), 4) DESC,
-         |                 tf.term ASC) AS tr
-         |        FROM tf JOIN dfr USING (term) CROSS JOIN stats
-         |        WHERE tf.docID = $src
+         |                 ORDER BY round(CAST(tf AS DOUBLE) * idf, 4) DESC, term ASC) AS tr
+         |        FROM scored WHERE docID = $src
          |      ) WHERE tr <= $t
          |    )
          |    GROUP BY docID
          |  )
          |) WHERE rank <= $k)""".stripMargin
     }.mkString("\n UNION ALL \n")
-    s"$base\nSELECT * FROM (\n$perSrc\n) ORDER BY src, rank"
+    s"${baseSql()}\nSELECT * FROM (\n$perSrc\n) ORDER BY src, rank"
   }
 
-  /** DuckDB twin of the engine's total-hits counts
-    * (the `match_counts` entry): per query, the number of docs
-    * containing ALL terms (AND) and ANY term (OR) — pure relational
-    * counting over the tf CTE, no scoring involved. */
+  /** DuckDB twin of the engine's total-hits counts (the `match_counts`
+    * entry): per query, the number of docs containing ALL terms (AND)
+    * and ANY term (OR) — pure relational counting, no scoring. */
   def oracleSqlMatchCounts(): String = {
-    val base =
-      s"""WITH tok AS (
-         |  SELECT doc_id AS docID, t.term AS term
-         |  FROM documents, unnest(regexp_split_to_array(lower(text), '[^a-z0-9]+')) AS t(term)
-         |  WHERE t.term <> ''
-         |), tf AS (
-         |  SELECT docID, term FROM tok GROUP BY docID, term
-         |)""".stripMargin
-    val perQuery = QuerySet.map { case (qid, qtext) =>
-      val terms = Analyzer.queryTerms(qtext)
-      val inList = terms.map(t => s"'$t'").mkString(", ")
+    val perQuery = QuerySet.map { case (qid, q) =>
       s"""(SELECT '$qid' AS query,
-         |  CAST((SELECT count(*) FROM (
-         |    SELECT docID FROM tf WHERE term IN ($inList)
-         |    GROUP BY docID HAVING count(*) = ${terms.size})) AS BIGINT) AS n_docs,
+         |  CAST((SELECT count(*) FROM (${matchSql(q)})) AS BIGINT) AS n_docs,
          |  CAST((SELECT count(DISTINCT docID) FROM tf
-         |        WHERE term IN ($inList)) AS BIGINT) AS n_docs_or)""".stripMargin
+         |        WHERE term IN (${inList(Analyzer.queryTerms(q))})) AS BIGINT) AS n_docs_or)""".stripMargin
     }.mkString("\n UNION ALL \n")
-    s"$base\nSELECT * FROM (\n$perQuery\n) ORDER BY query"
+    s"${baseSql()}\nSELECT * FROM (\n$perQuery\n) ORDER BY query"
   }
 
-  /** DuckDB twin of the engine's per-facet hit counts
-    * (the `facet_counts` entry): per query, matching docs grouped
-    * by lang — facet values with zero hits are absent on both sides. */
+  /** DuckDB twin of the engine's per-facet hit counts (the
+    * `facet_counts` entry): per query, matching docs grouped by lang —
+    * facet values with zero hits are absent on both sides. */
   def oracleSqlFacetCounts(): String = {
-    val base =
-      s"""WITH tok AS (
-         |  SELECT doc_id AS docID, t.term AS term
-         |  FROM documents, unnest(regexp_split_to_array(lower(text), '[^a-z0-9]+')) AS t(term)
-         |  WHERE t.term <> ''
-         |), tf AS (
-         |  SELECT docID, term FROM tok GROUP BY docID, term
-         |)""".stripMargin
-    val perQuery = QuerySet.map { case (qid, qtext) =>
-      val terms = Analyzer.queryTerms(qtext)
-      val inList = terms.map(t => s"'$t'").mkString(", ")
+    val perQuery = QuerySet.map { case (qid, q) =>
       s"""(SELECT '$qid' AS query, d.lang AS lang,
          |        CAST(count(*) AS BIGINT) AS n_docs
-         | FROM (SELECT docID FROM tf WHERE term IN ($inList)
-         |       GROUP BY docID HAVING count(*) = ${terms.size}) m
+         | FROM (${matchSql(q)}) m
          | JOIN documents d ON d.doc_id = m.docID
          | GROUP BY d.lang)""".stripMargin
     }.mkString("\n UNION ALL \n")
-    s"$base\nSELECT * FROM (\n$perQuery\n) ORDER BY query, lang"
-  }
-
-  /** DuckDB twin of [[oracleFuzzyTopK]]: the prefix twin with the
-    * expansion predicate swapped to `levenshtein(term, q) <= 1`
-    * (classic edit distance in both engines), same ordered fold. */
-  def oracleSqlFuzzyTopK(k: Int = K, maxDist: Int = 1): String = {
-    val base =
-      s"""WITH tok AS (
-         |  SELECT doc_id AS docID, t.term AS term
-         |  FROM documents, unnest(regexp_split_to_array(lower(text), '[^a-z0-9]+')) AS t(term)
-         |  WHERE t.term <> ''
-         |), tf AS (
-         |  SELECT docID, term, CAST(count(*) AS BIGINT) AS tf FROM tok GROUP BY docID, term
-         |), dl AS (
-         |  SELECT docID, CAST(sum(tf) AS BIGINT) AS len FROM tf GROUP BY docID
-         |), stats AS (
-         |  SELECT CAST(count(*) AS DOUBLE) AS n,
-         |         CAST(sum(len) AS DOUBLE) / count(*) AS avgdl
-         |  FROM dl
-         |), dfr AS (
-         |  SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY term
-         |), scored AS (
-         |  SELECT tf.docID, tf.term,
-         |         ln((stats.n - CAST(dfr.df AS DOUBLE) + 0.5) / (CAST(dfr.df AS DOUBLE) + 0.5) + 1.0)
-         |           * (CAST(tf.tf AS DOUBLE) * 2.2)
-         |           / (CAST(tf.tf AS DOUBLE) + 1.2 * (0.25 + 0.75 * CAST(dl.len AS DOUBLE) / stats.avgdl))
-         |           AS contrib
-         |  FROM tf JOIN dfr USING (term) JOIN dl USING (docID) CROSS JOIN stats
-         |)""".stripMargin
-    val perQuery = FuzzyQuerySet.map { case (qid, q) =>
-      s"""(SELECT '$qid' AS query, CAST(rank AS INTEGER) AS rank, docID, score FROM (
-         |  SELECT docID, round(raw, 4) AS score,
-         |         row_number() OVER (ORDER BY round(raw, 4) DESC, docID ASC) AS rank
-         |  FROM (
-         |    SELECT docID,
-         |           list_reduce(list(contrib ORDER BY term), (a, b) -> a + b) AS raw
-         |    FROM scored WHERE levenshtein(term, '$q') <= $maxDist
-         |    GROUP BY docID
-         |  )
-         |) WHERE rank <= $k)""".stripMargin
-    }.mkString("\n UNION ALL \n")
-    s"$base\nSELECT * FROM (\n$perQuery\n) ORDER BY query, rank"
+    s"${baseSql()}\nSELECT * FROM (\n$perQuery\n) ORDER BY query, lang"
   }
 
   /** DuckDB twin of the `len_histogram` entry: per AND query, the
@@ -2202,111 +1098,61 @@ object Bm25 {
     * both sides, bucket ascending. The absent-term query (q05)
     * contributes no rows (HAVING can never reach the term count). */
   def oracleSqlLenHistogram(width: Int = HistogramWidth): String = {
-    val base =
-      s"""WITH tok AS (
-         |  SELECT doc_id AS docID, t.term AS term
-         |  FROM documents, unnest(regexp_split_to_array(lower(text), '[^a-z0-9]+')) AS t(term)
-         |  WHERE t.term <> ''
-         |), tf AS (
-         |  SELECT docID, term, CAST(count(*) AS BIGINT) AS tf FROM tok GROUP BY docID, term
-         |), dl AS (
-         |  SELECT docID, CAST(sum(tf) AS BIGINT) AS len FROM tf GROUP BY docID
-         |)""".stripMargin
-    val perQuery = QuerySet.map { case (qid, qtext) =>
-      val terms = Analyzer.queryTerms(qtext)
-      val inList = terms.map(t => s"'$t'").mkString(", ")
+    val perQuery = QuerySet.map { case (qid, q) =>
       s"""(SELECT '$qid' AS query,
          |        CAST(floor(CAST(dl.len AS DOUBLE) / $width) AS INTEGER) AS bucket,
          |        CAST(count(*) AS BIGINT) AS n_docs
-         | FROM (SELECT docID FROM tf WHERE term IN ($inList)
-         |       GROUP BY docID HAVING count(*) = ${terms.size}) m
+         | FROM (${matchSql(q)}) m
          | JOIN dl USING (docID)
          | GROUP BY 1, 2)""".stripMargin
     }.mkString("\n UNION ALL \n")
-    s"$base\nSELECT * FROM (\n$perQuery\n) ORDER BY query, bucket"
+    s"${baseSql()}\nSELECT * FROM (\n$perQuery\n) ORDER BY query, bucket"
   }
 
   /** DuckDB twin of the `len_percentile_ranks` entry: fraction of each
     * match set with len ≤ each probe value — exact-integer count over
     * exact-integer total, one round4 division. */
   def oracleSqlLenPercentileRanks(values: Seq[Long]): String = {
-    val base =
-      s"""WITH tok AS (
-         |  SELECT doc_id AS docID, t.term AS term
-         |  FROM documents, unnest(regexp_split_to_array(lower(text), '[^a-z0-9]+')) AS t(term)
-         |  WHERE t.term <> ''
-         |), tf AS (
-         |  SELECT docID, term, CAST(count(*) AS BIGINT) AS tf FROM tok GROUP BY docID, term
-         |), dl AS (
-         |  SELECT docID, CAST(sum(tf) AS BIGINT) AS len FROM tf GROUP BY docID
-         |)""".stripMargin
     val vlist = values.map(v => s"($v)").mkString(", ")
-    val perQuery = QuerySet.map { case (qid, qtext) =>
-      val terms = Analyzer.queryTerms(qtext)
-      val inList = terms.map(t => s"'$t'").mkString(", ")
+    val perQuery = QuerySet.map { case (qid, q) =>
       s"""(SELECT '$qid' AS query, CAST(v.v AS BIGINT) AS value,
          |        round(CAST(sum(CASE WHEN dl.len <= v.v THEN 1 ELSE 0 END) AS DOUBLE)
          |              / count(*), 4) AS frac
-         | FROM (SELECT docID FROM tf WHERE term IN ($inList)
-         |       GROUP BY docID HAVING count(*) = ${terms.size}) m
+         | FROM (${matchSql(q)}) m
          | JOIN dl USING (docID)
          | CROSS JOIN (VALUES $vlist) v(v)
          | GROUP BY v.v)""".stripMargin
     }.mkString("\n UNION ALL \n")
-    s"$base\nSELECT * FROM (\n$perQuery\n) ORDER BY query, value"
+    s"${baseSql()}\nSELECT * FROM (\n$perQuery\n) ORDER BY query, value"
   }
 
-  /** DuckDB twin of the `match_docs` entry:
-    * the full AND match set per fixed query, docID-ordered — the
-    * scroll/export contract re-derived from the corpus. */
+  /** DuckDB twin of the `match_docs` entry: the full AND match set per
+    * fixed query, docID-ordered — the scroll/export contract re-derived
+    * from the corpus. */
   def oracleSqlMatchDocs(): String = {
-    val base =
-      s"""WITH tok AS (
-         |  SELECT doc_id AS docID, t.term AS term
-         |  FROM documents, unnest(regexp_split_to_array(lower(text), '[^a-z0-9]+')) AS t(term)
-         |  WHERE t.term <> ''
-         |), tf AS (
-         |  SELECT docID, term, CAST(count(*) AS BIGINT) AS tf FROM tok GROUP BY docID, term
-         |)""".stripMargin
-    val perQuery = QuerySet.map { case (qid, qtext) =>
-      val terms = Analyzer.queryTerms(qtext)
-      val inList = terms.map(t => s"'$t'").mkString(", ")
-      s"""(SELECT '$qid' AS query, docID FROM tf WHERE term IN ($inList)
-         | GROUP BY docID HAVING count(*) = ${terms.size})""".stripMargin
+    val perQuery = QuerySet.map { case (qid, q) =>
+      s"(SELECT '$qid' AS query, docID FROM (${matchSql(q)}))"
     }.mkString("\n UNION ALL \n")
-    s"$base\nSELECT * FROM (\n$perQuery\n) ORDER BY query, docID"
+    s"${baseSql()}\nSELECT * FROM (\n$perQuery\n) ORDER BY query, docID"
   }
 
-  /** DuckDB twin of the `len_ranges` entry:
-    * the histogram twin with the floor-division bucket swapped for the
-    * containing range's lower bound (CASE over descending bounds);
-    * docs below the first bound drop out — ES range-agg semantics. */
+  /** DuckDB twin of the `len_ranges` entry: the histogram twin with the
+    * floor-division bucket swapped for the containing range's lower
+    * bound (CASE over descending bounds); docs below the first bound drop
+    * out — ES range-agg semantics. */
   def oracleSqlLenRanges(bounds: Seq[Long] = RangeBounds): String = {
-    val base =
-      s"""WITH tok AS (
-         |  SELECT doc_id AS docID, t.term AS term
-         |  FROM documents, unnest(regexp_split_to_array(lower(text), '[^a-z0-9]+')) AS t(term)
-         |  WHERE t.term <> ''
-         |), tf AS (
-         |  SELECT docID, term, CAST(count(*) AS BIGINT) AS tf FROM tok GROUP BY docID, term
-         |), dl AS (
-         |  SELECT docID, CAST(sum(tf) AS BIGINT) AS len FROM tf GROUP BY docID
-         |)""".stripMargin
     val caseExpr = bounds.reverse
       .map(b => s"WHEN dl.len >= $b THEN CAST($b AS BIGINT)")
       .mkString("CASE ", " ", " END")
-    val perQuery = QuerySet.map { case (qid, qtext) =>
-      val terms = Analyzer.queryTerms(qtext)
-      val inList = terms.map(t => s"'$t'").mkString(", ")
+    val perQuery = QuerySet.map { case (qid, q) =>
       s"""(SELECT '$qid' AS query, $caseExpr AS lo,
          |        CAST(count(*) AS BIGINT) AS n_docs
-         | FROM (SELECT docID FROM tf WHERE term IN ($inList)
-         |       GROUP BY docID HAVING count(*) = ${terms.size}) m
+         | FROM (${matchSql(q)}) m
          | JOIN dl USING (docID)
          | WHERE dl.len >= ${bounds.head}
          | GROUP BY 1, 2)""".stripMargin
     }.mkString("\n UNION ALL \n")
-    s"$base\nSELECT * FROM (\n$perQuery\n) ORDER BY query, lo"
+    s"${baseSql()}\nSELECT * FROM (\n$perQuery\n) ORDER BY query, lo"
   }
 
   /** DuckDB twin of the `len_percentiles` entry: exact nearest-rank —
@@ -2318,25 +1164,12 @@ object Bm25 {
     * value DISTRIBUTION instead (no global sort — see the scaladoc
     * there). */
   def oracleSqlLenPercentiles(ps: Seq[Double]): String = {
-    val base =
-      s"""WITH tok AS (
-         |  SELECT doc_id AS docID, t.term AS term
-         |  FROM documents, unnest(regexp_split_to_array(lower(text), '[^a-z0-9]+')) AS t(term)
-         |  WHERE t.term <> ''
-         |), tf AS (
-         |  SELECT docID, term, CAST(count(*) AS BIGINT) AS tf FROM tok GROUP BY docID, term
-         |), dl AS (
-         |  SELECT docID, CAST(sum(tf) AS BIGINT) AS len FROM tf GROUP BY docID
-         |)""".stripMargin
-    val ordCtes = QuerySet.map { case (qid, qtext) =>
-      val terms = Analyzer.queryTerms(qtext)
-      val inList = terms.map(t => s"'$t'").mkString(", ")
+    val ordCtes = QuerySet.map { case (qid, q) =>
       s"""o_$qid AS (
          |  SELECT dl.len, dl.docID,
          |         row_number() OVER (ORDER BY dl.len, dl.docID) AS rn,
          |         CAST(count(*) OVER () AS BIGINT) AS cnt
-         |  FROM (SELECT docID FROM tf WHERE term IN ($inList)
-         |        GROUP BY docID HAVING count(*) = ${terms.size}) m
+         |  FROM (${matchSql(q)}) m
          |  JOIN dl USING (docID)
          |)""".stripMargin
     }.mkString(",\n")
@@ -2347,205 +1180,34 @@ object Bm25 {
            | WHERE rn = greatest(1, CAST(ceil($p * cnt) AS BIGINT)))""".stripMargin
       }
     }.mkString("\n UNION ALL \n")
-    s"$base,\n$ordCtes\nSELECT * FROM (\n$perCell\n) ORDER BY query, p"
+    s"${baseSql()},\n$ordCtes\nSELECT * FROM (\n$perCell\n) ORDER BY query, p"
   }
 
-  /** DuckDB twin of the `match_stats` entry:
-    * the same integer min/max/sum + exact distinct-lang count over the
-    * match set, one final rounded division. */
+  /** DuckDB twin of the `match_stats` entry: the same integer
+    * min/max/sum + exact distinct-lang count over the match set, one
+    * final rounded division. */
   def oracleSqlMatchStats(): String = {
-    val base =
-      s"""WITH tok AS (
-         |  SELECT doc_id AS docID, t.term AS term
-         |  FROM documents, unnest(regexp_split_to_array(lower(text), '[^a-z0-9]+')) AS t(term)
-         |  WHERE t.term <> ''
-         |), tf AS (
-         |  SELECT docID, term, CAST(count(*) AS BIGINT) AS tf FROM tok GROUP BY docID, term
-         |), dl AS (
-         |  SELECT docID, CAST(sum(tf) AS BIGINT) AS len FROM tf GROUP BY docID
-         |), dv AS (
-         |  SELECT doc_id AS docID, lang FROM documents
-         |)""".stripMargin
-    val perQuery = QuerySet.map { case (qid, qtext) =>
-      val terms = Analyzer.queryTerms(qtext)
-      val inList = terms.map(t => s"'$t'").mkString(", ")
+    val perQuery = QuerySet.map { case (qid, q) =>
       s"""(SELECT '$qid' AS query,
          |        CAST(count(*) AS BIGINT) AS n_docs,
-         |        CAST(count(DISTINCT dv.lang) AS BIGINT) AS n_langs,
+         |        CAST(count(DISTINCT d.lang) AS BIGINT) AS n_langs,
          |        CAST(min(dl.len) AS BIGINT) AS min_len,
          |        CAST(max(dl.len) AS BIGINT) AS max_len,
          |        round(CAST(sum(dl.len) AS DOUBLE) / count(*), 4) AS avg_len
-         | FROM (SELECT docID FROM tf WHERE term IN ($inList)
-         |       GROUP BY docID HAVING count(*) = ${terms.size}) m
+         | FROM (${matchSql(q)}) m
          | JOIN dl USING (docID)
-         | JOIN dv USING (docID)
+         | JOIN documents d ON d.doc_id = m.docID
          | HAVING count(*) > 0)""".stripMargin
     }.mkString("\n UNION ALL \n")
-    s"$base\nSELECT * FROM (\n$perQuery\n) ORDER BY query"
+    s"${baseSql()}\nSELECT * FROM (\n$perQuery\n) ORDER BY query"
   }
 
-  /** DuckDB twin of [[oracleWildcardTopK]]: the prefix twin with the
-    * expansion predicate swapped to `term LIKE '%frag%'` (fragments are
-    * analyzer tokens — alphanumeric only, no LIKE metacharacters), same
-    * ordered fold. */
-  def oracleSqlWildcardTopK(k: Int = K): String = {
-    val base =
-      s"""WITH tok AS (
-         |  SELECT doc_id AS docID, t.term AS term
-         |  FROM documents, unnest(regexp_split_to_array(lower(text), '[^a-z0-9]+')) AS t(term)
-         |  WHERE t.term <> ''
-         |), tf AS (
-         |  SELECT docID, term, CAST(count(*) AS BIGINT) AS tf FROM tok GROUP BY docID, term
-         |), dl AS (
-         |  SELECT docID, CAST(sum(tf) AS BIGINT) AS len FROM tf GROUP BY docID
-         |), stats AS (
-         |  SELECT CAST(count(*) AS DOUBLE) AS n,
-         |         CAST(sum(len) AS DOUBLE) / count(*) AS avgdl
-         |  FROM dl
-         |), dfr AS (
-         |  SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY term
-         |), scored AS (
-         |  SELECT tf.docID, tf.term,
-         |         ln((stats.n - CAST(dfr.df AS DOUBLE) + 0.5) / (CAST(dfr.df AS DOUBLE) + 0.5) + 1.0)
-         |           * (CAST(tf.tf AS DOUBLE) * 2.2)
-         |           / (CAST(tf.tf AS DOUBLE) + 1.2 * (0.25 + 0.75 * CAST(dl.len AS DOUBLE) / stats.avgdl))
-         |           AS contrib
-         |  FROM tf JOIN dfr USING (term) JOIN dl USING (docID) CROSS JOIN stats
-         |)""".stripMargin
-    val perQuery = WildcardQuerySet.map { case (qid, frag) =>
-      s"""(SELECT '$qid' AS query, CAST(rank AS INTEGER) AS rank, docID, score FROM (
-         |  SELECT docID, round(raw, 4) AS score,
-         |         row_number() OVER (ORDER BY round(raw, 4) DESC, docID ASC) AS rank
-         |  FROM (
-         |    SELECT docID,
-         |           list_reduce(list(contrib ORDER BY term), (a, b) -> a + b) AS raw
-         |    FROM scored WHERE term LIKE '%$frag%'
-         |    GROUP BY docID
-         |  )
-         |) WHERE rank <= $k)""".stripMargin
-    }.mkString("\n UNION ALL \n")
-    s"$base\nSELECT * FROM (\n$perQuery\n) ORDER BY query, rank"
-  }
-
-  /** DuckDB twin of [[oracleRegexTopK]]: the wildcard twin with the
-    * LIKE predicate swapped for `regexp_full_match` (RE2; anchored, as
-    * the engine's java.util.regex `matches()` — patterns restricted to
-    * the shared construct subset, see [[RegexQuerySet]]). */
-  def oracleSqlRegexTopK(k: Int = K): String = {
-    val base =
-      s"""WITH tok AS (
-         |  SELECT doc_id AS docID, t.term AS term
-         |  FROM documents, unnest(regexp_split_to_array(lower(text), '[^a-z0-9]+')) AS t(term)
-         |  WHERE t.term <> ''
-         |), tf AS (
-         |  SELECT docID, term, CAST(count(*) AS BIGINT) AS tf FROM tok GROUP BY docID, term
-         |), dl AS (
-         |  SELECT docID, CAST(sum(tf) AS BIGINT) AS len FROM tf GROUP BY docID
-         |), stats AS (
-         |  SELECT CAST(count(*) AS DOUBLE) AS n,
-         |         CAST(sum(len) AS DOUBLE) / count(*) AS avgdl
-         |  FROM dl
-         |), dfr AS (
-         |  SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY term
-         |), scored AS (
-         |  SELECT tf.docID, tf.term,
-         |         ln((stats.n - CAST(dfr.df AS DOUBLE) + 0.5) / (CAST(dfr.df AS DOUBLE) + 0.5) + 1.0)
-         |           * (CAST(tf.tf AS DOUBLE) * 2.2)
-         |           / (CAST(tf.tf AS DOUBLE) + 1.2 * (0.25 + 0.75 * CAST(dl.len AS DOUBLE) / stats.avgdl))
-         |           AS contrib
-         |  FROM tf JOIN dfr USING (term) JOIN dl USING (docID) CROSS JOIN stats
-         |)""".stripMargin
-    val perQuery = RegexQuerySet.map { case (qid, pat) =>
-      s"""(SELECT '$qid' AS query, CAST(rank AS INTEGER) AS rank, docID, score FROM (
-         |  SELECT docID, round(raw, 4) AS score,
-         |         row_number() OVER (ORDER BY round(raw, 4) DESC, docID ASC) AS rank
-         |  FROM (
-         |    SELECT docID,
-         |           list_reduce(list(contrib ORDER BY term), (a, b) -> a + b) AS raw
-         |    FROM scored WHERE regexp_full_match(term, '$pat')
-         |    GROUP BY docID
-         |  )
-         |) WHERE rank <= $k)""".stripMargin
-    }.mkString("\n UNION ALL \n")
-    s"$base\nSELECT * FROM (\n$perQuery\n) ORDER BY query, rank"
-  }
-
-  /** DuckDB twin of the `term_vectors` entry: the per-doc term
-    * vector re-derived from the corpus — what the index's stage-1 tf +
+  /** DuckDB twin of the `term_vectors` entry: the per-doc term vector
+    * re-derived from the corpus — what the index's stage-1 tf +
     * dictionary artifacts must agree with row-for-row. */
-  def oracleSqlTermVectors(ids: Seq[Long] = TermVectorDocs): String = {
-    val inList = ids.mkString(", ")
-    s"""WITH tok AS (
-       |  SELECT doc_id AS docID, t.term AS term
-       |  FROM documents, unnest(regexp_split_to_array(lower(text), '[^a-z0-9]+')) AS t(term)
-       |  WHERE t.term <> ''
-       |), tf AS (
-       |  SELECT docID, term, CAST(count(*) AS BIGINT) AS tf FROM tok GROUP BY docID, term
-       |), dfr AS (
-       |  SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY term
-       |)
+  def oracleSqlTermVectors(ids: Seq[Long] = TermVectorDocs): String =
+    s"""${baseSql()}
        |SELECT docID, term, tf, df FROM tf JOIN dfr USING (term)
-       |WHERE docID IN ($inList)
+       |WHERE docID IN (${ids.mkString(", ")})
        |ORDER BY docID, term""".stripMargin
-  }
-
-  /** DuckDB twin of [[oracleWindowTopK]]: the phrase twin's CTEs with the
-    * adjacency predicate generalized to a sliding window — a doc matches
-    * iff some 1-based start i has every query term inside
-    * toks[i : i+w−1] (DuckDB slices are inclusive and clamp at the list
-    * end, exactly like Spark's `slice(toks, i, w)`). */
-  def oracleSqlWindowTopK(k: Int = K): String = {
-    val base =
-      s"""WITH tok AS (
-         |  SELECT doc_id AS docID, t.term AS term
-         |  FROM documents, unnest(regexp_split_to_array(lower(text), '[^a-z0-9]+')) AS t(term)
-         |  WHERE t.term <> ''
-         |), tokarr AS (
-         |  SELECT doc_id AS docID,
-         |         list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), t -> t <> '') AS toks
-         |  FROM documents
-         |), tf AS (
-         |  SELECT docID, term, CAST(count(*) AS BIGINT) AS tf FROM tok GROUP BY docID, term
-         |), dl AS (
-         |  SELECT docID, CAST(sum(tf) AS BIGINT) AS len FROM tf GROUP BY docID
-         |), stats AS (
-         |  SELECT CAST(count(*) AS DOUBLE) AS n,
-         |         CAST(sum(len) AS DOUBLE) / count(*) AS avgdl
-         |  FROM dl
-         |), dfr AS (
-         |  SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY term
-         |), scored AS (
-         |  SELECT tf.docID, tf.term,
-         |         ln((stats.n - CAST(dfr.df AS DOUBLE) + 0.5) / (CAST(dfr.df AS DOUBLE) + 0.5) + 1.0)
-         |           * (CAST(tf.tf AS DOUBLE) * 2.2)
-         |           / (CAST(tf.tf AS DOUBLE) + 1.2 * (0.25 + 0.75 * CAST(dl.len AS DOUBLE) / stats.avgdl))
-         |           AS contrib
-         |  FROM tf JOIN dfr USING (term) JOIN dl USING (docID) CROSS JOIN stats
-         |)""".stripMargin
-    val perQuery = WindowQuerySet.map { case (qid, qtext, w) =>
-      val terms = Analyzer.queryTerms(qtext)
-      val inList = terms.map(t => s"'$t'").mkString(", ")
-      val winCond = terms.map(t =>
-        s"list_contains(toks[CAST(i AS BIGINT):CAST(i AS BIGINT)+${w - 1}], '$t')")
-        .mkString(" AND ")
-      val cs = terms.zipWithIndex.map { case (t, i) =>
-        s"max(CASE WHEN term = '$t' THEN contrib END) AS c$i"
-      }.mkString(", ")
-      val scoreExpr = terms.indices.map(i => s"c$i").mkString(" + ")
-      s"""(SELECT '$qid' AS query, CAST(rank AS INTEGER) AS rank, docID, score FROM (
-         |  SELECT docID, round($scoreExpr, 4) AS score,
-         |         row_number() OVER (ORDER BY round($scoreExpr, 4) DESC, docID ASC) AS rank
-         |  FROM (
-         |    SELECT docID, $cs
-         |    FROM scored WHERE term IN ($inList) AND docID IN (
-         |      SELECT docID FROM tokarr
-         |      WHERE len(list_filter(range(1, len(toks) + 1),
-         |                            i -> $winCond)) > 0)
-         |    GROUP BY docID
-         |    HAVING count(*) = ${terms.size}
-         |  )
-         |) WHERE rank <= $k)""".stripMargin
-    }.mkString("\n UNION ALL \n")
-    s"$base\nSELECT * FROM (\n$perQuery\n) ORDER BY query, rank"
-  }
 }

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.Corpus
-import graft.functions.{Analyzer, Native}
+import graft.functions.Native
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -126,36 +126,7 @@ object Hybrid {
     * contribution sum as [[Bm25.oracleSqlTopKOr]]), a cosine rank CTE per
     * query vector, then the same full-outer RRF fusion. */
   def hybridTopKSql(k: Int = K, depth: Int = Depth): String = {
-    val base =
-      s"""WITH tok AS (
-         |  SELECT doc_id AS docID, t.term AS term
-         |  FROM documents, unnest(regexp_split_to_array(lower(text), '[^a-z0-9]+')) AS t(term)
-         |  WHERE t.term <> ''
-         |), tf AS (
-         |  SELECT docID, term, CAST(count(*) AS BIGINT) AS tf FROM tok GROUP BY docID, term
-         |), dl AS (
-         |  SELECT docID, CAST(sum(tf) AS BIGINT) AS len FROM tf GROUP BY docID
-         |), stats AS (
-         |  SELECT CAST(count(*) AS DOUBLE) AS n,
-         |         CAST(sum(len) AS DOUBLE) / count(*) AS avgdl
-         |  FROM dl
-         |), dfr AS (
-         |  SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY term
-         |), scored AS (
-         |  SELECT tf.docID, tf.term,
-         |         ln((stats.n - CAST(dfr.df AS DOUBLE) + 0.5) / (CAST(dfr.df AS DOUBLE) + 0.5) + 1.0)
-         |           * (CAST(tf.tf AS DOUBLE) * 2.2)
-         |           / (CAST(tf.tf AS DOUBLE) + 1.2 * (0.25 + 0.75 * CAST(dl.len AS DOUBLE) / stats.avgdl))
-         |           AS contrib
-         |  FROM tf JOIN dfr USING (term) JOIN dl USING (docID) CROSS JOIN stats
-         |)""".stripMargin
     val perQuery = HybridQuerySet.map { case (qid, qtext, vid) =>
-      val terms = Analyzer.queryTerms(qtext)
-      val inList = terms.map(t => s"'$t'").mkString(", ")
-      val cs = terms.zipWithIndex.map { case (t, i) =>
-        s"coalesce(max(CASE WHEN term = '$t' THEN contrib END), 0.0) AS c$i"
-      }.mkString(", ")
-      val scoreExpr = terms.indices.map(i => s"c$i").mkString(" + ")
       s"""(SELECT '$qid' AS query, CAST(rank AS INTEGER) AS rank, docID, rrf FROM (
          |  SELECT docID, rrf,
          |         row_number() OVER (ORDER BY rrf DESC, docID ASC) AS rank
@@ -166,12 +137,8 @@ object Hybrid {
          |    FROM (
          |      SELECT docID, brank FROM (
          |        SELECT docID,
-         |               row_number() OVER (ORDER BY round($scoreExpr, 4) DESC, docID ASC) AS brank
-         |        FROM (
-         |          SELECT docID, $cs
-         |          FROM scored WHERE term IN ($inList)
-         |          GROUP BY docID
-         |        )
+         |               row_number() OVER (ORDER BY round(raw, 4) DESC, docID ASC) AS brank
+         |        FROM (${Bm25.candSql(Bm25.Match.or(qtext))})
          |      ) WHERE brank <= $depth
          |    ) l
          |    FULL OUTER JOIN (
@@ -189,6 +156,6 @@ object Hybrid {
          |  )
          |) WHERE rank <= $k)""".stripMargin
     }.mkString("\n UNION ALL \n")
-    s"$base\nSELECT * FROM (\n$perQuery\n) ORDER BY query, rank"
+    s"${Bm25.baseSql()}\nSELECT * FROM (\n$perQuery\n) ORDER BY query, rank"
   }
 }

@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.{Window => W}
 import org.apache.spark.sql.functions._
-import graft.functions.Analyzer
 
 /** Static-rank rescoring — the two-stage ranking every web search
   * engine runs (Elasticsearch `rescore` + Lucene FeatureField / the
@@ -85,12 +84,13 @@ object Rescore {
     blend(Bm25.oracleTopK(spark, sfDir, WindowSize),
       LinkGraph.pageRankAll(spark, sfDir), k)
 
-  /** DuckDB twin: the BM25 base CTEs + the PageRank CTE chain
-    * ([[LinkGraph.oracleSql]]'s recurrence, prefixed `pr*` to avoid
-    * colliding with the BM25 `stats`), then per query the top-window
-    * BM25 ranking joined to the rank vector and re-ranked blended.
-    * `scored` and `prvec` are MATERIALIZED: every per-query subquery
-    * reads both, and inlined they are recomputed once per query. */
+  /** DuckDB twin: the BM25 base CTEs ([[Bm25.baseSql]]) + the PageRank
+    * CTE chain ([[LinkGraph.oracleSql]]'s recurrence, prefixed `pr*` to
+    * avoid colliding with the BM25 `stats`), then per query the
+    * top-window BM25 ranking joined to the rank vector and re-ranked
+    * blended. `prvec` is MATERIALIZED, as the base's `scored`: every
+    * per-query subquery reads both, and inlined they are recomputed
+    * once per query. */
   def oracleSql(k: Int = Bm25.K): String = {
     val d = LinkGraph.Damping
     val iters = (1 to LinkGraph.Iterations).map { i =>
@@ -109,28 +109,7 @@ object Rescore {
          |)""".stripMargin
     }.mkString(",\n")
     val base =
-      s"""WITH tok AS (
-         |  SELECT doc_id AS docID, t.term AS term
-         |  FROM documents, unnest(regexp_split_to_array(lower(text), '[^a-z0-9]+')) AS t(term)
-         |  WHERE t.term <> ''
-         |), tf AS (
-         |  SELECT docID, term, CAST(count(*) AS BIGINT) AS tf FROM tok GROUP BY docID, term
-         |), dl AS (
-         |  SELECT docID, CAST(sum(tf) AS BIGINT) AS len FROM tf GROUP BY docID
-         |), stats AS (
-         |  SELECT CAST(count(*) AS DOUBLE) AS n,
-         |         CAST(sum(len) AS DOUBLE) / count(*) AS avgdl
-         |  FROM dl
-         |), dfr AS (
-         |  SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY term
-         |), scored AS MATERIALIZED (
-         |  SELECT tf.docID, tf.term,
-         |         ln((stats.n - CAST(dfr.df AS DOUBLE) + 0.5) / (CAST(dfr.df AS DOUBLE) + 0.5) + 1.0)
-         |           * (CAST(tf.tf AS DOUBLE) * 2.2)
-         |           / (CAST(tf.tf AS DOUBLE) + 1.2 * (0.25 + 0.75 * CAST(dl.len AS DOUBLE) / stats.avgdl))
-         |           AS contrib
-         |  FROM tf JOIN dfr USING (term) JOIN dl USING (docID) CROSS JOIN stats
-         |), prnodes AS (
+      s"""${Bm25.baseSql()}, prnodes AS (
          |  SELECT doc_id AS id FROM documents
          |), prstats AS (
          |  SELECT CAST(count(*) AS DOUBLE) AS n, CAST(count(*) AS BIGINT) AS nn
@@ -154,24 +133,13 @@ object Rescore {
          |  FROM pr${LinkGraph.Iterations} CROSS JOIN prstats
          |)""".stripMargin
     val perQuery = Bm25.QuerySet.map { case (qid, qtext) =>
-      val terms = Analyzer.queryTerms(qtext)
-      val inList = terms.map(t => s"'$t'").mkString(", ")
-      val cs = terms.zipWithIndex.map { case (t, i) =>
-        s"max(CASE WHEN term = '$t' THEN contrib END) AS c$i"
-      }.mkString(", ")
-      val scoreExpr = terms.indices.map(i => s"c$i").mkString(" + ")
       s"""(SELECT '$qid' AS query, CAST(rank AS INTEGER) AS rank, docID, score FROM (
          |  SELECT docID, round(bscore + $Weight * prs, 4) AS score,
          |         row_number() OVER (ORDER BY round(bscore + $Weight * prs, 4) DESC, docID ASC) AS rank
          |  FROM (
-         |    SELECT docID, round($scoreExpr, 4) AS bscore,
-         |           row_number() OVER (ORDER BY round($scoreExpr, 4) DESC, docID ASC) AS brank
-         |    FROM (
-         |      SELECT docID, $cs
-         |      FROM scored WHERE term IN ($inList)
-         |      GROUP BY docID
-         |      HAVING count(*) = ${terms.size}
-         |    )
+         |    SELECT docID, round(raw, 4) AS bscore,
+         |           row_number() OVER (ORDER BY round(raw, 4) DESC, docID ASC) AS brank
+         |    FROM (${Bm25.candSql(Bm25.Match.and(qtext))})
          |  ) JOIN prvec USING (docID)
          |  WHERE brank <= $WindowSize
          |) WHERE rank <= $k)""".stripMargin

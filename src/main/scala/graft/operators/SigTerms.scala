@@ -101,36 +101,8 @@ object SigTerms {
   def oracleSql(): String = {
     val s = SampleSize
     val t = TopTerms
-    val base =
-      s"""WITH tok AS (
-         |  SELECT doc_id AS docID, t.term AS term
-         |  FROM documents, unnest(regexp_split_to_array(lower(text), '[^a-z0-9]+')) AS t(term)
-         |  WHERE t.term <> ''
-         |), tf AS (
-         |  SELECT docID, term, CAST(count(*) AS BIGINT) AS tf FROM tok GROUP BY docID, term
-         |), dl AS (
-         |  SELECT docID, CAST(sum(tf) AS BIGINT) AS len FROM tf GROUP BY docID
-         |), stats AS (
-         |  SELECT CAST(count(*) AS DOUBLE) AS n,
-         |         CAST(sum(len) AS DOUBLE) / count(*) AS avgdl
-         |  FROM dl
-         |), dfr AS (
-         |  SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY term
-         |), scored AS (
-         |  SELECT tf.docID, tf.term,
-         |         ln((stats.n - CAST(dfr.df AS DOUBLE) + 0.5) / (CAST(dfr.df AS DOUBLE) + 0.5) + 1.0)
-         |           * (CAST(tf.tf AS DOUBLE) * 2.2)
-         |           / (CAST(tf.tf AS DOUBLE) + 1.2 * (0.25 + 0.75 * CAST(dl.len AS DOUBLE) / stats.avgdl))
-         |           AS contrib
-         |  FROM tf JOIN dfr USING (term) JOIN dl USING (docID) CROSS JOIN stats
-         |)""".stripMargin
     val perQuery = Bm25.QuerySet.map { case (qid, qtext) =>
-      val terms = Analyzer.queryTerms(qtext)
-      val inList = terms.map(x => s"'$x'").mkString(", ")
-      val cs = terms.zipWithIndex.map { case (x, i) =>
-        s"max(CASE WHEN term = '$x' THEN contrib END) AS c$i"
-      }.mkString(", ")
-      val scoreExpr = terms.indices.map(i => s"c$i").mkString(" + ")
+      val inList = Analyzer.queryTerms(qtext).map(x => s"'$x'").mkString(", ")
       val liftExpr =
         s"ln((CAST(fg_df AS DOUBLE) / $s) / (CAST(df AS DOUBLE) / stats.n))"
       s"""(SELECT '$qid' AS query, CAST(rank AS INTEGER) AS rank, term, fg_df, score FROM (
@@ -141,13 +113,8 @@ object SigTerms {
          |    FROM (SELECT DISTINCT docID, term FROM tok WHERE docID IN (
          |      SELECT docID FROM (
          |        SELECT docID,
-         |               row_number() OVER (ORDER BY round($scoreExpr, 4) DESC, docID ASC) AS r
-         |        FROM (
-         |          SELECT docID, $cs
-         |          FROM scored WHERE term IN ($inList)
-         |          GROUP BY docID
-         |          HAVING count(*) = ${terms.size}
-         |        )
+         |               row_number() OVER (ORDER BY round(raw, 4) DESC, docID ASC) AS r
+         |        FROM (${Bm25.candSql(Bm25.Match.and(qtext))})
          |      ) WHERE r <= $s
          |    ))
          |    GROUP BY term
@@ -155,6 +122,6 @@ object SigTerms {
          |  WHERE term NOT IN ($inList)
          |) WHERE rank <= $t)""".stripMargin
     }.mkString("\n UNION ALL \n")
-    s"$base\nSELECT * FROM (\n$perQuery\n) ORDER BY query, rank"
+    s"${Bm25.baseSql()}\nSELECT * FROM (\n$perQuery\n) ORDER BY query, rank"
   }
 }

@@ -75,40 +75,8 @@ object Snippets {
     * window argmax + highlight over the token array. */
   def searchSnippetsSql(k: Int = Bm25.K, snippetLen: Int = 12): String = {
     val L = snippetLen
-    val base =
-      s"""WITH tok AS (
-         |  SELECT doc_id AS docID, t.term AS term
-         |  FROM documents, unnest(regexp_split_to_array(lower(text), '[^a-z0-9]+')) AS t(term)
-         |  WHERE t.term <> ''
-         |), tokarr AS (
-         |  SELECT doc_id AS docID,
-         |         list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), t -> t <> '') AS toks
-         |  FROM documents
-         |), tf AS (
-         |  SELECT docID, term, CAST(count(*) AS BIGINT) AS tf FROM tok GROUP BY docID, term
-         |), dl AS (
-         |  SELECT docID, CAST(sum(tf) AS BIGINT) AS len FROM tf GROUP BY docID
-         |), stats AS (
-         |  SELECT CAST(count(*) AS DOUBLE) AS n,
-         |         CAST(sum(len) AS DOUBLE) / count(*) AS avgdl
-         |  FROM dl
-         |), dfr AS (
-         |  SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY term
-         |), scored AS (
-         |  SELECT tf.docID, tf.term,
-         |         ln((stats.n - CAST(dfr.df AS DOUBLE) + 0.5) / (CAST(dfr.df AS DOUBLE) + 0.5) + 1.0)
-         |           * (CAST(tf.tf AS DOUBLE) * 2.2)
-         |           / (CAST(tf.tf AS DOUBLE) + 1.2 * (0.25 + 0.75 * CAST(dl.len AS DOUBLE) / stats.avgdl))
-         |           AS contrib
-         |  FROM tf JOIN dfr USING (term) JOIN dl USING (docID) CROSS JOIN stats
-         |)""".stripMargin
     val perQuery = Bm25.QuerySet.map { case (qid, qtext) =>
-      val terms = Analyzer.queryTerms(qtext)
-      val inList = terms.map(t => s"'$t'").mkString(", ")
-      val cs = terms.zipWithIndex.map { case (t, i) =>
-        s"max(CASE WHEN term = '$t' THEN contrib END) AS c$i"
-      }.mkString(", ")
-      val scoreExpr = terms.indices.map(i => s"c$i").mkString(" + ")
+      val inList = Analyzer.queryTerms(qtext).map(t => s"'$t'").mkString(", ")
       val covExpr =
         s"len(list_filter([$inList], t -> list_contains(toks[CAST(i AS BIGINT):CAST(i AS BIGINT)+${L - 1}], t)))"
       s"""(SELECT '$qid' AS query, CAST(rank AS INTEGER) AS rank, r.docID,
@@ -118,13 +86,8 @@ object Snippets {
          |FROM (
          |  SELECT docID, rank FROM (
          |    SELECT docID,
-         |           row_number() OVER (ORDER BY round($scoreExpr, 4) DESC, docID ASC) AS rank
-         |    FROM (
-         |      SELECT docID, $cs
-         |      FROM scored WHERE term IN ($inList)
-         |      GROUP BY docID
-         |      HAVING count(*) = ${terms.size}
-         |    )
+         |           row_number() OVER (ORDER BY round(raw, 4) DESC, docID ASC) AS rank
+         |    FROM (${Bm25.candSql(Bm25.Match.and(qtext))})
          |  ) WHERE rank <= $k
          |) r JOIN (
          |  SELECT docID, toks,
@@ -133,6 +96,6 @@ object Snippets {
          |  FROM tokarr
          |) s ON r.docID = s.docID)""".stripMargin
     }.mkString("\n UNION ALL \n")
-    s"$base\nSELECT * FROM (\n$perQuery\n) ORDER BY query, rank"
+    s"${Bm25.baseSql()}\nSELECT * FROM (\n$perQuery\n) ORDER BY query, rank"
   }
 }

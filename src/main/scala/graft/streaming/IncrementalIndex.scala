@@ -61,13 +61,18 @@ object IncrementalIndex {
     * tombstone table. O(deletes) — no posting is touched; queries
     * exclude tombstoned docs through [[denyFacet]] and compaction drops
     * their postings (and their contribution to df/avgdl) for real —
-    * Lucene-style deleted-docs semantics. Idempotent: duplicate ids
-    * dedup at read time, so replaying a delete batch is harmless. */
-  def delete(docIDs: DataFrame, baseDir: String): Unit =
-    docIDs.select(org.apache.spark.sql.functions.col("docID")
-        .cast("long").as("docID"))
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .parquet(tombstoneDir(baseDir))
+    * Lucene-style deleted-docs semantics. Idempotent: only ids not yet
+    * tombstoned are appended, and nothing is written when none is new,
+    * so replaying a delete batch leaves the table as it was. */
+  def delete(docIDs: DataFrame, baseDir: String): Unit = {
+    val ids = docIDs.select(org.apache.spark.sql.functions.col("docID")
+      .cast("long").as("docID")).distinct()
+    val fresh = tombstones(docIDs.sparkSession, baseDir)
+      .fold(ids)(old => ids.join(old, Seq("docID"), "left_anti"))
+    if (!fresh.isEmpty)
+      fresh.write.mode(org.apache.spark.sql.SaveMode.Append)
+        .parquet(tombstoneDir(baseDir))
+  }
 
   /** The live tombstone set (None if nothing was ever deleted). */
   def tombstones(spark: SparkSession, baseDir: String): Option[DataFrame] =

@@ -50,6 +50,14 @@ class IndexQuerySpec extends AnyFunSuite {
     }
   }
 
+  test("exact oracle: a term-less query gives an empty typed (docID, score) frame") {
+    val out = Bm25.oracleTopKExact(spark, sfDir, "!!")
+    assert(out.schema.map(f => f.name -> f.dataType) == Seq(
+      "docID" -> org.apache.spark.sql.types.LongType,
+      "score" -> org.apache.spark.sql.types.DoubleType))
+    assert(out.count() == 0)
+  }
+
   test("rounded driver-contract output matches M0 oracle frame") {
     built
     val oracle = Bm25.oracleTopK(spark, sfDir).collect().map(_.toSeq).toSeq
@@ -659,7 +667,8 @@ class IndexQuerySpec extends AnyFunSuite {
 
   test("window: rank-identity vs exact window oracle (every window query)") {
     for ((qid, qtext, w) <- Bm25.WindowQuerySet) {
-      val oracle = collectTopK(Bm25.oracleWindowTopKExact(spark, sfDir, qtext, w))
+      val oracle = collectTopK(Bm25.rank(Bm25.score(Bm25.Context(spark, sfDir),
+        Bm25.Match.window(qtext, w)), Bm25.K, rounded = false))
       val indexed = collectTopK(posEngine.topKWindow(qtext, w, rounded = false))
       assert(indexed.map(_._1) == oracle.map(_._1),
         s"$qid '$qtext' w=$w: window ranking differs\n oracle=$oracle\n indexed=$indexed")
@@ -1028,7 +1037,8 @@ class IndexQuerySpec extends AnyFunSuite {
   test("wildcard: rank-identity vs exact contains oracle (every wildcard query)") {
     built
     for ((qid, frag) <- Bm25.WildcardQuerySet) {
-      val oracle = collectTopK(Bm25.oracleWildcardTopKExact(spark, sfDir, frag))
+      val oracle = collectTopK(Bm25.rank(Bm25.score(Bm25.Context(spark, sfDir),
+        Bm25.Match.wildcard(frag)), Bm25.K, rounded = false))
       val indexed = collectTopK(engine.topKWildcard(frag, rounded = false))
       assert(indexed.map(_._1) == oracle.map(_._1),
         s"$qid '*$frag*': wildcard ranking differs\n oracle=$oracle\n indexed=$indexed")
@@ -1072,7 +1082,8 @@ class IndexQuerySpec extends AnyFunSuite {
   test("regex: rank-identity vs exact oracle; expansion semantics; dict-scan path") {
     built
     for ((qid, pat) <- Bm25.RegexQuerySet) {
-      val oracle = collectTopK(Bm25.oracleRegexTopKExact(spark, sfDir, pat))
+      val oracle = collectTopK(Bm25.rank(Bm25.score(Bm25.Context(spark, sfDir),
+        Bm25.Match.regex(pat)), Bm25.K, rounded = false))
       val indexed = collectTopK(engine.topKRegex(pat, rounded = false))
       assert(indexed.map(_._1) == oracle.map(_._1),
         s"$qid /$pat/: regex ranking differs\n oracle=$oracle\n indexed=$indexed")
@@ -1262,7 +1273,8 @@ class IndexQuerySpec extends AnyFunSuite {
   test("fuzzy: rank-identity vs exact fuzzy oracle (every fuzzy query)") {
     built
     for ((qid, q) <- Bm25.FuzzyQuerySet) {
-      val oracle = collectTopK(Bm25.oracleFuzzyTopKExact(spark, sfDir, q))
+      val oracle = collectTopK(Bm25.rank(Bm25.score(Bm25.Context(spark, sfDir),
+        Bm25.Match.fuzzy(q)), Bm25.K, rounded = false))
       val indexed = collectTopK(engine.topKFuzzy(q, rounded = false))
       assert(indexed.map(_._1) == oracle.map(_._1),
         s"$qid '$q~': fuzzy ranking differs\n oracle=$oracle\n indexed=$indexed")

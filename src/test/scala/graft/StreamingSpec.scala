@@ -100,7 +100,12 @@ class StreamingSpec extends AnyFunSuite {
     val delIds = Corpus.docs(spark, sfDir)
       .filter(col("docID") % 5 === 1).select(col("docID"))
     IncrementalIndex.delete(delIds, base)
+    val tombDir = IncrementalIndex.tombstoneDir(base)
+    def tombState() = (new java.io.File(tombDir).listFiles().count(_.getName.endsWith(".parquet")),
+      spark.read.parquet(tombDir).count())
+    val before = tombState()
     IncrementalIndex.delete(delIds, base) // replay: must change nothing
+    assert(tombState() == before, "a replayed delete appended tombstones")
     val deny = IncrementalIndex.denyFacet(spark, base, eng).get
     val del = delIds.as[Long].collect().toSet
     def hits(df: org.apache.spark.sql.DataFrame): Seq[(Long, Double)] =
